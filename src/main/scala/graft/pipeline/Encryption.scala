@@ -86,6 +86,16 @@ object Encryption {
 
   // ----------------------------------------------------------- ciphers
 
+  /** AES in the JDK's default transformation, AES/ECB/PKCS5Padding — the
+    * reference engine's choice, kept for ciphertext compatibility.
+    *
+    * SECURITY CAVEAT: ECB has no IV and no authentication. Equal
+    * plaintext blocks under one key give equal ciphertext blocks, so
+    * repeated structure in the data shows through, and a ciphertext can
+    * be altered or its blocks reordered without detection. Use it only
+    * where the reference's wire format requires it; new data that needs
+    * confidentiality or integrity wants an authenticated mode such as
+    * AES/GCM with a fresh nonce per message. */
   private def cipher(mode: Int, key: Array[Byte]): Cipher = {
     val c = Cipher.getInstance("AES") // JDK default: AES/ECB/PKCS5Padding
     c.init(mode, new SecretKeySpec(key, "AES"))
@@ -142,12 +152,22 @@ object Encryption {
   }
 
   /** Per-JVM unwrap cache (reference caches ciphers per key,
-    * `EncryptionContext.java:20-28`; here the unwrapped key bytes). */
-  private object KeyCache {
+    * `EncryptionContext.java:20-28`; here the unwrapped key bytes), bounded
+    * like the reference's to [[KeyCache.MaxEntries]] keys, least recently
+    * used evicted first — rotated-out keys do not accumulate. */
+  private[pipeline] object KeyCache {
+    val MaxEntries = 5
     private val cache =
-      new java.util.concurrent.ConcurrentHashMap[(String, KeyProvider), Array[Byte]]()
+      new java.util.LinkedHashMap[(String, KeyProvider), Array[Byte]](
+          16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[(String, KeyProvider), Array[Byte]]): Boolean =
+          size() > MaxEntries
+      }
     def get(encryptedDataKey: String, provider: KeyProvider): Array[Byte] =
-      cache.computeIfAbsent((encryptedDataKey, provider),
-        { case (k, p) => p.decryptKey(Base64.getDecoder.decode(k)) })
+      cache.synchronized {
+        cache.computeIfAbsent((encryptedDataKey, provider),
+          { case (k, p) => p.decryptKey(Base64.getDecoder.decode(k)) })
+      }
   }
 }

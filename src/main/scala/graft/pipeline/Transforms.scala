@@ -452,6 +452,12 @@ object Transforms {
     * pipelines (ordered) with every placeholder resolved. */
   def expand(templateYaml: String, pipelineName: String, pipelineModel: JVal,
       functions: Map[String, Option[String] => Option[String]]): JObj = {
+    // the name is spliced verbatim into a JSON string literal below; a
+    // quote, backslash or control character would break out of it
+    if (pipelineName.exists(c => c == '"' || c == '\\' || c < ' '))
+      throw new TransformerException(
+        s"pipeline name ${Json.write(JStr(pipelineName))} cannot be spliced into a template: " +
+          "it contains a quote, backslash or control character")
     val wrapped = JObj(Vector(pipelineName -> pipelineModel))
     // textual pipeline-name substitution over the serialized template, as
     // the reference does on the template JSON string

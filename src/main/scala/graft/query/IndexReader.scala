@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.index.{Globals, IncrementalIndex}
@@ -18,14 +18,28 @@ final case class SegmentRead(
 /** Query-side executor over a built index — standalone or generational
   * ([[IncrementalIndex]]: `gen-k` subdirectories, disjoint docId ranges).
   *
-  * Distributed top-k (the 1000-executor path): the index is document-
-  * sharded (shard = docId range), so WAND runs *per shard* with full
-  * independence — `groupByKey(shard).flatMapGroups` fans the query out to
-  * every shard's postings, each task returns its local top-k, and the
-  * global answer is the (score desc, docId asc) head of shards × k
-  * candidate rows — a few KB regardless of corpus size. Reads prune to the
-  * query terms' hash buckets (directory partition pruning) and push the
-  * term predicate into Parquet.
+  * The reader is a point-in-time snapshot: generations, globals,
+  * tombstones, the positions check and each generation's postings/
+  * termstats/docs/tf tables (file listing and schema) are resolved once,
+  * and every query reuses them — a served call runs no schema-inference
+  * job.
+  *
+  * Top-k runs per document shard (shard = docId range), so the kernel
+  * (WAND, bool, dis_max, phrase) runs on each shard with full
+  * independence and the global answer is the (score desc, docId asc) head
+  * of shards × k candidate rows. One metadata job per query returns the
+  * terms' merged dfs and their total posting bytes; that total picks the
+  * route ([[shardHeads]]):
+  *  - at most `maxDriverBytes` (default [[IndexReader.DefaultMaxBytesPerTerm]],
+  *    applied to the whole query): the bucket-pruned rows are collected
+  *    and the same kernel runs per shard on the driver — no shuffle;
+  *  - above it: `groupByKey(shard).flatMapGroups` fans the query out to
+  *    the executors and a TakeOrdered merges the candidates.
+  * The kernels are shared, so both routes return identical rows. The
+  * public constructor fixes the bound; the package-private one lets specs
+  * and the plan dump pin a route. Reads prune to the query terms' hash
+  * buckets (directory partition pruning) and push the term predicate into
+  * Parquet.
   *
   * Block-Max bounds are computed HERE, not at build time: each block
   * stores (maxTf, minDl) and the bound is
@@ -37,13 +51,27 @@ final case class SegmentRead(
   * (/root/reference/data-prepper-plugins/opensearch/... sink +
   * source/opensearch/OpenSearchSource.java) with an in-engine executor.
   */
-final class IndexReader(spark: SparkSession, val indexDir: String) {
+final class IndexReader private[graft] (spark: SparkSession,
+    val indexDir: String, private[query] val maxDriverBytes: Long) {
   import spark.implicits._
+  import IndexReader.ShardKernel
+
+  def this(spark: SparkSession, indexDir: String) =
+    this(spark, indexDir, IndexReader.DefaultMaxBytesPerTerm)
 
   /** (gen, dir) pairs — (0, indexDir) for a standalone index. Visible to
     * the [[IndexSearch]] layer, which reads the same generations' stats/
     * docs/tf artifacts. */
   private[query] val gens: Seq[(Int, String)] = IncrementalIndex.genDirs(spark, indexDir)
+
+  /** Each generation's `name` table, read (listed, schema inferred) once. */
+  private def tables(name: String): Seq[DataFrame] =
+    gens.map { case (_, d) => spark.read.parquet(s"$d/$name") }
+
+  private lazy val postingsTables: Seq[DataFrame] = tables("postings")
+  private[query] lazy val termstatsTables: Seq[DataFrame] = tables("termstats")
+  private[query] lazy val docsTables: Seq[DataFrame] = tables("docs")
+  private[query] lazy val tfTables: Seq[DataFrame] = tables("tf")
 
   /** Merged corpus stats: exact integer sums across generations. */
   val globals: Globals = gens.map { case (_, d) => Globals.read(d) }
@@ -100,62 +128,122 @@ final class IndexReader(spark: SparkSession, val indexDir: String) {
     spark.sparkContext.broadcast(deletedSorted)
 
   /** Segment rows for the query terms, bucket-pruned, across all
-    * generations. */
-  def segmentsFor(terms: Seq[String]): Dataset[SegmentRead] = {
+    * generations. `positions = false` leaves `pos` null, so the Parquet
+    * scan never reads it; only the phrase kernels use positions. */
+  def segmentsFor(terms: Seq[String],
+      positions: Boolean = true): Dataset[SegmentRead] = {
     val buckets = terms.map(bucketOf(_, numBuckets)).distinct
-    gens.map { case (g, d) =>
-      spark.read.parquet(s"$d/postings")
-        .where(col("bucket").isin(buckets.map(Integer.valueOf): _*) &&
+    gens.zip(postingsTables).map { case ((g, _), t) =>
+      val rows = t.where(col("bucket").isin(buckets.map(Integer.valueOf): _*) &&
           col("term").isin(terms: _*))
         .withColumn("gen", lit(g))
+      if (positions) rows else rows.withColumn("pos", lit(null).cast("binary"))
     }.reduce(_.unionByName(_)).as[SegmentRead]
   }
 
-  /** Per-term GLOBAL df for the query terms: a shard sees only the
-    * generations that overlap it, so df cannot be resolved inside the
-    * shard fan-out — it is summed here over (term, gen) metadata (a few
-    * rows; bucket-pruned, column-pruned scan) and broadcast into the
-    * per-shard closures. Single-generation indexes pay one cheap extra
-    * metadata job per query; correctness over generations demands it. */
+  /** Per-term GLOBAL df for the query terms ([[termMeta]] without the
+    * sizing, so the scan reads no payload). */
   private[query] def mergedDfMap(seg: Dataset[SegmentRead]): Map[String, Long] =
-    seg.select(col("term"), col("gen"), col("df")).distinct()
-      .as[(String, Int, Long)].collect()
-      .groupBy(_._1).map { case (t, rs) => t -> rs.map(_._3).sum }
+    termMeta(seg, sized = false)._1
 
-  /** Distributed Block-Max WAND top-k. Result is a tiny DataFrame
-    * (docId, score) ordered by (score desc, docId asc), k rows. */
-  def topK(query: Seq[String], k: Int): DataFrame = {
-    val terms = query.distinct.sorted
-    val seg = segmentsFor(terms)
-    // hoist to locals: eta-expansion must capture primitives, not `this`
-    val (n, avgdl, kk) = (globals.n, globals.avgdl, k)
-    val dfByTerm = spark.sparkContext.broadcast(mergedDfMap(seg))
-    val del = deletedBc
-    val perShard = seg.groupByKey(_.shard)
-      .flatMapGroups((shard: Long, rows: Iterator[SegmentRead]) =>
-        IndexReader.shardTopK(n, avgdl, kk, dfByTerm.value,
-          del.value)(shard, rows))
-    perShard.toDF("docId", "score")
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
+  /** The one metadata job of a query. It returns the per-term GLOBAL df —
+    * a shard sees only the generations that overlap it, so df cannot be
+    * resolved inside the shard fan-out; generations are disjoint doc sets,
+    * so it is the sum of one df per generation. When `sized`, it also
+    * returns each term's posting bytes ([[IndexReader.payloadBytes]]): the
+    * payload a driver-side collect would hold. Each scan task folds its
+    * rows into one (df, bytes) per (term, gen) it saw and the driver
+    * merges those — one stage, no shuffle, a result bounded by
+    * tasks × terms × generations. Every index pays this job, single-
+    * generation ones included: the dfs and the route both need it. */
+  private[query] def termMeta(seg: Dataset[SegmentRead],
+      sized: Boolean = true): (Map[String, Long], Map[String, Long]) = {
+    val bytes = if (sized) IndexReader.payloadBytes else lit(0L)
+    val perTask = seg.select(col("term"), col("gen"), col("df"), bytes)
+      .as[(String, Int, Long, Long)]
+      .mapPartitions { rows =>
+        val acc = scala.collection.mutable.HashMap.empty[(String, Int), (Long, Long)]
+        rows.foreach { case (t, g, df, b) =>
+          acc((t, g)) = (df, acc.get((t, g)).fold(0L)(_._2) + b)
+        }
+        acc.iterator
+      }.collect()
+    val perGen = perTask.groupMapReduce(_._1)(_._2)((a, b) => (a._1, a._2 + b._2))
+    (perGen.groupMapReduce(_._1._1)(_._2._1)(_ + _),
+      perGen.groupMapReduce(_._1._1)(_._2._2)(_ + _))
   }
 
-  /** Distributed top-k with the typed [[TopKAggregator]] merge: per-shard
-    * candidates partially aggregate map-side, the driver receives one
-    * Array[Scored] — no row-level sort/limit stage. Rank-identical to
-    * [[topK]]. */
-  def topKAgg(query: Seq[String], k: Int): Array[Scored] = {
-    val terms = query.distinct.sorted
-    val seg = segmentsFor(terms)
-    val (n, avgdl, kk) = (globals.n, globals.avgdl, k)
-    val dfByTerm = spark.sparkContext.broadcast(mergedDfMap(seg))
-    val del = deletedBc
-    val perShard = seg.groupByKey(_.shard)
-      .flatMapGroups((shard: Long, rows: Iterator[SegmentRead]) =>
-        IndexReader.shardTopK(n, avgdl, kk, dfByTerm.value,
-          del.value)(shard, rows))
-    perShard.select(new TopKAggregator(k).toColumn).head()
+  /** Top-k over `seg`'s shards, routed by the query's total posting
+    * bytes ([[termMeta]]): at most `bound`, the global head is
+    * computed on the driver (Left); above it, the per-shard candidates
+    * stay a distributed Dataset for the caller's merge (Right). `kernel`
+    * builds the shard kernel from the GLOBAL merged dfs; both routes run
+    * it unchanged, so they return identical rows. */
+  private[query] def shardHeads(seg: Dataset[SegmentRead], k: Int,
+      bound: Long = maxDriverBytes)(
+      kernel: Map[String, Long] => ShardKernel)
+      : Either[Array[Scored], Dataset[Scored]] = {
+    val (dfByTerm, bytes) = termMeta(seg)
+    if (bytes.values.sum <= bound) Left(driverHead(seg, k, kernel(dfByTerm)))
+    else Right(shardCandidates(seg, dfByTerm, kernel))
   }
+
+  /** Driver route: collect the bucket-pruned rows (one job, no shuffle),
+    * run `kernel` per shard, take the global head. */
+  private[query] def driverHead(seg: Dataset[SegmentRead], k: Int,
+      kernel: ShardKernel): Array[Scored] =
+    IndexReader.head(seg.collect().groupBy(_.shard).iterator
+      .flatMap { case (shard, rows) => kernel(shard, rows.iterator) }, k)
+
+  /** Distributed route: `groupByKey(shard).flatMapGroups` fans `kernel`
+    * out to every shard's postings; each task returns its local top-k. */
+  private[query] def shardCandidates(seg: Dataset[SegmentRead],
+      dfByTerm: Map[String, Long],
+      kernel: Map[String, Long] => ShardKernel): Dataset[Scored] = {
+    val dfBc = spark.sparkContext.broadcast(dfByTerm)
+    seg.groupByKey(_.shard)
+      .flatMapGroups((shard: Long, rows: Iterator[SegmentRead]) =>
+        kernel(dfBc.value)(shard, rows))
+  }
+
+  /** [[shardHeads]] as a (docId, score) DataFrame ordered (score desc,
+    * docId asc), k rows: a local relation on the driver route, a
+    * TakeOrdered over shards × k candidates on the distributed one. */
+  private[query] def topKFrame(seg: Dataset[SegmentRead], k: Int)(
+      kernel: Map[String, Long] => ShardKernel): DataFrame =
+    shardHeads(seg, k)(kernel) match {
+      case Left(head) => head.toSeq.toDF("docId", "score")
+      case Right(cands) => cands.toDF("docId", "score")
+        .orderBy(desc("score"), asc("docId"))
+        .limit(k)
+    }
+
+  /** Block-Max WAND over one shard. Locals only: the kernel is shipped to
+    * the executors on the distributed route and must not capture `this`. */
+  private def wandKernel(k: Int): Map[String, Long] => ShardKernel = {
+    val (n, avgdl, del) = (globals.n, globals.avgdl, deletedBc)
+    dfByTerm => IndexReader.shardTopK(n, avgdl, k, dfByTerm, del.value)
+  }
+
+  /** Block-Max WAND top-k. Result is a tiny DataFrame (docId, score)
+    * ordered by (score desc, docId asc), k rows. */
+  def topK(query: Seq[String], k: Int): DataFrame =
+    topKFrame(segmentsFor(query.distinct.sorted, positions = false), k)(
+      wandKernel(k))
+
+  /** Top-k with the typed [[TopKAggregator]] merge on the distributed
+    * route: per-shard candidates partially aggregate map-side, the driver
+    * receives one Array[Scored] — no row-level sort/limit stage.
+    * Rank-identical to [[topK]]. */
+  def topKAgg(query: Seq[String], k: Int): Array[Scored] =
+    topKAgg(query, k, maxDriverBytes)
+
+  private def topKAgg(query: Seq[String], k: Int, bound: Long): Array[Scored] =
+    shardHeads(segmentsFor(query.distinct.sorted, positions = false), k,
+      bound)(wandKernel(k)) match {
+      case Left(head) => head
+      case Right(cands) => cands.select(new TopKAggregator(k).toColumn).head()
+    }
 
   /** Phrase top-k over positional postings (see [[Phrase]]): `slop = 0`
     * (default) is the exact consecutive-position match; `slop > 0` the
@@ -167,15 +255,11 @@ final class IndexReader(spark: SparkSession, val indexDir: String) {
     * returning silently-empty matches. Result is (docId, score), k rows,
     * ordered (score desc, docId asc). */
   def phraseTopK(phrase: Seq[String], k: Int, slop: Int = 0): DataFrame = {
-    val (seg, idfSum) = phrasePrep(phrase, slop)
-    val (avgdl, kk, ph, sl) = (globals.avgdl, k, phrase, slop)
-    val del = deletedBc
-    val perShard = seg.groupByKey(_.shard)
-      .flatMapGroups((shard: Long, rows: Iterator[SegmentRead]) =>
-        Phrase.shardTopK(avgdl, kk, ph, idfSum, del.value, sl)(shard, rows))
-    perShard.toDF("docId", "score")
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
+    val seg = phraseSegments(phrase, slop)
+    val (n, avgdl, del) = (globals.n, globals.avgdl, deletedBc)
+    topKFrame(seg, k)(dfByTerm =>
+      Phrase.shardTopK(avgdl, k, phrase, IndexReader.phraseIdf(n, phrase,
+        dfByTerm), del.value, slop))
   }
 
   /** EVERY phrase-matching doc's score, untruncated — (docId, score),
@@ -184,39 +268,36 @@ final class IndexReader(spark: SparkSession, val indexDir: String) {
     * pre-truncation would drop contributors). Same pruned postings read
     * as [[phraseTopK]]; output is match-set-sized, not corpus-sized. */
   def phraseScores(phrase: Seq[String], slop: Int = 0): DataFrame = {
-    val (seg, idfSum) = phrasePrep(phrase, slop)
-    val (avgdl, ph, sl) = (globals.avgdl, phrase, slop)
-    val del = deletedBc
+    val seg = phraseSegments(phrase, slop)
+    val idfSum = IndexReader.phraseIdf(globals.n, phrase, mergedDfMap(seg))
+    val (avgdl, del) = (globals.avgdl, deletedBc)
     seg.groupByKey(_.shard)
       .flatMapGroups((shard: Long, rows: Iterator[SegmentRead]) =>
-        Phrase.shardScores(avgdl, ph, idfSum, del.value, sl)(shard, rows))
+        Phrase.shardScores(avgdl, phrase, idfSum, del.value, slop)(shard, rows))
       .toDF("docId", "score")
+  }
+
+  /** The first generation built without positions, from the manifests
+    * read once per reader; None when every generation has them. */
+  private lazy val positionless: Option[String] = gens.collectFirst {
+    case (g, d) if !graft.index.Manifest.read(d, "postings")
+        .flatMap(_.params.get("positions")).contains("true") =>
+      s"gen-$g at $d was built without positions — rebuild/append with " +
+        "IndexParams(positions = true) to serve phrase queries"
   }
 
   /** Refuse loudly on a positions-less index (every generation's manifest
     * must record positions = true) — silent empty phrase matches would be
     * a wrong answer, not a degraded one. */
   private[query] def requirePositions(): Unit =
-    gens.foreach { case (g, d) =>
-      val p = graft.index.Manifest.read(d, "postings")
-        .flatMap(_.params.get("positions"))
-      require(p.contains("true"),
-        s"gen-$g at $d was built without positions — rebuild/append with " +
-          "IndexParams(positions = true) to serve phrase queries")
-    }
+    require(positionless.isEmpty, positionless.getOrElse(""))
 
-  private def phrasePrep(phrase: Seq[String], slop: Int)
-      : (Dataset[SegmentRead], Double) = {
+  private def phraseSegments(phrase: Seq[String], slop: Int)
+      : Dataset[SegmentRead] = {
     require(slop >= 0, "slop must be >= 0")
     require(phrase.nonEmpty, "empty phrase")
     requirePositions()
-    val seg = segmentsFor(phrase.distinct)
-    val dfByTerm = mergedDfMap(seg)
-    // slot-summed idf from GLOBAL dfs (duplicated slot terms count per
-    // slot) — same fold order as BruteForce.phraseScoreAll
-    val idfSum = phrase
-      .map(t => Bm25.idf(globals.n, dfByTerm.getOrElse(t, 0L))).sum
-    (seg, idfSum)
+    segmentsFor(phrase.distinct)
   }
 
   /** Driver-local serving cache: term -> (merged df, globally docId-sorted
@@ -229,33 +310,26 @@ final class IndexReader(spark: SparkSession, val indexDir: String) {
     *
     * SCALE BOUND: at 10^12 docs a stopword's posting list is terabytes —
     * collecting it to the driver is the one thing this serving path must
-    * never do. A metadata-only aggregation (term → Σ posting bytes, column-
-    * pruned so Parquet never reads the block payloads) sizes every term
-    * FIRST; only terms within `maxBytesPerTerm` have their blocks
-    * collected. Over-budget terms are recorded in
-    * [[ServingCache.overBudget]] and any query touching one routes through
-    * the exact distributed [[topKAgg]] inside [[topKLocal]] — same ranking,
-    * executor-resident memory. */
+    * never do. The metadata job ([[termMeta]]: term → Σ posting bytes,
+    * positions pruned from the scan) sizes every term FIRST; only terms
+    * within `maxBytesPerTerm` have their blocks collected. Over-budget
+    * terms are recorded in [[ServingCache.overBudget]] and any query
+    * touching one routes through the exact distributed [[topKAgg]] inside
+    * [[topKLocal]] — same ranking, executor-resident memory. The blocks
+    * carry no positions. */
   def loadCache(terms: Seq[String],
       maxBytesPerTerm: Long = IndexReader.DefaultMaxBytesPerTerm): ServingCache = {
     val distinctTerms = terms.distinct
-    val seg = segmentsFor(distinctTerms)
-    // job 1: per-term posting-byte totals — metadata columns only, the
-    // Parquet scan prunes the gaps/tfs/dls pages for rows it can skip and
-    // reads no other payload
-    val sizes = seg.toDF()
-      .select(col("term"),
-        (length(col("gaps")) + length(col("tfs")) + length(col("dls")))
-          .cast("long").as("bytes"))
-      .groupBy("term").agg(sum("bytes").as("bytes"))
-      .as[(String, Long)].collect().toMap
+    // job 1: per-term posting-byte totals — the Parquet scan reads the
+    // term, gaps/tfs/dls columns and no positions
+    val (_, sizes) = termMeta(segmentsFor(distinctTerms, positions = false))
     val over = sizes.filter(_._2 > maxBytesPerTerm).keySet
     val residentTerms = distinctTerms.filterNot(over)
     // job 2: collect blocks for resident terms ONLY (term predicate pushed
     // into the Parquet scan; over-budget blocks never reach the driver)
     val resident =
       if (residentTerms.isEmpty) Map.empty[String, (Long, Array[SegBlock])]
-      else segmentsFor(residentTerms).collect()
+      else segmentsFor(residentTerms, positions = false).collect()
         .groupBy(_.term)
         .map { case (t, rows) =>
           val df = IndexReader.mergedDf(rows)
@@ -269,11 +343,13 @@ final class IndexReader(spark: SparkSession, val indexDir: String) {
   /** Single global Block-Max WAND over merged posting lists — the
     * serving-node hot path; threshold pruning spans the whole corpus.
     * Queries touching an over-budget term transparently fall back to the
-    * exact distributed [[topKAgg]] (rank-identical; the driver never holds
-    * the hot term's postings). */
+    * exact distributed [[topKAgg]] (rank-identical; its route bound drops
+    * to the cache's per-term budget, so the driver never holds the hot
+    * term's postings). */
   def topKLocal(cache: ServingCache, query: Seq[String], k: Int): Array[Scored] = {
     val terms = query.distinct.sorted
-    if (terms.exists(cache.overBudget)) return topKAgg(query, k)
+    if (terms.exists(cache.overBudget))
+      return topKAgg(query, k, math.min(maxDriverBytes, cache.maxBytesPerTerm))
     val cursors = terms.flatMap { t =>
       cache.resident.get(t).map { case (df, blocks) =>
         new TermCursor(t, Bm25.idf(globals.n, df), blocks, globals.avgdl)
@@ -299,16 +375,37 @@ final case class ServingCache(
 }
 
 object IndexReader {
-  /** Default per-term driver budget for [[IndexReader.loadCache]]: 64 MiB.
-    * Generous for every real query term (a 64 MiB PForDelta posting list
-    * is ~tens of millions of docs) while guaranteeing a stopword at
-    * 10^12-doc scale cannot take down the serving driver. */
+  /** One shard's top-k: (shard, its segment rows) → local candidates. */
+  type ShardKernel = (Long, Iterator[SegmentRead]) => Iterator[Scored]
+
+  /** Default per-term driver budget for [[IndexReader.loadCache]], and the
+    * whole-query bound of the driver top-k route: 64 MiB. Generous for
+    * every real query term (a 64 MiB PForDelta posting list is ~tens of
+    * millions of docs) while guaranteeing a stopword at 10^12-doc scale
+    * cannot take down the serving driver — nor can 50 dictionary
+    * expansions pull 50 × 64 MiB onto it. */
   val DefaultMaxBytesPerTerm: Long = 64L << 20
 
   /** Resident-tombstone cap: 4M docIds (32 MB sorted longs) — far above
     * any sane between-compaction delete churn, far below broadcast
     * hazard territory. */
   val MaxResidentDeletes: Int = 1 << 22
+
+  /** Posting bytes of one segment row: the gaps/tfs/dls payload, plus
+    * positions when the row carries them. */
+  def payloadBytes: Column =
+    (length(col("gaps")) + length(col("tfs")) + length(col("dls")) +
+      coalesce(length(col("pos")), lit(0))).cast("long")
+
+  /** The global head of per-shard candidates: (score desc, docId asc),
+    * k rows — the order every top-k route returns. */
+  def head(xs: IterableOnce[Scored], k: Int): Array[Scored] =
+    xs.iterator.toArray.sortBy(s => (-s.score, s.docId)).take(k)
+
+  /** A phrase's slot-summed idf from GLOBAL dfs (duplicated slot terms
+    * count per slot) — same fold order as BruteForce.phraseScoreAll. */
+  def phraseIdf(n: Long, phrase: Seq[String], dfByTerm: Map[String, Long]): Double =
+    phrase.map(t => Bm25.idf(n, dfByTerm.getOrElse(t, 0L))).sum
 
   /** Membership test against the sorted tombstone array (null = none). */
   @inline def isDeleted(del: Array[Long], id: Long): Boolean =

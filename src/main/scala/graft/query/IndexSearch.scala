@@ -15,8 +15,15 @@ import graft.index.PForDelta
   *
   *  - postings reads prune to the query terms' hash buckets (directory
   *    partition pruning) with the term predicate pushed into Parquet;
-  *  - scoring fans out per document shard (`groupByKey(shard)`), each task
-  *    scoring only decoded postings — the corpus text is never touched;
+  *  - scoring runs one shard kernel per document shard, over decoded
+  *    postings only — the corpus text is never touched. One metadata job
+  *    returns the terms' merged dfs and total posting bytes; up to
+  *    [[IndexReader.DefaultMaxBytesPerTerm]] for the whole query the rows
+  *    are collected and the kernels run on the driver (two jobs, no
+  *    shuffle), above it they fan out with `groupByKey(shard)` and a
+  *    TakeOrdered merges the candidates ([[IndexReader.shardHeads]]);
+  *  - every table (postings, termstats, docs, tf) is resolved once per
+  *    reader, so no query pays a schema-inference job;
   *  - dictionaries (fuzzy expansion, suggesters) come from the index's
   *    termstats/ table — (term, df, total_tf), vocabulary-sized;
   *  - more-like-this term selection reads the source document's row slice
@@ -50,27 +57,24 @@ final class IndexSearch(spark: SparkSession,
     * fuzzy/suggest paths scan instead of re-tokenizing the corpus. Exact
     * integer sums (generations are disjoint doc sets). */
   def termStats: DataFrame =
-    reader.gens.map { case (_, d) => spark.read.parquet(s"$d/termstats") }
-      .reduce(_.unionByName(_))
+    reader.termstatsTables.reduce(_.unionByName(_))
       .groupBy("term")
       .agg(sum("df").as("df"), sum("total_tf").as("total_tf"))
 
   /** Per-doc metadata (docId, url, lang) from the docs/ artifact — the
     * facet side. Text is pruned away at the scan. */
-  def docsMeta: DataFrame =
-    reader.gens.map { case (_, d) =>
-      spark.read.parquet(s"$d/docs").select("docId", "url", "lang")
-    }.reduce(_.unionByName(_))
+  def docsMeta: DataFrame = IndexSearch.union(reader.docsTables, "docId", "url", "lang")
 
   private def norm(ts: Seq[String]): Seq[String] =
     ts.map(Analyzer.lowerLikeCatalyst)
 
   /** Boolean query (OpenSearch `bool`) served from postings: one
-    * bucket-pruned segment read over (must ∪ should ∪ mustNot), one shard
-    * fan-out that scores decoded postings into a dense per-shard array
-    * (shard = docId range, so presence/exclusion gates are array flags —
-    * no per-doc hashing, no joins), one global TakeOrdered over shards × k
-    * candidate rows. Semantics identical to [[Search.boolTopK]]. */
+    * bucket-pruned segment read over (must ∪ should ∪ mustNot), scored per
+    * shard into a dense array (shard = docId range, so presence/exclusion
+    * gates are array flags — no per-doc hashing, no joins), then the
+    * global head of shards × k candidates — on the driver or the
+    * executors, by the query's posting bytes ([[IndexReader.shardHeads]]).
+    * Semantics identical to [[Search.boolTopK]]. */
   def boolTopK(must: Seq[String], should: Seq[String], mustNot: Seq[String],
       k: Int, excludeDocId: Long = -1L,
       minShouldMatch: Int = 0): DataFrame =
@@ -101,22 +105,22 @@ final class IndexSearch(spark: SparkSession,
     require(scoreTerms.nonEmpty, "bool query needs must or should terms")
     require(mustN.intersect(notN).isEmpty, "a term cannot be must AND must_not")
     val allTerms = (scoreTerms ++ notN).distinct
-    val seg = reader.segmentsFor(allTerms)
-    val dfByTerm = spark.sparkContext.broadcast(reader.mergedDfMap(seg))
-    val (n, avgdl, kk) = (reader.globals.n, reader.globals.avgdl, k)
-    val (st, ms, ns, ex) =
-      (scoreTerms.toArray, mustN.toSet, notN.toSet, excludeDocId)
-    val (as, ad) = (afterScore, afterDocId)
-    val (ss, msm) = (shouldN.toSet, minShouldMatch)
-    val del = reader.deletedBc
-    val perShard = seg.groupByKey(_.shard)
-      .flatMapGroups((shard: Long, rows: Iterator[SegmentRead]) =>
-        IndexSearch.shardBoolTopK(n, avgdl, kk, dfByTerm.value,
-          st, ms, ns, ex, as, ad, del.value, ss, msm)(shard, rows))
-    perShard.toDF("docId", "score")
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
+    // locals only: the kernel ships to the executors on the distributed route
+    val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
+    val (st, ms, ns, ss) =
+      (scoreTerms.toArray, mustN.toSet, notN.toSet, shouldN.toSet)
+    reader.topKFrame(reader.segmentsFor(allTerms, positions = false), k)(
+      dfByTerm => IndexSearch.shardBoolTopK(n, avgdl, k, dfByTerm, st, ms, ns,
+        excludeDocId, afterScore, afterDocId, del.value, ss, minShouldMatch))
   }
+
+  /** The dictionary's first `max` terms matching `cond`, in ascending
+    * term order — the cap runs inside the plan (TakeOrdered), so a hot
+    * pattern never collects its whole expansion to the driver. */
+  private[query] def firstTerms(cond: org.apache.spark.sql.Column, max: Int)
+      : Seq[String] =
+    termStats.filter(cond).select("term").orderBy("term").limit(max)
+      .as[String].collect().toSeq
 
   /** Fuzzy term expansion against the INDEX dictionary: [[Search.fuzzyExpand]]
     * over termstats/ — the exact-preserving length pre-filter prunes the
@@ -180,9 +184,7 @@ final class IndexSearch(spark: SparkSession,
     * [[Search.moreLikeThisTerms]]. At serving scale, bucket the tf
     * artifact by docId to make this lookup partition-pruned too. */
   def moreLikeThisTerms(docId: Long, m: Int): DataFrame = {
-    val tf = reader.gens.map { case (_, d) =>
-      spark.read.parquet(s"$d/tf").select("docId", "term", "tf")
-    }.reduce(_.unionByName(_))
+    val tf = IndexSearch.union(reader.tfTables, "docId", "term", "tf")
       .filter(col("docId") === docId)
       .select("term", "tf")
     tf.join(termStats.select("term", "df"), "term")
@@ -205,7 +207,7 @@ final class IndexSearch(spark: SparkSession,
   def matchingDocIds(queryTerms: Seq[String]): DataFrame = {
     val terms = norm(queryTerms).distinct.sorted
     val del = reader.deletedBc
-    reader.segmentsFor(terms)
+    reader.segmentsFor(terms, positions = false)
       .flatMap(r => PForDelta.decodeGaps(r.gaps, r.n, r.firstDocId)
         .filter(id => !IndexReader.isDeleted(del.value, id)))
       .toDF("docId").distinct()
@@ -245,8 +247,7 @@ final class IndexSearch(spark: SparkSession,
   def prefixTopK(prefix: String, k: Int, maxExpansions: Int = 50)
       : DataFrame = {
     val p = Analyzer.lowerLikeCatalyst(prefix)
-    val expanded = termStats.filter(col("term").startsWith(p))
-      .select("term").as[String].collect().sorted.take(maxExpansions).toSeq
+    val expanded = firstTerms(col("term").startsWith(p), maxExpansions)
     if (expanded.isEmpty) Seq.empty[(Long, Double)].toDF("docId", "score")
     else boolTopK(Nil, expanded, Nil, k)
   }
@@ -263,9 +264,7 @@ final class IndexSearch(spark: SparkSession,
     val dfByTerm = reader.mergedDfMap(seg)
     val (n, avgdl) = (reader.globals.n, reader.globals.avgdl)
     // dl rides every tf row (denormalized at build time)
-    val docRows = reader.gens.map { case (_, d) =>
-      spark.read.parquet(s"$d/tf").select("docId", "term", "tf", "dl")
-    }.reduce(_.unionByName(_))
+    val docRows = IndexSearch.union(reader.tfTables, "docId", "term", "tf", "dl")
       .filter(col("docId") === docId && col("term").isin(terms: _*))
       .select("term", "tf", "dl").as[(String, Long, Long)].collect()
     val docTf = docRows.map { case (t, tf, _) => t -> tf }.toMap
@@ -287,19 +286,16 @@ final class IndexSearch(spark: SparkSession,
     * globals.json + the termstats artifact (vocabulary-sized metadata;
     * no postings read). */
   def stats: DataFrame =
-    reader.gens.map { case (g, d) =>
+    reader.gens.zip(reader.termstatsTables).map { case ((g, d), ts) =>
       val gl = graft.index.Globals.read(d)
-      val terms = spark.read.parquet(s"$d/termstats").count()
-      (g, gl.n, terms, gl.sumDl)
+      (g, gl.n, ts.count(), gl.sumDl)
     }.toDF("gen", "docs", "terms", "sum_dl")
 
   /** Term vectors (OpenSearch `_termvectors`): one row per term of one
     * document — (term, tf, df) from the tf artifact (docId predicate
     * pushed) joined to the termstats dictionary. */
   def termVectors(docId: Long): DataFrame = {
-    val tf = reader.gens.map { case (_, d) =>
-      spark.read.parquet(s"$d/tf").select("docId", "term", "tf")
-    }.reduce(_.unionByName(_))
+    val tf = IndexSearch.union(reader.tfTables, "docId", "term", "tf")
       .filter(col("docId") === docId)
       .select("term", "tf")
     tf.join(termStats.select("term", "df"), "term")
@@ -316,35 +312,26 @@ final class IndexSearch(spark: SparkSession,
     val p = Analyzer.lowerLikeCatalyst(pattern)
     val like = p.replace("\\", "\\\\").replace("%", "\\%")
       .replace("_", "\\_").replace("*", "%")
-    val expanded = termStats.filter(col("term").like(like))
-      .select("term").as[String].collect().sorted.take(maxExpansions).toSeq
+    val expanded = firstTerms(col("term").like(like), maxExpansions)
     if (expanded.isEmpty) Seq.empty[(Long, Double)].toDF("docId", "score")
     else boolTopK(Nil, expanded, Nil, k)
   }
 
   /** Disjunction-max top-k served from postings (OpenSearch `dis_max`):
     * per-doc score = best term's BM25 + `tieBreaker` × the rest — the
-    * same bucket-pruned segment read and shard fan-out as [[boolTopK]],
-    * with a second dense per-shard array tracking the max. Semantics
-    * identical to [[Search.disMaxTopK]]. */
+    * same bucket-pruned segment read and routed shard top-k as
+    * [[boolTopK]], with a second dense per-shard array tracking the max.
+    * Semantics identical to [[Search.disMaxTopK]]. */
   def disMaxTopK(queryTerms: Seq[String], tieBreaker: Double, k: Int)
       : DataFrame = {
     require(tieBreaker >= 0.0 && tieBreaker <= 1.0, "tie_breaker in [0,1]")
     val terms = norm(queryTerms).distinct.sorted
     require(terms.nonEmpty, "dis_max needs terms")
-    val seg = reader.segmentsFor(terms)
-    val dfByTerm = spark.sparkContext.broadcast(reader.mergedDfMap(seg))
-    val (n, avgdl, kk, tb) = (reader.globals.n, reader.globals.avgdl, k,
-      tieBreaker)
+    val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
     val ts = terms.toArray
-    val del = reader.deletedBc
-    val perShard = seg.groupByKey(_.shard)
-      .flatMapGroups((shard: Long, rows: Iterator[SegmentRead]) =>
-        IndexSearch.shardDisMaxTopK(n, avgdl, kk, dfByTerm.value, ts, tb,
-          del.value)(shard, rows))
-    perShard.toDF("docId", "score")
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
+    reader.topKFrame(reader.segmentsFor(terms, positions = false), k)(
+      dfByTerm => IndexSearch.shardDisMaxTopK(n, avgdl, k, dfByTerm, ts,
+        tieBreaker, del.value))
   }
 
   /** Per-term boosted top-k served from postings (OpenSearch
@@ -358,19 +345,12 @@ final class IndexSearch(spark: SparkSession,
     }.toMap
     require(byTerm.size == boosts.size, "duplicate boost term")
     val terms = byTerm.keys.toSeq.sorted
-    val seg = reader.segmentsFor(terms)
-    val dfByTerm = spark.sparkContext.broadcast(reader.mergedDfMap(seg))
-    val (n, avgdl, kk) = (reader.globals.n, reader.globals.avgdl, k)
-    val (ts, bs) = (terms.toArray, byTerm)
-    val del = reader.deletedBc
-    val perShard = seg.groupByKey(_.shard)
-      .flatMapGroups((shard: Long, rows: Iterator[SegmentRead]) =>
-        IndexSearch.shardBoolTopK(n, avgdl, kk, dfByTerm.value,
-          ts, Set.empty, Set.empty, -1L, Double.NaN, -1L, del.value,
-          Set.empty, 0, bs)(shard, rows))
-    perShard.toDF("docId", "score")
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
+    val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
+    val ts = terms.toArray
+    reader.topKFrame(reader.segmentsFor(terms, positions = false), k)(
+      dfByTerm => IndexSearch.shardBoolTopK(n, avgdl, k, dfByTerm, ts,
+        Set.empty, Set.empty, -1L, Double.NaN, -1L, del.value, Set.empty, 0,
+        byTerm))
   }
 
   /** Regexp query (OpenSearch `regexp`): full-term match against the
@@ -380,8 +360,8 @@ final class IndexSearch(spark: SparkSession,
     * Semantics identical to [[Search.regexpTopK]]. */
   def regexpTopK(pattern: String, k: Int, maxExpansions: Int = 50)
       : DataFrame = {
-    val expanded = termStats.filter(col("term").rlike(s"^(?:$pattern)$$"))
-      .select("term").as[String].collect().sorted.take(maxExpansions).toSeq
+    val expanded = firstTerms(col("term").rlike(s"^(?:$pattern)$$"),
+      maxExpansions)
     if (expanded.isEmpty) Seq.empty[(Long, Double)].toDF("docId", "score")
     else boolTopK(Nil, expanded, Nil, k)
   }
@@ -427,9 +407,7 @@ final class IndexSearch(spark: SparkSession,
     val fgCount = matching.count()
     require(fgCount > 0, "query matched nothing")
     val nDocs = reader.globals.n
-    val termDocs = reader.gens.map { case (_, d) =>
-      spark.read.parquet(s"$d/tf").select("docId", "term")
-    }.reduce(_.unionByName(_))
+    val termDocs = IndexSearch.union(reader.tfTables, "docId", "term")
     val fg = termDocs.join(matching, Seq("docId"), "left_semi")
       .groupBy("term").agg(count(lit(1)).as("fg_df"))
     val fgPct = col("fg_df").cast("double") / lit(fgCount.toDouble)
@@ -472,9 +450,7 @@ final class IndexSearch(spark: SparkSession,
       : DataFrame = {
     val terms = norm(queryTerms).distinct.sorted
     val top = boolTopK(Nil, terms, Nil, k)
-    val text = reader.gens.map { case (_, d) =>
-      spark.read.parquet(s"$d/docs").select("docId", "text")
-    }.reduce(_.unionByName(_))
+    val text = IndexSearch.union(reader.docsTables, "docId", "text")
     top.join(text, "docId")
       .select(col("docId"), col("score"),
         Snippets.snippet(col("text"), terms, w).as("snippet"),
@@ -618,8 +594,7 @@ final class IndexSearch(spark: SparkSession,
     reader.requirePositions()
     val exact = phrase.init.map(Analyzer.lowerLikeCatalyst)
     val prefix = Analyzer.lowerLikeCatalyst(phrase.last)
-    val expansion = termStats.filter(col("term").startsWith(prefix))
-      .select("term").as[String].collect().sorted.take(maxExpansions).toSeq
+    val expansion = firstTerms(col("term").startsWith(prefix), maxExpansions)
     if (expansion.isEmpty)
       return Seq.empty[(Long, Double)].toDF("docId", "score")
     val dfUnion = matchingDocIds(expansion).count()
@@ -687,7 +662,7 @@ final class IndexSearch(spark: SparkSession,
     * fixed-order Column sums, exactly like the brute pivot. */
   def termScores(queryTerms: Seq[String]): DataFrame = {
     val terms = norm(queryTerms).distinct.sorted
-    val seg = reader.segmentsFor(terms)
+    val seg = reader.segmentsFor(terms, positions = false)
     val dfByTerm = spark.sparkContext.broadcast(reader.mergedDfMap(seg))
     val (n, avgdl) = (reader.globals.n, reader.globals.avgdl)
     val del = reader.deletedBc
@@ -750,6 +725,10 @@ final class IndexSearch(spark: SparkSession,
 }
 
 object IndexSearch {
+
+  /** `cols` of every generation's table, unioned. */
+  private def union(tables: Seq[DataFrame], cols: String*): DataFrame =
+    tables.map(_.select(cols.map(col): _*)).reduce(_.unionByName(_))
 
   /** OpenSearch `multi_match` served from per-field INDEXES: each field
     * of a corpus is its own index (Lucene semantics — field-local

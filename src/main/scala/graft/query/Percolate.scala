@@ -62,8 +62,9 @@ object Percolate {
   def percolate(docs: DataFrame, idCol: String, textCol: String,
       queries: Seq[StoredQuery]): DataFrame = {
     require(queries.nonEmpty, "percolate needs at least one stored query")
-    require(idCol != "_pc_terms" && idCol != "query_id",
-      s"idCol '$idCol' collides with a percolate output column")
+    require(!Set("_pc_terms", "query_id", "q_must", "q_should", "q_not",
+        "q_min")(idCol),
+      s"idCol '$idCol' collides with a percolate working column")
     require(queries.map(_.queryId).distinct.size == queries.size,
       "stored query ids must be unique")
     val spark = docs.sparkSession

@@ -15,8 +15,7 @@ import org.apache.spark.sql.expressions.Aggregator
 final class TopKAggregator(k: Int)
   extends Aggregator[Scored, Array[Scored], Array[Scored]] {
 
-  private def best(xs: Array[Scored]): Array[Scored] =
-    xs.sortBy(s => (-s.score, s.docId)).take(k)
+  private def best(xs: Array[Scored]): Array[Scored] = IndexReader.head(xs, k)
 
   override def zero: Array[Scored] = Array.empty
 

@@ -75,6 +75,23 @@ class EncryptionSpec extends AnyFunSuite {
     assert(right.getString(0) == "kms wrapped")
   }
 
+  test("the unwrap cache keeps the 5 most recently used keys") {
+    val unwraps = new java.util.concurrent.atomic.AtomicInteger()
+    val counting = new Encryption.KeyProvider {
+      def decryptKey(k: Array[Byte]): Array[Byte] = { unwraps.incrementAndGet(); k }
+    }
+    val keys = (1 to 6).map(i =>
+      Base64.getEncoder.encodeToString(Array.fill[Byte](16)(i.toByte)))
+    for (_ <- 1 to 2; k <- keys.take(5)) Encryption.KeyCache.get(k, counting)
+    assert(unwraps.get == 5)
+    // a sixth key evicts the least recently used one, keys(0)
+    Encryption.KeyCache.get(keys(5), counting)
+    Encryption.KeyCache.get(keys(1), counting)
+    assert(unwraps.get == 6)
+    assert(Encryption.KeyCache.get(keys(0), counting).sameElements(Array.fill[Byte](16)(1)))
+    assert(unwraps.get == 7)
+  }
+
   test("local key directory: latest .key file wins; rotation adds a newer file") {
     val dir = TestSpark.tmpDir("graft-keys")
     Encryption.rotateDataKey(dir, "2024-01-01T00-00-00.key", "oldkey")

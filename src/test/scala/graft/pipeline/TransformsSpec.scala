@@ -113,6 +113,18 @@ class TransformsSpec extends AnyFunSuite {
     }
   }
 
+  test("a pipeline name that cannot sit in a JSON string literal is rejected") {
+    for (name <- Seq("my\"pipe", "my\\pipe", "my\npipe")) {
+      val e = intercept[Transforms.TransformerException] {
+        Transforms.expand(miniTemplate, name, pipelineModel, Transforms.defaultFunctions())
+      }
+      assert(e.getMessage.contains("cannot be spliced"))
+    }
+    // ordinary punctuation in a name still expands
+    assert(Transforms.expand(miniTemplate, "my-pipe_2", pipelineModel,
+      Transforms.defaultFunctions()).get("my-pipe_2").isDefined)
+  }
+
   test("transformation functions match the reference implementations") {
     val noEnv = Transforms.defaultFunctions(None)
     val env = Transforms.defaultFunctions(Some("pipeline-ident-that-is-long"))

@@ -111,13 +111,20 @@ class IndexSearchSpec extends AnyFunSuite {
   }
 
   test("served plans read postings/termstats/tf — never the corpus text") {
-    val boolPlan = search.boolTopK(Seq("the"), Seq("w00002"), Seq("w00004"), 10)
-      .queryExecution.executedPlan.toString
-    assert(boolPlan.contains("postings"), "bool must scan the segment store")
-    assert(!boolPlan.contains("/docs"), s"bool plan touches the corpus:\n$boolPlan")
-    // bucket pruning reaches the postings scan as a partition filter
-    assert(boolPlan.contains("PartitionFilters") && boolPlan.contains("bucket"),
-      s"no bucket partition pruning in:\n$boolPlan")
+    // a served bool executes one of two plans: the segment scan the
+    // driver route collects, or the distributed route's shard fan-out
+    val driverScan = search.reader.segmentsFor(Seq("the", "w00002", "w00004"),
+      positions = false)
+    val fanOut = new IndexSearch(spark, new IndexReader(spark, indexDir, -1L))
+      .boolTopK(Seq("the"), Seq("w00002"), Seq("w00004"), 10)
+    for (boolPlan <- Seq(driverScan.queryExecution.executedPlan.toString,
+        fanOut.queryExecution.executedPlan.toString)) {
+      assert(boolPlan.contains("postings"), "bool must scan the segment store")
+      assert(!boolPlan.contains("/docs"), s"bool plan touches the corpus:\n$boolPlan")
+      // bucket pruning reaches the postings scan as a partition filter
+      assert(boolPlan.contains("PartitionFilters") && boolPlan.contains("bucket"),
+        s"no bucket partition pruning in:\n$boolPlan")
+    }
     val mltPlan = search.moreLikeThisTerms(17L, 8)
       .queryExecution.executedPlan.toString
     assert(mltPlan.contains("/tf") && !mltPlan.contains("/docs"))

@@ -66,6 +66,16 @@ class PercolateSpec extends AnyFunSuite {
       ._2 == Seq("hash", "join"))
   }
 
+  test("idCol naming a percolate working column is rejected") {
+    for (c <- Seq("_pc_terms", "query_id", "q_must", "q_should", "q_not", "q_min")) {
+      val renamed = docs.withColumnRenamed("docId", c)
+      val e = intercept[IllegalArgumentException] {
+        Percolate.percolate(renamed, c, "text", Seq(StoredQuery("q", must = Seq("spark"))))
+      }
+      assert(e.getMessage.contains(c))
+    }
+  }
+
   test("invalid inputs fail loudly") {
     intercept[IllegalArgumentException] {
       Percolate.percolate(docs, "docId", "text", Seq(StoredQuery("empty")))

@@ -1,0 +1,77 @@
+package graft.query
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusSync
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+import graft.corpus.SyntheticCorpus
+import graft.index.{IndexBuilder, IndexParams}
+
+/** Spark jobs per served call on a warm reader, pinned per query shape.
+  * The reader resolves its tables once, so a call pays only its own work:
+  * one metadata job and one collect for a routed top-k. A schema-inference
+  * job or an extra metadata pass creeping back into a query fails here.
+  * Counted with adaptive execution off, as the benchmark runs, so each
+  * count is the plan's own job structure. */
+class ServedJobsSpec extends AnyFunSuite {
+
+  private lazy val spark = TestSpark.spark
+
+  private lazy val search: IndexSearch = {
+    val dir = TestSpark.tmpDir("graft-idx-jobs")
+    new IndexBuilder(spark, dir,
+      IndexParams(buckets = 8, shardSize = 128, blockSize = 32,
+        buildPartitions = 4, positions = true))
+      .build(SyntheticCorpus.generate(spark, 400, seed = 5L, partitions = 4),
+        "synthetic(seed=5,n=400)")
+    new IndexSearch(spark, dir)
+  }
+
+  /** Jobs started by `f` on this thread (job group `group`). */
+  private def jobs(group: String)(f: => Unit): Int = {
+    val n = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try f finally {
+      sc.clearJobGroup()
+      ListenerBusSync.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get()
+  }
+
+  test("each served shape runs a fixed number of jobs on a warm reader") {
+    import SyntheticCorpus.{Stopwords => sw, term => t}
+    val reader = search.reader
+    val shapes: Seq[(String, () => DataFrame, Int)] = Seq(
+      ("bool", () => search.boolTopK(Seq(sw(1)), Seq(t(3)), Seq(t(60)), 10), 2),
+      ("dis_max", () => search.disMaxTopK(Seq(t(2), t(30), t(300)), 0.3, 10), 2),
+      ("phrase", () => reader.phraseTopK(Seq(sw(0), sw(1)), 10), 2),
+      ("mlt", () => search.moreLikeThisTopK(7L, 8, 10), 4),
+      ("facets", () => search.facets(Seq(t(4)), "lang"), 2),
+      ("query_string", () => search.queryStringTopK(
+        s"+${sw(2)} ${t(5)}^2.0 ${t(150)} -${t(400)}", 10), 3),
+      ("dist_topk", () => reader.topK(Seq(t(7), t(900)), 10), 2))
+    val conf = spark.conf
+    val aqe = conf.get("spark.sql.adaptive.enabled")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val counts = shapes.map { case (name, call, _) =>
+        assert(call().collect().nonEmpty, s"$name: no rows") // warm the reader
+        name -> jobs(s"served-jobs-$name")(call().collect())
+      }
+      assert(counts == shapes.map(s => s._1 -> s._3))
+    } finally conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+}

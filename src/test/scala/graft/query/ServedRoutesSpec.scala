@@ -1,0 +1,142 @@
+package graft.query
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+import graft.corpus.SyntheticCorpus
+import graft.index.{IncrementalIndex, IndexParams}
+
+/** The served top-k runs one shard kernel per shard on either of two
+  * routes ([[IndexReader.shardHeads]]): on the driver over the collected
+  * bucket-pruned rows, or fanned out by `groupByKey(shard)`. Every top-k
+  * entry point must return the same rows on both, on an index with all
+  * the hard parts: two generations whose boundary falls inside shards,
+  * positions, and tombstones. Readers opened with a route bound of
+  * `Long.MaxValue` take the driver route for every query, with `-1` the
+  * distributed one. */
+class ServedRoutesSpec extends AnyFunSuite {
+
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private lazy val dir: String = {
+    val d = TestSpark.tmpDir("graft-idx-routes")
+    val params = IndexParams(buckets = 8, shardSize = 128, blockSize = 32,
+      buildPartitions = 4, positions = true)
+    val all = SyntheticCorpus.generate(spark, 600, seed = 41L, partitions = 4)
+    IncrementalIndex.append(spark, d,
+      all.filter(length(col("url")) % 2 === 0), params, "gen0")
+    IncrementalIndex.append(spark, d,
+      all.filter(length(col("url")) % 2 === 1), params, "gen1")
+    assert(new IndexSearch(spark, d).deleteByQuery(Seq("w00300")) > 0)
+    d
+  }
+  private lazy val onDriver = new IndexReader(spark, dir, Long.MaxValue)
+  private lazy val distributed = new IndexReader(spark, dir, -1L)
+
+  private def rows(df: DataFrame): Seq[(Long, Double)] =
+    df.select(col("docId").cast("long"), col("score"))
+      .as[(Long, Double)].collect().toSeq
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec]
+
+  test("the index under test has two generations and tombstones") {
+    assert(onDriver.gens.size == 2)
+    assert(onDriver.deletedSorted != null && onDriver.deletedSorted.nonEmpty)
+  }
+
+  test("every top-k entry point returns identical rows on both routes") {
+    val (d, x) = (new IndexSearch(spark, onDriver), new IndexSearch(spark, distributed))
+    val deleted = onDriver.deletedSorted.toSet
+    // (entry point, query, whether the call returns the route's own frame)
+    val cases: Seq[(String, IndexSearch => DataFrame, Boolean)] = Seq(
+      ("topK", _.reader.topK(Seq("w00002", "w00005", "the", "w00300"), 25), true),
+      ("phraseTopK", _.reader.phraseTopK(Seq("the", "of"), 20), true),
+      ("phraseTopK slop", _.reader.phraseTopK(Seq("of", "the"), 20, slop = 2), true),
+      ("boolTopK", _.boolTopK(Seq("the"), Seq("w00002", "w00007"), Seq("w00004"),
+        20, minShouldMatch = 1), true),
+      ("searchAfter", _.searchAfter(Seq("the", "w00002"), 1.5, 100L, 15), true),
+      ("fuzzyTopK", _.fuzzyTopK(Seq("w0002"), 15), true),
+      ("moreLikeThisTopK", _.moreLikeThisTopK(17L, 8, 12), true),
+      ("prefixTopK", _.prefixTopK("w001", 15, maxExpansions = 6), true),
+      ("wildcardTopK", _.wildcardTopK("w0*3", 15), true),
+      ("regexpTopK", _.regexpTopK("w0000[1-4]", 15), true),
+      ("synonymTopK", _.synonymTopK(Seq("w00002"), Map("w00002" -> Seq("w00009")), 15), true),
+      ("disMaxTopK", _.disMaxTopK(Seq("the", "w00002", "w00011"), 0.3, 20), true),
+      ("boostedTopK", _.boostedTopK(Seq("the" -> 0.5, "w00002" -> 2.0), 20), true),
+      ("rescoreTopK", _.rescoreTopK(Seq("the", "w00002"), Seq("the", "of"), 1, 30, 10), false),
+      ("topKWithSnippets", _.topKWithSnippets(Seq("w00002", "w00005"), 10, 6), false))
+    for ((name, q, routed) <- cases) {
+      val (a, b) = (q(d), q(x))
+      if (routed) {
+        assert(isLocal(a), s"$name: the driver route planned a distributed scan")
+        assert(!isLocal(b), s"$name: the distributed route ran on the driver")
+      }
+      val (ra, rb) = (rows(a), rows(b))
+      assert(ra.nonEmpty, s"$name: no rows")
+      assert(ra == rb, s"$name: routes diverged\n driver=$ra\n distributed=$rb")
+      assert(!ra.exists(r => deleted(r._1)), s"$name: a tombstoned doc came back")
+    }
+    // the default bound serves this small index on the driver
+    assert(isLocal(new IndexReader(spark, dir).topK(Seq("w00002"), 5)))
+  }
+
+  test("topKAgg matches topK on both routes") {
+    val q = Seq("w00002", "w00005", "the")
+    val expect = rows(onDriver.topK(q, 25))
+    for (r <- Seq(onDriver, distributed))
+      assert(r.topKAgg(q, 25).map(s => (s.docId, s.score)).toSeq == expect)
+  }
+
+  test("helper branches, called directly, give the same head for one kernel") {
+    val r = new IndexReader(spark, dir)
+    val seg = r.segmentsFor(Seq("the", "w00002", "w00300"), positions = false)
+    val (n, avgdl, del) = (r.globals.n, r.globals.avgdl, r.deletedBc)
+    val kernel: Map[String, Long] => IndexReader.ShardKernel =
+      df => IndexReader.shardTopK(n, avgdl, 30, df, del.value)
+    val (dfByTerm, bytes) = r.termMeta(seg)
+    assert(dfByTerm == r.mergedDfMap(seg) && bytes.keySet == dfByTerm.keySet)
+    val local = r.driverHead(seg, 30, kernel(dfByTerm))
+    val fanned = IndexReader.head(
+      r.shardCandidates(seg, dfByTerm, kernel).collect(), 30)
+    assert(local.nonEmpty && local.toSeq == fanned.toSeq)
+  }
+
+  test("the route bound applies to the whole query's posting bytes, inclusive") {
+    val r = new IndexReader(spark, dir)
+    val one = r.segmentsFor(Seq("the"), positions = false)
+    val both = r.segmentsFor(Seq("the", "of"), positions = false)
+    val (oneBytes, bothBytes) =
+      (r.termMeta(one)._2.values.sum, r.termMeta(both)._2.values.sum)
+    assert(oneBytes < bothBytes)
+    val kernel: Map[String, Long] => IndexReader.ShardKernel = {
+      val (n, avgdl) = (r.globals.n, r.globals.avgdl)
+      df => IndexReader.shardTopK(n, avgdl, 5, df, null)
+    }
+    assert(r.shardHeads(both, 5, bothBytes)(kernel).isLeft)
+    // "the" alone fits the bound; with "of" added the query does not
+    assert(r.shardHeads(one, 5, oneBytes)(kernel).isLeft)
+    assert(r.shardHeads(both, 5, oneBytes)(kernel).isRight)
+  }
+
+  test("positions are only read for the phrase kernels") {
+    val r = new IndexReader(spark, dir)
+    assert(r.segmentsFor(Seq("the"), positions = false).collect().forall(_.pos == null))
+    assert(r.segmentsFor(Seq("the")).collect().exists(_.pos != null))
+  }
+
+  test("dictionary expansions keep the first maxExpansions terms, ascending") {
+    val s = new IndexSearch(spark, dir)
+    val all = s.termStats.select("term").as[String].collect()
+      .filter(_.startsWith("w00")).sorted.toSeq
+    assert(all.size > 8, s"prefix matches only ${all.size} terms")
+    assert(s.firstTerms(col("term").startsWith("w00"), 8) == all.take(8))
+    // the capped expansion is what prefixTopK scores
+    assert(rows(s.prefixTopK("w00", 10, maxExpansions = 8)) ==
+      rows(s.boolTopK(Nil, all.take(8), Nil, 10)))
+  }
+}
