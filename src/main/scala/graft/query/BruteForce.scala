@@ -302,9 +302,8 @@ object BruteForce {
 
   /** One-pass prefix-phrase match counter: per-slot ascending position
     * lists (last slot = any expansion-set member) feed the SHARED counting
-    * kernels ([[Phrase.phraseTfArrs]]/[[Phrase.phraseTfSlopArrs]]) — the
-    * index path counts over identical arrays decoded from positional
-    * postings. */
+    * kernels ([[Phrase.slotTf]]) — the index path counts over identical
+    * arrays decoded from positional postings. */
   private[query] def prefixPhraseTf(toks: Seq[String], exact: Array[String],
       exp: java.util.HashSet[String], slop: Int): Long = {
     val byTerm = new java.util.HashMap[String, java.util.ArrayList[Long]]()
@@ -336,8 +335,7 @@ object BruteForce {
     var q = 0
     while (q < last.length) { last(q) = lastList.get(q); q += 1 }
     arrs(exact.length) = (last, 0, last.length)
-    if (slop == 0) Phrase.phraseTfArrs(arrs)
-    else Phrase.phraseTfSlopArrs(arrs, slop)
+    Phrase.slotTf(arrs, slop)
   }
 
   /** Greedy minimal-stretch ordered match count over one token list —

@@ -25,16 +25,20 @@ final case class SegmentRead(
   * job.
   *
   * Top-k runs per document shard (shard = docId range), so the kernel
-  * (WAND, bool, dis_max, phrase) runs on each shard with full
-  * independence and the global answer is the (score desc, docId asc) head
-  * of shards × k candidate rows. One metadata job per query returns the
+  * (WAND, the clause kernel behind bool and dis_max, phrase) runs on each
+  * shard with full independence and the global answer is the
+  * (score desc, docId asc) head of shards × k candidate rows. Every kernel
+  * reads postings through one block cursor, [[TermCursor]]
+  * ([[IndexReader.termCursor]]). One metadata job per query returns the
   * terms' merged dfs and their total posting bytes; that total picks the
   * route ([[shardHeads]]):
   *  - at most `maxDriverBytes` (default [[IndexReader.DefaultMaxBytesPerTerm]],
   *    applied to the whole query): the bucket-pruned rows are collected
   *    and the same kernel runs per shard on the driver — no shuffle;
   *  - above it: `groupByKey(shard).flatMapGroups` fans the query out to
-  *    the executors and a TakeOrdered merges the candidates.
+  *    the executors and a TakeOrdered merges the candidates
+  *    ([[shardCandidates]] — the one shard fan-out, which the untruncated
+  *    phrase and phrase-prefix scores use too).
   * The kernels are shared, so both routes return identical rows. The
   * public constructor fixes the bound; the package-private one lets specs
   * and the plan dump pin a route. Reads prune to the query terms' hash
@@ -269,12 +273,10 @@ final class IndexReader private[graft] (spark: SparkSession,
     * as [[phraseTopK]]; output is match-set-sized, not corpus-sized. */
   def phraseScores(phrase: Seq[String], slop: Int = 0): DataFrame = {
     val seg = phraseSegments(phrase, slop)
-    val idfSum = IndexReader.phraseIdf(globals.n, phrase, mergedDfMap(seg))
-    val (avgdl, del) = (globals.avgdl, deletedBc)
-    seg.groupByKey(_.shard)
-      .flatMapGroups((shard: Long, rows: Iterator[SegmentRead]) =>
-        Phrase.shardScores(avgdl, phrase, idfSum, del.value, slop)(shard, rows))
-      .toDF("docId", "score")
+    val (n, avgdl, del) = (globals.n, globals.avgdl, deletedBc)
+    shardCandidates(seg, mergedDfMap(seg), dfByTerm =>
+      Phrase.shardScores(avgdl, phrase, IndexReader.phraseIdf(n, phrase,
+        dfByTerm), del.value, slop)).toDF("docId", "score")
   }
 
   /** The first generation built without positions, from the manifests
@@ -423,7 +425,14 @@ object IndexReader {
   def boundedBlock(r: SegmentRead, idf: Double, avgdl: Double): SegBlock =
     SegBlock(r.firstDocId, r.lastDocId, r.n,
       Bm25.score(idf, r.maxTf.toDouble, r.minDl.toDouble, avgdl),
-      r.gaps, r.tfs, r.dls)
+      r.gaps, r.tfs, r.dls, r.pos)
+
+  /** One term's [[TermCursor]] over its rows within one shard: blocks in
+    * docId order, Block-Max bounds from `idf` and the current avgdl. */
+  private[query] def termCursor(t: String, rs: Array[SegmentRead], idf: Double,
+      avgdl: Double): TermCursor =
+    new TermCursor(t, idf, rs.sortBy(_.firstDocId)
+      .map(r => boundedBlock(r, idf, avgdl)), avgdl)
 
   /** Executor-side per-shard WAND — a top-level function so the Spark
     * closure captures only (n, avgdl, k, dfByTerm), never the reader
@@ -438,11 +447,7 @@ object IndexReader {
       avgdl: Double, dfByTerm: Map[String, Long]): Array[TermCursor] = {
     val byTerm = rows.toArray.groupBy(_.term)
     byTerm.map { case (t, rs) =>
-      val df = dfByTerm.getOrElse(t, mergedDf(rs))
-      val idf = Bm25.idf(n, df)
-      val blocks = rs.sortBy(_.firstDocId)
-        .map(r => boundedBlock(r, idf, avgdl))
-      new TermCursor(t, idf, blocks, avgdl)
+      termCursor(t, rs, Bm25.idf(n, dfByTerm.getOrElse(t, mergedDf(rs))), avgdl)
     }.toArray
   }
 }

@@ -1,6 +1,7 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.analyze.Analyzer
@@ -16,7 +17,10 @@ import graft.index.PForDelta
   *  - postings reads prune to the query terms' hash buckets (directory
   *    partition pruning) with the term predicate pushed into Parquet;
   *  - scoring runs one shard kernel per document shard, over decoded
-  *    postings only — the corpus text is never touched. One metadata job
+  *    postings only — the corpus text is never touched. bool, search_after,
+  *    boosted terms and dis_max are one [[Clauses]] value scored by one
+  *    dense clause kernel ([[IndexSearch.shardClauseTopK]]), reading
+  *    postings through the one block cursor, [[TermCursor]]. One metadata job
   *    returns the terms' merged dfs and total posting bytes; up to
   *    [[IndexReader.DefaultMaxBytesPerTerm]] for the whole query the rows
   *    are collected and the kernels run on the driver (two jobs, no
@@ -70,17 +74,17 @@ final class IndexSearch(spark: SparkSession,
 
   /** Boolean query (OpenSearch `bool`) served from postings: one
     * bucket-pruned segment read over (must ∪ should ∪ mustNot), scored per
-    * shard into a dense array (shard = docId range, so presence/exclusion
-    * gates are array flags — no per-doc hashing, no joins), then the
-    * global head of shards × k candidates — on the driver or the
-    * executors, by the query's posting bytes ([[IndexReader.shardHeads]]).
-    * Semantics identical to [[Search.boolTopK]]. */
+    * shard by the dense clause kernel ([[IndexSearch.shardClauseTopK]]:
+    * shard = docId range, so presence/exclusion gates are array flags — no
+    * per-doc hashing, no joins), then the global head of shards × k
+    * candidates — on the driver or the executors, by the query's posting
+    * bytes ([[IndexReader.shardHeads]]). Semantics identical to
+    * [[Search.boolTopK]]. */
   def boolTopK(must: Seq[String], should: Seq[String], mustNot: Seq[String],
       k: Int, excludeDocId: Long = -1L,
       minShouldMatch: Int = 0): DataFrame =
-    boolTopKFrom(must, should, mustNot, k, excludeDocId,
-      minShouldMatch = minShouldMatch,
-      afterScore = Double.NaN, afterDocId = -1L)
+    clauseTopK(boolClauses(must, should, mustNot)
+      .copy(excludeDocId = excludeDocId, minShouldMatch = minShouldMatch), k)
 
   /** Keyset pagination served from the index (OpenSearch `search_after`):
     * the cursor predicate — (rounded score, docId) strictly after the
@@ -91,27 +95,30 @@ final class IndexSearch(spark: SparkSession,
     * over the rounded brute ranking. */
   def searchAfter(queryTerms: Seq[String], afterScore: Double,
       afterDocId: Long, k: Int): DataFrame =
-    boolTopKFrom(Nil, queryTerms, Nil, k, excludeDocId = -1L,
-      afterScore = afterScore, afterDocId = afterDocId)
+    clauseTopK(boolClauses(Nil, queryTerms, Nil)
+      .copy(afterScore = afterScore, afterDocId = afterDocId), k)
 
-  private def boolTopKFrom(must: Seq[String], should: Seq[String],
-      mustNot: Seq[String], k: Int, excludeDocId: Long,
-      afterScore: Double, afterDocId: Long,
-      minShouldMatch: Int = 0): DataFrame = {
+  private def boolClauses(must: Seq[String], should: Seq[String],
+      mustNot: Seq[String]): Clauses = {
     val mustN = norm(must).distinct.sorted
     val notN = norm(mustNot).distinct.sorted
     val shouldN = norm(should).distinct.sorted
     val scoreTerms = (mustN ++ shouldN).distinct.sorted
     require(scoreTerms.nonEmpty, "bool query needs must or should terms")
     require(mustN.intersect(notN).isEmpty, "a term cannot be must AND must_not")
-    val allTerms = (scoreTerms ++ notN).distinct
+    Clauses(scoreTerms.map(_ -> 1.0), mustN.toSet, shouldN.toSet, notN.toSet)
+  }
+
+  /** Top-k of one clause value: one bucket-pruned segment read over its
+    * score and must_not terms, the clause kernel per shard, routed by the
+    * query's posting bytes ([[IndexReader.topKFrame]]). */
+  private def clauseTopK(q: Clauses, k: Int): DataFrame = {
     // locals only: the kernel ships to the executors on the distributed route
     val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
-    val (st, ms, ns, ss) =
-      (scoreTerms.toArray, mustN.toSet, notN.toSet, shouldN.toSet)
-    reader.topKFrame(reader.segmentsFor(allTerms, positions = false), k)(
-      dfByTerm => IndexSearch.shardBoolTopK(n, avgdl, k, dfByTerm, st, ms, ns,
-        excludeDocId, afterScore, afterDocId, del.value, ss, minShouldMatch))
+    val terms = (q.terms.map(_._1) ++ q.mustNot.toSeq.sorted).distinct
+    reader.topKFrame(reader.segmentsFor(terms, positions = false), k)(
+      dfByTerm => IndexSearch.shardClauseTopK(n, avgdl, k, dfByTerm, q,
+        del.value))
   }
 
   /** The dictionary's first `max` terms matching `cond`, in ascending
@@ -133,9 +140,11 @@ final class IndexSearch(spark: SparkSession,
     * term is tagged with the clauses it satisfies — a multi-clause query
     * no longer pays one full dictionary scan per clause. Keys are the
     * RAW clause inputs, so [[QueryString.resolve]]'s lambdas look up
-    * directly; per-clause caps apply after, as the per-clause jobs did. */
-  private def batchExpand(fuzzy: Seq[(String, Int)], wild: Seq[String])
-      : (Map[(String, Int), Seq[String]], Map[String, Seq[String]]) = {
+    * directly. Each clause keeps its first `max` terms in ascending order
+    * (the rule [[QueryString.resolve]] applies) inside the plan, so a hot
+    * pattern never collects its whole expansion to the driver. */
+  private def batchExpand(fuzzy: Seq[(String, Int)], wild: Seq[String],
+      max: Int): (Map[(String, Int), Seq[String]], Map[String, Seq[String]]) = {
     if (fuzzy.isEmpty && wild.isEmpty) return (Map.empty, Map.empty)
     val conds: Seq[(String, org.apache.spark.sql.Column)] =
       fuzzy.distinct.zipWithIndex.map { case ((t, d), i) =>
@@ -148,6 +157,9 @@ final class IndexSearch(spark: SparkSession,
     val tags = array(conds.map { case (key, c) => when(c, lit(key)) }: _*)
     val pairs = termStats.select(col("term"),
         explode(array_compact(tags)).as("ck"))
+      .withColumn("rn",
+        row_number().over(Window.partitionBy("ck").orderBy("term")))
+      .filter(col("rn") <= max)
       .select("ck", "term").as[(String, String)].collect()
     val byKey = pairs.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     (fuzzy.distinct.zipWithIndex.map { case (fd, i) =>
@@ -159,9 +171,10 @@ final class IndexSearch(spark: SparkSession,
   /** Fuzzy-expanded BM25 top-k served from the index: expansion terms come
     * from termstats/ (query construction, a bounded collect — ONE
     * dictionary job for all query terms), scoring from postings.
-    * Semantics identical to [[Search.fuzzyTopK]]. */
+    * Semantics identical to [[Search.fuzzyTopK]], which is uncapped. */
   def fuzzyTopK(queryTerms: Seq[String], k: Int, maxDist: Int = 1): DataFrame = {
-    val (fz, _) = batchExpand(queryTerms.map(t => (t, maxDist)), Nil)
+    val (fz, _) = batchExpand(queryTerms.map(t => (t, maxDist)), Nil,
+      Int.MaxValue)
     val expanded = queryTerms.flatMap(t => fz.getOrElse((t, maxDist), Nil))
       .distinct.sorted
     if (expanded.isEmpty)
@@ -318,25 +331,21 @@ final class IndexSearch(spark: SparkSession,
   }
 
   /** Disjunction-max top-k served from postings (OpenSearch `dis_max`):
-    * per-doc score = best term's BM25 + `tieBreaker` × the rest — the
-    * same bucket-pruned segment read and routed shard top-k as
-    * [[boolTopK]], with a second dense per-shard array tracking the max.
+    * per-doc score = best term's BM25 + `tieBreaker` × the rest — a
+    * [[Clauses]] value with the dis_max combine, scored by the same
+    * clause kernel, segment read and routed shard top-k as [[boolTopK]].
     * Semantics identical to [[Search.disMaxTopK]]. */
   def disMaxTopK(queryTerms: Seq[String], tieBreaker: Double, k: Int)
       : DataFrame = {
     require(tieBreaker >= 0.0 && tieBreaker <= 1.0, "tie_breaker in [0,1]")
     val terms = norm(queryTerms).distinct.sorted
     require(terms.nonEmpty, "dis_max needs terms")
-    val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
-    val ts = terms.toArray
-    reader.topKFrame(reader.segmentsFor(terms, positions = false), k)(
-      dfByTerm => IndexSearch.shardDisMaxTopK(n, avgdl, k, dfByTerm, ts,
-        tieBreaker, del.value))
+    clauseTopK(Clauses(terms.map(_ -> 1.0), disMaxTie = Some(tieBreaker)), k)
   }
 
   /** Per-term boosted top-k served from postings (OpenSearch
     * `term^boost`): each term's contribution scales by its boost inside
-    * the shard kernel's ascending-term accumulation. Semantics identical
+    * the clause kernel's ascending-term accumulation. Semantics identical
     * to [[Search.boostedTopK]]. */
   def boostedTopK(boosts: Seq[(String, Double)], k: Int): DataFrame = {
     require(boosts.nonEmpty, "boosted query needs terms")
@@ -344,13 +353,7 @@ final class IndexSearch(spark: SparkSession,
       (Analyzer.lowerLikeCatalyst(t), b)
     }.toMap
     require(byTerm.size == boosts.size, "duplicate boost term")
-    val terms = byTerm.keys.toSeq.sorted
-    val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
-    val ts = terms.toArray
-    reader.topKFrame(reader.segmentsFor(terms, positions = false), k)(
-      dfByTerm => IndexSearch.shardBoolTopK(n, avgdl, k, dfByTerm, ts,
-        Set.empty, Set.empty, -1L, Double.NaN, -1L, del.value, Set.empty, 0,
-        byTerm))
+    clauseTopK(Clauses(byTerm.toSeq.sortBy(_._1)), k)
   }
 
   /** Regexp query (OpenSearch `regexp`): full-term match against the
@@ -427,10 +430,7 @@ final class IndexSearch(spark: SparkSession,
   def topHits(queryTerms: Seq[String], facetCol: String, nBuckets: Int,
       perBucket: Int): DataFrame = {
     val terms = norm(queryTerms).distinct.sorted
-    val pivoted = termScores(terms).groupBy("docId")
-      .pivot("term", terms).agg(first(col("score")))
-    val total = terms.map(t => coalesce(col(s"`$t`"), lit(0.0)))
-      .reduceLeft(_ + _)
+    val (pivoted, total) = pivotScores(terms)
     val scored = pivoted
       .select(col("docId"), round(total, 4).as("score"))
       .join(docsMeta.select(col("docId"), col(facetCol).as("facet")),
@@ -599,17 +599,11 @@ final class IndexSearch(spark: SparkSession,
       return Seq.empty[(Long, Double)].toDF("docId", "score")
     val dfUnion = matchingDocIds(expansion).count()
     val seg = reader.segmentsFor((exact ++ expansion).distinct)
-    val dfByTerm = reader.mergedDfMap(seg)
-    val n = reader.globals.n
-    val idfSum = exact.map(t => Bm25.idf(n, dfByTerm.getOrElse(t, 0L))).sum +
-      Bm25.idf(n, dfUnion)
-    val (avgdl, ex, exp, sl) = (reader.globals.avgdl, exact, expansion, slop)
-    val del = reader.deletedBc
-    val perShard = seg.groupByKey(_.shard)
-      .flatMapGroups((shard: Long, rows: Iterator[SegmentRead]) =>
-        Phrase.shardPrefixScores(avgdl, ex, exp, idfSum, del.value, sl)(
-          shard, rows))
-    perShard.toDF("docId", "score")
+    val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
+    reader.shardCandidates(seg, reader.mergedDfMap(seg), dfByTerm =>
+      Phrase.shardPrefixScores(avgdl, exact, expansion,
+        IndexReader.phraseIdf(n, exact, dfByTerm) + Bm25.idf(n, dfUnion),
+        del.value, slop)).toDF("docId", "score")
   }
 
   /** Query rescoring served from the index (OpenSearch `rescore`): the
@@ -639,11 +633,7 @@ final class IndexSearch(spark: SparkSession,
   def fieldValueFactorTopK(queryTerms: Seq[String], meta: DataFrame,
       valueCol: String, factor: Double, modifier: String, k: Int)
       : DataFrame = {
-    val terms = norm(queryTerms).distinct.sorted
-    val pivoted = termScores(terms).groupBy("docId")
-      .pivot("term", terms).agg(first(col("score")))
-    val total = terms.map(t => coalesce(col(s"`$t`"), lit(0.0)))
-      .reduceLeft(_ + _)
+    val (pivoted, total) = pivotScores(norm(queryTerms).distinct.sorted)
     val m = meta.select(col("docId"), col(valueCol).cast("double").as("_fv"))
     pivoted.select(col("docId"), total.as("score"))
       .join(m, Seq("docId"), "left_outer")
@@ -678,6 +668,16 @@ final class IndexSearch(spark: SparkSession,
     }.toDF("docId", "term", "score")
   }
 
+  /** [[termScores]] pivoted to one column per term (null = absent), and
+    * the per-doc total: coalesce(score, 0.0) folded left to right over
+    * the ascending `terms` — the fold order of the brute pivot sum
+    * ([[BruteForce.scoreAll]]), so served and brute totals are
+    * bit-identical doubles. */
+  private def pivotScores(terms: Seq[String]): (DataFrame, Column) =
+    (termScores(terms).groupBy("docId").pivot("term", terms)
+      .agg(first(col("score"))),
+     terms.map(t => coalesce(col(s"`$t`"), lit(0.0))).reduceLeft(_ + _))
+
   /** Lucene-style `query_string` served from the INDEX (grammar and
     * semantics on [[QueryString]]): fuzzy/wildcard expansions resolve
     * against termstats/, term clauses score from [[termScores]] postings
@@ -692,7 +692,8 @@ final class IndexSearch(spark: SparkSession,
     // all fuzzy + wildcard expansions in ONE dictionary job
     val (fz, wl) = batchExpand(
       clauses.collect { case QueryString.FuzzyClause(t, d, _, _) => (t, d) },
-      clauses.collect { case QueryString.WildClause(p, _, _) => p })
+      clauses.collect { case QueryString.WildClause(p, _, _) => p },
+      maxExpansions)
     val resolved = QueryString.resolve(clauses,
       (t, d) => fz.getOrElse((t, d), Seq.empty),
       p => wl.getOrElse(p, Seq.empty),
@@ -705,8 +706,7 @@ final class IndexSearch(spark: SparkSession,
       .flatMap(_.terms).distinct.sorted
     val pivoted =
       if (scoringTerms.isEmpty) None
-      else Some(termScores(scoringTerms).groupBy("docId")
-        .pivot("term", scoringTerms).agg(first(col("score"))))
+      else Some(pivotScores(scoringTerms)._1)
     val phraseFrames = resolved.zipWithIndex.collect {
       case (r, i) if r.phrase.isDefined && r.occur != QueryString.MustNot =>
         val (slots, slop) = r.phrase.get
@@ -765,10 +765,7 @@ object IndexSearch {
     val terms = queryTerms.map(graft.analyze.Analyzer.lowerLikeCatalyst)
       .distinct.sorted
     val per = fields.map { case (is, boost) =>
-      val pivoted = is.termScores(terms).groupBy("docId")
-        .pivot("term", terms).agg(first(col("score")))
-      val total = terms.map(t => coalesce(col(s"`$t`"), lit(0.0)))
-        .reduceLeft(_ + _)
+      val (pivoted, total) = is.pivotScores(terms)
       pivoted.select(col("docId"), (total * boost).as("s"))
     }
     Search.combineFields(per, k, matchType, tieBreaker)
@@ -779,19 +776,21 @@ object IndexSearch {
   private def round4(x: Double): Double =
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Executor-side per-shard exact bool scorer. Dense arrays over the
-    * shard's docId range (≤ shardSize slots): one pass per score term in
-    * ascending term order accumulates BM25 (bit-identical fold order to
-    * the brute pivot sum), must-counts and banned flags ride the same
-    * decode, then one sweep emits the shard's top-k by
-    * (rounded score desc, docId asc). Top-level function so the closure
-    * captures primitives and the broadcast df map, never the reader. */
-  def shardBoolTopK(n: Long, avgdl: Double, k: Int,
-      dfByTerm: Map[String, Long], scoreTerms: Array[String],
-      mustSet: Set[String], notSet: Set[String], excludeDocId: Long,
-      afterScore: Double = Double.NaN, afterDocId: Long = -1L,
-      deleted: Array[Long] = null, shouldSet: Set[String] = Set.empty,
-      minShouldMatch: Int = 0, boosts: Map[String, Double] = null)(
+  /** Executor-side per-shard clause scorer — the one dense kernel behind
+    * bool, search_after, boosted terms and dis_max. Dense arrays over the
+    * shard's docId range (≤ shardSize slots): one [[TermCursor]] pass per
+    * score term in ascending term order accumulates boost × BM25 from 0.0
+    * (bit-identical fold order to the brute pivot sum; × 1.0 is exact in
+    * IEEE 754), must/should counts and banned flags ride the same pass,
+    * then one sweep emits the shard's top-k by (rounded score desc,
+    * docId asc). The dis_max combine alone adds a `best` array: each
+    * (term, doc) pair is one posting, so `best` is the brute form's
+    * `greatest(coalesce(s, 0.0)…)` with BM25 scores strictly positive, and
+    * the emitted score is round4(best + tie·(sum − best)). Top-level
+    * function so the closure captures primitives, the clause value and the
+    * broadcast df map, never the reader. */
+  private[query] def shardClauseTopK(n: Long, avgdl: Double, k: Int,
+      dfByTerm: Map[String, Long], q: Clauses, deleted: Array[Long])(
       shard: Long, rows: Iterator[SegmentRead]): Iterator[Scored] = {
     val byTerm = rows.toArray.groupBy(_.term)
     if (byTerm.isEmpty || k <= 0) return Iterator.empty
@@ -803,69 +802,62 @@ object IndexSearch {
     }
     val size = (hi - lo + 1).toInt
     val score = new Array[Double](size)
+    val best = if (q.disMaxTie.isDefined) new Array[Double](size) else null
     val mustCnt = new Array[Int](size)
     val shouldCnt = new Array[Int](size)
     val banned = new Array[Boolean](size)
     val seen = new Array[Boolean](size)
+    def cursor(t: String, rs: Array[SegmentRead]): TermCursor =
+      IndexReader.termCursor(t, rs,
+        Bm25.idf(n, dfByTerm.getOrElse(t, IndexReader.mergedDf(rs))), avgdl)
 
-    var ti = 0
-    while (ti < scoreTerms.length) {
-      val t = scoreTerms(ti)
+    q.terms.foreach { case (t, boost) =>
       byTerm.get(t).foreach { rs =>
-        val idf = Bm25.idf(n, dfByTerm.getOrElse(t, IndexReader.mergedDf(rs)))
-        val boost = if (boosts == null) 1.0 else boosts.getOrElse(t, 1.0)
-        val isMust = mustSet(t)
-        val isShould = shouldSet(t)
-        rs.sortBy(r => (r.gen, r.firstDocId)).foreach { r =>
-          val ids = PForDelta.decodeGaps(r.gaps, r.n, r.firstDocId)
-          val tfs = PForDelta.decode(r.tfs, r.n)
-          val dls = PForDelta.decode(r.dls, r.n)
-          var j = 0
-          while (j < r.n) {
-            val x = (ids(j) - lo).toInt
-            // boost multiplies the term's contribution BEFORE the
-            // ascending-term accumulation — the brute pivot's
-            // coalesce(s)·boost fold order exactly
-            score(x) +=
-              (if (boosts == null)
-                Bm25.score(idf, tfs(j).toDouble, dls(j).toDouble, avgdl)
-              else
-                Bm25.score(idf, tfs(j).toDouble, dls(j).toDouble, avgdl) * boost)
-            seen(x) = true
-            if (isMust) mustCnt(x) += 1
-            if (isShould) shouldCnt(x) += 1
-            j += 1
-          }
+        val c = cursor(t, rs)
+        val isMust = q.must(t)
+        val isShould = q.should(t)
+        while (!c.exhausted) {
+          val x = (c.curDoc - lo).toInt
+          // boost multiplies the term's contribution BEFORE the
+          // ascending-term accumulation — the brute pivot's
+          // coalesce(s)·boost fold order exactly
+          val s = c.score * boost
+          score(x) += s
+          if (best != null && s > best(x)) best(x) = s
+          seen(x) = true
+          if (isMust) mustCnt(x) += 1
+          if (isShould) shouldCnt(x) += 1
+          c.advance()
         }
       }
-      ti += 1
     }
-    notSet.foreach { t =>
-      byTerm.get(t).foreach(_.foreach { r =>
-        val ids = PForDelta.decodeGaps(r.gaps, r.n, r.firstDocId)
-        var j = 0
-        while (j < r.n) { banned((ids(j) - lo).toInt) = true; j += 1 }
-      })
+    q.mustNot.foreach { t =>
+      byTerm.get(t).foreach { rs =>
+        val c = cursor(t, rs)
+        while (!c.exhausted) { banned((c.curDoc - lo).toInt) = true; c.advance() }
+      }
     }
-    val nMust = mustSet.size
+    val nMust = q.must.size
     // minimum_should_match is a no-op with no should clauses (OpenSearch
     // semantics; Search.boolTopK's brute gate guards identically)
-    val msm = if (shouldSet.isEmpty) 0 else minShouldMatch
-    val hasCursor = !afterScore.isNaN
+    val msm = if (q.should.isEmpty) 0 else q.minShouldMatch
+    val hasCursor = !q.afterScore.isNaN
+    val tie = q.disMaxTie.getOrElse(0.0)
     val topk = new TopKHeap(k)
     var x = 0
     while (x < size) {
       if (seen(x) && !banned(x) && mustCnt(x) == nMust &&
           (msm <= 0 || shouldCnt(x) >= msm)) {
         val docId = lo + x
-        if (docId != excludeDocId &&
+        if (docId != q.excludeDocId &&
             !IndexReader.isDeleted(deleted, docId)) {
-          val rs = round4(score(x))
+          val rs = round4(
+            if (best == null) score(x) else best(x) + tie * (score(x) - best(x)))
           // keyset cursor: only rows strictly after (afterScore, afterDocId)
           // in (score desc, docId asc) order compete — same predicate
           // Search.searchAfter applies to the rounded brute ranking
-          if (!hasCursor || rs < afterScore ||
-              (rs == afterScore && docId > afterDocId))
+          if (!hasCursor || rs < q.afterScore ||
+              (rs == q.afterScore && docId > q.afterDocId))
             topk.offer(docId, rs)
         }
       }
@@ -873,64 +865,23 @@ object IndexSearch {
     }
     topk.result().iterator
   }
-
-  /** Executor-side per-shard dis_max scorer: the [[shardBoolTopK]] decode
-    * with a second dense array tracking the best single term's BM25.
-    * `sum` accumulates in ascending term order (each (term, doc) pair
-    * contributes exactly one posting entry, so the fold order is the
-    * brute pivot's coalesce-sum exactly); `max` is order-free and starts
-    * at 0.0 — the brute form's `greatest(coalesce(s, 0.0)…)` with BM25
-    * scores strictly positive. Emits round4(max + tie·(sum − max)). */
-  def shardDisMaxTopK(n: Long, avgdl: Double, k: Int,
-      dfByTerm: Map[String, Long], scoreTerms: Array[String],
-      tieBreaker: Double, deleted: Array[Long] = null)(
-      shard: Long, rows: Iterator[SegmentRead]): Iterator[Scored] = {
-    val byTerm = rows.toArray.groupBy(_.term)
-    if (byTerm.isEmpty || k <= 0) return Iterator.empty
-    var lo = Long.MaxValue
-    var hi = Long.MinValue
-    byTerm.valuesIterator.flatten.foreach { r =>
-      if (r.firstDocId < lo) lo = r.firstDocId
-      if (r.lastDocId > hi) hi = r.lastDocId
-    }
-    val size = (hi - lo + 1).toInt
-    val sum = new Array[Double](size)
-    val best = new Array[Double](size)
-    val seen = new Array[Boolean](size)
-
-    var ti = 0
-    while (ti < scoreTerms.length) {
-      val t = scoreTerms(ti)
-      byTerm.get(t).foreach { rs =>
-        val idf = Bm25.idf(n, dfByTerm.getOrElse(t, IndexReader.mergedDf(rs)))
-        rs.sortBy(r => (r.gen, r.firstDocId)).foreach { r =>
-          val ids = PForDelta.decodeGaps(r.gaps, r.n, r.firstDocId)
-          val tfs = PForDelta.decode(r.tfs, r.n)
-          val dls = PForDelta.decode(r.dls, r.n)
-          var j = 0
-          while (j < r.n) {
-            val x = (ids(j) - lo).toInt
-            val s = Bm25.score(idf, tfs(j).toDouble, dls(j).toDouble, avgdl)
-            sum(x) += s
-            if (s > best(x)) best(x) = s
-            seen(x) = true
-            j += 1
-          }
-        }
-      }
-      ti += 1
-    }
-    val topk = new TopKHeap(k)
-    var x = 0
-    while (x < size) {
-      if (seen(x)) {
-        val docId = lo + x
-        if (!IndexReader.isDeleted(deleted, docId))
-          topk.offer(docId,
-            round4(best(x) + tieBreaker * (sum(x) - best(x))))
-      }
-      x += 1
-    }
-    topk.result().iterator
-  }
 }
+
+/** The flat clause shapes the one dense kernel scores
+  * ([[IndexSearch.shardClauseTopK]]): bool, search_after, boosted terms
+  * and dis_max.
+  *  - `terms`: the score terms in ASCENDING order (the accumulation order
+  *    rank identity rests on), each with its boost;
+  *  - `must`/`should`/`mustNot` gate documents, `minShouldMatch` counts
+  *    should hits (ignored when `should` is empty);
+  *  - `excludeDocId` drops one doc (more-like-this's source document);
+  *  - `afterScore`/`afterDocId` is the search_after cursor (NaN = none);
+  *  - `disMaxTie`: None sums the terms, Some(tie) combines them as
+  *    best + tie·(sum − best). */
+private[query] final case class Clauses(
+    terms: Seq[(String, Double)],
+    must: Set[String] = Set.empty, should: Set[String] = Set.empty,
+    mustNot: Set[String] = Set.empty, minShouldMatch: Int = 0,
+    excludeDocId: Long = -1L,
+    afterScore: Double = Double.NaN, afterDocId: Long = -1L,
+    disMaxTie: Option[Double] = None)

@@ -1,7 +1,5 @@
 package graft.query
 
-import graft.index.PForDelta
-
 /** Exact phrase top-k over a POSITIONAL index (built with
   * `IndexParams(positions = true)`).
   *
@@ -14,108 +12,32 @@ import graft.index.PForDelta
   * PhraseQuery uses). Replaces the reference's delegation of `match_phrase`
   * to OpenSearch/Lucene.
   *
-  * Execution per shard: leapfrog document-at-a-time intersection over one
-  * positional cursor per phrase slot — `advanceTo` skips whole blocks via
+  * Execution per shard: one leapfrog document-at-a-time intersection over
+  * one [[TermCursor]] per phrase slot (the same block cursor WAND and the
+  * clause kernel read) — `advanceTo` skips whole blocks via
   * (firstDocId, lastDocId) metadata without decoding, and a block's
   * position payload is decoded only when a document actually aligns on all
-  * slots. Cost is driven by the rarest term, like every conjunctive
-  * executor; the shard fan-out is the same structural skew story as WAND
-  * (a hot term's postings are spread over all docId shards).
+  * slots. The exact phrase and match_phrase_prefix kernels share that loop
+  * and differ only in their last slot's positions. Cost is driven by the
+  * rarest term, like every conjunctive executor; the shard fan-out is the
+  * same structural skew story as WAND (a hot term's postings are spread
+  * over all docId shards).
   */
 object Phrase {
 
-  /** Positional cursor over one phrase slot's blocks within one shard
-    * (blocks docId-disjoint, sorted by firstDocId). Ids/tfs/dls decode
-    * per block on entry; the position payload decodes lazily on first
-    * [[positions]] call for the block. */
-  final class PosCursor(blocks: Array[SegmentRead]) {
-    private var bi = 0
-    private var i = 0
-    private var ids: Array[Long] = null
-    private var tfs: Array[Long] = null
-    private var dls: Array[Long] = null
-    private var posOff: Array[Int] = null
-    private var posAll: Array[Long] = null
+  /** Match-start count for one aligned document over raw (positions, from,
+    * until) slot views — `slop = 0` runs [[phraseTfArrs]], `slop > 0`
+    * [[phraseTfSlopArrs]]. Shared with [[BruteForce]], whose per-slot
+    * lists come from a token stream instead of positional postings. */
+  private[query] def slotTf(arrs: Array[(Array[Long], Int, Int)],
+      slop: Int): Long =
+    if (slop == 0) phraseTfArrs(arrs) else phraseTfSlopArrs(arrs, slop)
 
-    decodeIfNeeded()
-
-    private def decodeIfNeeded(): Unit = {
-      if (bi < blocks.length && ids == null) {
-        val b = blocks(bi)
-        ids = PForDelta.decodeGaps(b.gaps, b.n, b.firstDocId)
-        tfs = PForDelta.decode(b.tfs, b.n)
-        dls = PForDelta.decode(b.dls, b.n)
-        posOff = null
-        posAll = null
-        i = 0
-      }
-    }
-
-    def exhausted: Boolean = bi >= blocks.length
-    def curDoc: Long = if (exhausted) Long.MaxValue else ids(i)
-    def dl: Long = dls(i)
-
-    /** Absolute ascending positions of the current posting, as
-      * (array, from, until) into the block's decoded payload. */
-    def positions(): (Array[Long], Int, Int) = {
-      if (posAll == null) {
-        val b = blocks(bi)
-        require(b.pos != null,
-          "no positional payload in segment — index built with positions=false")
-        posOff = new Array[Int](b.n + 1)
-        var t = 0
-        var j = 0
-        while (j < b.n) { t += tfs(j).toInt; posOff(j + 1) = t; j += 1 }
-        posAll = PForDelta.decode(b.pos, t)
-        // un-delta within each posting (first value is absolute)
-        j = 0
-        while (j < b.n) {
-          var p = posOff(j) + 1
-          while (p < posOff(j + 1)) { posAll(p) += posAll(p - 1); p += 1 }
-          j += 1
-        }
-      }
-      (posAll, posOff(i), posOff(i + 1))
-    }
-
-    def advance(): Unit = {
-      i += 1
-      if (i >= blocks(bi).n) { bi += 1; ids = null; decodeIfNeeded() }
-    }
-
-    /** First posting with docId >= target; whole-block skips never decode
-      * the skipped payloads. */
-    def advanceTo(target: Long): Unit = {
-      if (exhausted || curDoc >= target) return
-      while (bi < blocks.length && blocks(bi).lastDocId < target) {
-        bi += 1; ids = null
-      }
-      if (bi >= blocks.length) return
-      decodeIfNeeded()
-      var lo = i
-      var hi = blocks(bi).n - 1
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (ids(mid) < target) lo = mid + 1 else hi = mid
-      }
-      i = lo
-    }
-  }
-
-  /** Match-start count for the aligned document: for each occurrence p of
-    * slot 0, every later slot j must contain p + j. Positions ascend and
-    * starts ascend, so each slot keeps a monotone pointer — O(Σ tf). */
-  private def phraseTf(cursors: Array[PosCursor]): Long = {
-    val m = cursors.length
-    val arrs = new Array[(Array[Long], Int, Int)](m)
-    var j = 0
-    while (j < m) { arrs(j) = cursors(j).positions(); j += 1 }
-    phraseTfArrs(arrs)
-  }
-
-  /** [[phraseTf]] over raw (positions, from, until) slot views — shared
-    * with the match_phrase_prefix path, whose last slot is a MERGED union
-    * of expansion terms' positions rather than one cursor's. */
+  /** Exact match-start count: for each occurrence p of slot 0, every later
+    * slot j must contain p + j. Positions ascend and starts ascend, so
+    * each slot keeps a monotone pointer — O(Σ tf). The match_phrase_prefix
+    * path passes a MERGED union of expansion terms' positions as its last
+    * slot. */
   private[query] def phraseTfArrs(arrs: Array[(Array[Long], Int, Int)])
       : Long = {
     val m = arrs.length
@@ -148,17 +70,8 @@ object Phrase {
     * slot; the start matches when the chain exists with stretch
     * `p_{m-1} − p₀ − (m−1)` ≤ slop. Greedy picks are monotone in p₀, so
     * each slot keeps a monotone pointer — O(Σ tf), same complexity as the
-    * exact counter. `slop = 0` counts exactly [[phraseTf]]'s starts
+    * exact counter. `slop = 0` counts exactly [[phraseTfArrs]]'s starts
     * (greedy minimizes the stretch; PhraseSpec pins the equivalence). */
-  private def phraseTfSlop(cursors: Array[PosCursor], slop: Int): Long = {
-    val m = cursors.length
-    val arrs = new Array[(Array[Long], Int, Int)](m)
-    var j = 0
-    while (j < m) { arrs(j) = cursors(j).positions(); j += 1 }
-    phraseTfSlopArrs(arrs, slop)
-  }
-
-  /** [[phraseTfSlop]] over raw slot views (see [[phraseTfArrs]]). */
   private[query] def phraseTfSlopArrs(arrs: Array[(Array[Long], Int, Int)],
       slop: Int): Long = {
     val m = arrs.length
@@ -184,58 +97,72 @@ object Phrase {
     count
   }
 
+  /** The one leapfrog: document-at-a-time intersection of `slots`. On
+    * every visible document where all slots align, `ptfOf` counts the
+    * phrase matches and a positive count is scored BM25(idfSum, ptf, dl);
+    * then every slot steps past it. Tombstoned docs are skipped at
+    * emission only — they still shape idf/avgdl (Lucene visibility). */
+  private def leapfrogScores(slots: Array[TermCursor], deleted: Array[Long],
+      idfSum: Double, avgdl: Double)(ptfOf: Long => Long): Iterator[Scored] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Scored]
+    var live = true
+    while (live && !slots.exists(_.exhausted)) {
+      var target = 0L
+      var j = 0
+      while (j < slots.length) {
+        if (slots(j).curDoc > target) target = slots(j).curDoc
+        j += 1
+      }
+      var aligned = true
+      j = 0
+      while (j < slots.length) {
+        slots(j).advanceTo(target)
+        if (slots(j).exhausted) { aligned = false; live = false }
+        else if (slots(j).curDoc != target) aligned = false
+        j += 1
+      }
+      if (aligned) {
+        if (!IndexReader.isDeleted(deleted, target)) {
+          val ptf = ptfOf(target)
+          if (ptf > 0) out += Scored(target,
+            Bm25.score(idfSum, ptf.toDouble, slots(0).dl.toDouble, avgdl))
+        }
+        j = 0
+        while (j < slots.length) { slots(j).advance(); j += 1 }
+      }
+    }
+    out.iterator
+  }
+
+  /** One position cursor per slot (a repeated term gets one per slot:
+    * slots advance independently). Positions and dl are all a phrase
+    * reads, so the cursors carry no idf. */
+  private def slotCursors(byTerm: Map[String, Array[SegmentRead]],
+      terms: Seq[String], avgdl: Double): Array[TermCursor] =
+    terms.map(t => IndexReader.termCursor(t, byTerm(t), 0.0, avgdl)).toArray
+
   /** Executor-side per-shard phrase scorer emitting EVERY matching doc —
     * the composition primitive behind [[shardTopK]] and the query-string
     * engine's phrase clauses (which need full per-doc phrase scores to sum
-    * with term clauses, not a pre-truncated page). Same leapfrog
-    * skeleton: `slop = 0` runs the exact consecutive-position counter;
-    * `slop > 0` the greedy ordered-proximity counter (a document still
-    * must contain every slot term). Matches per shard are bounded by the
-    * shard's doc range, so the buffer is shard-sized at worst. */
+    * with term clauses, not a pre-truncated page). `slop = 0` runs the
+    * exact consecutive-position counter; `slop > 0` the greedy
+    * ordered-proximity counter (a document still must contain every slot
+    * term). Matches per shard are bounded by the shard's doc range, so
+    * the buffer is shard-sized at worst. */
   def shardScores(avgdl: Double, phrase: Seq[String], idfSum: Double,
       deleted: Array[Long] = null, slop: Int = 0)(
       shard: Long, rows: Iterator[SegmentRead]): Iterator[Scored] = {
     val byTerm = rows.toArray.groupBy(_.term)
     // a shard missing ANY slot term cannot match the phrase
     if (phrase.distinct.exists(t => !byTerm.contains(t))) return Iterator.empty
-    val cursors = phrase.map { t =>
-      new PosCursor(byTerm(t).sortBy(_.firstDocId))
-    }.toArray
-    val out = scala.collection.mutable.ArrayBuffer.empty[Scored]
-    var live = true
-    while (live && !cursors.exists(_.exhausted)) {
-      var target = 0L
-      var j = 0
-      while (j < cursors.length) {
-        if (cursors(j).curDoc > target) target = cursors(j).curDoc
-        j += 1
-      }
-      var aligned = true
-      j = 0
-      while (j < cursors.length) {
-        cursors(j).advanceTo(target)
-        if (cursors(j).exhausted) { aligned = false; live = false }
-        else if (cursors(j).curDoc != target) aligned = false
-        j += 1
-      }
-      if (aligned) {
-        val ptf =
-          if (IndexReader.isDeleted(deleted, target)) 0
-          else if (slop == 0) phraseTf(cursors)
-          else phraseTfSlop(cursors, slop)
-        if (ptf > 0)
-          out += Scored(target,
-            Bm25.score(idfSum, ptf.toDouble, cursors(0).dl.toDouble, avgdl))
-        j = 0
-        while (j < cursors.length) { cursors(j).advance(); j += 1 }
-      }
-    }
-    out.iterator
+    val cursors = slotCursors(byTerm, phrase, avgdl)
+    leapfrogScores(cursors, deleted, idfSum, avgdl)(_ =>
+      slotTf(cursors.map(_.positions()), slop))
   }
 
   /** Executor-side per-shard phrase top-k — top-level so the Spark closure
-    * captures only scalars + the phrase. `idfSum` is computed driver-side
-    * from the GLOBAL merged dfs (a shard only sees its own generations).
+    * captures only scalars + the phrase. `idfSum` is computed from the
+    * GLOBAL merged dfs (a shard only sees its own generations).
     * Selection = [[shardScores]] through a bounded heap. */
   def shardTopK(avgdl: Double, k: Int, phrase: Seq[String], idfSum: Double,
       deleted: Array[Long] = null, slop: Int = 0)(
@@ -249,7 +176,7 @@ object Phrase {
   /** Executor-side per-shard match_phrase_prefix scorer: slots
     * `exact` match their terms, the LAST slot matches ANY `expansion`
     * term — its position list per document is the MERGED union of the
-    * expansion cursors' positions. Leapfrog drives on the exact slots
+    * expansion cursors' positions. The leapfrog drives on the exact slots
     * (every doc must contain them all); expansion cursors advance to each
     * aligned target and only contributors' payloads decode. Emits every
     * matching doc (selection is the caller's heap/TakeOrdered). */
@@ -263,72 +190,26 @@ object Phrase {
     if (exact.distinct.exists(t => !byTerm.contains(t))) return Iterator.empty
     val expTerms = expansion.distinct.sorted.filter(byTerm.contains)
     if (expTerms.isEmpty) return Iterator.empty
-    val cursors = exact.map { t =>
-      new PosCursor(byTerm(t).sortBy(_.firstDocId))
-    }.toArray
-    val expCursors = expTerms.map { t =>
-      new PosCursor(byTerm(t).sortBy(_.firstDocId))
-    }.toArray
-    val out = scala.collection.mutable.ArrayBuffer.empty[Scored]
-    var live = true
-    while (live && !cursors.exists(_.exhausted)) {
-      var target = 0L
-      var j = 0
-      while (j < cursors.length) {
-        if (cursors(j).curDoc > target) target = cursors(j).curDoc
-        j += 1
+    val cursors = slotCursors(byTerm, exact, avgdl)
+    val expCursors = slotCursors(byTerm, expTerms, avgdl)
+    leapfrogScores(cursors, deleted, idfSum, avgdl) { target =>
+      // merged ascending union of the expansion terms' positions
+      val slices = expCursors.flatMap { c =>
+        c.advanceTo(target)
+        if (!c.exhausted && c.curDoc == target) Some(c.positions()) else None
       }
-      var aligned = true
-      j = 0
-      while (j < cursors.length) {
-        cursors(j).advanceTo(target)
-        if (cursors(j).exhausted) { aligned = false; live = false }
-        else if (cursors(j).curDoc != target) aligned = false
-        j += 1
-      }
-      if (aligned) {
-        if (!IndexReader.isDeleted(deleted, target)) {
-          // merged ascending union of the expansion terms' positions
-          var total = 0
-          val slices = new Array[(Array[Long], Int, Int)](expCursors.length)
-          j = 0
-          while (j < expCursors.length) {
-            expCursors(j).advanceTo(target)
-            if (!expCursors(j).exhausted && expCursors(j).curDoc == target) {
-              val s = expCursors(j).positions()
-              slices(j) = s
-              total += s._3 - s._2
-            }
-            j += 1
-          }
-          if (total > 0) {
-            val merged = new Array[Long](total)
-            var w = 0
-            j = 0
-            while (j < slices.length) {
-              val s = slices(j)
-              if (s != null) {
-                var q = s._2
-                while (q < s._3) { merged(w) = s._1(q); w += 1; q += 1 }
-              }
-              j += 1
-            }
-            java.util.Arrays.sort(merged)
-            val arrs = new Array[(Array[Long], Int, Int)](cursors.length + 1)
-            j = 0
-            while (j < cursors.length) { arrs(j) = cursors(j).positions(); j += 1 }
-            arrs(cursors.length) = (merged, 0, merged.length)
-            val ptf =
-              if (slop == 0) phraseTfArrs(arrs) else phraseTfSlopArrs(arrs, slop)
-            if (ptf > 0)
-              out += Scored(target,
-                Bm25.score(idfSum, ptf.toDouble, cursors(0).dl.toDouble, avgdl))
-          }
+      val total = slices.map(s => s._3 - s._2).sum
+      if (total == 0) 0L
+      else {
+        val merged = new Array[Long](total)
+        var w = 0
+        slices.foreach { case (p, from, until) =>
+          System.arraycopy(p, from, merged, w, until - from)
+          w += until - from
         }
-        j = 0
-        while (j < cursors.length) { cursors(j).advance(); j += 1 }
+        java.util.Arrays.sort(merged)
+        slotTf(cursors.map(_.positions()) :+ ((merged, 0, total)), slop)
       }
     }
-    out.iterator
   }
 }

@@ -3,10 +3,12 @@ package graft.query
 import graft.index.PForDelta
 
 /** One posting block as read from the segment store (term/shard implied by
-  * the owning cursor). */
+  * the owning cursor). `pos` is the block's position payload, null when
+  * the read pruned it (the serving cache and every non-phrase kernel). */
 final case class SegBlock(
     firstDocId: Long, lastDocId: Long, n: Int, maxScore: Double,
-    gaps: Array[Byte], tfs: Array[Byte], dls: Array[Byte])
+    gaps: Array[Byte], tfs: Array[Byte], dls: Array[Byte],
+    pos: Array[Byte] = null)
 
 final case class Scored(docId: Long, score: Double)
 
@@ -35,10 +37,13 @@ private[query] final class TopKHeap(k: Int) {
   }
 }
 
-/** Forward-only cursor over one term's blocks within one shard. Blocks are
-  * decoded lazily — Block-Max WAND can skip a whole block using only its
+/** Forward-only cursor over one term's blocks within one shard — the one
+  * block cursor every shard kernel reads postings through (WAND, the
+  * dense clause kernel, the phrase leapfrogs). Blocks are decoded lazily —
+  * Block-Max WAND can skip a whole block using only its
   * (firstDocId, lastDocId, maxScore) metadata without touching the
-  * compressed payload.
+  * compressed payload — and a block's positions decode only on the first
+  * [[positions]] call for it, so only phrase-aligned documents pay them.
   */
 final class TermCursor(val term: String, val idf: Double,
     blocks: Array[SegBlock], avgdl: Double) {
@@ -56,6 +61,9 @@ final class TermCursor(val term: String, val idf: Double,
   private var ids: Array[Long] = null
   private var tfs: Array[Long] = null
   private var dls: Array[Long] = null
+  private var posBlock = -1 // the block posOff/posAll were decoded from
+  private var posOff: Array[Int] = null
+  private var posAll: Array[Long] = null
 
   decodeIfNeeded()
 
@@ -75,6 +83,33 @@ final class TermCursor(val term: String, val idf: Double,
   def blockLast: Long = if (exhausted) Long.MaxValue else blocks(bi).lastDocId
 
   def score: Double = Bm25.score(idf, tfs(i).toDouble, dls(i).toDouble, avgdl)
+
+  /** Length of the current posting's document. */
+  def dl: Long = dls(i)
+
+  /** Absolute ascending positions of the current posting, as
+    * (array, from, until) into the block's decoded payload. */
+  def positions(): (Array[Long], Int, Int) = {
+    if (posBlock != bi) {
+      val b = blocks(bi)
+      require(b.pos != null,
+        "no positional payload in segment — index built with positions=false")
+      posOff = new Array[Int](b.n + 1)
+      var t = 0
+      var j = 0
+      while (j < b.n) { t += tfs(j).toInt; posOff(j + 1) = t; j += 1 }
+      posAll = PForDelta.decode(b.pos, t)
+      // un-delta within each posting (first value is absolute)
+      j = 0
+      while (j < b.n) {
+        var p = posOff(j) + 1
+        while (p < posOff(j + 1)) { posAll(p) += posAll(p - 1); p += 1 }
+        j += 1
+      }
+      posBlock = bi
+    }
+    (posAll, posOff(i), posOff(i + 1))
+  }
 
   def advance(): Unit = {
     i += 1

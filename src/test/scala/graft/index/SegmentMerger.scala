@@ -8,10 +8,10 @@ import scala.collection.mutable
   * Because the build salts by shard = docId range, a term's segments are
   * docId-disjoint and shard order == docId order, so the common case is a
   * positional concatenation (O(1) per segment). The general k-way
-  * heap-merge below also handles arbitrary overlapping runs — it is the
-  * correctness spine for the "merge of random segment splits ≡ single-pass
-  * build" property tests (FIXTURES.md §3) and for merging *incremental*
-  * index deltas whose docId ranges interleave with old segments.
+  * heap-merge below also handles arbitrary overlapping runs. It is the
+  * test-side reference for the "merge of random segment splits ≡
+  * single-pass build" property tests (FIXTURES.md §3); the engine itself
+  * never merges this way.
   */
 object SegmentMerger {
 

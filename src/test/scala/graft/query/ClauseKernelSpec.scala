@@ -1,0 +1,189 @@
+package graft.query
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.index.PForDelta
+import graft.util.SplitMix64
+
+/** Differential test of the one dense clause kernel
+  * ([[IndexSearch.shardClauseTopK]]) and of [[TermCursor]]'s lazy
+  * positions, over randomized posting tables — pure Scala (no Spark), in
+  * the style of [[WandSpec]]. Postings span one or two generations (each
+  * owning a disjoint docId range and baking its own df into its rows),
+  * several shards and random block sizes, with tombstones. */
+class ClauseKernelSpec extends AnyFunSuite {
+
+  /** One posting: doc, tf, dl, ascending positions (tf of them). */
+  private final case class P(doc: Long, tf: Long, dl: Long, pos: Array[Long])
+
+  private def round4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Position payload as the build writes it: per posting, the first
+    * position absolute and the rest as deltas, all in one PForDelta run. */
+  private def encodePos(ps: Seq[P]): Array[Byte] =
+    PForDelta.encode(ps.flatMap(p =>
+      p.pos.head +: p.pos.sliding(2).collect { case Array(a, b) => b - a }.toSeq
+    ).toArray)
+
+  private def segRows(term: String, ps: Seq[P], df: Long, shard: Long,
+      gen: Int, blockSize: Int): Seq[SegmentRead] =
+    ps.grouped(blockSize).zipWithIndex.map { case (blk, bi) =>
+      val ids = blk.map(_.doc).toArray
+      SegmentRead(term, df, shard, bi, ids.head, ids.last, ids.length,
+        blk.map(_.tf).max, blk.map(_.dl).min,
+        PForDelta.encodeGaps(ids, ids.head), PForDelta.encode(blk.map(_.tf).toArray),
+        PForDelta.encode(blk.map(_.dl).toArray), encodePos(blk), 0, gen)
+    }.toSeq
+
+  /** A random corpus: per-doc lengths, per-term postings with positions. */
+  private def corpus(rng: SplitMix64, nDocs: Int, nTerms: Int)
+      : (Array[Long], Map[String, Seq[P]]) = {
+    val dl = Array.tabulate(nDocs)(_ => 8L + rng.nextInt(60))
+    val postings = (0 until nTerms).map(i => f"t$i%02d").map { t =>
+      val density = 0.05 + rng.nextDouble() * 0.6
+      t -> (0 until nDocs).flatMap { d =>
+        if (rng.nextDouble() >= density) None
+        else {
+          val tf = 1 + rng.nextInt(math.min(5, dl(d).toInt))
+          val pos = new scala.util.Random(rng.nextLong())
+            .shuffle((0L until dl(d)).toList).take(tf).sorted.toArray
+          Some(P(d.toLong, tf.toLong, dl(d), pos))
+        }
+      }
+    }.toMap.filter(_._2.nonEmpty)
+    (dl, postings)
+  }
+
+  private def pick(rng: SplitMix64, xs: Seq[String], p: Double): Seq[String] =
+    xs.filter(_ => rng.nextDouble() < p)
+
+  private def runCase(seed: Long): Unit = {
+    val rng = new SplitMix64(seed)
+    val nDocs = 20 + rng.nextInt(180)
+    val (dl, postings) = corpus(rng, nDocs, 3 + rng.nextInt(6))
+    val n = nDocs.toLong
+    val avgdl = dl.sum.toDouble / n
+    val shardSize = 16 + rng.nextInt(64)
+    val split = if (rng.nextInt(2) == 0) nDocs.toLong else rng.nextInt(nDocs).toLong
+    def genOf(d: Long): Int = if (d < split) 0 else 1
+    val blockSize = 1 + rng.nextInt(12)
+    val rows = postings.toSeq.flatMap { case (t, ps) =>
+      ps.groupBy(p => genOf(p.doc)).toSeq.flatMap { case (g, gps) =>
+        gps.groupBy(_.doc / shardSize).toSeq.flatMap { case (sh, sps) =>
+          segRows(t, sps.sortBy(_.doc), gps.size.toLong, sh, g, blockSize)
+        }
+      }
+    }
+    val df = postings.map { case (t, ps) => t -> ps.size.toLong }
+
+    // random clause value
+    val terms = postings.keys.toSeq.sorted :+ "absent"
+    val disMax = rng.nextInt(3) == 0
+    val (must, should, mustNot) =
+      if (disMax) (Seq.empty, pick(rng, terms, 0.6), Seq.empty)
+      else {
+        val m = pick(rng, terms, 0.25)
+        (m, pick(rng, terms, 0.5), pick(rng, terms.diff(m), 0.2))
+      }
+    val scoreTerms = (must ++ should).distinct.sorted
+    if (scoreTerms.isEmpty) return
+    val boosted = rng.nextInt(2) == 0
+    val q0 = Clauses(
+      scoreTerms.map(t => t -> (if (boosted) 0.25 + rng.nextDouble() * 3 else 1.0)),
+      must.toSet, if (disMax) Set.empty else should.toSet, mustNot.toSet,
+      minShouldMatch = if (disMax) 0 else rng.nextInt(3),
+      excludeDocId = if (rng.nextInt(3) == 0) rng.nextInt(nDocs).toLong else -1L,
+      disMaxTie = if (disMax) Some(rng.nextDouble()) else None)
+    val deleted =
+      if (rng.nextInt(2) == 0) null
+      else (0 until nDocs).filter(_ => rng.nextDouble() < 0.2).map(_.toLong).toArray
+    val k = 1 + rng.nextInt(15)
+
+    // naive per-doc scorer: same ascending-term fold from 0.0, then round4
+    def naive(q: Clauses): Seq[Scored] = (0 until nDocs).map(_.toLong).flatMap { d =>
+      var sum = 0.0
+      var best = 0.0
+      var seen = false
+      var mustHits = 0
+      var shouldHits = 0
+      q.terms.foreach { case (t, boost) =>
+        postings.getOrElse(t, Nil).find(_.doc == d).foreach { p =>
+          val s = Bm25.score(Bm25.idf(n, df(t)), p.tf.toDouble, p.dl.toDouble,
+            avgdl) * boost
+          sum += s
+          if (s > best) best = s
+          seen = true
+          if (q.must(t)) mustHits += 1
+          if (q.should(t)) shouldHits += 1
+        }
+      }
+      val banned = q.mustNot.exists(t => postings.getOrElse(t, Nil).exists(_.doc == d))
+      val msm = if (q.should.isEmpty) 0 else q.minShouldMatch
+      val score = round4(q.disMaxTie.fold(sum)(tie => best + tie * (sum - best)))
+      val afterOk = q.afterScore.isNaN || score < q.afterScore ||
+        (score == q.afterScore && d > q.afterDocId)
+      if (seen && !banned && mustHits == q.must.size && shouldHits >= msm &&
+          d != q.excludeDocId && (deleted == null || !deleted.contains(d)) &&
+          afterOk)
+        Some(Scored(d, score))
+      else None
+    }.sortBy(s => (-s.score, s.docId)).take(k)
+
+    def kernel(q: Clauses): Seq[Scored] =
+      IndexReader.head(rows.groupBy(_.shard).iterator.flatMap { case (sh, rs) =>
+        IndexSearch.shardClauseTopK(n, avgdl, k, df, q, deleted)(sh, rs.iterator)
+      }, k).toSeq
+
+    val first = naive(q0)
+    // a search_after cursor taken from the first page's middle row
+    val cases = q0 +: first.drop(first.size / 2).headOption.toSeq.map(c =>
+      q0.copy(afterScore = c.score, afterDocId = c.docId))
+    cases.foreach { q =>
+      val want = naive(q)
+      val got = kernel(q)
+      assert(got.map(_.docId) == want.map(_.docId),
+        s"rank mismatch seed=$seed q=$q:\n naive=$want\n kernel=$got")
+      got.zip(want).foreach { case (g, w) =>
+        assert(g.score == w.score, s"score mismatch seed=$seed doc=${g.docId}")
+      }
+    }
+  }
+
+  test("clause kernel ≡ naive scorer: bool, msm, boosts, exclude, " +
+      "search_after, dis_max, tombstones, two generations") {
+    (1L to 300L).foreach(i => runCase(i * 7919))
+  }
+
+  test("TermCursor positions after advanceTo/advance ≡ directly decoded") {
+    (1L to 100L).foreach { seed =>
+      val rng = new SplitMix64(seed * 104729)
+      val (_, postings) = corpus(rng, 30 + rng.nextInt(150), 1)
+      postings.values.foreach { ps =>
+        val blockSize = 1 + rng.nextInt(10)
+        val blocks = segRows("t", ps, ps.size.toLong, 0L, 0, blockSize)
+          .map(r => IndexReader.boundedBlock(r, 1.0, 30.0)).toArray
+        val c = new TermCursor("t", 1.0, blocks, 30.0)
+        var at = 0 // index into ps of the posting the cursor must sit on
+        while (!c.exhausted) {
+          if (rng.nextInt(3) == 0) { c.advance(); at += 1 }
+          else {
+            val target = ps(at).doc + rng.nextInt(3 * blockSize)
+            c.advanceTo(target)
+            while (at < ps.size && ps(at).doc < target) at += 1
+          }
+          assert(c.exhausted == (at == ps.size))
+          if (!c.exhausted) {
+            val p = ps(at)
+            assert(c.curDoc == p.doc)
+            val (arr, from, until) = c.positions()
+            assert(arr.slice(from, until).toSeq == p.pos.toSeq,
+              s"positions mismatch seed=$seed doc=${p.doc}")
+            assert(c.dl == p.dl)
+            assert(c.positions()._1 eq arr) // one decode per block
+          }
+        }
+      }
+    }
+  }
+}

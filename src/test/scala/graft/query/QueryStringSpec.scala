@@ -118,6 +118,17 @@ class QueryStringSpec extends AnyFunSuite {
     assert(served == brute, s"query_string diverged:\n brute=$brute\n index=$served")
   }
 
+  test("wildcard over more than maxExpansions terms: brute ≡ index") {
+    val qstr = "w000* +the"
+    assert(search.termStats.filter(col("term").like("w000%")).count() > 3)
+    val brute = rows(topK(docs, "docId", "text", qstr, 20, maxExpansions = 3))
+    val served = rows(search.queryStringTopK(qstr, 20, maxExpansions = 3))
+    assert(brute.nonEmpty)
+    assert(served == brute, s"query_string diverged:\n brute=$brute\n index=$served")
+    // the cap decides the answer: the first 3 terms only, not all of them
+    assert(served != rows(search.queryStringTopK(qstr, 20, maxExpansions = 50)))
+  }
+
   test("no-must query: phrase-only docs still enter the union") {
     val qstr = s""""${bigram.mkString(" ")}" w00002"""
     val brute = rows(topK(docs, "docId", "text", qstr, 25))
