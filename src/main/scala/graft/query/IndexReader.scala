@@ -29,16 +29,17 @@ final case class SegmentRead(
   * shard with full independence and the global answer is the
   * (score desc, docId asc) head of shards × k candidate rows. Every kernel
   * reads postings through one block cursor, [[TermCursor]]
-  * ([[IndexReader.termCursor]]). One metadata job per query returns the
-  * terms' merged dfs and their total posting bytes; that total picks the
-  * route ([[shardHeads]]):
+  * ([[IndexReader.termCursor]]). Each routed query runs one job over its
+  * bucket-pruned rows ([[routedScores]]): every scan task returns the
+  * terms' per-generation dfs and posting bytes, and its rows while they
+  * fit its share of the bound. The query's total posting bytes pick the
+  * route:
   *  - at most `maxDriverBytes` (default [[IndexReader.DefaultMaxBytesPerTerm]],
-  *    applied to the whole query): the bucket-pruned rows are collected
-  *    and the same kernel runs per shard on the driver — no shuffle;
+  *    applied to the whole query): the same kernel runs per shard on the
+  *    driver over the rows that job returned — one job, no shuffle;
   *  - above it: `groupByKey(shard).flatMapGroups` fans the query out to
   *    the executors and a TakeOrdered merges the candidates
-  *    ([[shardCandidates]] — the one shard fan-out, which the untruncated
-  *    phrase and phrase-prefix scores use too).
+  *    ([[shardCandidates]] — the one shard fan-out).
   * The kernels are shared, so both routes return identical rows. The
   * public constructor fixes the bound; the package-private one lets specs
   * and the plan dump pin a route. Reads prune to the query terms' hash
@@ -150,35 +151,30 @@ final class IndexReader private[graft] (spark: SparkSession,
   private[query] def mergedDfMap(seg: Dataset[SegmentRead]): Map[String, Long] =
     termMeta(seg, sized = false)._1
 
-  /** The one metadata job of a query. It returns the per-term GLOBAL df —
-    * a shard sees only the generations that overlap it, so df cannot be
-    * resolved inside the shard fan-out; generations are disjoint doc sets,
-    * so it is the sum of one df per generation. When `sized`, it also
-    * returns each term's posting bytes ([[IndexReader.payloadBytes]]): the
-    * payload a driver-side collect would hold. Each scan task folds its
-    * rows into one (df, bytes) per (term, gen) it saw and the driver
-    * merges those — one stage, no shuffle, a result bounded by
-    * tasks × terms × generations. Every index pays this job, single-
-    * generation ones included: the dfs and the route both need it. */
+  /** A metadata-only pass over `seg`: the per-term GLOBAL df — a shard
+    * sees only the generations that overlap it, so df cannot be resolved
+    * inside the shard fan-out; generations are disjoint doc sets, so it is
+    * the sum of one df per generation. When `sized`, it also returns each
+    * term's posting bytes ([[IndexReader.payloadBytes]]). Each scan task
+    * folds its rows into one (df, bytes) per (term, gen) it saw and the
+    * driver merges those — one stage, no shuffle. The routed reads get the
+    * same numbers from their own scan ([[routedScores]]); this pass serves
+    * [[mergedDfMap]]'s callers and [[loadCache]]'s sizing. */
   private[query] def termMeta(seg: Dataset[SegmentRead],
       sized: Boolean = true): (Map[String, Long], Map[String, Long]) = {
     val bytes = if (sized) IndexReader.payloadBytes else lit(0L)
     val perTask = seg.select(col("term"), col("gen"), col("df"), bytes)
       .as[(String, Int, Long, Long)]
       .mapPartitions { rows =>
-        val acc = scala.collection.mutable.HashMap.empty[(String, Int), (Long, Long)]
-        rows.foreach { case (t, g, df, b) =>
-          acc((t, g)) = (df, acc.get((t, g)).fold(0L)(_._2) + b)
-        }
-        acc.iterator
+        val acc = new IndexReader.MetaAcc
+        rows.foreach { case (t, g, df, b) => acc.add(t, g, df, b) }
+        acc.result.iterator
       }.collect()
-    val perGen = perTask.groupMapReduce(_._1)(_._2)((a, b) => (a._1, a._2 + b._2))
-    (perGen.groupMapReduce(_._1._1)(_._2._1)(_ + _),
-      perGen.groupMapReduce(_._1._1)(_._2._2)(_ + _))
+    IndexReader.mergeMeta(perTask)
   }
 
   /** Top-k over `seg`'s shards, routed by the query's total posting
-    * bytes ([[termMeta]]): at most `bound`, the global head is
+    * bytes ([[routedScores]]): at most `bound`, the global head is
     * computed on the driver (Left); above it, the per-shard candidates
     * stay a distributed Dataset for the caller's merge (Right). `kernel`
     * builds the shard kernel from the GLOBAL merged dfs; both routes run
@@ -186,18 +182,42 @@ final class IndexReader private[graft] (spark: SparkSession,
   private[query] def shardHeads(seg: Dataset[SegmentRead], k: Int,
       bound: Long = maxDriverBytes)(
       kernel: Map[String, Long] => ShardKernel)
+      : Either[Array[Scored], Dataset[Scored]] =
+    routedScores(seg, bound)(kernel).left.map(IndexReader.head(_, k))
+
+  /** The one-job read behind every routed query. Each scan task returns
+    * its per-(term, gen) (df, posting bytes) — the numbers [[termMeta]]
+    * computes — and, while its running payload stays within
+    * `bound / <scan partitions>`, its rows, so the driver never holds
+    * more than `bound`. The route rule is the whole query's bytes:
+    *  - at most `bound` and every task kept its rows: `kernel` runs per
+    *    shard on those rows (Left: every shard's output, unmerged);
+    *  - at most `bound` but some task overflowed its share: [[driverHead]]
+    *    collects the rows again and runs the kernel on them (every doc it
+    *    emits, ordered) — the route never depends on how the rows fell
+    *    into tasks;
+    *  - above it: [[shardCandidates]] (Right).
+    * One job and no shuffle on the driver route. */
+  private[query] def routedScores(seg: Dataset[SegmentRead], bound: Long)(
+      kernel: Map[String, Long] => ShardKernel)
       : Either[Array[Scored], Dataset[Scored]] = {
-    val (dfByTerm, bytes) = termMeta(seg)
-    if (bytes.values.sum <= bound) Left(driverHead(seg, k, kernel(dfByTerm)))
-    else Right(shardCandidates(seg, dfByTerm, kernel))
+    val scan = seg.rdd
+    // locals only: the task closure must not capture the reader
+    val share = bound / math.max(1, scan.getNumPartitions)
+    val tasks = scan.mapPartitions(rows =>
+      Iterator(IndexReader.readTask(rows, share))).collect()
+    val (dfByTerm, bytes) = IndexReader.mergeMeta(tasks.flatMap(_._1))
+    if (bytes.values.sum > bound) Right(shardCandidates(seg, dfByTerm, kernel))
+    else if (tasks.forall(_._2 != null))
+      Left(IndexReader.onDriver(tasks.flatMap(_._2), kernel(dfByTerm)).toArray)
+    else Left(driverHead(seg, Int.MaxValue, kernel(dfByTerm)))
   }
 
-  /** Driver route: collect the bucket-pruned rows (one job, no shuffle),
-    * run `kernel` per shard, take the global head. */
+  /** Driver route from a fresh collect of the bucket-pruned rows (one
+    * job, no shuffle): run `kernel` per shard, take the global head. */
   private[query] def driverHead(seg: Dataset[SegmentRead], k: Int,
       kernel: ShardKernel): Array[Scored] =
-    IndexReader.head(seg.collect().groupBy(_.shard).iterator
-      .flatMap { case (shard, rows) => kernel(shard, rows.iterator) }, k)
+    IndexReader.head(IndexReader.onDriver(seg.collect(), kernel), k)
 
   /** Distributed route: `groupByKey(shard).flatMapGroups` fans `kernel`
     * out to every shard's postings; each task returns its local top-k. */
@@ -267,17 +287,28 @@ final class IndexReader private[graft] (spark: SparkSession,
   }
 
   /** EVERY phrase-matching doc's score, untruncated — (docId, score),
-    * unordered. The composition primitive for the query-string engine's
-    * phrase clauses (their scores sum with term clauses, so per-shard
-    * pre-truncation would drop contributors). Same pruned postings read
-    * as [[phraseTopK]]; output is match-set-sized, not corpus-sized. */
+    * unordered. The composition primitive for rescoring (its scores join
+    * a window, so per-shard pre-truncation would drop contributors). Same
+    * pruned postings read and route as [[phraseTopK]]: a local frame on
+    * the driver route, the shards' candidates on the distributed one;
+    * output is match-set-sized, not corpus-sized. */
   def phraseScores(phrase: Seq[String], slop: Int = 0): DataFrame = {
     val seg = phraseSegments(phrase, slop)
     val (n, avgdl, del) = (globals.n, globals.avgdl, deletedBc)
-    shardCandidates(seg, mergedDfMap(seg), dfByTerm =>
+    scoresFrame(seg)(dfByTerm =>
       Phrase.shardScores(avgdl, phrase, IndexReader.phraseIdf(n, phrase,
-        dfByTerm), del.value, slop)).toDF("docId", "score")
+        dfByTerm), del.value, slop))
   }
+
+  /** [[routedScores]] as an untruncated (docId, score) DataFrame: a local
+    * relation on the driver route, the shards' output on the distributed
+    * one. */
+  private[query] def scoresFrame(seg: Dataset[SegmentRead])(
+      kernel: Map[String, Long] => ShardKernel): DataFrame =
+    routedScores(seg, maxDriverBytes)(kernel) match {
+      case Left(all) => all.toSeq.toDF("docId", "score")
+      case Right(cands) => cands.toDF("docId", "score")
+    }
 
   /** The first generation built without positions, from the manifests
     * read once per reader; None when every generation has them. */
@@ -398,6 +429,53 @@ object IndexReader {
   def payloadBytes: Column =
     (length(col("gaps")) + length(col("tfs")) + length(col("dls")) +
       coalesce(length(col("pos")), lit(0))).cast("long")
+
+  /** Posting bytes of one segment row — [[payloadBytes]] on the object. */
+  private def rowBytes(r: SegmentRead): Long =
+    r.gaps.length.toLong + r.tfs.length + r.dls.length +
+      (if (r.pos == null) 0 else r.pos.length)
+
+  /** One scan task's per-(term, gen) (df, posting bytes) fold. */
+  private[query] final class MetaAcc {
+    private val acc = scala.collection.mutable.HashMap.empty[(String, Int), (Long, Long)]
+    def add(t: String, g: Int, df: Long, b: Long): Unit =
+      acc((t, g)) = (df, acc.get((t, g)).fold(0L)(_._2) + b)
+    def result: Array[((String, Int), (Long, Long))] = acc.toArray
+  }
+
+  /** Merge the tasks' (term, gen) records: the per-term GLOBAL df (one df
+    * per generation, summed) and the per-term posting bytes. */
+  private[query] def mergeMeta(perTask: Array[((String, Int), (Long, Long))])
+      : (Map[String, Long], Map[String, Long]) = {
+    val perGen = perTask.groupMapReduce(_._1)(_._2)((a, b) => (a._1, a._2 + b._2))
+    (perGen.groupMapReduce(_._1._1)(_._2._1)(_ + _),
+      perGen.groupMapReduce(_._1._1)(_._2._2)(_ + _))
+  }
+
+  /** One task of the one-job read ([[IndexReader.routedScores]]): its
+    * (term, gen) records, and its rows while their running payload stays
+    * within `share` (null once it overflowed). */
+  private[query] def readTask(rows: Iterator[SegmentRead], share: Long)
+      : (Array[((String, Int), (Long, Long))], Array[SegmentRead]) = {
+    val acc = new MetaAcc
+    var kept = Array.newBuilder[SegmentRead]
+    var held = 0L
+    rows.foreach { r =>
+      val b = rowBytes(r)
+      acc.add(r.term, r.gen, r.df, b)
+      if (kept != null) {
+        held += b
+        if (held <= share) kept += r else kept = null
+      }
+    }
+    (acc.result, if (kept == null) null else kept.result())
+  }
+
+  /** Run `kernel` over each shard's rows on the driver. */
+  private[query] def onDriver(rows: Array[SegmentRead], kernel: ShardKernel)
+      : Iterator[Scored] =
+    rows.groupBy(_.shard).iterator
+      .flatMap { case (shard, rs) => kernel(shard, rs.iterator) }
 
   /** The global head of per-shard candidates: (score desc, docId asc),
     * k rows — the order every top-k route returns. */

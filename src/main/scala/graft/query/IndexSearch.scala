@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,14 +18,15 @@ import graft.index.PForDelta
   *    partition pruning) with the term predicate pushed into Parquet;
   *  - scoring runs one shard kernel per document shard, over decoded
   *    postings only — the corpus text is never touched. bool, search_after,
-  *    boosted terms and dis_max are one [[Clauses]] value scored by one
-  *    dense clause kernel ([[IndexSearch.shardClauseTopK]]), reading
-  *    postings through the one block cursor, [[TermCursor]]. One metadata job
-  *    returns the terms' merged dfs and total posting bytes; up to
-  *    [[IndexReader.DefaultMaxBytesPerTerm]] for the whole query the rows
-  *    are collected and the kernels run on the driver (two jobs, no
-  *    shuffle), above it they fan out with `groupByKey(shard)` and a
-  *    TakeOrdered merges the candidates ([[IndexReader.shardHeads]]);
+  *    boosted terms, dis_max and query_string are one [[Clauses]] value
+  *    scored by one dense clause kernel ([[IndexSearch.shardClauseTopK]]),
+  *    reading postings through the one block cursor, [[TermCursor]]. One
+  *    job reads the rows and returns the terms' merged dfs and total
+  *    posting bytes with them; up to [[IndexReader.DefaultMaxBytesPerTerm]]
+  *    for the whole query the kernels run on the driver over those rows
+  *    (one job, no shuffle), above it they fan out with `groupByKey(shard)`
+  *    and a TakeOrdered merges the candidates
+  *    ([[IndexReader.routedScores]]);
   *  - every table (postings, termstats, docs, tf) is resolved once per
   *    reader, so no query pays a schema-inference job;
   *  - dictionaries (fuzzy expansion, suggesters) come from the index's
@@ -83,8 +84,8 @@ final class IndexSearch(spark: SparkSession,
   def boolTopK(must: Seq[String], should: Seq[String], mustNot: Seq[String],
       k: Int, excludeDocId: Long = -1L,
       minShouldMatch: Int = 0): DataFrame =
-    clauseTopK(boolClauses(must, should, mustNot)
-      .copy(excludeDocId = excludeDocId, minShouldMatch = minShouldMatch), k)
+    clauseTopK(boolClauses(must, should, mustNot, minShouldMatch)
+      .copy(excludeDocId = excludeDocId), k)
 
   /** Keyset pagination served from the index (OpenSearch `search_after`):
     * the cursor predicate — (rounded score, docId) strictly after the
@@ -99,24 +100,29 @@ final class IndexSearch(spark: SparkSession,
       .copy(afterScore = afterScore, afterDocId = afterDocId), k)
 
   private def boolClauses(must: Seq[String], should: Seq[String],
-      mustNot: Seq[String]): Clauses = {
+      mustNot: Seq[String], minShouldMatch: Int = 0): Clauses = {
     val mustN = norm(must).distinct.sorted
     val notN = norm(mustNot).distinct.sorted
     val shouldN = norm(should).distinct.sorted
     val scoreTerms = (mustN ++ shouldN).distinct.sorted
     require(scoreTerms.nonEmpty, "bool query needs must or should terms")
     require(mustN.intersect(notN).isEmpty, "a term cannot be must AND must_not")
-    Clauses(scoreTerms.map(_ -> 1.0), mustN.toSet, shouldN.toSet, notN.toSet)
+    Clauses.flat(scoreTerms.map(_ -> 1.0), mustN.toSet, shouldN.toSet, notN.toSet,
+      minShouldMatch)
   }
 
-  /** Top-k of one clause value: one bucket-pruned segment read over its
-    * score and must_not terms, the clause kernel per shard, routed by the
-    * query's posting bytes ([[IndexReader.topKFrame]]). */
+  /** Top-k of one clause value: one bucket-pruned segment read over every
+    * term its groups name (with positions only when a group is a phrase),
+    * the clause kernel per shard, routed by the query's posting bytes
+    * ([[IndexReader.topKFrame]]). */
   private def clauseTopK(q: Clauses, k: Int): DataFrame = {
+    val phrases = q.groups.exists(_.phrase.isDefined)
+    if (phrases) reader.requirePositions()
     // locals only: the kernel ships to the executors on the distributed route
     val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
-    val terms = (q.terms.map(_._1) ++ q.mustNot.toSeq.sorted).distinct
-    reader.topKFrame(reader.segmentsFor(terms, positions = false), k)(
+    val terms = q.groups.flatMap(g => g.terms ++ g.phrase.toSeq.flatMap(_._1))
+      .distinct.sorted
+    reader.topKFrame(reader.segmentsFor(terms, positions = phrases), k)(
       dfByTerm => IndexSearch.shardClauseTopK(n, avgdl, k, dfByTerm, q,
         del.value))
   }
@@ -178,7 +184,7 @@ final class IndexSearch(spark: SparkSession,
     val expanded = queryTerms.flatMap(t => fz.getOrElse((t, maxDist), Nil))
       .distinct.sorted
     if (expanded.isEmpty)
-      Seq.empty[(Long, Double)].toDF("docId", "score")
+      noScores
     else boolTopK(Nil, expanded, Nil, k)
   }
 
@@ -211,7 +217,7 @@ final class IndexSearch(spark: SparkSession,
   def moreLikeThisTopK(docId: Long, m: Int, k: Int): DataFrame = {
     val terms = moreLikeThisTerms(docId, m)
       .select("term").as[String].collect().toSeq.sorted
-    if (terms.isEmpty) Seq.empty[(Long, Double)].toDF("docId", "score")
+    if (terms.isEmpty) noScores
     else boolTopK(Nil, terms, Nil, k, excludeDocId = docId)
   }
 
@@ -261,7 +267,7 @@ final class IndexSearch(spark: SparkSession,
       : DataFrame = {
     val p = Analyzer.lowerLikeCatalyst(prefix)
     val expanded = firstTerms(col("term").startsWith(p), maxExpansions)
-    if (expanded.isEmpty) Seq.empty[(Long, Double)].toDF("docId", "score")
+    if (expanded.isEmpty) noScores
     else boolTopK(Nil, expanded, Nil, k)
   }
 
@@ -326,7 +332,7 @@ final class IndexSearch(spark: SparkSession,
     val like = p.replace("\\", "\\\\").replace("%", "\\%")
       .replace("_", "\\_").replace("*", "%")
     val expanded = firstTerms(col("term").like(like), maxExpansions)
-    if (expanded.isEmpty) Seq.empty[(Long, Double)].toDF("docId", "score")
+    if (expanded.isEmpty) noScores
     else boolTopK(Nil, expanded, Nil, k)
   }
 
@@ -340,7 +346,8 @@ final class IndexSearch(spark: SparkSession,
     require(tieBreaker >= 0.0 && tieBreaker <= 1.0, "tie_breaker in [0,1]")
     val terms = norm(queryTerms).distinct.sorted
     require(terms.nonEmpty, "dis_max needs terms")
-    clauseTopK(Clauses(terms.map(_ -> 1.0), disMaxTie = Some(tieBreaker)), k)
+    clauseTopK(Clauses.flat(terms.map(_ -> 1.0))
+      .copy(disMaxTie = Some(tieBreaker)), k)
   }
 
   /** Per-term boosted top-k served from postings (OpenSearch
@@ -353,7 +360,7 @@ final class IndexSearch(spark: SparkSession,
       (Analyzer.lowerLikeCatalyst(t), b)
     }.toMap
     require(byTerm.size == boosts.size, "duplicate boost term")
-    clauseTopK(Clauses(byTerm.toSeq.sortBy(_._1)), k)
+    clauseTopK(Clauses.flat(byTerm.toSeq.sortBy(_._1)), k)
   }
 
   /** Regexp query (OpenSearch `regexp`): full-term match against the
@@ -365,7 +372,7 @@ final class IndexSearch(spark: SparkSession,
       : DataFrame = {
     val expanded = firstTerms(col("term").rlike(s"^(?:$pattern)$$"),
       maxExpansions)
-    if (expanded.isEmpty) Seq.empty[(Long, Double)].toDF("docId", "score")
+    if (expanded.isEmpty) noScores
     else boolTopK(Nil, expanded, Nil, k)
   }
 
@@ -579,15 +586,29 @@ final class IndexSearch(spark: SparkSession,
     * docId asc). */
   def phrasePrefixTopK(phrase: Seq[String], k: Int, slop: Int = 0,
       maxExpansions: Int = 50): DataFrame =
-    phrasePrefixScores(phrase, slop, maxExpansions)
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
+    phrasePrefixRead(phrase, slop, maxExpansions).fold(noScores) {
+      case (seg, kernel) => reader.topKFrame(seg, k)(dfByTerm =>
+        (shard, rows) => Phrase.shardHead(k, kernel(dfByTerm)(shard, rows)))
+    }
 
   /** EVERY matching doc's match_phrase_prefix score, untruncated — the
     * [[phrasePrefixTopK]] body without selection (callers that re-rank on
-    * rounded scores, like the oracle gates, need the full match set). */
+    * rounded scores, like the oracle gates, need the full match set).
+    * Routed like every served read ([[IndexReader.scoresFrame]]): a local
+    * frame when the postings fit the driver bound. */
   def phrasePrefixScores(phrase: Seq[String], slop: Int = 0,
-      maxExpansions: Int = 50): DataFrame = {
+      maxExpansions: Int = 50): DataFrame =
+    phrasePrefixRead(phrase, slop, maxExpansions).fold(noScores) {
+      case (seg, kernel) => reader.scoresFrame(seg)(kernel)
+    }
+
+  private def noScores: DataFrame = Seq.empty[(Long, Double)].toDF("docId", "score")
+
+  /** match_phrase_prefix's postings read and untruncated shard kernel;
+    * None when the prefix expands to no dictionary term. */
+  private def phrasePrefixRead(phrase: Seq[String], slop: Int,
+      maxExpansions: Int)
+      : Option[(Dataset[SegmentRead], Map[String, Long] => IndexReader.ShardKernel)] = {
     require(phrase.length >= 2,
       "match_phrase_prefix needs >= 2 slots (use prefixTopK for 1)")
     require(slop >= 0, "slop must be >= 0")
@@ -595,15 +616,13 @@ final class IndexSearch(spark: SparkSession,
     val exact = phrase.init.map(Analyzer.lowerLikeCatalyst)
     val prefix = Analyzer.lowerLikeCatalyst(phrase.last)
     val expansion = firstTerms(col("term").startsWith(prefix), maxExpansions)
-    if (expansion.isEmpty)
-      return Seq.empty[(Long, Double)].toDF("docId", "score")
+    if (expansion.isEmpty) return None
     val dfUnion = matchingDocIds(expansion).count()
-    val seg = reader.segmentsFor((exact ++ expansion).distinct)
     val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
-    reader.shardCandidates(seg, reader.mergedDfMap(seg), dfByTerm =>
+    Some((reader.segmentsFor((exact ++ expansion).distinct), dfByTerm =>
       Phrase.shardPrefixScores(avgdl, exact, expansion,
         IndexReader.phraseIdf(n, exact, dfByTerm) + Bm25.idf(n, dfUnion),
-        del.value, slop)).toDF("docId", "score")
+        del.value, slop)))
   }
 
   /** Query rescoring served from the index (OpenSearch `rescore`): the
@@ -648,8 +667,9 @@ final class IndexSearch(spark: SparkSession,
   /** Per-(doc, term) BM25 contributions decoded straight from the
     * bucket-pruned postings — (docId, term, score), one row per posting,
     * tombstoned docs excluded. The composition primitive behind
-    * [[queryStringTopK]]: downstream clause algebra pivots these into
-    * fixed-order Column sums, exactly like the brute pivot. */
+    * [[topHits]], [[fieldValueFactorTopK]] and multi_match: downstream
+    * algebra pivots these into fixed-order Column sums, exactly like the
+    * brute pivot. */
   def termScores(queryTerms: Seq[String]): DataFrame = {
     val terms = norm(queryTerms).distinct.sorted
     val seg = reader.segmentsFor(terms, positions = false)
@@ -680,12 +700,13 @@ final class IndexSearch(spark: SparkSession,
 
   /** Lucene-style `query_string` served from the INDEX (grammar and
     * semantics on [[QueryString]]): fuzzy/wildcard expansions resolve
-    * against termstats/, term clauses score from [[termScores]] postings
-    * decodes pivoted into the brute form's fixed-order Column algebra,
-    * phrase clauses from positional postings
-    * ([[IndexReader.phraseScores]]), must_not gates from
-    * [[matchingDocIds]] anti-joins. The corpus text is never read.
-    * Rank-identical to [[QueryString.topK]] (QueryStringSpec). */
+    * against termstats/ (one dictionary job, only when the query has such
+    * clauses), then the resolved clauses — in query order — are the
+    * groups of one [[Clauses]] value, scored by the clause kernel on one
+    * routed postings read (positions only when a clause is a phrase). The
+    * corpus text is never read. Rank-identical to [[QueryString.topK]],
+    * whose Column algebra ([[QueryString.compose]]) is an independent
+    * form of the same fold (QueryStringSpec). */
   def queryStringTopK(q: String, k: Int, maxExpansions: Int = 50)
       : DataFrame = {
     val clauses = QueryString.parse(q)
@@ -700,27 +721,11 @@ final class IndexSearch(spark: SparkSession,
       maxExpansions)
     if (resolved.exists(r => r.occur == QueryString.Must &&
         r.phrase.isEmpty && r.terms.isEmpty))
-      return Seq.empty[(Long, Double)].toDF("docId", "score")
-    val scoringTerms = resolved
-      .filter(_.occur != QueryString.MustNot)
-      .flatMap(_.terms).distinct.sorted
-    val pivoted =
-      if (scoringTerms.isEmpty) None
-      else Some(pivotScores(scoringTerms)._1)
-    val phraseFrames = resolved.zipWithIndex.collect {
-      case (r, i) if r.phrase.isDefined && r.occur != QueryString.MustNot =>
-        val (slots, slop) = r.phrase.get
-        i -> reader.phraseScores(slots.map(Analyzer.lowerLikeCatalyst), slop)
-    }.toMap
-    val notFrames = resolved.collect {
-      case r if r.occur == QueryString.MustNot && r.phrase.isDefined =>
-        val (slots, slop) = r.phrase.get
-        reader.phraseScores(slots.map(Analyzer.lowerLikeCatalyst), slop)
-          .select(col("docId"))
-      case r if r.occur == QueryString.MustNot && r.terms.nonEmpty =>
-        matchingDocIds(r.terms)
-    }
-    QueryString.compose(pivoted, resolved, phraseFrames, notFrames, k)
+      return noScores
+    require(resolved.exists(r => r.occur != QueryString.MustNot &&
+      (r.phrase.isDefined || r.terms.nonEmpty)),
+      "no scoring clause survived expansion")
+    clauseTopK(Clauses(resolved.map(r => r.copy(terms = r.terms.sorted))), k)
   }
 }
 
@@ -777,21 +782,27 @@ object IndexSearch {
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Executor-side per-shard clause scorer — the one dense kernel behind
-    * bool, search_after, boosted terms and dis_max. Dense arrays over the
-    * shard's docId range (≤ shardSize slots): one [[TermCursor]] pass per
-    * score term in ascending term order accumulates boost × BM25 from 0.0
-    * (bit-identical fold order to the brute pivot sum; × 1.0 is exact in
-    * IEEE 754), must/should counts and banned flags ride the same pass,
-    * then one sweep emits the shard's top-k by (rounded score desc,
-    * docId asc). The dis_max combine alone adds a `best` array: each
-    * (term, doc) pair is one posting, so `best` is the brute form's
-    * `greatest(coalesce(s, 0.0)…)` with BM25 scores strictly positive, and
-    * the emitted score is round4(best + tie·(sum − best)). Top-level
-    * function so the closure captures primitives, the clause value and the
-    * broadcast df map, never the reader. */
+    * bool, search_after, boosted terms, dis_max and query_string. Dense
+    * arrays over the shard's docId range (≤ shardSize slots). The groups
+    * run in fold order: a term group sums its terms' BM25 from 0.0 in
+    * ascending term order (one [[TermCursor]] pass per term), a phrase
+    * group takes [[Phrase.shardScores]] over the shard's slot rows with
+    * the slot-summed idf of the GLOBAL dfs; then each doc the group
+    * touched adds boost × its group sum to its score — the brute forms'
+    * coalesce(s, 0.0) fold exactly (absent contributions add 0.0, and
+    * × 1.0 and 0.0 + s are exact in IEEE 754). A must or should group
+    * counts once per doc, however many of its terms the doc holds; a
+    * must_not group bans the docs it touches. A doc is seen only through a
+    * scoring group. Then one sweep emits the shard's top-k by (rounded
+    * score desc, docId asc). The dis_max combine alone adds a `best`
+    * array: the emitted score is round4(best + tie·(sum − best)) over the
+    * groups' contributions. Top-level function so the closure captures
+    * primitives, the clause value and the broadcast df map, never the
+    * reader. */
   private[query] def shardClauseTopK(n: Long, avgdl: Double, k: Int,
       dfByTerm: Map[String, Long], q: Clauses, deleted: Array[Long])(
       shard: Long, rows: Iterator[SegmentRead]): Iterator[Scored] = {
+    import QueryString.{Must, MustNot}
     val byTerm = rows.toArray.groupBy(_.term)
     if (byTerm.isEmpty || k <= 0) return Iterator.empty
     var lo = Long.MaxValue
@@ -807,47 +818,58 @@ object IndexSearch {
     val shouldCnt = new Array[Int](size)
     val banned = new Array[Boolean](size)
     val seen = new Array[Boolean](size)
-    def cursor(t: String, rs: Array[SegmentRead]): TermCursor =
-      IndexReader.termCursor(t, rs,
-        Bm25.idf(n, dfByTerm.getOrElse(t, IndexReader.mergedDf(rs))), avgdl)
-
-    q.terms.foreach { case (t, boost) =>
-      byTerm.get(t).foreach { rs =>
-        val c = cursor(t, rs)
-        val isMust = q.must(t)
-        val isShould = q.should(t)
-        while (!c.exhausted) {
-          val x = (c.curDoc - lo).toInt
-          // boost multiplies the term's contribution BEFORE the
-          // ascending-term accumulation — the brute pivot's
-          // coalesce(s)·boost fold order exactly
-          val s = c.score * boost
+    // the current group's per-doc sum, and the docs it touched
+    val groupSum = new Array[Double](size)
+    val lastGroup = Array.fill(size)(-1)
+    val touched = new Array[Int](size)
+    q.groups.iterator.zipWithIndex.foreach { case (g, gi) =>
+      var nTouched = 0
+      def add(docId: Long, s: Double): Unit = {
+        val x = (docId - lo).toInt
+        if (lastGroup(x) != gi) {
+          lastGroup(x) = gi; groupSum(x) = 0.0; touched(nTouched) = x; nTouched += 1
+        }
+        groupSum(x) += s
+      }
+      g.phrase match {
+        case Some((slots, slop)) =>
+          val slotRows = slots.distinct.iterator.flatMap(byTerm.getOrElse(_, Array.empty[SegmentRead]))
+          Phrase.shardScores(avgdl, slots, IndexReader.phraseIdf(n, slots, dfByTerm),
+            deleted, slop)(shard, slotRows).foreach(p => add(p.docId, p.score))
+        case None =>
+          g.terms.foreach { t =>
+            byTerm.get(t).foreach { rs =>
+              val c = IndexReader.termCursor(t, rs,
+                Bm25.idf(n, dfByTerm.getOrElse(t, IndexReader.mergedDf(rs))), avgdl)
+              while (!c.exhausted) {
+                add(c.curDoc, if (g.occur == MustNot) 0.0 else c.score)
+                c.advance()
+              }
+            }
+          }
+      }
+      var i = 0
+      while (i < nTouched) {
+        val x = touched(i)
+        if (g.occur == MustNot) banned(x) = true
+        else {
+          val s = g.boost * groupSum(x)
           score(x) += s
           if (best != null && s > best(x)) best(x) = s
           seen(x) = true
-          if (isMust) mustCnt(x) += 1
-          if (isShould) shouldCnt(x) += 1
-          c.advance()
+          if (g.occur == Must) mustCnt(x) += 1 else shouldCnt(x) += 1
         }
+        i += 1
       }
     }
-    q.mustNot.foreach { t =>
-      byTerm.get(t).foreach { rs =>
-        val c = cursor(t, rs)
-        while (!c.exhausted) { banned((c.curDoc - lo).toInt) = true; c.advance() }
-      }
-    }
-    val nMust = q.must.size
-    // minimum_should_match is a no-op with no should clauses (OpenSearch
-    // semantics; Search.boolTopK's brute gate guards identically)
-    val msm = if (q.should.isEmpty) 0 else q.minShouldMatch
+    val nMust = q.groups.count(_.occur == Must)
     val hasCursor = !q.afterScore.isNaN
     val tie = q.disMaxTie.getOrElse(0.0)
     val topk = new TopKHeap(k)
     var x = 0
     while (x < size) {
       if (seen(x) && !banned(x) && mustCnt(x) == nMust &&
-          (msm <= 0 || shouldCnt(x) >= msm)) {
+          (q.minShouldMatch <= 0 || shouldCnt(x) >= q.minShouldMatch)) {
         val docId = lo + x
         if (docId != q.excludeDocId &&
             !IndexReader.isDeleted(deleted, docId)) {
@@ -867,21 +889,40 @@ object IndexSearch {
   }
 }
 
-/** The flat clause shapes the one dense kernel scores
-  * ([[IndexSearch.shardClauseTopK]]): bool, search_after, boosted terms
-  * and dis_max.
-  *  - `terms`: the score terms in ASCENDING order (the accumulation order
-  *    rank identity rests on), each with its boost;
-  *  - `must`/`should`/`mustNot` gate documents, `minShouldMatch` counts
-  *    should hits (ignored when `should` is empty);
+/** The clause value the one dense kernel scores
+  * ([[IndexSearch.shardClauseTopK]]): bool, search_after, boosted terms,
+  * dis_max and query_string.
+  *  - `groups` in FOLD order, each a boost, an occur (must, should or
+  *    must_not) and either ascending terms or a phrase (slots, slop) — a
+  *    [[QueryString.Resolved]] clause. bool, boosted terms and dis_max
+  *    build one group per term, ascending ([[Clauses.flat]]); query_string
+  *    one per resolved clause, in query order;
+  *  - `minShouldMatch`: should groups a doc must hit (≤ 0 = no gate);
   *  - `excludeDocId` drops one doc (more-like-this's source document);
   *  - `afterScore`/`afterDocId` is the search_after cursor (NaN = none);
-  *  - `disMaxTie`: None sums the terms, Some(tie) combines them as
+  *  - `disMaxTie`: None sums the groups, Some(tie) combines them as
   *    best + tie·(sum − best). */
 private[query] final case class Clauses(
-    terms: Seq[(String, Double)],
-    must: Set[String] = Set.empty, should: Set[String] = Set.empty,
-    mustNot: Set[String] = Set.empty, minShouldMatch: Int = 0,
+    groups: Seq[QueryString.Resolved], minShouldMatch: Int = 0,
     excludeDocId: Long = -1L,
     afterScore: Double = Double.NaN, afterDocId: Long = -1L,
     disMaxTie: Option[Double] = None)
+
+private[query] object Clauses {
+  import QueryString.{Must, MustNot, Resolved, Should}
+
+  /** The flat bool shape: one group per score term in the given
+    * (ascending) order, must when the term is in `must`, else should;
+    * then one must_not group per `mustNot` term. minimum_should_match
+    * counts `should` terms (a no-op when `should` is empty): a term that
+    * is must AND should is one must group, and every doc that passes the
+    * must gate holds it, so it lowers the count the should groups need. */
+  def flat(terms: Seq[(String, Double)], must: Set[String] = Set.empty,
+      should: Set[String] = Set.empty, mustNot: Set[String] = Set.empty,
+      minShouldMatch: Int = 0): Clauses =
+    Clauses(
+      terms.map { case (t, b) => Resolved(if (must(t)) Must else Should, b, Seq(t), None) } ++
+        mustNot.toSeq.sorted.map(t => Resolved(MustNot, 1.0, Seq(t), None)),
+      minShouldMatch =
+        if (should.isEmpty) 0 else minShouldMatch - must.intersect(should).size)
+}

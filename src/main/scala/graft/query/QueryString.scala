@@ -37,11 +37,14 @@ import graft.analyze.Analyzer
   * ascending term order — the engine-wide fixed-order determinism
   * contract. Final scores round to 4; ranking (score desc, docId asc).
   *
-  * Two executions, rank-identical (QueryStringSpec pins it):
-  *   - [[topK]]: brute-force corpus scan (the oracle form);
-  *   - [[IndexSearch.queryStringTopK]]: dictionary from termstats/,
-  *     term scores from bucket-pruned postings, phrase scores from
-  *     positional postings — the corpus text is never read.
+  * Two executions, rank-identical (QueryStringSpec pins it), sharing
+  * only the parser and [[resolve]]:
+  *   - [[topK]]: brute-force corpus scan (the oracle form), its clause
+  *     algebra written as Columns over frames ([[compose]]);
+  *   - [[IndexSearch.queryStringTopK]]: dictionary from termstats/, then
+  *     the resolved clauses are the groups of one [[Clauses]] value scored
+  *     by the clause kernel ([[IndexSearch.shardClauseTopK]]) on one
+  *     routed postings read — the corpus text is never read.
   */
 object QueryString {
 
@@ -182,12 +185,13 @@ object QueryString {
 
   // -------------------------------------------------------- composition
 
-  /** Shared scoring composition over side-supplied frames — the ONE place
-    * clause algebra lives, so brute and index-served executions differ
-    * only in where their per-term/phrase scores come from.
+  /** The brute form's clause algebra over side-supplied frames. The
+    * served form folds the same clauses in the clause kernel, so the two
+    * are independent executions of one fold (clause order, each clause's
+    * terms ascending from 0.0, boost × clause sum).
     *
     * `pivoted`: (docId, one double column per concrete scoring term,
-    * null = absent) — [[BruteForce.scorePivot]] or the postings pivot.
+    * null = absent) — [[BruteForce.scorePivot]].
     * `resolved`: clause list in query order; for each phrase clause,
     * `phraseFrames(i)` is its (docId, score) frame (unrounded scores).
     * `mustNotFrames`: one (docId) match-set frame per must_not clause.

@@ -640,16 +640,21 @@ object ExplainDump {
         IndexParams(buckets = 8, shardSize = 512, blockSize = 64,
           buildPartitions = 8, positions = true))
         .build(pages, "explain-qs-fixture")
-      val qsSearch = new graft.query.IndexSearch(spark, s"$posWork/idx")
+      // pinned to the distributed route, like the bool and phrase plans
+      val qsSearch = new graft.query.IndexSearch(spark,
+        new graft.query.IndexReader(spark, s"$posWork/idx", -1L))
 
-      dump("Index-served query_string (term pivot + phrase join + gates)",
-        "Look for: the TERM side is one bucket-pruned postings scan " +
-          "(`PartitionFilters` + `In(term, …)`) decoded to (docId, term, " +
-          "score) rows and pivoted into fixed-order per-term columns " +
-          "(one keyed HashAggregate); the PHRASE clause joins its " +
-          "positional per-shard scores on docId; the must_not clause is " +
-          "a `LeftAnti` join of decoded match docIds. No corpus scan " +
-          "anywhere in the plan — every input is an index artifact.",
+      dump("Index-served query_string (one clause-kernel fan-out)",
+        "Distributed route (a query over 64 MiB of postings). Look for: " +
+          "ONE bucket-pruned postings scan (`PartitionFilters` + " +
+          "`In(term, …)`) over every clause's terms, positions included " +
+          "because a clause is a phrase; one shard fan-out Exchange " +
+          "(groupByKey(shard) → the clause kernel, which folds term, " +
+          "phrase and must_not clauses per shard); " +
+          "`TakeOrderedAndProject` over shards×k candidate rows. No " +
+          "pivot aggregate, no join, no corpus scan — the fuzzy and " +
+          "wildcard expansions were resolved against termstats before " +
+          "the plan was built.",
         qsSearch.queryStringTopK(
           "+the data^2 \"the data\"~1 -w00003 w0000* thw~1", 10,
           maxExpansions = 8))
@@ -660,7 +665,7 @@ object ExplainDump {
           "shard groupByKey, then TakeOrdered — identical shape to the " +
           "exact phrase plan; the expansion never widens the plan, only " +
           "the term predicate list.",
-        qsSearch.phrasePrefixTopK(Seq("the", "da"), 10, slop = 1,
+        qsSearch.phrasePrefixTopK(Seq("the", "w0000"), 10, slop = 1,
           maxExpansions = 8))
 
       dump("Index-served rescore (bool window + phrase re-rank)",

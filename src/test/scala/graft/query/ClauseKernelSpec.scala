@@ -55,15 +55,39 @@ class ClauseKernelSpec extends AnyFunSuite {
     (dl, postings)
   }
 
+  /** The flat bool shape the first case draws: ascending score terms with
+    * boosts, must/should/must_not sets and the rest of the clause value. */
+  private final case class Flat(
+      terms: Seq[(String, Double)],
+      must: Set[String] = Set.empty, should: Set[String] = Set.empty,
+      mustNot: Set[String] = Set.empty, minShouldMatch: Int = 0,
+      excludeDocId: Long = -1L,
+      afterScore: Double = Double.NaN, afterDocId: Long = -1L,
+      disMaxTie: Option[Double] = None) {
+    def clauses: Clauses =
+      Clauses.flat(terms, must, should, mustNot, minShouldMatch).copy(
+        excludeDocId = excludeDocId, afterScore = afterScore,
+        afterDocId = afterDocId, disMaxTie = disMaxTie)
+  }
+
   private def pick(rng: SplitMix64, xs: Seq[String], p: Double): Seq[String] =
     xs.filter(_ => rng.nextDouble() < p)
 
-  private def runCase(seed: Long): Unit = {
-    val rng = new SplitMix64(seed)
+  /** A random index: the corpus, its posting table over one or two
+    * generations, several shards and a random block size, and the GLOBAL
+    * dfs. */
+  private final case class Index(nDocs: Int, dl: Array[Long],
+      postings: Map[String, Seq[P]], rows: Seq[SegmentRead],
+      df: Map[String, Long]) {
+    val n: Long = nDocs.toLong
+    val avgdl: Double = dl.sum.toDouble / n
+    def posting(t: String, d: Long): Option[P] =
+      postings.getOrElse(t, Nil).find(_.doc == d)
+  }
+
+  private def randomIndex(rng: SplitMix64): Index = {
     val nDocs = 20 + rng.nextInt(180)
     val (dl, postings) = corpus(rng, nDocs, 3 + rng.nextInt(6))
-    val n = nDocs.toLong
-    val avgdl = dl.sum.toDouble / n
     val shardSize = 16 + rng.nextInt(64)
     val split = if (rng.nextInt(2) == 0) nDocs.toLong else rng.nextInt(nDocs).toLong
     def genOf(d: Long): Int = if (d < split) 0 else 1
@@ -75,7 +99,21 @@ class ClauseKernelSpec extends AnyFunSuite {
         }
       }
     }
-    val df = postings.map { case (t, ps) => t -> ps.size.toLong }
+    Index(nDocs, dl, postings, rows,
+      postings.map { case (t, ps) => t -> ps.size.toLong })
+  }
+
+  /** The clause kernel over every shard of `ix`, then the global head. */
+  private def kernelHead(ix: Index, k: Int, q: Clauses,
+      deleted: Array[Long]): Seq[Scored] =
+    IndexReader.head(ix.rows.groupBy(_.shard).iterator.flatMap { case (sh, rs) =>
+      IndexSearch.shardClauseTopK(ix.n, ix.avgdl, k, ix.df, q, deleted)(sh, rs.iterator)
+    }, k).toSeq
+
+  private def runCase(seed: Long): Unit = {
+    val rng = new SplitMix64(seed)
+    val ix = randomIndex(rng)
+    import ix.{avgdl, df, n, nDocs, postings}
 
     // random clause value
     val terms = postings.keys.toSeq.sorted :+ "absent"
@@ -89,7 +127,7 @@ class ClauseKernelSpec extends AnyFunSuite {
     val scoreTerms = (must ++ should).distinct.sorted
     if (scoreTerms.isEmpty) return
     val boosted = rng.nextInt(2) == 0
-    val q0 = Clauses(
+    val q0 = Flat(
       scoreTerms.map(t => t -> (if (boosted) 0.25 + rng.nextDouble() * 3 else 1.0)),
       must.toSet, if (disMax) Set.empty else should.toSet, mustNot.toSet,
       minShouldMatch = if (disMax) 0 else rng.nextInt(3),
@@ -101,7 +139,7 @@ class ClauseKernelSpec extends AnyFunSuite {
     val k = 1 + rng.nextInt(15)
 
     // naive per-doc scorer: same ascending-term fold from 0.0, then round4
-    def naive(q: Clauses): Seq[Scored] = (0 until nDocs).map(_.toLong).flatMap { d =>
+    def naive(q: Flat): Seq[Scored] = (0 until nDocs).map(_.toLong).flatMap { d =>
       var sum = 0.0
       var best = 0.0
       var seen = false
@@ -130,10 +168,7 @@ class ClauseKernelSpec extends AnyFunSuite {
       else None
     }.sortBy(s => (-s.score, s.docId)).take(k)
 
-    def kernel(q: Clauses): Seq[Scored] =
-      IndexReader.head(rows.groupBy(_.shard).iterator.flatMap { case (sh, rs) =>
-        IndexSearch.shardClauseTopK(n, avgdl, k, df, q, deleted)(sh, rs.iterator)
-      }, k).toSeq
+    def kernel(q: Flat): Seq[Scored] = kernelHead(ix, k, q.clauses, deleted)
 
     val first = naive(q0)
     // a search_after cursor taken from the first page's middle row
@@ -148,6 +183,115 @@ class ClauseKernelSpec extends AnyFunSuite {
         assert(g.score == w.score, s"score mismatch seed=$seed doc=${g.docId}")
       }
     }
+  }
+
+  /** Match starts of a phrase in one doc, from its slots' positions: exact
+    * (`slop = 0`: slot j holds p + j) or the greedy ordered chain (each
+    * slot's first position after the previous slot's, stretch ≤ slop). */
+  private def naivePhraseTf(slots: Seq[Array[Long]], slop: Int): Long =
+    slots.head.count { p0 =>
+      if (slop == 0) slots.indices.forall(j => slots(j).contains(p0 + j))
+      else {
+        var prev = p0
+        val chained = slots.tail.forall { ps =>
+          ps.find(_ > prev).exists { p => prev = p; true }
+        }
+        chained && prev - p0 - (slots.size - 1) <= slop
+      }
+    }.toLong
+
+  /** One random clause-group case; returns the group kinds that matched a
+    * doc ("Must phrase", "Should terms", …). */
+  private def runGroups(seed: Long): Set[String] = {
+    import QueryString.{Must, MustNot, Resolved, Should}
+    val rng = new SplitMix64(seed)
+    val ix = randomIndex(rng)
+    import ix.{avgdl, df, n, nDocs}
+    val vocab = ix.postings.keys.toSeq.sorted
+    val terms = vocab :+ "absent"
+    // boosts span twelve orders of magnitude, so a sum folded in another
+    // order differs in its rounded 4th decimal, not just its last bits
+    def boost(): Double = rng.nextInt(4) match {
+      case 0 => 1.0
+      case 1 => 0.25 + rng.nextDouble() * 3
+      case _ => math.pow(10, rng.nextInt(13)) * (0.5 + rng.nextDouble())
+    }
+    val groups = (0 until 1 + rng.nextInt(5)).map { _ =>
+      val occur = rng.nextInt(5) match {
+        case 0 => Must
+        case 1 => MustNot
+        case _ => Should
+      }
+      if (rng.nextInt(3) == 0) {
+        val slots = Seq.fill(2 + rng.nextInt(2))(vocab(rng.nextInt(vocab.size)))
+        Resolved(occur, boost(), Nil, Some((slots, rng.nextInt(3))))
+      } else {
+        val ts = Seq.fill(1 + rng.nextInt(3))(terms(rng.nextInt(terms.size)))
+        Resolved(occur, boost(), ts.distinct.sorted, None)
+      }
+    }
+    if (!groups.exists(_.occur != MustNot)) return Set.empty
+    val matched = Set.newBuilder[String]
+    val q = Clauses(groups,
+      minShouldMatch = if (rng.nextInt(4) == 0) rng.nextInt(3) else 0)
+    val deleted =
+      if (rng.nextInt(2) == 0) null
+      else (0 until nDocs).filter(_ => rng.nextDouble() < 0.2).map(_.toLong).toArray
+    val k = 1 + rng.nextInt(15)
+
+    // naive per-doc scorer: groups in clause order, each group's terms
+    // summed from 0.0 ascending, boost × group sum added to the score
+    def contribution(g: Resolved, d: Long): Option[Double] = g.phrase match {
+      case Some((slots, slop)) =>
+        val ps = slots.map(t => ix.posting(t, d))
+        if (ps.exists(_.isEmpty)) None
+        else {
+          val ptf = naivePhraseTf(ps.map(_.get.pos), slop)
+          if (ptf == 0) None
+          else Some(Bm25.score(slots.map(t => Bm25.idf(n, df(t))).sum,
+            ptf.toDouble, ix.dl(d.toInt).toDouble, avgdl))
+        }
+      case None =>
+        val hits = g.terms.flatMap(t => ix.posting(t, d).map(t -> _))
+        if (hits.isEmpty) None
+        else Some(hits.foldLeft(0.0) { case (acc, (t, p)) =>
+          acc + Bm25.score(Bm25.idf(n, df(t)), p.tf.toDouble, p.dl.toDouble, avgdl)
+        })
+    }
+    val want = (0 until nDocs).map(_.toLong).flatMap { d =>
+      var score = 0.0
+      var seen = false
+      var banned = false
+      var mustHits = 0
+      var shouldHits = 0
+      groups.foreach { g =>
+        contribution(g, d).foreach { c =>
+          matched += s"${g.occur} ${if (g.phrase.isDefined) "phrase" else "terms"}"
+          if (g.occur == MustNot) banned = true
+          else {
+            score += g.boost * c
+            seen = true
+            if (g.occur == Must) mustHits += 1 else shouldHits += 1
+          }
+        }
+      }
+      if (seen && !banned && mustHits == groups.count(_.occur == Must) &&
+          (q.minShouldMatch <= 0 || shouldHits >= q.minShouldMatch) &&
+          (deleted == null || !deleted.contains(d)))
+        Some(Scored(d, round4(score)))
+      else None
+    }.sortBy(s => (-s.score, s.docId)).take(k)
+    val got = kernelHead(ix, k, q, deleted)
+    assert(got == want, s"seed=$seed q=$q:\n naive=$want\n kernel=$got")
+    matched.result()
+  }
+
+  test("clause groups ≡ naive clause-order fold: multi-term groups, boosts, " +
+      "must/should/must_not, phrases with slop, must_not phrases") {
+    val matched = (1L to 400L).flatMap(i => runGroups(i * 6151)).toSet
+    // every group kind matched some doc somewhere in the run
+    for (o <- Seq("Must", "Should", "MustNot"); kind <- Seq("terms", "phrase"))
+      assert(matched(s"$o $kind"), s"no $o $kind group matched: $matched")
   }
 
   test("clause kernel ≡ naive scorer: bool, msm, boosts, exclude, " +

@@ -13,8 +13,9 @@ import graft.index.{IndexBuilder, IndexParams}
 
 /** Spark jobs per served call on a warm reader, pinned per query shape.
   * The reader resolves its tables once, so a call pays only its own work:
-  * one metadata job and one collect for a routed top-k. A schema-inference
-  * job or an extra metadata pass creeping back into a query fails here.
+  * one job for a routed read, which sizes the query and returns its rows
+  * together ([[IndexReader.routedScores]]). A schema-inference job or a
+  * separate metadata pass creeping back into a query fails here.
   * Counted with adaptive execution off, as the benchmark runs, so each
   * count is the plan's own job structure. */
 class ServedJobsSpec extends AnyFunSuite {
@@ -55,14 +56,17 @@ class ServedJobsSpec extends AnyFunSuite {
     import SyntheticCorpus.{Stopwords => sw, term => t}
     val reader = search.reader
     val shapes: Seq[(String, () => DataFrame, Int)] = Seq(
-      ("bool", () => search.boolTopK(Seq(sw(1)), Seq(t(3)), Seq(t(60)), 10), 2),
-      ("dis_max", () => search.disMaxTopK(Seq(t(2), t(30), t(300)), 0.3, 10), 2),
-      ("phrase", () => reader.phraseTopK(Seq(sw(0), sw(1)), 10), 2),
-      ("mlt", () => search.moreLikeThisTopK(7L, 8, 10), 4),
+      ("bool", () => search.boolTopK(Seq(sw(1)), Seq(t(3)), Seq(t(60)), 10), 1),
+      ("dis_max", () => search.disMaxTopK(Seq(t(2), t(30), t(300)), 0.3, 10), 1),
+      ("phrase", () => reader.phraseTopK(Seq(sw(0), sw(1)), 10), 1),
+      ("mlt", () => search.moreLikeThisTopK(7L, 8, 10), 3),
       ("facets", () => search.facets(Seq(t(4)), "lang"), 2),
       ("query_string", () => search.queryStringTopK(
-        s"+${sw(2)} ${t(5)}^2.0 ${t(150)} -${t(400)}", 10), 3),
-      ("dist_topk", () => reader.topK(Seq(t(7), t(900)), 10), 2))
+        s"+${sw(2)} ${t(5)}^2.0 ${t(150)} -${t(400)}", 10), 1),
+      ("dist_topk", () => reader.topK(Seq(t(7), t(900)), 10), 1),
+      ("phrase_prefix", () => search.phrasePrefixTopK(Seq(sw(0), "w0"), 10), 3),
+      ("rescore", () => search.rescoreTopK(Seq(sw(0), t(3)), Seq(sw(0), sw(1)),
+        1, 30, 10), 4))
     val conf = spark.conf
     val aqe = conf.get("spark.sql.adaptive.enabled")
     conf.set("spark.sql.adaptive.enabled", "false")

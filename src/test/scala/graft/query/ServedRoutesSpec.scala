@@ -41,6 +41,11 @@ class ServedRoutesSpec extends AnyFunSuite {
     df.select(col("docId").cast("long"), col("score"))
       .as[(Long, Double)].collect().toSeq
 
+  /** The q_query_string_indexed gate's shape (`+a b^2 "c d"~1 -e f*g h~1`)
+    * plus a must_not phrase, over this index's vocabulary. */
+  private val qsQuery =
+    "+the w00002^2 \"of the\"~1 -w00040 w001*3 w0005~1 -\"of the\""
+
   private def isLocal(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec]
 
@@ -68,6 +73,9 @@ class ServedRoutesSpec extends AnyFunSuite {
       ("synonymTopK", _.synonymTopK(Seq("w00002"), Map("w00002" -> Seq("w00009")), 15), true),
       ("disMaxTopK", _.disMaxTopK(Seq("the", "w00002", "w00011"), 0.3, 20), true),
       ("boostedTopK", _.boostedTopK(Seq("the" -> 0.5, "w00002" -> 2.0), 20), true),
+      ("phrasePrefixTopK", _.phrasePrefixTopK(Seq("the", "w0"), 20, slop = 1,
+        maxExpansions = 8), true),
+      ("queryStringTopK", _.queryStringTopK(qsQuery, 20), true),
       ("rescoreTopK", _.rescoreTopK(Seq("the", "w00002"), Seq("the", "of"), 1, 30, 10), false),
       ("topKWithSnippets", _.topKWithSnippets(Seq("w00002", "w00005"), 10, 6), false))
     for ((name, q, routed) <- cases) {
@@ -81,8 +89,49 @@ class ServedRoutesSpec extends AnyFunSuite {
       assert(ra == rb, s"$name: routes diverged\n driver=$ra\n distributed=$rb")
       assert(!ra.exists(r => deleted(r._1)), s"$name: a tombstoned doc came back")
     }
+    // the untruncated scores come back unordered: compare them as sets
+    val untruncated: Seq[(String, IndexSearch => DataFrame)] = Seq(
+      ("phraseScores", _.reader.phraseScores(Seq("of", "the"), 1)),
+      ("phrasePrefixScores", _.phrasePrefixScores(Seq("the", "w0"), 1, 8)))
+    for ((name, q) <- untruncated) {
+      val (a, b) = (q(d), q(x))
+      assert(isLocal(a), s"$name: the driver route planned a distributed scan")
+      assert(!isLocal(b), s"$name: the distributed route ran on the driver")
+      val (ra, rb) = (rows(a).sorted, rows(b).sorted)
+      assert(ra.nonEmpty, s"$name: no rows")
+      assert(ra == rb, s"$name: routes diverged")
+      assert(!ra.exists(r => deleted(r._1)), s"$name: a tombstoned doc came back")
+    }
     // the default bound serves this small index on the driver
     assert(isLocal(new IndexReader(spark, dir).topK(Seq("w00002"), 5)))
+  }
+
+  test("query_string: every clause shape and a must_not phrase gate the rows") {
+    val s = new IndexSearch(spark, onDriver)
+    val all = rows(s.queryStringTopK(qsQuery, 1000))
+    val plain = rows(s.queryStringTopK(qsQuery.stripSuffix(" -\"of the\""), 1000))
+    // the must_not phrase bans docs the query would otherwise return
+    assert(all.nonEmpty && plain.size > all.size && all.toSet.subsetOf(plain.toSet),
+      s"\n with=$all\n without=$plain")
+  }
+
+  test("a task over its share of the bound re-reads the rows on the driver") {
+    val terms = Seq("of", "the", "w00002", "w00004", "w00007")
+    val seg = onDriver.segmentsFor(terms, positions = false)
+    val total = onDriver.termMeta(seg)._2.values.sum
+    val parts = seg.rdd.getNumPartitions
+    val share = total / parts
+    val overflowed = seg.rdd.mapPartitions(it =>
+      Iterator(IndexReader.readTask(it, share)._2 == null)).collect()
+    assert(parts > 1 && overflowed.contains(true),
+      s"no task of $parts overflowed a $share-byte share")
+    // the whole query fits the bound, so the driver route still answers
+    val atBound = new IndexSearch(spark, new IndexReader(spark, dir, total))
+    val q: IndexSearch => DataFrame =
+      _.boolTopK(Seq("the"), Seq("w00002", "w00007", "of"), Seq("w00004"), 25)
+    val a = q(atBound)
+    assert(isLocal(a))
+    assert(rows(a) == rows(q(new IndexSearch(spark, distributed))))
   }
 
   test("topKAgg matches topK on both routes") {
