@@ -26,7 +26,7 @@ import graft.query.IndexReader
   */
 object Bench {
 
-  /** Shared with [[QueryBench]] — one list, no drift. */
+  /** The SparkEntry queries `main` times on SPARK_GRAFT_SF_DIR. */
   val HeadlineQueries = Seq(
     "q_tokenize", "q_term_stats", "q_bm25_topk", "q_bm25_topk_stopheavy",
     "q_dedup_exact", "q_minhash_neardups", "q_simhash_neardups",
@@ -161,7 +161,7 @@ object Bench {
     // build time AND an interleaved (1,4) pair stays cheap enough to
     // repeat many times — on this storm-prone host, clean-pair odds come
     // from repeats. The builder's serial cost is ~2 s/build (7 jobs,
-    // observe-metrics, pooled footer commits — see SerialProbe): at 60k it
+    // observe-metrics, pooled footer commits): at 60k it
     // was ~10% of the 4N wall and alone capped the raw pair ratio near
     // 0.80 (r3 measured 0.743-0.771); 84k dilutes it to ~7% so the
     // clean-pair median can clear 0.8 RAW, while a pair still costs
@@ -485,11 +485,19 @@ object Bench {
       "text", bMust, "lang").collect())
 
     // --- headline operator queries on the driver testdata ---
+    // a failing query records -1 and prints its exception; the run exits
+    // non-zero once the JSON line is out
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = HeadlineQueries.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e")
+            e.printStackTrace()
+            failed += name
+            false
+          }
         name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
       }
     }
@@ -533,6 +541,10 @@ object Bench {
 
     println(
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"sf":"$sfDir","index_docs":$benchDocs,"n_cores":1,"four_n_cores":4,"index_sec_N":${f"$tN%.2f"},"index_sec_4N":${f"$t4N%.2f"},"index_docs_per_sec_N":${f"$thrN%.1f"},"index_docs_per_sec_4N":${f"$thr4N%.1f"},"scaling_efficiency_N_to_4N":${f"$efficiency%.3f"},"scaling_efficiency_best_pair":${f"$pairEffMax%.3f"},"scaling_efficiency_pair_median":${f"$pairEffMedian%.3f"},"scaling_pair_was_clean":$scalingClean,"host_cpu_scaling_ceiling_N_to_4N":${f"$cpuCeiling%.3f"},"normalized_scaling_efficiency":${f"$normalized%.3f"},"normalized_best_pair":${f"$pairNormalized%.3f"},"scaling_concurrent_ceiling_median":${f"$concCeilMedian%.3f"},"normalized_scaling_concurrent_median":${f"$normConcMedian%.3f"},"scaling_gate":"$gate","postings_bytes":$postingsBytes,"index_sec_4N_positions":${f"$posSec%.2f"},"positions_build_overhead":${f"$posOverhead%.3f"},"positions_postings_bytes":$positionsBytes,"positions_bytes_ratio":${f"$posBytesRatio%.3f"},"query_p50_ms":${f"$p50%.2f"},"query_p95_ms":${f"$p95%.2f"},"search_bool_served_sec":${f"$boolServedSec%.3f"},"search_bool_brute_sec":${f"$boolBruteSec%.3f"},"search_mlt_served_sec":${f"$mltServedSec%.3f"},"search_mlt_brute_sec":${f"$mltBruteSec%.3f"},"search_facets_served_sec":${f"$facServedSec%.3f"},"search_facets_brute_sec":${f"$facBruteSec%.3f"}}""")
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] failed queries: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 
   private def writeBenchMd(n: Long, tN: Double, t4N: Double, thrN: Double,

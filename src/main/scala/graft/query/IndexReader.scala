@@ -25,8 +25,9 @@ final case class SegmentRead(
   * job.
   *
   * Top-k runs per document shard (shard = docId range), so the kernel
-  * (WAND, the clause kernel behind bool and dis_max, phrase) runs on each
-  * shard with full independence and the global answer is the
+  * (WAND, phrase, or the clause kernel behind bool, dis_max, query_string,
+  * top_hits, field_value_factor and multi_match) runs on each shard with
+  * full independence and the global answer is the
   * (score desc, docId asc) head of shards × k candidate rows. Every kernel
   * reads postings through one block cursor, [[TermCursor]]
   * ([[IndexReader.termCursor]]). Each routed query runs one job over its
@@ -233,9 +234,10 @@ final class IndexReader private[graft] (spark: SparkSession,
   /** [[shardHeads]] as a (docId, score) DataFrame ordered (score desc,
     * docId asc), k rows: a local relation on the driver route, a
     * TakeOrdered over shards × k candidates on the distributed one. */
-  private[query] def topKFrame(seg: Dataset[SegmentRead], k: Int)(
+  private[query] def topKFrame(seg: Dataset[SegmentRead], k: Int,
+      bound: Long = maxDriverBytes)(
       kernel: Map[String, Long] => ShardKernel): DataFrame =
-    shardHeads(seg, k)(kernel) match {
+    shardHeads(seg, k, bound)(kernel) match {
       case Left(head) => head.toSeq.toDF("docId", "score")
       case Right(cands) => cands.toDF("docId", "score")
         .orderBy(desc("score"), asc("docId"))
@@ -254,20 +256,6 @@ final class IndexReader private[graft] (spark: SparkSession,
   def topK(query: Seq[String], k: Int): DataFrame =
     topKFrame(segmentsFor(query.distinct.sorted, positions = false), k)(
       wandKernel(k))
-
-  /** Top-k with the typed [[TopKAggregator]] merge on the distributed
-    * route: per-shard candidates partially aggregate map-side, the driver
-    * receives one Array[Scored] — no row-level sort/limit stage.
-    * Rank-identical to [[topK]]. */
-  def topKAgg(query: Seq[String], k: Int): Array[Scored] =
-    topKAgg(query, k, maxDriverBytes)
-
-  private def topKAgg(query: Seq[String], k: Int, bound: Long): Array[Scored] =
-    shardHeads(segmentsFor(query.distinct.sorted, positions = false), k,
-      bound)(wandKernel(k)) match {
-      case Left(head) => head
-      case Right(cands) => cands.select(new TopKAggregator(k).toColumn).head()
-    }
 
   /** Phrase top-k over positional postings (see [[Phrase]]): `slop = 0`
     * (default) is the exact consecutive-position match; `slop > 0` the
@@ -347,7 +335,7 @@ final class IndexReader private[graft] (spark: SparkSession,
     * positions pruned from the scan) sizes every term FIRST; only terms
     * within `maxBytesPerTerm` have their blocks collected. Over-budget
     * terms are recorded in [[ServingCache.overBudget]] and any query
-    * touching one routes through the exact distributed [[topKAgg]] inside
+    * touching one routes through the exact distributed top-k inside
     * [[topKLocal]] — same ranking, executor-resident memory. The blocks
     * carry no positions. */
   def loadCache(terms: Seq[String],
@@ -376,13 +364,15 @@ final class IndexReader private[graft] (spark: SparkSession,
   /** Single global Block-Max WAND over merged posting lists — the
     * serving-node hot path; threshold pruning spans the whole corpus.
     * Queries touching an over-budget term transparently fall back to the
-    * exact distributed [[topKAgg]] (rank-identical; its route bound drops
-    * to the cache's per-term budget, so the driver never holds the hot
-    * term's postings). */
+    * routed top-k ([[topKFrame]]; rank-identical, its route bound drops to
+    * the cache's per-term budget, so the driver never holds the hot term's
+    * postings). */
   def topKLocal(cache: ServingCache, query: Seq[String], k: Int): Array[Scored] = {
     val terms = query.distinct.sorted
     if (terms.exists(cache.overBudget))
-      return topKAgg(query, k, math.min(maxDriverBytes, cache.maxBytesPerTerm))
+      return topKFrame(segmentsFor(terms, positions = false), k,
+        math.min(maxDriverBytes, cache.maxBytesPerTerm))(wandKernel(k))
+        .as[Scored].collect()
     val cursors = terms.flatMap { t =>
       cache.resident.get(t).map { case (df, blocks) =>
         new TermCursor(t, Bm25.idf(globals.n, df), blocks, globals.avgdl)

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,9 +18,12 @@ import graft.index.PForDelta
   *    partition pruning) with the term predicate pushed into Parquet;
   *  - scoring runs one shard kernel per document shard, over decoded
   *    postings only — the corpus text is never touched. bool, search_after,
-  *    boosted terms, dis_max and query_string are one [[Clauses]] value
-  *    scored by one dense clause kernel ([[IndexSearch.shardClauseTopK]]),
-  *    reading postings through the one block cursor, [[TermCursor]]. One
+  *    boosted terms, dis_max, query_string, top_hits, field_value_factor
+  *    and multi_match are one [[Clauses]] value each, scored by one dense
+  *    clause kernel ([[IndexSearch.shardClauseScores]]; the top-k shapes
+  *    round and select per shard with [[IndexSearch.shardClauseTopK]], the
+  *    other three scale or combine the unrounded scores first), reading
+  *    postings through the one block cursor, [[TermCursor]]. One
   *    job reads the rows and returns the terms' merged dfs and total
   *    posting bytes with them; up to [[IndexReader.DefaultMaxBytesPerTerm]]
   *    for the whole query the kernels run on the driver over those rows
@@ -116,16 +119,38 @@ final class IndexSearch(spark: SparkSession,
     * the clause kernel per shard, routed by the query's posting bytes
     * ([[IndexReader.topKFrame]]). */
   private def clauseTopK(q: Clauses, k: Int): DataFrame = {
-    val phrases = q.groups.exists(_.phrase.isDefined)
-    if (phrases) reader.requirePositions()
     // locals only: the kernel ships to the executors on the distributed route
     val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
+    reader.topKFrame(clauseSegments(q), k)(dfByTerm =>
+      IndexSearch.shardClauseTopK(n, avgdl, k, dfByTerm, q, del.value))
+  }
+
+  /** EVERY doc a clause value passes, with its UNROUNDED score — (docId,
+    * score), unordered: [[clauseTopK]]'s read and kernel without rounding
+    * or selection, for the shapes that scale or combine the score before
+    * they round it. Routed like every served read
+    * ([[IndexReader.scoresFrame]]). */
+  private def clauseScores(q: Clauses): DataFrame = {
+    val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
+    reader.scoresFrame(clauseSegments(q))(dfByTerm =>
+      IndexSearch.shardClauseScores(n, avgdl, dfByTerm, q, del.value))
+  }
+
+  /** The one segment read of a clause value: every term its groups name,
+    * with positions only when a group is a phrase. */
+  private def clauseSegments(q: Clauses): Dataset[SegmentRead] = {
+    val phrases = q.groups.exists(_.phrase.isDefined)
+    if (phrases) reader.requirePositions()
     val terms = q.groups.flatMap(g => g.terms ++ g.phrase.toSeq.flatMap(_._1))
       .distinct.sorted
-    reader.topKFrame(reader.segmentsFor(terms, positions = phrases), k)(
-      dfByTerm => IndexSearch.shardClauseTopK(n, avgdl, k, dfByTerm, q,
-        del.value))
+    reader.segmentsFor(terms, positions = phrases)
   }
+
+  /** The flat should-bool of `queryTerms` (normalized, ascending, boost
+    * 1.0), scored untruncated — the per-doc BM25 sum the brute forms'
+    * pivot ([[BruteForce.scoreAll]]) folds in the same order. */
+  private def termSumScores(queryTerms: Seq[String]): DataFrame =
+    clauseScores(Clauses.flat(norm(queryTerms).distinct.sorted.map(_ -> 1.0)))
 
   /** The dictionary's first `max` terms matching `cond`, in ascending
     * term order — the cap runs inside the plan (TakeOrdered), so a hot
@@ -431,15 +456,13 @@ final class IndexSearch(spark: SparkSession,
   }
 
   /** top_hits inside a terms aggregation, served from the index: per-doc
-    * scores from the postings pivot (the brute fold order), facets from
-    * docs/ metadata — the corpus text is never read. Semantics identical
-    * to [[Search.topHits]]. */
+    * scores from the clause kernel ([[termSumScores]], the brute fold
+    * order), facets from docs/ metadata — the corpus text is never read.
+    * Semantics identical to [[Search.topHits]]. */
   def topHits(queryTerms: Seq[String], facetCol: String, nBuckets: Int,
       perBucket: Int): DataFrame = {
-    val terms = norm(queryTerms).distinct.sorted
-    val (pivoted, total) = pivotScores(terms)
-    val scored = pivoted
-      .select(col("docId"), round(total, 4).as("score"))
+    val scored = termSumScores(queryTerms)
+      .select(col("docId"), round(col("score"), 4).as("score"))
       .join(docsMeta.select(col("docId"), col(facetCol).as("facet")),
         "docId")
     Search.topHitsShape(scored, nBuckets, perBucket)
@@ -646,15 +669,14 @@ final class IndexSearch(spark: SparkSession,
   }
 
   /** function_score / field_value_factor served from the index: BM25 from
-    * postings ([[termScores]] pivoted into the brute fold order), field
-    * values from a docId-keyed dimension frame. Semantics identical to
-    * [[Search.fieldValueFactorTopK]]. */
+    * the clause kernel ([[termSumScores]], unrounded, the brute fold
+    * order), field values from a docId-keyed dimension frame. Semantics
+    * identical to [[Search.fieldValueFactorTopK]]. */
   def fieldValueFactorTopK(queryTerms: Seq[String], meta: DataFrame,
       valueCol: String, factor: Double, modifier: String, k: Int)
       : DataFrame = {
-    val (pivoted, total) = pivotScores(norm(queryTerms).distinct.sorted)
     val m = meta.select(col("docId"), col(valueCol).cast("double").as("_fv"))
-    pivoted.select(col("docId"), total.as("score"))
+    termSumScores(queryTerms)
       .join(m, Seq("docId"), "left_outer")
       .select(col("docId"),
         round(col("score") * Search.fvfModifier(
@@ -663,40 +685,6 @@ final class IndexSearch(spark: SparkSession,
       .orderBy(desc("score"), asc("docId"))
       .limit(k)
   }
-
-  /** Per-(doc, term) BM25 contributions decoded straight from the
-    * bucket-pruned postings — (docId, term, score), one row per posting,
-    * tombstoned docs excluded. The composition primitive behind
-    * [[topHits]], [[fieldValueFactorTopK]] and multi_match: downstream
-    * algebra pivots these into fixed-order Column sums, exactly like the
-    * brute pivot. */
-  def termScores(queryTerms: Seq[String]): DataFrame = {
-    val terms = norm(queryTerms).distinct.sorted
-    val seg = reader.segmentsFor(terms, positions = false)
-    val dfByTerm = spark.sparkContext.broadcast(reader.mergedDfMap(seg))
-    val (n, avgdl) = (reader.globals.n, reader.globals.avgdl)
-    val del = reader.deletedBc
-    seg.flatMap { r =>
-      val idf = Bm25.idf(n, dfByTerm.value.getOrElse(r.term, r.df))
-      val ids = PForDelta.decodeGaps(r.gaps, r.n, r.firstDocId)
-      val tfs = PForDelta.decode(r.tfs, r.n)
-      val dls = PForDelta.decode(r.dls, r.n)
-      (0 until r.n).iterator
-        .filter(j => !IndexReader.isDeleted(del.value, ids(j)))
-        .map(j => (ids(j), r.term,
-          Bm25.score(idf, tfs(j).toDouble, dls(j).toDouble, avgdl)))
-    }.toDF("docId", "term", "score")
-  }
-
-  /** [[termScores]] pivoted to one column per term (null = absent), and
-    * the per-doc total: coalesce(score, 0.0) folded left to right over
-    * the ascending `terms` — the fold order of the brute pivot sum
-    * ([[BruteForce.scoreAll]]), so served and brute totals are
-    * bit-identical doubles. */
-  private def pivotScores(terms: Seq[String]): (DataFrame, Column) =
-    (termScores(terms).groupBy("docId").pivot("term", terms)
-      .agg(first(col("score"))),
-     terms.map(t => coalesce(col(s"`$t`"), lit(0.0))).reduceLeft(_ + _))
 
   /** Lucene-style `query_string` served from the INDEX (grammar and
     * semantics on [[QueryString]]): fuzzy/wildcard expansions resolve
@@ -739,10 +727,10 @@ object IndexSearch {
     * of a corpus is its own index (Lucene semantics — field-local
     * df/dl/avgdl), built over the SAME url set so docIds align exactly
     * (docId assignment is a pure function of the url id-bucket
-    * decomposition). Per-field scores are postings decodes
-    * ([[IndexSearch.termScores]] — bucket-pruned, corpus never read),
-    * combined per document by `most_fields` (sum) or `best_fields`
-    * (best + tieBreaker × rest). Rank-identical to
+    * decomposition). Per-field scores come from the clause kernel
+    * ([[IndexSearch.shardClauseScores]] — one bucket-pruned read per
+    * field, corpus never read), combined per document by `most_fields`
+    * (sum) or `best_fields` (best + tieBreaker × rest). Rank-identical to
     * [[Search.multiMatchTopK]] (IndexSearchSpec). */
   def multiMatchTopK(fields: Seq[(IndexSearch, Double)],
       queryTerms: Seq[String], k: Int, matchType: String = "best_fields",
@@ -764,14 +752,12 @@ object IndexSearch {
     require(idSigs.distinct.size == 1,
       s"multi_match field indexes are docId-misaligned (doc counts / id " +
         s"assignment differ): ${idSigs.distinct.mkString(" vs ")}")
-    // per-field totals fold the pivoted per-term columns in the SAME
-    // sorted-term order as BruteForce.scoreAll — bit-identical doubles,
-    // not just close ones, so rank identity needs no tolerance
-    val terms = queryTerms.map(graft.analyze.Analyzer.lowerLikeCatalyst)
-      .distinct.sorted
+    // per-field totals are the clause kernel's unrounded sums, folded in
+    // the SAME ascending-term order as BruteForce.scoreAll — bit-identical
+    // doubles, not just close ones, so rank identity needs no tolerance
     val per = fields.map { case (is, boost) =>
-      val (pivoted, total) = is.pivotScores(terms)
-      pivoted.select(col("docId"), (total * boost).as("s"))
+      is.termSumScores(queryTerms)
+        .select(col("docId"), (col("score") * boost).as("s"))
     }
     Search.combineFields(per, k, matchType, tieBreaker)
   }
@@ -782,29 +768,31 @@ object IndexSearch {
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Executor-side per-shard clause scorer — the one dense kernel behind
-    * bool, search_after, boosted terms, dis_max and query_string. Dense
-    * arrays over the shard's docId range (≤ shardSize slots). The groups
-    * run in fold order: a term group sums its terms' BM25 from 0.0 in
-    * ascending term order (one [[TermCursor]] pass per term), a phrase
-    * group takes [[Phrase.shardScores]] over the shard's slot rows with
-    * the slot-summed idf of the GLOBAL dfs; then each doc the group
-    * touched adds boost × its group sum to its score — the brute forms'
-    * coalesce(s, 0.0) fold exactly (absent contributions add 0.0, and
-    * × 1.0 and 0.0 + s are exact in IEEE 754). A must or should group
-    * counts once per doc, however many of its terms the doc holds; a
-    * must_not group bans the docs it touches. A doc is seen only through a
-    * scoring group. Then one sweep emits the shard's top-k by (rounded
-    * score desc, docId asc). The dis_max combine alone adds a `best`
-    * array: the emitted score is round4(best + tie·(sum − best)) over the
+    * bool, search_after, boosted terms, dis_max, query_string, top_hits,
+    * field_value_factor and multi_match. Dense arrays over the shard's
+    * docId range (≤ shardSize slots). The groups run in fold order: a term
+    * group sums its terms' BM25 from 0.0 in ascending term order (one
+    * [[TermCursor]] pass per term), a phrase group takes
+    * [[Phrase.shardScores]] over the shard's slot rows with the slot-summed
+    * idf of the GLOBAL dfs; then each doc the group touched adds boost ×
+    * its group sum to its score — the brute forms' coalesce(s, 0.0) fold
+    * exactly (absent contributions add 0.0, and × 1.0 and 0.0 + s are
+    * exact in IEEE 754). A must or should group counts once per doc,
+    * however many of its terms the doc holds; a must_not group bans the
+    * docs it touches. A doc is seen only through a scoring group. Then one
+    * sweep emits every doc that passes the gates (must count, must_not,
+    * minimum_should_match, `excludeDocId`, tombstones) with its UNROUNDED
+    * score, in ascending docId order. The dis_max combine alone adds a
+    * `best` array: the emitted score is best + tie·(sum − best) over the
     * groups' contributions. Top-level function so the closure captures
     * primitives, the clause value and the broadcast df map, never the
     * reader. */
-  private[query] def shardClauseTopK(n: Long, avgdl: Double, k: Int,
+  private[query] def shardClauseScores(n: Long, avgdl: Double,
       dfByTerm: Map[String, Long], q: Clauses, deleted: Array[Long])(
       shard: Long, rows: Iterator[SegmentRead]): Iterator[Scored] = {
     import QueryString.{Must, MustNot}
     val byTerm = rows.toArray.groupBy(_.term)
-    if (byTerm.isEmpty || k <= 0) return Iterator.empty
+    if (byTerm.isEmpty) return Iterator.empty
     var lo = Long.MaxValue
     var hi = Long.MinValue
     byTerm.valuesIterator.flatten.foreach { r =>
@@ -863,40 +851,42 @@ object IndexSearch {
       }
     }
     val nMust = q.groups.count(_.occur == Must)
-    val hasCursor = !q.afterScore.isNaN
     val tie = q.disMaxTie.getOrElse(0.0)
-    val topk = new TopKHeap(k)
-    var x = 0
-    while (x < size) {
-      if (seen(x) && !banned(x) && mustCnt(x) == nMust &&
-          (q.minShouldMatch <= 0 || shouldCnt(x) >= q.minShouldMatch)) {
-        val docId = lo + x
-        if (docId != q.excludeDocId &&
-            !IndexReader.isDeleted(deleted, docId)) {
-          val rs = round4(
-            if (best == null) score(x) else best(x) + tie * (score(x) - best(x)))
-          // keyset cursor: only rows strictly after (afterScore, afterDocId)
-          // in (score desc, docId asc) order compete — same predicate
-          // Search.searchAfter applies to the rounded brute ranking
-          if (!hasCursor || rs < q.afterScore ||
-              (rs == q.afterScore && docId > q.afterDocId))
-            topk.offer(docId, rs)
-        }
-      }
-      x += 1
-    }
-    topk.result().iterator
+    Iterator.range(0, size).filter { x =>
+      val docId = lo + x
+      seen(x) && !banned(x) && mustCnt(x) == nMust &&
+        (q.minShouldMatch <= 0 || shouldCnt(x) >= q.minShouldMatch) &&
+        docId != q.excludeDocId && !IndexReader.isDeleted(deleted, docId)
+    }.map(x => Scored(lo + x,
+      if (best == null) score(x) else best(x) + tie * (score(x) - best(x))))
+  }
+
+  /** One shard's top-k of a clause value: [[shardClauseScores]] rounded to
+    * 4 decimals, past the search_after cursor, through [[Phrase.shardHead]]
+    * — (rounded score desc, docId asc). */
+  private[query] def shardClauseTopK(n: Long, avgdl: Double, k: Int,
+      dfByTerm: Map[String, Long], q: Clauses, deleted: Array[Long])(
+      shard: Long, rows: Iterator[SegmentRead]): Iterator[Scored] = {
+    val hasCursor = !q.afterScore.isNaN
+    Phrase.shardHead(k, shardClauseScores(n, avgdl, dfByTerm, q, deleted)(shard, rows)
+      .map(s => Scored(s.docId, round4(s.score)))
+      // keyset cursor: only rows strictly after (afterScore, afterDocId) in
+      // (score desc, docId asc) order compete — the predicate
+      // Search.searchAfter applies to the rounded brute ranking
+      .filter(s => !hasCursor || s.score < q.afterScore ||
+        (s.score == q.afterScore && s.docId > q.afterDocId)))
   }
 }
 
 /** The clause value the one dense kernel scores
-  * ([[IndexSearch.shardClauseTopK]]): bool, search_after, boosted terms,
-  * dis_max and query_string.
+  * ([[IndexSearch.shardClauseScores]]): bool, search_after, boosted terms,
+  * dis_max, query_string, top_hits, field_value_factor and multi_match.
   *  - `groups` in FOLD order, each a boost, an occur (must, should or
   *    must_not) and either ascending terms or a phrase (slots, slop) — a
-  *    [[QueryString.Resolved]] clause. bool, boosted terms and dis_max
-  *    build one group per term, ascending ([[Clauses.flat]]); query_string
-  *    one per resolved clause, in query order;
+  *    [[QueryString.Resolved]] clause. bool, boosted terms, dis_max and the
+  *    three term-sum shapes build one group per term, ascending
+  *    ([[Clauses.flat]]); query_string one per resolved clause, in query
+  *    order;
   *  - `minShouldMatch`: should groups a doc must hit (≤ 0 = no gate);
   *  - `excludeDocId` drops one doc (more-like-this's source document);
   *  - `afterScore`/`afterDocId` is the search_after cursor (NaN = none);

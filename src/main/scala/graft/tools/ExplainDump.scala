@@ -690,11 +690,11 @@ object ExplainDump {
       val titleIs = new graft.query.IndexSearch(spark, titleDir)
 
       dump("multi_match over two FIELD indexes (best_fields, tie 0.3)",
-        "Look for: per-field postings scans with `PushedFilters: " +
-          "[In(term, …)]` on EACH index (field-local stats — no corpus " +
-          "scan), one keyed aggregate per field for the pivot, a union + " +
-          "one combine aggregate, then TakeOrderedAndProject. The " +
-          "expensive inputs are two bucket-pruned postings reads.",
+        "Look for: each field's scores as a `LocalTableScan` — one " +
+          "routed clause-kernel read per field index (field-local stats, " +
+          "no corpus scan, no per-field aggregate), then a union + ONE " +
+          "combine aggregate and TakeOrderedAndProject. The postings " +
+          "reads ran before the plan, one job per field.",
         graft.query.IndexSearch.multiMatchTopK(
           Seq(titleIs -> 2.0, textIs -> 1.0), Seq("the", "w00001"), 10,
           "best_fields", 0.3))

@@ -129,17 +129,6 @@ class IndexEndToEndSpec extends AnyFunSuite {
     }
   }
 
-  test("aggregator-merged topK equals sort-limit topK") {
-    built
-    import spark.implicits._
-    SyntheticCorpus.querySet().take(5).foreach { q =>
-      val viaSort = built.topK(q, 10).as[(Long, Double)].collect()
-      val viaAgg = built.topKAgg(q, 10)
-      assert(viaAgg.map(_.docId).sameElements(viaSort.map(_._1)), s"rank diff for $q")
-      assert(viaAgg.map(_.score).sameElements(viaSort.map(_._2)))
-    }
-  }
-
   test("distributed topK equals local topK") {
     built
     import spark.implicits._

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.index.PForDelta
 import graft.util.SplitMix64
 
-/** Differential test of the one dense clause kernel
-  * ([[IndexSearch.shardClauseTopK]]) and of [[TermCursor]]'s lazy
+/** Differential test of the one dense clause kernel — its untruncated
+  * scores ([[IndexSearch.shardClauseScores]]) and its rounded top-k
+  * ([[IndexSearch.shardClauseTopK]]) — and of [[TermCursor]]'s lazy
   * positions, over randomized posting tables — pure Scala (no Spark), in
   * the style of [[WandSpec]]. Postings span one or two generations (each
   * owning a disjoint docId range and baking its own df into its rows),
@@ -110,6 +111,26 @@ class ClauseKernelSpec extends AnyFunSuite {
       IndexSearch.shardClauseTopK(ix.n, ix.avgdl, k, ix.df, q, deleted)(sh, rs.iterator)
     }, k).toSeq
 
+  /** [[IndexSearch.shardClauseScores]] over every shard of `ix`, in shard
+    * order: every passing doc with its unrounded score. */
+  private def kernelScores(ix: Index, q: Clauses,
+      deleted: Array[Long]): Seq[Scored] =
+    ix.rows.groupBy(_.shard).toSeq.sortBy(_._1).flatMap { case (sh, rs) =>
+      IndexSearch.shardClauseScores(ix.n, ix.avgdl, ix.df, q, deleted)(sh, rs.iterator)
+    }
+
+  /** The kernel's unrounded scores equal the naive ones bit for bit, in
+    * ascending docId order. */
+  private def assertScores(got: Seq[Scored], want: Seq[Scored], ctx: => String): Unit = {
+    assert(got.map(_.docId) == want.map(_.docId),
+      s"match set mismatch $ctx:\n naive=$want\n kernel=$got")
+    got.zip(want).foreach { case (g, w) =>
+      assert(java.lang.Double.doubleToRawLongBits(g.score) ==
+        java.lang.Double.doubleToRawLongBits(w.score),
+        s"unrounded score mismatch $ctx doc=${g.docId}: ${g.score} vs ${w.score}")
+    }
+  }
+
   private def runCase(seed: Long): Unit = {
     val rng = new SplitMix64(seed)
     val ix = randomIndex(rng)
@@ -138,8 +159,9 @@ class ClauseKernelSpec extends AnyFunSuite {
       else (0 until nDocs).filter(_ => rng.nextDouble() < 0.2).map(_.toLong).toArray
     val k = 1 + rng.nextInt(15)
 
-    // naive per-doc scorer: same ascending-term fold from 0.0, then round4
-    def naive(q: Flat): Seq[Scored] = (0 until nDocs).map(_.toLong).flatMap { d =>
+    // naive per-doc scorer: same ascending-term fold from 0.0; every doc
+    // past the gates with its unrounded score, ascending docId
+    def naiveScores(q: Flat): Seq[Scored] = (0 until nDocs).map(_.toLong).flatMap { d =>
       var sum = 0.0
       var best = 0.0
       var seen = false
@@ -158,15 +180,18 @@ class ClauseKernelSpec extends AnyFunSuite {
       }
       val banned = q.mustNot.exists(t => postings.getOrElse(t, Nil).exists(_.doc == d))
       val msm = if (q.should.isEmpty) 0 else q.minShouldMatch
-      val score = round4(q.disMaxTie.fold(sum)(tie => best + tie * (sum - best)))
-      val afterOk = q.afterScore.isNaN || score < q.afterScore ||
-        (score == q.afterScore && d > q.afterDocId)
       if (seen && !banned && mustHits == q.must.size && shouldHits >= msm &&
-          d != q.excludeDocId && (deleted == null || !deleted.contains(d)) &&
-          afterOk)
-        Some(Scored(d, score))
+          d != q.excludeDocId && (deleted == null || !deleted.contains(d)))
+        Some(Scored(d, q.disMaxTie.fold(sum)(tie => best + tie * (sum - best))))
       else None
-    }.sortBy(s => (-s.score, s.docId)).take(k)
+    }
+
+    // then round4, the search_after cursor, and the head
+    def naive(q: Flat): Seq[Scored] = naiveScores(q)
+      .map(s => Scored(s.docId, round4(s.score)))
+      .filter(s => q.afterScore.isNaN || s.score < q.afterScore ||
+        (s.score == q.afterScore && s.docId > q.afterDocId))
+      .sortBy(s => (-s.score, s.docId)).take(k)
 
     def kernel(q: Flat): Seq[Scored] = kernelHead(ix, k, q.clauses, deleted)
 
@@ -182,6 +207,8 @@ class ClauseKernelSpec extends AnyFunSuite {
       got.zip(want).foreach { case (g, w) =>
         assert(g.score == w.score, s"score mismatch seed=$seed doc=${g.docId}")
       }
+      assertScores(kernelScores(ix, q.clauses, deleted), naiveScores(q),
+        s"seed=$seed q=$q")
     }
   }
 
@@ -258,7 +285,7 @@ class ClauseKernelSpec extends AnyFunSuite {
           acc + Bm25.score(Bm25.idf(n, df(t)), p.tf.toDouble, p.dl.toDouble, avgdl)
         })
     }
-    val want = (0 until nDocs).map(_.toLong).flatMap { d =>
+    val wantScores = (0 until nDocs).map(_.toLong).flatMap { d =>
       var score = 0.0
       var seen = false
       var banned = false
@@ -278,9 +305,12 @@ class ClauseKernelSpec extends AnyFunSuite {
       if (seen && !banned && mustHits == groups.count(_.occur == Must) &&
           (q.minShouldMatch <= 0 || shouldHits >= q.minShouldMatch) &&
           (deleted == null || !deleted.contains(d)))
-        Some(Scored(d, round4(score)))
+        Some(Scored(d, score))
       else None
-    }.sortBy(s => (-s.score, s.docId)).take(k)
+    }
+    assertScores(kernelScores(ix, q, deleted), wantScores, s"seed=$seed q=$q")
+    val want = wantScores.map(s => Scored(s.docId, round4(s.score)))
+      .sortBy(s => (-s.score, s.docId)).take(k)
     val got = kernelHead(ix, k, q, deleted)
     assert(got == want, s"seed=$seed q=$q:\n naive=$want\n kernel=$got")
     matched.result()

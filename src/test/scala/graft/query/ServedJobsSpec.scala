@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.ListenerBusSync
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, length}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -66,7 +67,13 @@ class ServedJobsSpec extends AnyFunSuite {
       ("dist_topk", () => reader.topK(Seq(t(7), t(900)), 10), 1),
       ("phrase_prefix", () => search.phrasePrefixTopK(Seq(sw(0), "w0"), 10), 3),
       ("rescore", () => search.rescoreTopK(Seq(sw(0), t(3)), Seq(sw(0), sw(1)),
-        1, 30, 10), 4))
+        1, 30, 10), 4),
+      ("top_hits", () => search.topHits(Seq(sw(0), t(3)), "lang", 3, 5), 6),
+      ("function_score", () => search.fieldValueFactorTopK(Seq(sw(0), t(3)),
+        search.docsMeta.select(col("docId"), length(col("url")).as("n")), "n",
+        0.01, "ln1p", 10), 3),
+      ("multi_match", () => IndexSearch.multiMatchTopK(
+        Seq(search -> 2.0, search -> 1.0), Seq(sw(0), t(3)), 10), 3))
     val conf = spark.conf
     val aqe = conf.get("spark.sql.adaptive.enabled")
     conf.set("spark.sql.adaptive.enabled", "false")

@@ -77,7 +77,14 @@ class ServedRoutesSpec extends AnyFunSuite {
         maxExpansions = 8), true),
       ("queryStringTopK", _.queryStringTopK(qsQuery, 20), true),
       ("rescoreTopK", _.rescoreTopK(Seq("the", "w00002"), Seq("the", "of"), 1, 30, 10), false),
-      ("topKWithSnippets", _.topKWithSnippets(Seq("w00002", "w00005"), 10, 6), false))
+      ("topKWithSnippets", _.topKWithSnippets(Seq("w00002", "w00005"), 10, 6), false),
+      ("topHits", _.topHits(Seq("the", "w00002"), "lang", 3, 5), false),
+      ("fieldValueFactorTopK", s => s.fieldValueFactorTopK(Seq("the", "w00002"),
+        s.docsMeta.select(col("docId"), length(col("url")).as("n")), "n", 0.01,
+        "ln1p", 20), false),
+      // one index paired with itself is docId-aligned
+      ("multiMatchTopK", s => IndexSearch.multiMatchTopK(Seq(s -> 2.0, s -> 1.0),
+        Seq("the", "w00002"), 20, "best_fields", 0.3), false))
     for ((name, q, routed) <- cases) {
       val (a, b) = (q(d), q(x))
       if (routed) {
@@ -132,13 +139,6 @@ class ServedRoutesSpec extends AnyFunSuite {
     val a = q(atBound)
     assert(isLocal(a))
     assert(rows(a) == rows(q(new IndexSearch(spark, distributed))))
-  }
-
-  test("topKAgg matches topK on both routes") {
-    val q = Seq("w00002", "w00005", "the")
-    val expect = rows(onDriver.topK(q, 25))
-    for (r <- Seq(onDriver, distributed))
-      assert(r.topKAgg(q, 25).map(s => (s.docId, s.score)).toSeq == expect)
   }
 
   test("helper branches, called directly, give the same head for one kernel") {
