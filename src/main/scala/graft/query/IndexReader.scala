@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.index.{Globals, IncrementalIndex}
@@ -30,11 +30,13 @@ final case class SegmentRead(
   * full independence and the global answer is the
   * (score desc, docId asc) head of shards × k candidate rows. Every kernel
   * reads postings through one block cursor, [[TermCursor]]
-  * ([[IndexReader.termCursor]]). Each routed query runs one job over its
-  * bucket-pruned rows ([[routedScores]]): every scan task returns the
-  * terms' per-generation dfs and posting bytes, and its rows while they
-  * fit its share of the bound. The query's total posting bytes pick the
-  * route:
+  * ([[IndexReader.termCursor]]). Postings are read one way
+  * ([[readPostings]]): one job over the bucket-pruned rows in which every
+  * scan task returns the terms' per-generation dfs and posting bytes, and
+  * its rows while they fit its share of a bound. The routed queries read
+  * at the route bound ([[routedScores]]); [[loadCache]] and `_explain`
+  * read at a zero bound, which sizes the terms and returns no rows. A
+  * routed query's total posting bytes pick its route:
   *  - at most `maxDriverBytes` (default [[IndexReader.DefaultMaxBytesPerTerm]],
   *    applied to the whole query): the same kernel runs per shard on the
   *    driver over the rows that job returned — one job, no shuffle;
@@ -147,78 +149,50 @@ final class IndexReader private[graft] (spark: SparkSession,
     }.reduce(_.unionByName(_)).as[SegmentRead]
   }
 
-  /** Per-term GLOBAL df for the query terms ([[termMeta]] without the
-    * sizing, so the scan reads no payload). */
-  private[query] def mergedDfMap(seg: Dataset[SegmentRead]): Map[String, Long] =
-    termMeta(seg, sized = false)._1
-
-  /** A metadata-only pass over `seg`: the per-term GLOBAL df — a shard
-    * sees only the generations that overlap it, so df cannot be resolved
-    * inside the shard fan-out; generations are disjoint doc sets, so it is
-    * the sum of one df per generation. When `sized`, it also returns each
-    * term's posting bytes ([[IndexReader.payloadBytes]]). Each scan task
-    * folds its rows into one (df, bytes) per (term, gen) it saw and the
-    * driver merges those — one stage, no shuffle. The routed reads get the
-    * same numbers from their own scan ([[routedScores]]); this pass serves
-    * [[mergedDfMap]]'s callers and [[loadCache]]'s sizing. */
-  private[query] def termMeta(seg: Dataset[SegmentRead],
-      sized: Boolean = true): (Map[String, Long], Map[String, Long]) = {
-    val bytes = if (sized) IndexReader.payloadBytes else lit(0L)
-    val perTask = seg.select(col("term"), col("gen"), col("df"), bytes)
-      .as[(String, Int, Long, Long)]
-      .mapPartitions { rows =>
-        val acc = new IndexReader.MetaAcc
-        rows.foreach { case (t, g, df, b) => acc.add(t, g, df, b) }
-        acc.result.iterator
-      }.collect()
-    IndexReader.mergeMeta(perTask)
-  }
-
-  /** Top-k over `seg`'s shards, routed by the query's total posting
-    * bytes ([[routedScores]]): at most `bound`, the global head is
-    * computed on the driver (Left); above it, the per-shard candidates
-    * stay a distributed Dataset for the caller's merge (Right). `kernel`
-    * builds the shard kernel from the GLOBAL merged dfs; both routes run
-    * it unchanged, so they return identical rows. */
-  private[query] def shardHeads(seg: Dataset[SegmentRead], k: Int,
-      bound: Long = maxDriverBytes)(
-      kernel: Map[String, Long] => ShardKernel)
-      : Either[Array[Scored], Dataset[Scored]] =
-    routedScores(seg, bound)(kernel).left.map(IndexReader.head(_, k))
-
-  /** The one-job read behind every routed query. Each scan task returns
-    * its per-(term, gen) (df, posting bytes) — the numbers [[termMeta]]
-    * computes — and, while its running payload stays within
-    * `bound / <scan partitions>`, its rows, so the driver never holds
-    * more than `bound`. The route rule is the whole query's bytes:
-    *  - at most `bound` and every task kept its rows: `kernel` runs per
-    *    shard on those rows (Left: every shard's output, unmerged);
-    *  - at most `bound` but some task overflowed its share: [[driverHead]]
-    *    collects the rows again and runs the kernel on them (every doc it
-    *    emits, ordered) — the route never depends on how the rows fell
-    *    into tasks;
-    *  - above it: [[shardCandidates]] (Right).
-    * One job and no shuffle on the driver route. */
-  private[query] def routedScores(seg: Dataset[SegmentRead], bound: Long)(
-      kernel: Map[String, Long] => ShardKernel)
-      : Either[Array[Scored], Dataset[Scored]] = {
+  /** The one postings read. Each scan task of `seg` folds its rows into
+    * one (df, posting bytes) per (term, gen) it saw and returns its rows
+    * while their running payload stays within `bound / <scan partitions>`
+    * ([[IndexReader.readTask]]), so the driver never holds more than
+    * `bound`. The driver merges the folds into the per-term GLOBAL df — a
+    * shard sees only the generations that overlap it, so df cannot be
+    * resolved inside the shard fan-out; generations are disjoint doc sets,
+    * so it is the sum of one df per generation — and the per-term posting
+    * bytes. One job, no shuffle. `rows` is null when some task overflowed
+    * its share; a zero `bound` sizes the terms and returns no rows. */
+  private[query] def readPostings(seg: Dataset[SegmentRead], bound: Long)
+      : IndexReader.PostingsRead = {
     val scan = seg.rdd
     // locals only: the task closure must not capture the reader
     val share = bound / math.max(1, scan.getNumPartitions)
     val tasks = scan.mapPartitions(rows =>
       Iterator(IndexReader.readTask(rows, share))).collect()
-    val (dfByTerm, bytes) = IndexReader.mergeMeta(tasks.flatMap(_._1))
-    if (bytes.values.sum > bound) Right(shardCandidates(seg, dfByTerm, kernel))
-    else if (tasks.forall(_._2 != null))
-      Left(IndexReader.onDriver(tasks.flatMap(_._2), kernel(dfByTerm)).toArray)
-    else Left(driverHead(seg, Int.MaxValue, kernel(dfByTerm)))
+    val perGen = tasks.flatMap(_._1)
+      .groupMapReduce(_._1)(_._2)((a, b) => (a._1, a._2 + b._2))
+    IndexReader.PostingsRead(
+      perGen.groupMapReduce(_._1._1)(_._2._1)(_ + _),
+      perGen.groupMapReduce(_._1._1)(_._2._2)(_ + _),
+      if (tasks.forall(_._2 != null)) tasks.flatMap(_._2) else null)
   }
 
-  /** Driver route from a fresh collect of the bucket-pruned rows (one
-    * job, no shuffle): run `kernel` per shard, take the global head. */
-  private[query] def driverHead(seg: Dataset[SegmentRead], k: Int,
-      kernel: ShardKernel): Array[Scored] =
-    IndexReader.head(IndexReader.onDriver(seg.collect(), kernel), k)
+  /** The route choice behind every routed query, over [[readPostings]] at
+    * `bound`. The rule is the whole query's posting bytes:
+    *  - at most `bound`: `kernel` runs per shard on the driver (Left:
+    *    every shard's output, unmerged) — over the read's rows, or, when a
+    *    task overflowed its share, over a fresh collect of `seg`, so the
+    *    route never depends on how the rows fell into tasks;
+    *  - above it: [[shardCandidates]] (Right).
+    * One job and no shuffle on the driver route when every task kept its
+    * rows. */
+  private[query] def routedScores(seg: Dataset[SegmentRead], bound: Long)(
+      kernel: Map[String, Long] => ShardKernel)
+      : Either[Array[Scored], Dataset[Scored]] = {
+    val read = readPostings(seg, bound)
+    if (read.bytes.values.sum > bound)
+      Right(shardCandidates(seg, read.dfByTerm, kernel))
+    else Left(IndexReader.onDriver(
+      if (read.rows != null) read.rows else seg.collect(),
+      kernel(read.dfByTerm)).toArray)
+  }
 
   /** Distributed route: `groupByKey(shard).flatMapGroups` fans `kernel`
     * out to every shard's postings; each task returns its local top-k. */
@@ -231,14 +205,18 @@ final class IndexReader private[graft] (spark: SparkSession,
         kernel(dfBc.value)(shard, rows))
   }
 
-  /** [[shardHeads]] as a (docId, score) DataFrame ordered (score desc,
-    * docId asc), k rows: a local relation on the driver route, a
-    * TakeOrdered over shards × k candidates on the distributed one. */
+  /** Top-k over `seg`'s shards as a (docId, score) DataFrame ordered
+    * (score desc, docId asc), k rows, routed by the query's total posting
+    * bytes ([[routedScores]]): a local relation of the global head on the
+    * driver route, a TakeOrdered over shards × k candidates on the
+    * distributed one. `kernel` builds the shard kernel from the GLOBAL
+    * merged dfs; both routes run it unchanged, so they return identical
+    * rows. */
   private[query] def topKFrame(seg: Dataset[SegmentRead], k: Int,
       bound: Long = maxDriverBytes)(
       kernel: Map[String, Long] => ShardKernel): DataFrame =
-    shardHeads(seg, k, bound)(kernel) match {
-      case Left(head) => head.toSeq.toDF("docId", "score")
+    routedScores(seg, bound)(kernel) match {
+      case Left(all) => IndexReader.head(all, k).toSeq.toDF("docId", "score")
       case Right(cands) => cands.toDF("docId", "score")
         .orderBy(desc("score"), asc("docId"))
         .limit(k)
@@ -269,9 +247,9 @@ final class IndexReader private[graft] (spark: SparkSession,
   def phraseTopK(phrase: Seq[String], k: Int, slop: Int = 0): DataFrame = {
     val seg = phraseSegments(phrase, slop)
     val (n, avgdl, del) = (globals.n, globals.avgdl, deletedBc)
-    topKFrame(seg, k)(dfByTerm =>
-      Phrase.shardTopK(avgdl, k, phrase, IndexReader.phraseIdf(n, phrase,
-        dfByTerm), del.value, slop))
+    topKFrame(seg, k)(dfByTerm => (shard, rows) =>
+      Phrase.shardHead(k, Phrase.shardScores(avgdl, phrase,
+        IndexReader.phraseIdf(n, phrase, dfByTerm), del.value, slop)(shard, rows)))
   }
 
   /** EVERY phrase-matching doc's score, untruncated — (docId, score),
@@ -331,9 +309,10 @@ final class IndexReader private[graft] (spark: SparkSession,
     *
     * SCALE BOUND: at 10^12 docs a stopword's posting list is terabytes —
     * collecting it to the driver is the one thing this serving path must
-    * never do. The metadata job ([[termMeta]]: term → Σ posting bytes,
-    * positions pruned from the scan) sizes every term FIRST; only terms
-    * within `maxBytesPerTerm` have their blocks collected. Over-budget
+    * never do. The one postings read ([[readPostings]] at a zero row
+    * share: term → merged df and Σ posting bytes, positions pruned from
+    * the scan, no rows returned) sizes every term FIRST; only terms within
+    * `maxBytesPerTerm` have their blocks collected. Over-budget
     * terms are recorded in [[ServingCache.overBudget]] and any query
     * touching one routes through the exact distributed top-k inside
     * [[topKLocal]] — same ranking, executor-resident memory. The blocks
@@ -341,10 +320,10 @@ final class IndexReader private[graft] (spark: SparkSession,
   def loadCache(terms: Seq[String],
       maxBytesPerTerm: Long = IndexReader.DefaultMaxBytesPerTerm): ServingCache = {
     val distinctTerms = terms.distinct
-    // job 1: per-term posting-byte totals — the Parquet scan reads the
-    // term, gaps/tfs/dls columns and no positions
-    val (_, sizes) = termMeta(segmentsFor(distinctTerms, positions = false))
-    val over = sizes.filter(_._2 > maxBytesPerTerm).keySet
+    // job 1: per-term merged df and posting bytes — the scan reads no
+    // positions and no task returns its rows
+    val sized = readPostings(segmentsFor(distinctTerms, positions = false), 0L)
+    val over = sized.bytes.filter(_._2 > maxBytesPerTerm).keySet
     val residentTerms = distinctTerms.filterNot(over)
     // job 2: collect blocks for resident terms ONLY (term predicate pushed
     // into the Parquet scan; over-budget blocks never reach the driver)
@@ -353,7 +332,7 @@ final class IndexReader private[graft] (spark: SparkSession,
       else segmentsFor(residentTerms, positions = false).collect()
         .groupBy(_.term)
         .map { case (t, rows) =>
-          val df = IndexReader.mergedDf(rows)
+          val df = sized.dfByTerm(t)
           val idf = Bm25.idf(globals.n, df)
           t -> (df, rows.sortBy(r => (r.shard, r.firstDocId))
             .map(r => IndexReader.boundedBlock(r, idf, globals.avgdl)))
@@ -383,10 +362,12 @@ final class IndexReader private[graft] (spark: SparkSession,
 
 }
 
-/** Driver-resident serving cache with a per-term byte bound. `resident`
-  * holds terms whose full merged posting lists fit `maxBytesPerTerm`;
-  * `overBudget` names terms whose lists stayed on the executors — queries
-  * touching them are served by the distributed top-k instead. */
+/** Driver-resident serving cache with a per-term byte bound, sized by the
+  * reader's one postings read ([[IndexReader.loadCache]]). `resident`
+  * holds each term whose full merged posting list fits `maxBytesPerTerm`,
+  * with its merged df from that read; `overBudget` names terms whose lists
+  * stayed on the executors — queries touching them are served by the
+  * routed top-k instead. */
 final case class ServingCache(
     resident: Map[String, (Long, Array[SegBlock])],
     overBudget: Set[String],
@@ -414,51 +395,37 @@ object IndexReader {
     * hazard territory. */
   val MaxResidentDeletes: Int = 1 << 22
 
+  /** What [[IndexReader.readPostings]] returns: the per-term GLOBAL df,
+    * the per-term posting bytes, and the rows when every scan task kept
+    * its share (else null). */
+  private[query] final case class PostingsRead(dfByTerm: Map[String, Long],
+      bytes: Map[String, Long], rows: Array[SegmentRead])
+
   /** Posting bytes of one segment row: the gaps/tfs/dls payload, plus
     * positions when the row carries them. */
-  def payloadBytes: Column =
-    (length(col("gaps")) + length(col("tfs")) + length(col("dls")) +
-      coalesce(length(col("pos")), lit(0))).cast("long")
-
-  /** Posting bytes of one segment row — [[payloadBytes]] on the object. */
   private def rowBytes(r: SegmentRead): Long =
     r.gaps.length.toLong + r.tfs.length + r.dls.length +
       (if (r.pos == null) 0 else r.pos.length)
 
-  /** One scan task's per-(term, gen) (df, posting bytes) fold. */
-  private[query] final class MetaAcc {
-    private val acc = scala.collection.mutable.HashMap.empty[(String, Int), (Long, Long)]
-    def add(t: String, g: Int, df: Long, b: Long): Unit =
-      acc((t, g)) = (df, acc.get((t, g)).fold(0L)(_._2) + b)
-    def result: Array[((String, Int), (Long, Long))] = acc.toArray
-  }
-
-  /** Merge the tasks' (term, gen) records: the per-term GLOBAL df (one df
-    * per generation, summed) and the per-term posting bytes. */
-  private[query] def mergeMeta(perTask: Array[((String, Int), (Long, Long))])
-      : (Map[String, Long], Map[String, Long]) = {
-    val perGen = perTask.groupMapReduce(_._1)(_._2)((a, b) => (a._1, a._2 + b._2))
-    (perGen.groupMapReduce(_._1._1)(_._2._1)(_ + _),
-      perGen.groupMapReduce(_._1._1)(_._2._2)(_ + _))
-  }
-
-  /** One task of the one-job read ([[IndexReader.routedScores]]): its
-    * (term, gen) records, and its rows while their running payload stays
-    * within `share` (null once it overflowed). */
+  /** One task of the one postings read ([[IndexReader.readPostings]]): its
+    * rows folded into one (df, posting bytes) per (term, gen), and its rows
+    * while their running payload stays within `share` (null once it
+    * overflowed). */
   private[query] def readTask(rows: Iterator[SegmentRead], share: Long)
       : (Array[((String, Int), (Long, Long))], Array[SegmentRead]) = {
-    val acc = new MetaAcc
+    val meta = scala.collection.mutable.HashMap.empty[(String, Int), (Long, Long)]
     var kept = Array.newBuilder[SegmentRead]
     var held = 0L
     rows.foreach { r =>
       val b = rowBytes(r)
-      acc.add(r.term, r.gen, r.df, b)
+      val key = (r.term, r.gen)
+      meta(key) = (r.df, meta.get(key).fold(0L)(_._2) + b)
       if (kept != null) {
         held += b
         if (held <= share) kept += r else kept = null
       }
     }
-    (acc.result, if (kept == null) null else kept.result())
+    (meta.toArray, if (kept == null) null else kept.result())
   }
 
   /** Run `kernel` over each shard's rows on the driver. */
@@ -481,12 +448,6 @@ object IndexReader {
   @inline def isDeleted(del: Array[Long], id: Long): Boolean =
     del != null && java.util.Arrays.binarySearch(del, id) >= 0
 
-  /** Merged document frequency: each generation baked its own df into its
-    * rows, generations are disjoint doc sets, so the true df is the sum of
-    * one df per generation present. */
-  def mergedDf(rows: Array[SegmentRead]): Long =
-    rows.groupBy(_.gen).map(_._2.head.df).sum
-
   /** Query-time Block-Max bound: BM25 is monotone ↑ in tf and ↓ in dl, so
     * scoring the block's (maxTf, minDl) corner with the current stats
     * dominates every member score. */
@@ -504,18 +465,15 @@ object IndexReader {
 
   /** Executor-side per-shard WAND — a top-level function so the Spark
     * closure captures only (n, avgdl, k, dfByTerm), never the reader
-    * instance. `dfByTerm` carries the GLOBAL per-term df (a shard only
-    * sees its own generations' rows). */
+    * instance. `dfByTerm` carries the GLOBAL df of every term in `rows`
+    * ([[IndexReader.readPostings]]; a shard only sees its own generations'
+    * rows). */
   def shardTopK(n: Long, avgdl: Double, k: Int, dfByTerm: Map[String, Long],
       deleted: Array[Long] = null)(
-      shard: Long, rows: Iterator[SegmentRead]): Iterator[Scored] =
-    Wand.topK(buildCursors(rows, n, avgdl, dfByTerm), k, deleted).iterator
-
-  private def buildCursors(rows: Iterator[SegmentRead], n: Long,
-      avgdl: Double, dfByTerm: Map[String, Long]): Array[TermCursor] = {
-    val byTerm = rows.toArray.groupBy(_.term)
-    byTerm.map { case (t, rs) =>
-      termCursor(t, rs, Bm25.idf(n, dfByTerm.getOrElse(t, mergedDf(rs))), avgdl)
+      shard: Long, rows: Iterator[SegmentRead]): Iterator[Scored] = {
+    val cursors = rows.toArray.groupBy(_.term).map { case (t, rs) =>
+      termCursor(t, rs, Bm25.idf(n, dfByTerm(t)), avgdl)
     }.toArray
+    Wand.topK(cursors, k, deleted).iterator
   }
 }

@@ -82,7 +82,7 @@ final class IndexSearch(spark: SparkSession,
     * shard = docId range, so presence/exclusion gates are array flags — no
     * per-doc hashing, no joins), then the global head of shards × k
     * candidates — on the driver or the executors, by the query's posting
-    * bytes ([[IndexReader.shardHeads]]). Semantics identical to
+    * bytes ([[IndexReader.topKFrame]]). Semantics identical to
     * [[Search.boolTopK]]. */
   def boolTopK(must: Seq[String], should: Seq[String], mustNot: Seq[String],
       k: Int, excludeDocId: Long = -1L,
@@ -222,19 +222,11 @@ final class IndexSearch(spark: SparkSession,
       .select(col("term"), col("total_tf").as("freq"), col("dist"))
 
   /** More-like-this term selection from the INDEX: the source doc's
-    * (term, tf) rows come from the tf/ artifact with the docId predicate
-    * pushed into the Parquet scan; df joins from termstats/. Ranked
-    * (tf desc, df asc, term asc) — identical to
-    * [[Search.moreLikeThisTerms]]. At serving scale, bucket the tf
-    * artifact by docId to make this lookup partition-pruned too. */
-  def moreLikeThisTerms(docId: Long, m: Int): DataFrame = {
-    val tf = IndexSearch.union(reader.tfTables, "docId", "term", "tf")
-      .filter(col("docId") === docId)
-      .select("term", "tf")
-    tf.join(termStats.select("term", "df"), "term")
-      .orderBy(desc("tf"), col("df"), col("term"))
-      .limit(m)
-  }
+    * [[termVectors]] ranked (tf desc, df asc, term asc), first `m` —
+    * identical to [[Search.moreLikeThisTerms]]. At serving scale, bucket
+    * the tf artifact by docId to make this lookup partition-pruned too. */
+  def moreLikeThisTerms(docId: Long, m: Int): DataFrame =
+    termVectors(docId).orderBy(desc("tf"), col("df"), col("term")).limit(m)
 
   /** More-like-this top-k served from the index; source doc excluded
     * inside the shard kernel (before per-shard selection, exactly like the
@@ -257,6 +249,12 @@ final class IndexSearch(spark: SparkSession,
       .toDF("docId").distinct()
   }
 
+  /** The rows of a docId-keyed `meta` frame whose doc matches any query
+    * term: a semi-join with [[matchingDocIds]] — the match set of every
+    * aggregation served beside a query. */
+  private def matchedRows(meta: DataFrame, queryTerms: Seq[String]): DataFrame =
+    meta.join(matchingDocIds(queryTerms), Seq("docId"), "left_semi")
+
   /** Delete-by-query (the OpenSearch `_delete_by_query` surface this
     * engine's index replaces): tombstone every CURRENTLY-VISIBLE doc
     * matching any query term ([[graft.index.IncrementalIndex.deleteDocs]]
@@ -277,7 +275,7 @@ final class IndexSearch(spark: SparkSession,
     * a query): postings-decoded docIds semi-join the docs/ metadata — the
     * corpus text is never read. Semantics identical to [[Search.facets]]. */
   def facets(queryTerms: Seq[String], facetCol: String): DataFrame =
-    docsMeta.join(matchingDocIds(queryTerms), Seq("docId"), "left_semi")
+    matchedRows(docsMeta, queryTerms)
       .groupBy(col(facetCol))
       .agg(count(lit(1)).as("doc_count"))
 
@@ -300,12 +298,14 @@ final class IndexSearch(spark: SparkSession,
     * breakdown for one (doc, query) — (term, tf, df, idf, contribution)
     * with the exact [[Bm25]] arithmetic the scorers use, so the sum of
     * `contribution` IS the doc's ranking score. Reads the doc's tf rows
-    * (docId predicate pushed into the Parquet scan) and the terms'
-    * merged df — never the corpus, never full postings. */
+    * (docId predicate pushed into the Parquet scan) and the terms' merged
+    * df from the one postings read at a zero row share
+    * ([[IndexReader.readPostings]]: no positions, no rows to the driver)
+    * — never the corpus. */
   def explainScore(docId: Long, queryTerms: Seq[String]): DataFrame = {
     val terms = norm(queryTerms).distinct.sorted
-    val seg = reader.segmentsFor(terms)
-    val dfByTerm = reader.mergedDfMap(seg)
+    val dfByTerm = reader.readPostings(
+      reader.segmentsFor(terms, positions = false), 0L).dfByTerm
     val (n, avgdl) = (reader.globals.n, reader.globals.avgdl)
     // dl rides every tf row (denormalized at build time)
     val docRows = IndexSearch.union(reader.tfTables, "docId", "term", "tf", "dl")
@@ -420,7 +420,7 @@ final class IndexSearch(spark: SparkSession,
     * identical to [[Search.matchStats]]. */
   def matchStats(queryTerms: Seq[String], meta: DataFrame,
       valueCol: String): DataFrame =
-    meta.join(matchingDocIds(queryTerms), Seq("docId"), "left_semi")
+    matchedRows(meta, queryTerms)
       .agg(count(lit(1)).as("doc_count"),
         min(col(valueCol)).as("min_v"),
         max(col(valueCol)).as("max_v"),
@@ -517,7 +517,7 @@ final class IndexSearch(spark: SparkSession,
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1),
       "percentiles in [0,1]")
     val arr = ps.mkString(", ")
-    meta.join(matchingDocIds(queryTerms), Seq("docId"), "left_semi")
+    matchedRows(meta, queryTerms)
       .agg(expr(s"percentile($valueCol, array($arr))").as("q"))
       .select(posexplode(col("q")).as(Seq("pos", "value")))
       .select(element_at(array(ps.map(lit): _*), col("pos") + 1).as("pct"),
@@ -530,7 +530,7 @@ final class IndexSearch(spark: SparkSession,
   def matchHistogram(queryTerms: Seq[String], meta: DataFrame,
       valueCol: String, interval: Double): DataFrame = {
     require(interval > 0, "interval must be > 0")
-    meta.join(matchingDocIds(queryTerms), Seq("docId"), "left_semi")
+    matchedRows(meta, queryTerms)
       .groupBy((floor(col(valueCol).cast("double") / interval) *
         interval).as("bucket"))
       .agg(count(lit(1)).as("doc_count"))
@@ -540,7 +540,7 @@ final class IndexSearch(spark: SparkSession,
     * identical to [[Search.matchCardinality]]. */
   def matchCardinality(queryTerms: Seq[String], meta: DataFrame,
       valueCol: String, k: Int = 64): DataFrame = {
-    val m = meta.join(matchingDocIds(queryTerms), Seq("docId"), "left_semi")
+    val m = matchedRows(meta, queryTerms)
     val sk = graft.ops.Sketches.kmvEstimate(
       graft.ops.Sketches.kmvSketch(m, Nil, valueCol, k), k)
     sk.crossJoin(m.agg(countDistinct(col(valueCol)).as("exact_distinct")))
@@ -558,9 +558,7 @@ final class IndexSearch(spark: SparkSession,
       sources: Seq[(String, org.apache.spark.sql.Column)], size: Int,
       after: Option[Seq[org.apache.spark.sql.Column]] = None): DataFrame = {
     require(sources.nonEmpty, "composite needs at least one source")
-    Search.compositePage(
-      meta.join(matchingDocIds(queryTerms), Seq("docId"), "left_semi"),
-      sources, size, after)
+    Search.compositePage(matchedRows(meta, queryTerms), sources, size, after)
   }
 
   /** Date-histogram aggregation over the match set (OpenSearch
@@ -571,7 +569,7 @@ final class IndexSearch(spark: SparkSession,
     * match set arrives as decoded postings, the corpus is never read. */
   def dateHistogram(queryTerms: Seq[String], meta: DataFrame,
       tsCol: String, interval: String): DataFrame =
-    meta.join(matchingDocIds(queryTerms), Seq("docId"), "left_semi")
+    matchedRows(meta, queryTerms)
       .groupBy(date_trunc(interval, col(tsCol)).as("bucket"))
       .agg(count(lit(1)).as("doc_count"))
 
@@ -591,7 +589,7 @@ final class IndexSearch(spark: SparkSession,
       lit(s"(-inf,${bounds.head})")) { case (acc, (b, lab)) =>
         when(v >= b, lit(lab)).otherwise(acc)
     }
-    meta.join(matchingDocIds(queryTerms), Seq("docId"), "left_semi")
+    matchedRows(meta, queryTerms)
       .groupBy(bucket.as("bucket"))
       .agg(count(lit(1)).as("doc_count"))
   }
@@ -827,8 +825,7 @@ object IndexSearch {
         case None =>
           g.terms.foreach { t =>
             byTerm.get(t).foreach { rs =>
-              val c = IndexReader.termCursor(t, rs,
-                Bm25.idf(n, dfByTerm.getOrElse(t, IndexReader.mergedDf(rs))), avgdl)
+              val c = IndexReader.termCursor(t, rs, Bm25.idf(n, dfByTerm(t)), avgdl)
               while (!c.exhausted) {
                 add(c.curDoc, if (g.occur == MustNot) 0.0 else c.score)
                 c.advance()

@@ -142,9 +142,11 @@ object Phrase {
     terms.map(t => IndexReader.termCursor(t, byTerm(t), 0.0, avgdl)).toArray
 
   /** Executor-side per-shard phrase scorer emitting EVERY matching doc —
-    * the composition primitive behind [[shardTopK]], rescoring and the
-    * clause kernel's phrase groups (which need full per-doc phrase scores
-    * to sum with term clauses, not a pre-truncated page). `slop = 0` runs the
+    * the composition primitive behind phrase top-k (through [[shardHead]];
+    * `idfSum` comes from the GLOBAL merged dfs, as a shard only sees its
+    * own generations), rescoring and the clause kernel's phrase groups
+    * (which need full per-doc phrase scores to sum with term clauses, not
+    * a pre-truncated page). `slop = 0` runs the
     * exact consecutive-position counter; `slop > 0` the greedy
     * ordered-proximity counter (a document still must contain every slot
     * term). Matches per shard are bounded by the shard's doc range, so
@@ -159,15 +161,6 @@ object Phrase {
     leapfrogScores(cursors, deleted, idfSum, avgdl)(_ =>
       slotTf(cursors.map(_.positions()), slop))
   }
-
-  /** Executor-side per-shard phrase top-k — top-level so the Spark closure
-    * captures only scalars + the phrase. `idfSum` is computed from the
-    * GLOBAL merged dfs (a shard only sees its own generations).
-    * Selection = [[shardScores]] through [[shardHead]]. */
-  def shardTopK(avgdl: Double, k: Int, phrase: Seq[String], idfSum: Double,
-      deleted: Array[Long] = null, slop: Int = 0)(
-      shard: Long, rows: Iterator[SegmentRead]): Iterator[Scored] =
-    shardHead(k, shardScores(avgdl, phrase, idfSum, deleted, slop)(shard, rows))
 
   /** One shard's top-k of a leapfrog's scores through a bounded heap: the
     * leapfrog emits docs in ascending docId order, so on a score tie the

@@ -2,21 +2,16 @@ package graft.index
 
 import java.io.ByteArrayOutputStream
 
-/** Variable-byte integer codec.
+/** Variable-byte integer codec — the size baseline of PForDeltaSpec's
+  * compression gates.
   *
   * Historically the posting-block codec (docId gaps + term frequencies at
   * ~1-2 bytes per posting); postings now use [[PForDelta]], whose
-  * bit-packed frames break VByte's 8-bit-per-value floor. VByte remains
-  * the patch codec inside PForDelta frames and the size baseline in
-  * PForDeltaSpec's compression gates.
+  * bit-packed frames break VByte's 8-bit-per-value floor, and whose
+  * patches use its own variable-byte writer.
   *
   * Encoding: little-endian base-128; the high bit of each byte is a
   * continuation flag (1 = more bytes follow). Values must be >= 0.
-  *
-  * The reference engine delegates storage compression to OpenSearch/Lucene;
-  * its own shuffle uses LZ4 block files with an offset index
-  * (/root/reference/data-prepper-plugins/iceberg-source/.../LocalDiskShuffleWriter.java:29-45)
-  * — same "compressed block + index" shape as these posting blocks.
   */
 object VarByte {
 

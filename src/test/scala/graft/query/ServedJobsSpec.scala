@@ -15,8 +15,9 @@ import graft.index.{IndexBuilder, IndexParams}
 /** Spark jobs per served call on a warm reader, pinned per query shape.
   * The reader resolves its tables once, so a call pays only its own work:
   * one job for a routed read, which sizes the query and returns its rows
-  * together ([[IndexReader.routedScores]]). A schema-inference job or a
-  * separate metadata pass creeping back into a query fails here.
+  * together ([[IndexReader.readPostings]]); the serving-cache load and
+  * `_explain` size their terms with that same read. A schema-inference
+  * job or a separate metadata pass creeping back into a call fails here.
   * Counted with adaptive execution off, as the benchmark runs, so each
   * count is the plan's own job structure. */
 class ServedJobsSpec extends AnyFunSuite {
@@ -74,15 +75,24 @@ class ServedJobsSpec extends AnyFunSuite {
         0.01, "ln1p", 10), 3),
       ("multi_match", () => IndexSearch.multiMatchTopK(
         Seq(search -> 2.0, search -> 1.0), Seq(sw(0), t(3)), 10), 3))
+    // (name, call returning its result size, jobs): the frame shapes, then
+    // the two calls that size terms without scoring them — the cache load
+    // (the sizing read, then the resident terms' collect) and `_explain`
+    // (the sizing read, then the doc's tf rows)
+    val calls: Seq[(String, () => Int, Int)] =
+      shapes.map { case (name, call, n) => (name, () => call().collect().length, n) } ++
+        Seq(
+          ("load_cache", () => reader.loadCache(Seq(sw(0), t(3), t(60))).resident.size, 2),
+          ("explain", () => search.explainScore(7L, Seq(sw(0), sw(1))).collect().length, 2))
     val conf = spark.conf
     val aqe = conf.get("spark.sql.adaptive.enabled")
     conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val counts = shapes.map { case (name, call, _) =>
-        assert(call().collect().nonEmpty, s"$name: no rows") // warm the reader
-        name -> jobs(s"served-jobs-$name")(call().collect())
+      val counts = calls.map { case (name, call, _) =>
+        assert(call() > 0, s"$name: no rows") // warm the reader
+        name -> jobs(s"served-jobs-$name")(call())
       }
-      assert(counts == shapes.map(s => s._1 -> s._3))
+      assert(counts == calls.map(s => s._1 -> s._3))
     } finally conf.set("spark.sql.adaptive.enabled", aqe)
   }
 }

@@ -10,7 +10,7 @@ import graft.corpus.SyntheticCorpus
 import graft.index.{IncrementalIndex, IndexParams}
 
 /** The served top-k runs one shard kernel per shard on either of two
-  * routes ([[IndexReader.shardHeads]]): on the driver over the collected
+  * routes ([[IndexReader.routedScores]]): on the driver over the collected
   * bucket-pruned rows, or fanned out by `groupByKey(shard)`. Every top-k
   * entry point must return the same rows on both, on an index with all
   * the hard parts: two generations whose boundary falls inside shards,
@@ -125,7 +125,7 @@ class ServedRoutesSpec extends AnyFunSuite {
   test("a task over its share of the bound re-reads the rows on the driver") {
     val terms = Seq("of", "the", "w00002", "w00004", "w00007")
     val seg = onDriver.segmentsFor(terms, positions = false)
-    val total = onDriver.termMeta(seg)._2.values.sum
+    val total = onDriver.readPostings(seg, 0L).bytes.values.sum
     val parts = seg.rdd.getNumPartitions
     val share = total / parts
     val overflowed = seg.rdd.mapPartitions(it =>
@@ -147,12 +147,18 @@ class ServedRoutesSpec extends AnyFunSuite {
     val (n, avgdl, del) = (r.globals.n, r.globals.avgdl, r.deletedBc)
     val kernel: Map[String, Long] => IndexReader.ShardKernel =
       df => IndexReader.shardTopK(n, avgdl, 30, df, del.value)
-    val (dfByTerm, bytes) = r.termMeta(seg)
-    assert(dfByTerm == r.mergedDfMap(seg) && bytes.keySet == dfByTerm.keySet)
-    val local = r.driverHead(seg, 30, kernel(dfByTerm))
+    val read = r.readPostings(seg, Long.MaxValue)
+    val dfByTerm = read.dfByTerm
+    assert(read.bytes.keySet == dfByTerm.keySet && read.rows != null)
+    // the read's rows and a fresh collect are the two driver-route inputs
+    val local = IndexReader.head(
+      IndexReader.onDriver(seg.collect(), kernel(dfByTerm)), 30)
+    val fromRead = IndexReader.head(
+      IndexReader.onDriver(read.rows, kernel(dfByTerm)), 30)
     val fanned = IndexReader.head(
       r.shardCandidates(seg, dfByTerm, kernel).collect(), 30)
-    assert(local.nonEmpty && local.toSeq == fanned.toSeq)
+    assert(local.nonEmpty && local.toSeq == fanned.toSeq &&
+      fromRead.toSeq == local.toSeq)
   }
 
   test("the route bound applies to the whole query's posting bytes, inclusive") {
@@ -160,16 +166,17 @@ class ServedRoutesSpec extends AnyFunSuite {
     val one = r.segmentsFor(Seq("the"), positions = false)
     val both = r.segmentsFor(Seq("the", "of"), positions = false)
     val (oneBytes, bothBytes) =
-      (r.termMeta(one)._2.values.sum, r.termMeta(both)._2.values.sum)
+      (r.readPostings(one, 0L).bytes.values.sum,
+        r.readPostings(both, 0L).bytes.values.sum)
     assert(oneBytes < bothBytes)
     val kernel: Map[String, Long] => IndexReader.ShardKernel = {
       val (n, avgdl) = (r.globals.n, r.globals.avgdl)
       df => IndexReader.shardTopK(n, avgdl, 5, df, null)
     }
-    assert(r.shardHeads(both, 5, bothBytes)(kernel).isLeft)
+    assert(r.routedScores(both, bothBytes)(kernel).isLeft)
     // "the" alone fits the bound; with "of" added the query does not
-    assert(r.shardHeads(one, 5, oneBytes)(kernel).isLeft)
-    assert(r.shardHeads(both, 5, oneBytes)(kernel).isRight)
+    assert(r.routedScores(one, oneBytes)(kernel).isLeft)
+    assert(r.routedScores(both, oneBytes)(kernel).isRight)
   }
 
   test("positions are only read for the phrase kernels") {
