@@ -43,6 +43,11 @@ final case class SegmentRead(
   *  - above it: `groupByKey(shard).flatMapGroups` fans the query out to
   *    the executors and a TakeOrdered merges the candidates
   *    ([[shardCandidates]] — the one shard fan-out).
+  * The rows a driver-route read returns fill the reader's posting store
+  * ([[PostingStore]], an LRU of per-term rows and merged dfs within
+  * `maxDriverBytes` in total). A routed query whose terms are all resident
+  * skips the read: on the driver route it runs no job at all. The store
+  * caches postings, never results, and never changes a route.
   * The kernels are shared, so both routes return identical rows. The
   * public constructor fixes the bound; the package-private one lets specs
   * and the plan dump pin a route. Reads prune to the query terms' hash
@@ -174,24 +179,52 @@ final class IndexReader private[graft] (spark: SparkSession,
       if (tasks.forall(_._2 != null)) tasks.flatMap(_._2) else null)
   }
 
-  /** The route choice behind every routed query, over [[readPostings]] at
-    * `bound`. The rule is the whole query's posting bytes:
+  /** This reader's posting store: the merged postings of terms read on
+    * the driver route, within `maxDriverBytes` in total, so the store of a
+    * reader pinned to the distributed route stays empty. The reader is a
+    * snapshot and the kernels apply the tombstones, so entries never go
+    * stale. */
+  private[query] val store = new PostingStore(maxDriverBytes)
+
+  /** The posting store's hits, misses, evictions and resident bytes. */
+  def storeCounters: StoreCounters = store.counters
+
+  /** The route choice behind every routed query over `terms` (positions
+    * only when `positions`). The rule is the whole query's posting bytes:
     *  - at most `bound`: `kernel` runs per shard on the driver (Left:
-    *    every shard's output, unmerged) — over the read's rows, or, when a
-    *    task overflowed its share, over a fresh collect of `seg`, so the
-    *    route never depends on how the rows fell into tasks;
+    *    every shard's output, unmerged);
     *  - above it: [[shardCandidates]] (Right).
-    * One job and no shuffle on the driver route when every task kept its
-    * rows. */
-  private[query] def routedScores(seg: Dataset[SegmentRead], bound: Long)(
-      kernel: Map[String, Long] => ShardKernel)
+    * When every term is in the [[store]], its rows and dfs serve the
+    * query: no Dataset, no job on the driver route. Otherwise
+    * [[readPostings]] at `bound` reads the whole term set in one job; on
+    * the driver route the kernel runs over the read's rows, or, when a
+    * task overflowed its share, over a fresh collect of the scan, so the
+    * route never depends on how the rows fell into tasks — and those rows
+    * fill the store. Residency never picks the route: resident terms over
+    * `bound` still go to [[shardCandidates]]. */
+  private[query] def routedScores(terms: Seq[String], positions: Boolean,
+      bound: Long)(kernel: Map[String, Long] => ShardKernel)
       : Either[Array[Scored], Dataset[Scored]] = {
-    val read = readPostings(seg, bound)
-    if (read.bytes.values.sum > bound)
-      Right(shardCandidates(seg, read.dfByTerm, kernel))
-    else Left(IndexReader.onDriver(
-      if (read.rows != null) read.rows else seg.collect(),
-      kernel(read.dfByTerm)).toArray)
+    val ts = terms.distinct
+    lazy val seg = segmentsFor(ts, positions)
+    // (merged dfs, total posting bytes, the rows for the driver route)
+    val (dfByTerm, bytes, rows) = store.lookup(ts.map((_, positions))) match {
+      case Some(es) =>
+        (ts.zip(es).collect { case (t, e) if e.df > 0 => t -> e.df }.toMap,
+          es.map(_.bytes).sum, () => es.flatMap(_.rows).toArray)
+      case None =>
+        val read = readPostings(seg, bound)
+        (read.dfByTerm, read.bytes.values.sum, () => {
+          val rows = if (read.rows != null) read.rows else seg.collect()
+          val byTerm = rows.groupBy(_.term)
+          ts.foreach(t => store.insert((t, positions), PostingStore.Entry(
+            read.dfByTerm.getOrElse(t, 0L), read.bytes.getOrElse(t, 0L),
+            byTerm.getOrElse(t, Array.empty[SegmentRead]))))
+          rows
+        })
+    }
+    if (bytes > bound) Right(shardCandidates(seg, dfByTerm, kernel))
+    else Left(IndexReader.onDriver(rows(), kernel(dfByTerm)).toArray)
   }
 
   /** Distributed route: `groupByKey(shard).flatMapGroups` fans `kernel`
@@ -205,17 +238,17 @@ final class IndexReader private[graft] (spark: SparkSession,
         kernel(dfBc.value)(shard, rows))
   }
 
-  /** Top-k over `seg`'s shards as a (docId, score) DataFrame ordered
-    * (score desc, docId asc), k rows, routed by the query's total posting
-    * bytes ([[routedScores]]): a local relation of the global head on the
-    * driver route, a TakeOrdered over shards × k candidates on the
-    * distributed one. `kernel` builds the shard kernel from the GLOBAL
-    * merged dfs; both routes run it unchanged, so they return identical
-    * rows. */
-  private[query] def topKFrame(seg: Dataset[SegmentRead], k: Int,
+  /** Top-k over the shards of `terms`' postings as a (docId, score)
+    * DataFrame ordered (score desc, docId asc), k rows, routed by the
+    * query's total posting bytes ([[routedScores]]): a local relation of
+    * the global head on the driver route, a TakeOrdered over shards × k
+    * candidates on the distributed one. `kernel` builds the shard kernel
+    * from the GLOBAL merged dfs; both routes run it unchanged, so they
+    * return identical rows. */
+  private[query] def topKFrame(terms: Seq[String], positions: Boolean, k: Int,
       bound: Long = maxDriverBytes)(
       kernel: Map[String, Long] => ShardKernel): DataFrame =
-    routedScores(seg, bound)(kernel) match {
+    routedScores(terms, positions, bound)(kernel) match {
       case Left(all) => IndexReader.head(all, k).toSeq.toDF("docId", "score")
       case Right(cands) => cands.toDF("docId", "score")
         .orderBy(desc("score"), asc("docId"))
@@ -232,8 +265,7 @@ final class IndexReader private[graft] (spark: SparkSession,
   /** Block-Max WAND top-k. Result is a tiny DataFrame (docId, score)
     * ordered by (score desc, docId asc), k rows. */
   def topK(query: Seq[String], k: Int): DataFrame =
-    topKFrame(segmentsFor(query.distinct.sorted, positions = false), k)(
-      wandKernel(k))
+    topKFrame(query.distinct.sorted, positions = false, k)(wandKernel(k))
 
   /** Phrase top-k over positional postings (see [[Phrase]]): `slop = 0`
     * (default) is the exact consecutive-position match; `slop > 0` the
@@ -245,9 +277,9 @@ final class IndexReader private[graft] (spark: SparkSession,
     * returning silently-empty matches. Result is (docId, score), k rows,
     * ordered (score desc, docId asc). */
   def phraseTopK(phrase: Seq[String], k: Int, slop: Int = 0): DataFrame = {
-    val seg = phraseSegments(phrase, slop)
+    val terms = phraseTerms(phrase, slop)
     val (n, avgdl, del) = (globals.n, globals.avgdl, deletedBc)
-    topKFrame(seg, k)(dfByTerm => (shard, rows) =>
+    topKFrame(terms, positions = true, k)(dfByTerm => (shard, rows) =>
       Phrase.shardHead(k, Phrase.shardScores(avgdl, phrase,
         IndexReader.phraseIdf(n, phrase, dfByTerm), del.value, slop)(shard, rows)))
   }
@@ -259,9 +291,9 @@ final class IndexReader private[graft] (spark: SparkSession,
     * the driver route, the shards' candidates on the distributed one;
     * output is match-set-sized, not corpus-sized. */
   def phraseScores(phrase: Seq[String], slop: Int = 0): DataFrame = {
-    val seg = phraseSegments(phrase, slop)
+    val terms = phraseTerms(phrase, slop)
     val (n, avgdl, del) = (globals.n, globals.avgdl, deletedBc)
-    scoresFrame(seg)(dfByTerm =>
+    scoresFrame(terms, positions = true)(dfByTerm =>
       Phrase.shardScores(avgdl, phrase, IndexReader.phraseIdf(n, phrase,
         dfByTerm), del.value, slop))
   }
@@ -269,9 +301,9 @@ final class IndexReader private[graft] (spark: SparkSession,
   /** [[routedScores]] as an untruncated (docId, score) DataFrame: a local
     * relation on the driver route, the shards' output on the distributed
     * one. */
-  private[query] def scoresFrame(seg: Dataset[SegmentRead])(
+  private[query] def scoresFrame(terms: Seq[String], positions: Boolean)(
       kernel: Map[String, Long] => ShardKernel): DataFrame =
-    routedScores(seg, maxDriverBytes)(kernel) match {
+    routedScores(terms, positions, maxDriverBytes)(kernel) match {
       case Left(all) => all.toSeq.toDF("docId", "score")
       case Right(cands) => cands.toDF("docId", "score")
     }
@@ -291,12 +323,11 @@ final class IndexReader private[graft] (spark: SparkSession,
   private[query] def requirePositions(): Unit =
     require(positionless.isEmpty, positionless.getOrElse(""))
 
-  private def phraseSegments(phrase: Seq[String], slop: Int)
-      : Dataset[SegmentRead] = {
+  private def phraseTerms(phrase: Seq[String], slop: Int): Seq[String] = {
     require(slop >= 0, "slop must be >= 0")
     require(phrase.nonEmpty, "empty phrase")
     requirePositions()
-    segmentsFor(phrase.distinct)
+    phrase.distinct
   }
 
   /** Driver-local serving cache: term -> (merged df, globally docId-sorted
@@ -349,7 +380,7 @@ final class IndexReader private[graft] (spark: SparkSession,
   def topKLocal(cache: ServingCache, query: Seq[String], k: Int): Array[Scored] = {
     val terms = query.distinct.sorted
     if (terms.exists(cache.overBudget))
-      return topKFrame(segmentsFor(terms, positions = false), k,
+      return topKFrame(terms, positions = false, k,
         math.min(maxDriverBytes, cache.maxBytesPerTerm))(wandKernel(k))
         .as[Scored].collect()
     val cursors = terms.flatMap { t =>

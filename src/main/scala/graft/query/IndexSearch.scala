@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,7 +29,9 @@ import graft.index.PForDelta
   *    for the whole query the kernels run on the driver over those rows
   *    (one job, no shuffle), above it they fan out with `groupByKey(shard)`
   *    and a TakeOrdered merges the candidates
-  *    ([[IndexReader.routedScores]]);
+  *    ([[IndexReader.routedScores]]). Those driver-route rows fill the
+  *    reader's posting store ([[PostingStore]]); a query whose terms are
+  *    all resident runs its kernel on the driver with no Spark job;
   *  - every table (postings, termstats, docs, tf) is resolved once per
   *    reader, so no query pays a schema-inference job;
   *  - dictionaries (fuzzy expansion, suggesters) come from the index's
@@ -121,7 +123,8 @@ final class IndexSearch(spark: SparkSession,
   private def clauseTopK(q: Clauses, k: Int): DataFrame = {
     // locals only: the kernel ships to the executors on the distributed route
     val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
-    reader.topKFrame(clauseSegments(q), k)(dfByTerm =>
+    val (terms, positions) = clauseTerms(q)
+    reader.topKFrame(terms, positions, k)(dfByTerm =>
       IndexSearch.shardClauseTopK(n, avgdl, k, dfByTerm, q, del.value))
   }
 
@@ -132,18 +135,18 @@ final class IndexSearch(spark: SparkSession,
     * ([[IndexReader.scoresFrame]]). */
   private def clauseScores(q: Clauses): DataFrame = {
     val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
-    reader.scoresFrame(clauseSegments(q))(dfByTerm =>
+    val (terms, positions) = clauseTerms(q)
+    reader.scoresFrame(terms, positions)(dfByTerm =>
       IndexSearch.shardClauseScores(n, avgdl, dfByTerm, q, del.value))
   }
 
-  /** The one segment read of a clause value: every term its groups name,
-    * with positions only when a group is a phrase. */
-  private def clauseSegments(q: Clauses): Dataset[SegmentRead] = {
+  /** What a clause value reads: every term its groups name, and whether
+    * the read needs positions (only when a group is a phrase). */
+  private def clauseTerms(q: Clauses): (Seq[String], Boolean) = {
     val phrases = q.groups.exists(_.phrase.isDefined)
     if (phrases) reader.requirePositions()
-    val terms = q.groups.flatMap(g => g.terms ++ g.phrase.toSeq.flatMap(_._1))
-      .distinct.sorted
-    reader.segmentsFor(terms, positions = phrases)
+    (q.groups.flatMap(g => g.terms ++ g.phrase.toSeq.flatMap(_._1)).distinct.sorted,
+      phrases)
   }
 
   /** The flat should-bool of `queryTerms` (normalized, ascending, boost
@@ -299,13 +302,14 @@ final class IndexSearch(spark: SparkSession,
     * with the exact [[Bm25]] arithmetic the scorers use, so the sum of
     * `contribution` IS the doc's ranking score. Reads the doc's tf rows
     * (docId predicate pushed into the Parquet scan) and the terms' merged
-    * df from the one postings read at a zero row share
+    * df — from the reader's posting store when every term is resident,
+    * else from the one postings read at a zero row share
     * ([[IndexReader.readPostings]]: no positions, no rows to the driver)
     * — never the corpus. */
   def explainScore(docId: Long, queryTerms: Seq[String]): DataFrame = {
     val terms = norm(queryTerms).distinct.sorted
-    val dfByTerm = reader.readPostings(
-      reader.segmentsFor(terms, positions = false), 0L).dfByTerm
+    val dfByTerm = reader.store.dfs(terms).getOrElse(reader.readPostings(
+      reader.segmentsFor(terms, positions = false), 0L).dfByTerm)
     val (n, avgdl) = (reader.globals.n, reader.globals.avgdl)
     // dl rides every tf row (denormalized at build time)
     val docRows = IndexSearch.union(reader.tfTables, "docId", "term", "tf", "dl")
@@ -608,7 +612,7 @@ final class IndexSearch(spark: SparkSession,
   def phrasePrefixTopK(phrase: Seq[String], k: Int, slop: Int = 0,
       maxExpansions: Int = 50): DataFrame =
     phrasePrefixRead(phrase, slop, maxExpansions).fold(noScores) {
-      case (seg, kernel) => reader.topKFrame(seg, k)(dfByTerm =>
+      case (terms, kernel) => reader.topKFrame(terms, positions = true, k)(dfByTerm =>
         (shard, rows) => Phrase.shardHead(k, kernel(dfByTerm)(shard, rows)))
     }
 
@@ -620,16 +624,16 @@ final class IndexSearch(spark: SparkSession,
   def phrasePrefixScores(phrase: Seq[String], slop: Int = 0,
       maxExpansions: Int = 50): DataFrame =
     phrasePrefixRead(phrase, slop, maxExpansions).fold(noScores) {
-      case (seg, kernel) => reader.scoresFrame(seg)(kernel)
+      case (terms, kernel) => reader.scoresFrame(terms, positions = true)(kernel)
     }
 
   private def noScores: DataFrame = Seq.empty[(Long, Double)].toDF("docId", "score")
 
-  /** match_phrase_prefix's postings read and untruncated shard kernel;
-    * None when the prefix expands to no dictionary term. */
+  /** match_phrase_prefix's positional read terms and untruncated shard
+    * kernel; None when the prefix expands to no dictionary term. */
   private def phrasePrefixRead(phrase: Seq[String], slop: Int,
       maxExpansions: Int)
-      : Option[(Dataset[SegmentRead], Map[String, Long] => IndexReader.ShardKernel)] = {
+      : Option[(Seq[String], Map[String, Long] => IndexReader.ShardKernel)] = {
     require(phrase.length >= 2,
       "match_phrase_prefix needs >= 2 slots (use prefixTopK for 1)")
     require(slop >= 0, "slop must be >= 0")
@@ -640,7 +644,7 @@ final class IndexSearch(spark: SparkSession,
     if (expansion.isEmpty) return None
     val dfUnion = matchingDocIds(expansion).count()
     val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
-    Some((reader.segmentsFor((exact ++ expansion).distinct), dfByTerm =>
+    Some(((exact ++ expansion).distinct, dfByTerm =>
       Phrase.shardPrefixScores(avgdl, exact, expansion,
         IndexReader.phraseIdf(n, exact, dfByTerm) + Bm25.idf(n, dfUnion),
         del.value, slop)))

@@ -12,11 +12,12 @@ import graft.index.{IncrementalIndex, IndexParams}
 /** The served top-k runs one shard kernel per shard on either of two
   * routes ([[IndexReader.routedScores]]): on the driver over the collected
   * bucket-pruned rows, or fanned out by `groupByKey(shard)`. Every top-k
-  * entry point must return the same rows on both, on an index with all
-  * the hard parts: two generations whose boundary falls inside shards,
+  * entry point must return the same rows on both, and the same rows again
+  * when a warm reader serves them from its posting store, on an index with
+  * all the hard parts: two generations whose boundary falls inside shards,
   * positions, and tombstones. Readers opened with a route bound of
   * `Long.MaxValue` take the driver route for every query, with `-1` the
-  * distributed one. */
+  * distributed one (and never store postings). */
 class ServedRoutesSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -54,37 +55,43 @@ class ServedRoutesSpec extends AnyFunSuite {
     assert(onDriver.deletedSorted != null && onDriver.deletedSorted.nonEmpty)
   }
 
+  /** (entry point, query, whether the call returns the route's own frame) */
+  private val cases: Seq[(String, IndexSearch => DataFrame, Boolean)] = Seq(
+    ("topK", _.reader.topK(Seq("w00002", "w00005", "the", "w00300"), 25), true),
+    ("phraseTopK", _.reader.phraseTopK(Seq("the", "of"), 20), true),
+    ("phraseTopK slop", _.reader.phraseTopK(Seq("of", "the"), 20, slop = 2), true),
+    ("boolTopK", _.boolTopK(Seq("the"), Seq("w00002", "w00007"), Seq("w00004"),
+      20, minShouldMatch = 1), true),
+    ("searchAfter", _.searchAfter(Seq("the", "w00002"), 1.5, 100L, 15), true),
+    ("fuzzyTopK", _.fuzzyTopK(Seq("w0002"), 15), true),
+    ("moreLikeThisTopK", _.moreLikeThisTopK(17L, 8, 12), true),
+    ("prefixTopK", _.prefixTopK("w001", 15, maxExpansions = 6), true),
+    ("wildcardTopK", _.wildcardTopK("w0*3", 15), true),
+    ("regexpTopK", _.regexpTopK("w0000[1-4]", 15), true),
+    ("synonymTopK", _.synonymTopK(Seq("w00002"), Map("w00002" -> Seq("w00009")), 15), true),
+    ("disMaxTopK", _.disMaxTopK(Seq("the", "w00002", "w00011"), 0.3, 20), true),
+    ("boostedTopK", _.boostedTopK(Seq("the" -> 0.5, "w00002" -> 2.0), 20), true),
+    ("phrasePrefixTopK", _.phrasePrefixTopK(Seq("the", "w0"), 20, slop = 1,
+      maxExpansions = 8), true),
+    ("queryStringTopK", _.queryStringTopK(qsQuery, 20), true),
+    ("rescoreTopK", _.rescoreTopK(Seq("the", "w00002"), Seq("the", "of"), 1, 30, 10), false),
+    ("topKWithSnippets", _.topKWithSnippets(Seq("w00002", "w00005"), 10, 6), false),
+    ("topHits", _.topHits(Seq("the", "w00002"), "lang", 3, 5), false),
+    ("fieldValueFactorTopK", s => s.fieldValueFactorTopK(Seq("the", "w00002"),
+      s.docsMeta.select(col("docId"), length(col("url")).as("n")), "n", 0.01,
+      "ln1p", 20), false),
+    // one index paired with itself is docId-aligned
+    ("multiMatchTopK", s => IndexSearch.multiMatchTopK(Seq(s -> 2.0, s -> 1.0),
+      Seq("the", "w00002"), 20, "best_fields", 0.3), false))
+
+  /** The untruncated scores, which come back unordered. */
+  private val untruncated: Seq[(String, IndexSearch => DataFrame)] = Seq(
+    ("phraseScores", _.reader.phraseScores(Seq("of", "the"), 1)),
+    ("phrasePrefixScores", _.phrasePrefixScores(Seq("the", "w0"), 1, 8)))
+
   test("every top-k entry point returns identical rows on both routes") {
     val (d, x) = (new IndexSearch(spark, onDriver), new IndexSearch(spark, distributed))
     val deleted = onDriver.deletedSorted.toSet
-    // (entry point, query, whether the call returns the route's own frame)
-    val cases: Seq[(String, IndexSearch => DataFrame, Boolean)] = Seq(
-      ("topK", _.reader.topK(Seq("w00002", "w00005", "the", "w00300"), 25), true),
-      ("phraseTopK", _.reader.phraseTopK(Seq("the", "of"), 20), true),
-      ("phraseTopK slop", _.reader.phraseTopK(Seq("of", "the"), 20, slop = 2), true),
-      ("boolTopK", _.boolTopK(Seq("the"), Seq("w00002", "w00007"), Seq("w00004"),
-        20, minShouldMatch = 1), true),
-      ("searchAfter", _.searchAfter(Seq("the", "w00002"), 1.5, 100L, 15), true),
-      ("fuzzyTopK", _.fuzzyTopK(Seq("w0002"), 15), true),
-      ("moreLikeThisTopK", _.moreLikeThisTopK(17L, 8, 12), true),
-      ("prefixTopK", _.prefixTopK("w001", 15, maxExpansions = 6), true),
-      ("wildcardTopK", _.wildcardTopK("w0*3", 15), true),
-      ("regexpTopK", _.regexpTopK("w0000[1-4]", 15), true),
-      ("synonymTopK", _.synonymTopK(Seq("w00002"), Map("w00002" -> Seq("w00009")), 15), true),
-      ("disMaxTopK", _.disMaxTopK(Seq("the", "w00002", "w00011"), 0.3, 20), true),
-      ("boostedTopK", _.boostedTopK(Seq("the" -> 0.5, "w00002" -> 2.0), 20), true),
-      ("phrasePrefixTopK", _.phrasePrefixTopK(Seq("the", "w0"), 20, slop = 1,
-        maxExpansions = 8), true),
-      ("queryStringTopK", _.queryStringTopK(qsQuery, 20), true),
-      ("rescoreTopK", _.rescoreTopK(Seq("the", "w00002"), Seq("the", "of"), 1, 30, 10), false),
-      ("topKWithSnippets", _.topKWithSnippets(Seq("w00002", "w00005"), 10, 6), false),
-      ("topHits", _.topHits(Seq("the", "w00002"), "lang", 3, 5), false),
-      ("fieldValueFactorTopK", s => s.fieldValueFactorTopK(Seq("the", "w00002"),
-        s.docsMeta.select(col("docId"), length(col("url")).as("n")), "n", 0.01,
-        "ln1p", 20), false),
-      // one index paired with itself is docId-aligned
-      ("multiMatchTopK", s => IndexSearch.multiMatchTopK(Seq(s -> 2.0, s -> 1.0),
-        Seq("the", "w00002"), 20, "best_fields", 0.3), false))
     for ((name, q, routed) <- cases) {
       val (a, b) = (q(d), q(x))
       if (routed) {
@@ -96,10 +103,7 @@ class ServedRoutesSpec extends AnyFunSuite {
       assert(ra == rb, s"$name: routes diverged\n driver=$ra\n distributed=$rb")
       assert(!ra.exists(r => deleted(r._1)), s"$name: a tombstoned doc came back")
     }
-    // the untruncated scores come back unordered: compare them as sets
-    val untruncated: Seq[(String, IndexSearch => DataFrame)] = Seq(
-      ("phraseScores", _.reader.phraseScores(Seq("of", "the"), 1)),
-      ("phrasePrefixScores", _.phrasePrefixScores(Seq("the", "w0"), 1, 8)))
+    // the untruncated scores: compare them as sets
     for ((name, q) <- untruncated) {
       val (a, b) = (q(d), q(x))
       assert(isLocal(a), s"$name: the driver route planned a distributed scan")
@@ -173,10 +177,51 @@ class ServedRoutesSpec extends AnyFunSuite {
       val (n, avgdl) = (r.globals.n, r.globals.avgdl)
       df => IndexReader.shardTopK(n, avgdl, 5, df, null)
     }
-    assert(r.routedScores(both, bothBytes)(kernel).isLeft)
+    assert(r.routedScores(Seq("the", "of"), false, bothBytes)(kernel).isLeft)
     // "the" alone fits the bound; with "of" added the query does not
-    assert(r.routedScores(one, oneBytes)(kernel).isLeft)
-    assert(r.routedScores(both, oneBytes)(kernel).isRight)
+    assert(r.routedScores(Seq("the"), false, oneBytes)(kernel).isLeft)
+    assert(r.routedScores(Seq("the", "of"), false, oneBytes)(kernel).isRight)
+    // the first call filled the store and the other two hit it: resident
+    // terms over the bound still take the distributed route
+    val c = r.storeCounters
+    assert(c.misses == 1 && c.hits == 2 && c.residentBytes == bothBytes, c)
+  }
+
+  test("a warm reader serves every routed entry point as cold, and as the distributed route") {
+    val x = new IndexSearch(spark, distributed)
+    val all = cases.map(c => (c._1, c._2, false)) ++
+      untruncated.map { case (name, q) => (name, q, true) }
+    for ((name, q, unordered) <- all) {
+      def get(s: IndexSearch) = if (unordered) rows(q(s)).sorted else rows(q(s))
+      // a fresh reader per entry point, so the first call reads postings
+      val warm = new IndexSearch(spark, new IndexReader(spark, dir, Long.MaxValue))
+      val cold = get(warm)
+      val before = warm.reader.storeCounters
+      val again = get(warm)
+      val after = warm.reader.storeCounters
+      assert(before.misses > 0, s"$name: the first call found its postings resident")
+      assert(after.hits > before.hits && after.misses == before.misses,
+        s"$name: the second call read postings\n before=$before\n after=$after")
+      assert(cold.nonEmpty, s"$name: no rows")
+      assert(again == cold, s"$name: warm diverged from cold\n cold=$cold\n warm=$again")
+      assert(again == get(x), s"$name: warm diverged from the distributed route")
+    }
+    assert(distributed.storeCounters.entries == 0)
+  }
+
+  test("a warm reader keeps its snapshot; a reader opened after a delete drops the deletes") {
+    val copy = TestSpark.tmpDir("graft-idx-routes-del")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir), new java.io.File(copy))
+    val q: IndexSearch => DataFrame = _.boolTopK(Nil, Seq("the", "w00002"), Nil, 1000)
+    val warm = new IndexSearch(spark, new IndexReader(spark, copy))
+    val before = rows(q(warm))
+    assert(rows(q(warm)) == before && warm.reader.storeCounters.hits == 1)
+    val gone = before.map(_._1).take(5)
+    IncrementalIndex.deleteDocs(spark, copy, gone.toDF("docId"))
+    assert(rows(q(warm)) == before, "a warm reader saw a delete made after it opened")
+    val reopened = rows(q(new IndexSearch(spark, new IndexReader(spark, copy))))
+    assert(reopened == before.filterNot(r => gone.contains(r._1)))
+    assert(reopened == rows(q(new IndexSearch(spark, new IndexReader(spark, copy, -1L)))))
   }
 
   test("positions are only read for the phrase kernels") {
