@@ -34,8 +34,9 @@ final case class SegmentRead(
   * ([[readPostings]]): one job over the bucket-pruned rows in which every
   * scan task returns the terms' per-generation dfs and posting bytes, and
   * its rows while they fit its share of a bound. The routed queries read
-  * at the route bound ([[routedScores]]); [[loadCache]] and `_explain`
-  * read at a zero bound, which sizes the terms and returns no rows. A
+  * at the route bound ([[routedScores]]); [[loadCache]] (and `_explain`
+  * when the dictionary is not resident) read at a zero bound, which sizes
+  * the terms and returns no rows. A
   * routed query's total posting bytes pick its route:
   *  - at most `maxDriverBytes` (default [[IndexReader.DefaultMaxBytesPerTerm]],
   *    applied to the whole query): the same kernel runs per shard on the
@@ -44,10 +45,16 @@ final case class SegmentRead(
   *    the executors and a TakeOrdered merges the candidates
   *    ([[shardCandidates]] — the one shard fan-out).
   * The rows a driver-route read returns fill the reader's posting store
-  * ([[PostingStore]], an LRU of per-term rows and merged dfs within
-  * `maxDriverBytes` in total). A routed query whose terms are all resident
-  * skips the read: on the driver route it runs no job at all. The store
-  * caches postings, never results, and never changes a route.
+  * ([[PostingStore]], an LRU within `maxDriverBytes` in total). A routed
+  * query whose terms are all resident skips the read: on the driver route
+  * it runs no job at all. The same store holds two more kinds under the
+  * same bound, each loaded in one job by the same bounded-collect rule:
+  * one docs column's doc values ([[docValues]], for facet counts on the
+  * driver) and the merged dictionary ([[dictionary]], the dfs of
+  * term vectors, more-like-this and `_explain`). A load that overflows is
+  * remembered for the reader's life, and those calls take their Spark
+  * plans. The store caches postings, doc values and dfs, never results,
+  * and never changes a route.
   * The kernels are shared, so both routes return identical rows. The
   * public constructor fixes the bound; the package-private one lets specs
   * and the plan dump pin a route. Reads prune to the query terms' hash
@@ -180,14 +187,85 @@ final class IndexReader private[graft] (spark: SparkSession,
   }
 
   /** This reader's posting store: the merged postings of terms read on
-    * the driver route, within `maxDriverBytes` in total, so the store of a
-    * reader pinned to the distributed route stays empty. The reader is a
-    * snapshot and the kernels apply the tombstones, so entries never go
-    * stale. */
+    * the driver route, the doc values and the merged dictionary, within
+    * `maxDriverBytes` in total, so the store of a reader pinned to the
+    * distributed route stays empty. The reader is a snapshot and the
+    * kernels apply the tombstones, so entries never go stale. */
   private[query] val store = new PostingStore(maxDriverBytes)
 
   /** The posting store's hits, misses, evictions and resident bytes. */
   def storeCounters: StoreCounters = store.counters
+
+  /** What a doc-values or dictionary load overflowed: the reader is a
+    * snapshot, so a retry would overflow again and those calls take their
+    * Spark plans without one. */
+  private val overflowed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** `find` when resident, else `load` (one job) when the reader stores
+    * anything and `what` never overflowed; None when neither applies or
+    * the load overflows, which is then remembered. */
+  private def resident[R](what: String, find: => Option[R])(load: => Option[R])
+      : Option[R] =
+    if (store.capacity <= 0 || overflowed.contains(what)) None
+    else find.orElse {
+      val r = load
+      if (r.isEmpty) overflowed.add(what)
+      r
+    }
+
+  /** `rdd`'s rows on the driver in one job under the [[readPostings]]
+    * rule: each task returns its rows only while their `bytes` fit
+    * `maxDriverBytes / <partitions>`; None when some task overflowed. */
+  private def boundedCollect[T: scala.reflect.ClassTag](rdd: org.apache.spark.rdd.RDD[T])(
+      bytes: T => Long): Option[Array[T]] = {
+    // locals only: the task closure must not capture the reader
+    val share = maxDriverBytes / math.max(1, rdd.getNumPartitions)
+    val tasks = rdd.mapPartitions(rows =>
+      Iterator(IndexReader.keepTask(rows, share)(bytes))).collect()
+    if (tasks.contains(null)) None else Some(tasks.flatten)
+  }
+
+  /** The resident doc values of `column`: on a miss, `frame` (docId,
+    * column) over every generation is read in one bounded job
+    * ([[boundedCollect]]) and stored sorted by docId. None when the reader
+    * stores nothing or the column overflowed its bound. */
+  private[query] def docValues(column: String, frame: => DataFrame)
+      : Option[PostingStore.DocValues] =
+    resident(s"docvalues:$column", store.docValues(column)) {
+      val df = frame
+      boundedCollect(df.rdd.map(r => (r.getLong(0), r.get(1))))(
+        IndexReader.docValueBytes).map { rows =>
+        val sorted = rows.sortBy(_._1)
+        // one object per distinct value: a facet column repeats a few values
+        val distinct = new java.util.HashMap[Any, Any]()
+        val values = sorted.map { case (_, v) =>
+          val seen = distinct.putIfAbsent(v, v)
+          if (seen == null) v else seen
+        }
+        val dv = PostingStore.DocValues(sorted.map(_._1), values,
+          df.schema(1), rows.iterator.map(IndexReader.docValueBytes).sum)
+        store.insert(column, dv)
+        dv
+      }
+    }
+
+  /** The resident merged dictionary, `term → df` summed across
+    * generations (the [[IndexSearch.termStats]] rule): on a miss, every
+    * generation's termstats (term, df) is read in one bounded job
+    * ([[boundedCollect]]). None when the reader stores nothing or the
+    * dictionary overflowed its bound. */
+  private[query] def dictionary: Option[PostingStore.Dictionary] =
+    resident("dictionary", store.dictionary) {
+      val rows = termstatsTables.map(_.select("term", "df"))
+        .reduce(_.unionByName(_)).rdd.map(r => (r.getString(0), r.getLong(1)))
+      boundedCollect(rows)(IndexReader.termBytes).map { rs =>
+        val dfs = rs.groupMapReduce(_._1)(_._2)(_ + _)
+        val d = PostingStore.Dictionary(dfs,
+          dfs.iterator.map(IndexReader.termBytes).sum)
+        store.insert(d)
+        d
+      }
+    }
 
   /** The route choice behind every routed query over `terms` (positions
     * only when `positions`). The rule is the whole query's posting bytes:
@@ -458,6 +536,36 @@ object IndexReader {
     }
     (meta.toArray, if (kept == null) null else kept.result())
   }
+
+  /** One task of a doc-values or dictionary load: its rows while their
+    * running `bytes` stay within `share`, else null (it stops at the first
+    * row over). */
+  private def keepTask[T: scala.reflect.ClassTag](rows: Iterator[T],
+      share: Long)(bytes: T => Long): Array[T] = {
+    val kept = Array.newBuilder[T]
+    var held = 0L
+    while (rows.hasNext) {
+      val r = rows.next()
+      held += bytes(r)
+      if (held > share) return null
+      kept += r
+    }
+    kept.result()
+  }
+
+  private def utf8Bytes(s: String): Long =
+    org.apache.spark.unsafe.types.UTF8String.fromString(s).numBytes
+
+  /** A doc value's bytes: 8 for the docId plus the value's payload (its
+    * UTF-8 bytes for a string, 8 otherwise, 0 for null). */
+  private def docValueBytes(row: (Long, Any)): Long = 8L + (row._2 match {
+    case null => 0L
+    case s: String => utf8Bytes(s)
+    case _ => 8L
+  })
+
+  /** A dictionary row's bytes: the term's UTF-8 bytes plus 8 for its df. */
+  private def termBytes(row: (String, Long)): Long = utf8Bytes(row._1) + 8L
 
   /** Run `kernel` over each shard's rows on the driver. */
   private[query] def onDriver(rows: Array[SegmentRead], kernel: ShardKernel)

@@ -3,6 +3,7 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.analyze.Analyzer
 import graft.index.PForDelta
@@ -37,8 +38,12 @@ import graft.index.PForDelta
   *  - dictionaries (fuzzy expansion, suggesters) come from the index's
   *    termstats/ table — (term, df, total_tf), vocabulary-sized;
   *  - more-like-this term selection reads the source document's row slice
-  *    of the tf/ artifact (predicate-pushed scan), not a corpus tokenize;
-  *  - facet match sets are decoded docIds joined to the docs/ metadata.
+  *    of the tf/ artifact (predicate-pushed scan), not a corpus tokenize,
+  *    with dfs from the reader's resident dictionary when it fits the
+  *    store ([[IndexReader.dictionary]]);
+  *  - facet match sets are decoded docIds, counted on the driver over
+  *    resident doc values ([[IndexReader.docValues]]) or joined to the
+  *    docs/ metadata in Spark.
   *
   * Rank identity with the brute-force forms (IndexSearchSpec pins it):
   * per-(term, doc) scores use the exact [[Bm25.score]] arithmetic the
@@ -226,17 +231,26 @@ final class IndexSearch(spark: SparkSession,
 
   /** More-like-this term selection from the INDEX: the source doc's
     * [[termVectors]] ranked (tf desc, df asc, term asc), first `m` —
-    * identical to [[Search.moreLikeThisTerms]]. At serving scale, bucket
-    * the tf artifact by docId to make this lookup partition-pruned too. */
+    * identical to [[Search.moreLikeThisTerms]]. With the merged dictionary
+    * resident ([[IndexReader.dictionary]]) the doc's tf slice is the one
+    * job and the ranking runs on the driver (terms in Spark's UTF-8 binary
+    * order); otherwise the slice joins [[termStats]] in Spark. At serving
+    * scale, bucket the tf artifact by docId to make this lookup
+    * partition-pruned too. */
   def moreLikeThisTerms(docId: Long, m: Int): DataFrame =
-    termVectors(docId).orderBy(desc("tf"), col("df"), col("term")).limit(m)
+    residentVectors(docId).fold(mltPlan(docId, m))(
+      IndexSearch.mltHead(_, m).toSeq.toDF("term", "tf", "df"))
+
+  private def mltPlan(docId: Long, m: Int): DataFrame =
+    termVectorsPlan(docId).orderBy(desc("tf"), col("df"), col("term")).limit(m)
 
   /** More-like-this top-k served from the index; source doc excluded
     * inside the shard kernel (before per-shard selection, exactly like the
     * brute form's pre-rank filter). */
   def moreLikeThisTopK(docId: Long, m: Int, k: Int): DataFrame = {
-    val terms = moreLikeThisTerms(docId, m)
-      .select("term").as[String].collect().toSeq.sorted
+    val terms = residentVectors(docId)
+      .fold(mltPlan(docId, m).select("term").as[String].collect().toSeq)(
+        IndexSearch.mltHead(_, m).map(_._1).toSeq).sorted
     if (terms.isEmpty) noScores
     else boolTopK(Nil, terms, Nil, k, excludeDocId = docId)
   }
@@ -275,12 +289,34 @@ final class IndexSearch(spark: SparkSession,
   }
 
   /** Facet counts over the full match set (OpenSearch `terms` agg beside
-    * a query): postings-decoded docIds semi-join the docs/ metadata — the
-    * corpus text is never read. Semantics identical to [[Search.facets]]. */
+    * a query): (facetCol, doc_count), the column typed as in docs/, null
+    * values their own bucket. When `facetCol`'s doc values are resident
+    * ([[IndexReader.docValues]]) and the match set's postings take the
+    * driver route, the count runs on the driver over the match kernel's
+    * docIds ([[IndexSearch.shardMatches]]) — on a warm reader with no
+    * Spark job. Otherwise postings-decoded docIds semi-join the docs/
+    * metadata in Spark. The corpus text is never read. Semantics
+    * identical to [[Search.facets]]. */
   def facets(queryTerms: Seq[String], facetCol: String): DataFrame =
-    matchedRows(docsMeta, queryTerms)
-      .groupBy(col(facetCol))
-      .agg(count(lit(1)).as("doc_count"))
+    reader.docValues(facetCol, docsMeta.select(col("docId"), col(facetCol)))
+      .flatMap(dv => matchedIds(queryTerms).map(ids =>
+        spark.createDataFrame(java.util.Arrays.asList(IndexSearch.facetCounts(dv, ids): _*),
+          StructType(Seq(dv.field, StructField("doc_count", LongType, nullable = false))))))
+      .getOrElse(matchedRows(docsMeta, queryTerms)
+        .groupBy(col(facetCol))
+        .agg(count(lit(1)).as("doc_count")))
+
+  /** The docIds matching any query term, on the driver, from the routed
+    * postings read with the match kernel ([[IndexSearch.shardMatches]]);
+    * None when the read takes the distributed route. */
+  private def matchedIds(queryTerms: Seq[String]): Option[Array[Long]] = {
+    val del = reader.deletedBc
+    reader.routedScores(norm(queryTerms).distinct.sorted, positions = false,
+      reader.maxDriverBytes)(_ => IndexSearch.shardMatches(del.value)) match {
+      case Left(ids) => Some(ids.map(_.docId))
+      case Right(_) => None
+    }
+  }
 
   /** Prefix query (OpenSearch `prefix`/leading-`*`-less `wildcard`):
     * expansion comes from the index's termstats/ dictionary — ascending
@@ -302,14 +338,18 @@ final class IndexSearch(spark: SparkSession,
     * with the exact [[Bm25]] arithmetic the scorers use, so the sum of
     * `contribution` IS the doc's ranking score. Reads the doc's tf rows
     * (docId predicate pushed into the Parquet scan) and the terms' merged
-    * df — from the reader's posting store when every term is resident,
-    * else from the one postings read at a zero row share
-    * ([[IndexReader.readPostings]]: no positions, no rows to the driver)
-    * — never the corpus. */
+    * df — from the resident dictionary ([[IndexReader.dictionary]]; a
+    * cold reader loads it in one job), else from the posting store when
+    * every term is resident, else from the one postings read at a zero
+    * row share ([[IndexReader.readPostings]]: no positions, no rows to
+    * the driver) — never the corpus. */
   def explainScore(docId: Long, queryTerms: Seq[String]): DataFrame = {
     val terms = norm(queryTerms).distinct.sorted
-    val dfByTerm = reader.store.dfs(terms).getOrElse(reader.readPostings(
-      reader.segmentsFor(terms, positions = false), 0L).dfByTerm)
+    val dfByTerm = reader.dictionary
+      .map(d => terms.map(t => t -> d.dfs.getOrElse(t, 0L)).toMap)
+      .orElse(reader.store.dfs(terms))
+      .getOrElse(reader.readPostings(
+        reader.segmentsFor(terms, positions = false), 0L).dfByTerm)
     val (n, avgdl) = (reader.globals.n, reader.globals.avgdl)
     // dl rides every tf row (denormalized at build time)
     val docRows = IndexSearch.union(reader.tfTables, "docId", "term", "tf", "dl")
@@ -340,15 +380,31 @@ final class IndexSearch(spark: SparkSession,
     }.toDF("gen", "docs", "terms", "sum_dl")
 
   /** Term vectors (OpenSearch `_termvectors`): one row per term of one
-    * document — (term, tf, df) from the tf artifact (docId predicate
-    * pushed) joined to the termstats dictionary. */
-  def termVectors(docId: Long): DataFrame = {
-    val tf = IndexSearch.union(reader.tfTables, "docId", "term", "tf")
+    * document — (term, tf, df), tf from the tf artifact (docId predicate
+    * pushed). With the merged dictionary resident
+    * ([[IndexReader.dictionary]]) the dfs come from it and the tf slice is
+    * the one job; otherwise the slice joins the [[termStats]] dictionary
+    * in Spark. */
+  def termVectors(docId: Long): DataFrame =
+    residentVectors(docId).fold(termVectorsPlan(docId))(_.toSeq.toDF("term", "tf", "df"))
+
+  private def termVectorsPlan(docId: Long): DataFrame =
+    docTerms(docId).join(termStats.select("term", "df"), "term")
+      .select("term", "tf", "df")
+
+  /** One doc's (term, tf) slice of the tf artifact. */
+  private def docTerms(docId: Long): DataFrame =
+    IndexSearch.union(reader.tfTables, "docId", "term", "tf")
       .filter(col("docId") === docId)
       .select("term", "tf")
-    tf.join(termStats.select("term", "df"), "term")
-      .select("term", "tf", "df")
-  }
+
+  /** The doc's (term, tf, df) rows on the driver, dfs from the resident
+    * dictionary; None when it is not resident. */
+  private def residentVectors(docId: Long): Option[Array[(String, Long, Long)]] =
+    reader.dictionary.map { d =>
+      docTerms(docId).as[(String, Long)].collect()
+        .flatMap { case (t, tf) => d.dfs.get(t).map((t, tf, _)) }
+    }
 
   /** Wildcard query (OpenSearch `wildcard`, `*` = any run): full-term
     * glob against the termstats/ dictionary via LIKE (anchored both
@@ -642,7 +698,10 @@ final class IndexSearch(spark: SparkSession,
     val prefix = Analyzer.lowerLikeCatalyst(phrase.last)
     val expansion = firstTerms(col("term").startsWith(prefix), maxExpansions)
     if (expansion.isEmpty) return None
-    val dfUnion = matchingDocIds(expansion).count()
+    // the visible docs holding any expansion: the match kernel's docIds
+    // on the driver route, a distinct count in Spark on the distributed one
+    val dfUnion = matchedIds(expansion).fold(matchingDocIds(expansion).count())(
+      _.length.toLong)
     val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
     Some(((exact ++ expansion).distinct, dfByTerm =>
       Phrase.shardPrefixScores(avgdl, exact, expansion,
@@ -763,6 +822,41 @@ object IndexSearch {
     }
     Search.combineFields(per, k, matchType, tieBreaker)
   }
+
+  /** The match kernel: one shard's distinct visible docIds holding any of
+    * its rows' terms, ascending (score 0). Gaps only — no tf/dl decode. A
+    * shard is a docId range, so no docId comes from two shards. */
+  private[query] def shardMatches(deleted: Array[Long])(shard: Long,
+      rows: Iterator[SegmentRead]): Iterator[Scored] = {
+    val ids = rows.flatMap(r => PForDelta.decodeGaps(r.gaps, r.n, r.firstDocId))
+      .filter(id => !IndexReader.isDeleted(deleted, id)).toArray
+    java.util.Arrays.sort(ids)
+    ids.iterator.zipWithIndex
+      .collect { case (id, i) if i == 0 || ids(i - 1) != id => Scored(id, 0.0) }
+  }
+
+  /** One facet row (value, doc_count) per value the matched docIds hold
+    * in `dv` — null values are their own bucket, as `groupBy` makes
+    * them — in first-seen order. */
+  private[query] def facetCounts(dv: PostingStore.DocValues, ids: Array[Long])
+      : Seq[org.apache.spark.sql.Row] = {
+    import scala.jdk.CollectionConverters._
+    // a java map: null is a key like any other
+    val counts = new java.util.LinkedHashMap[Any, Long]()
+    ids.foreach { id =>
+      val i = java.util.Arrays.binarySearch(dv.docIds, id)
+      if (i >= 0) counts.put(dv.values(i), counts.getOrDefault(dv.values(i), 0L) + 1L)
+    }
+    counts.asScala.iterator.map { case (v, c) => org.apache.spark.sql.Row(v, c) }.toSeq
+  }
+
+  /** More-like-this's first `m` (term, tf, df) rows by (tf desc, df asc,
+    * term asc), terms in Spark's UTF-8 binary order
+    * (`UTF8String.compare`), as the plan's `orderBy` sorts them. */
+  private[query] def mltHead(rows: Array[(String, Long, Long)], m: Int)
+      : Array[(String, Long, Long)] =
+    rows.sortBy(r => (-r._2, r._3,
+      org.apache.spark.unsafe.types.UTF8String.fromString(r._1))).take(m)
 
   /** Spark's `round(x, 4)`: BigDecimal HALF_UP — the rounding every brute
     * form and DuckDB oracle applies before ranking. */

@@ -77,7 +77,11 @@ object ExplainDump {
     val idxSearch = new graft.query.IndexSearch(spark, reader)
     // a route bound of -1 plans the distributed route, which queries over
     // 64 MiB of postings take; smaller ones collect the segment scan above
-    // and run the same shard kernel on the driver
+    // and run the same shard kernel on the driver. The same reader stores
+    // no doc values and no dictionary, so mlt's term selection and facets
+    // show the Spark plans a reader takes when those overflow its bound
+    val distSearch = new graft.query.IndexSearch(spark,
+      new graft.query.IndexReader(spark, s"$work/idx", -1L))
     dump("Index-served bool query (must/should/mustNot, top-15)",
       "Round-5 serving path: the r4 verdict's brute `Search.boolTopK` " +
         "re-tokenized the corpus per query. Distributed route (a query " +
@@ -86,9 +90,7 @@ object ExplainDump {
         "`PushedFilters: [In(term, …)]` — no scan of docs/ anywhere; one " +
         "shard fan-out Exchange (groupByKey(shard) → dense-array scorer); " +
         "`TakeOrderedAndProject` over shards×k candidate rows.",
-      new graft.query.IndexSearch(spark,
-        new graft.query.IndexReader(spark, s"$work/idx", -1L))
-        .boolTopK(Seq("w00001"), Seq("the"), Seq("w00004"), 15))
+      distSearch.boolTopK(Seq("w00001"), Seq("the"), Seq("w00004"), 15))
 
     dump("Index-served more-like-this term selection",
       "Look for: the source doc's terms come from the tf/ artifact with " +
@@ -96,14 +98,14 @@ object ExplainDump {
         "pruning; bucket the artifact by docId at serving scale for " +
         "partition pruning) joined to the vocabulary-sized termstats/ " +
         "aggregate — the corpus text is never read.",
-      idxSearch.moreLikeThisTerms(17L, 8))
+      distSearch.moreLikeThisTerms(17L, 8))
 
     dump("Index-served facets over the match set",
       "Look for: postings scan (bucket-pruned, term-pushed) decoded to " +
         "docIds, ONE distinct exchange sized by the match set, a LeftSemi " +
         "join against docs/ metadata whose ReadSchema carries only " +
         "(docId, lang) — the text column never leaves the Parquet footer.",
-      idxSearch.facets(Seq("w00002", "w00005"), "lang"))
+      distSearch.facets(Seq("w00002", "w00005"), "lang"))
 
     dump("Index-served fuzzy/suggest dictionary (termstats)",
       "Look for: the expansion dictionary is the termstats/ scan (term, " +
@@ -769,8 +771,9 @@ object ExplainDump {
           inputs = Map("panw" -> panw)).head.df)
     }
 
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
-    println(s"wrote /root/repo/PLANS.md (${sb.length} chars)")
+    val out = Paths.get("PLANS.md").toAbsolutePath
+    Files.writeString(out, sb.toString)
+    println(s"wrote $out (${sb.length} chars)")
     spark.stop()
   }
 }

@@ -110,13 +110,40 @@ class IndexSearchSpec extends AnyFunSuite {
     assert(served == brute)
   }
 
+  test("driver-side facet counts and mlt ranking agree with Spark's groupBy and orderBy") {
+    // U+FF01 sorts after U+1F600 in UTF-16 (String.compareTo) and before it
+    // in UTF-8 bytes, the order Spark sorts strings in
+    val tv = Array(("！", 2L, 5L), ("😀", 2L, 5L), ("b", 2L, 5L),
+      ("a", 2L, 7L), ("c", 3L, 9L), ("d", 1L, 1L))
+    for (m <- 1 to tv.length) {
+      val viaSpark = tv.toSeq.toDF("term", "tf", "df")
+        .orderBy(desc("tf"), col("df"), col("term")).limit(m)
+        .as[(String, Long, Long)].collect().toSeq
+      assert(IndexSearch.mltHead(tv, m).toSeq == viaSpark, s"m = $m")
+    }
+    val field = org.apache.spark.sql.types.StructField("lang",
+      org.apache.spark.sql.types.StringType)
+    val dv = PostingStore.DocValues(Array(1L, 3L, 4L, 6L, 9L),
+      Array("en", null, "de", null, "en"), field, 0L)
+    val ids = Array(9L, 1L, 3L, 6L, 7L)
+    val viaSpark = Seq((1L, "en"), (3L, null), (4L, "de"), (6L, null), (9L, "en"))
+      .toDF("docId", "lang").join(ids.toSeq.toDF("docId"), Seq("docId"), "left_semi")
+      .groupBy("lang").agg(count(lit(1)).as("doc_count"))
+      .as[(String, Long)].collect().toSet
+    assert(IndexSearch.facetCounts(dv, ids).map(r => (r.getString(0), r.getLong(1))).toSet ==
+      viaSpark)
+    assert(viaSpark == Set(("en", 2L), (null, 2L)))
+  }
+
   test("served plans read postings/termstats/tf — never the corpus text") {
     // a served bool executes one of two plans: the segment scan the
     // driver route collects, or the distributed route's shard fan-out
     val driverScan = search.reader.segmentsFor(Seq("the", "w00002", "w00004"),
       positions = false)
-    val fanOut = new IndexSearch(spark, new IndexReader(spark, indexDir, -1L))
-      .boolTopK(Seq("the"), Seq("w00002"), Seq("w00004"), 10)
+    // the distributed reader stores no dictionary or doc values, so mlt and
+    // facets plan in Spark there; the driver reader answers them locally
+    val distributed = new IndexSearch(spark, new IndexReader(spark, indexDir, -1L))
+    val fanOut = distributed.boolTopK(Seq("the"), Seq("w00002"), Seq("w00004"), 10)
     for (boolPlan <- Seq(driverScan.queryExecution.executedPlan.toString,
         fanOut.queryExecution.executedPlan.toString)) {
       assert(boolPlan.contains("postings"), "bool must scan the segment store")
@@ -125,12 +152,12 @@ class IndexSearchSpec extends AnyFunSuite {
       assert(boolPlan.contains("PartitionFilters") && boolPlan.contains("bucket"),
         s"no bucket partition pruning in:\n$boolPlan")
     }
-    val mltPlan = search.moreLikeThisTerms(17L, 8)
+    val mltPlan = distributed.moreLikeThisTerms(17L, 8)
       .queryExecution.executedPlan.toString
     assert(mltPlan.contains("/tf") && !mltPlan.contains("/docs"))
     assert(mltPlan.contains("PushedFilters") && mltPlan.contains("docId"),
       s"mlt docId predicate not pushed:\n$mltPlan")
-    val facetPlan = search.facets(Seq("w00002"), "lang")
+    val facetPlan = distributed.facets(Seq("w00002"), "lang")
       .queryExecution.executedPlan.toString
     assert(facetPlan.contains("postings") && facetPlan.contains("/docs"))
     // the docs side of the facet join prunes the text column away

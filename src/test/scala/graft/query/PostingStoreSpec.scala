@@ -6,10 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.SplitMix64
 
-/** The posting store's invariants, pure Scala (no Spark): resident bytes
-  * within capacity, least-recently-used eviction, distinct
-  * (term, positions) keys, df-0 entries, and the same under concurrent
-  * lookups and inserts. A randomized run is checked against a small list
+/** The posting store's invariants, pure Scala (no Spark jobs): resident
+  * bytes within capacity, least-recently-used eviction, distinct
+  * (term, positions) keys, df-0 entries, one capacity and one LRU order
+  * across postings, doc values and the dictionary, and the same under
+  * concurrent lookups and inserts. A randomized run is checked against a small list
   * model of the LRU order. */
 class PostingStoreSpec extends AnyFunSuite {
   import PostingStore.{Entry, Key}
@@ -98,6 +99,41 @@ class PostingStoreSpec extends AnyFunSuite {
       none.insert(("t", false), entry(1L, 1L))
       assert(none.counters.entries == 0)
     }
+  }
+
+  test("postings, doc values and the dictionary share one capacity and one LRU order") {
+    import PostingStore.{DocValues, Dictionary}
+    val field = org.apache.spark.sql.types.StructField("lang",
+      org.apache.spark.sql.types.StringType)
+    def docValues(bytes: Long) = DocValues(Array(1L, 2L), Array("en", null), field, bytes)
+    val store = new PostingStore(30L)
+    store.insert(("a", false), entry(1L, 10L))
+    store.insert("lang", docValues(10L))
+    store.insert(Dictionary(Map("a" -> 1L), 10L))
+    val full = store.counters
+    assert(full.residentBytes == 30L && full.entries == 3 && full.postingBytes == 10L &&
+      full.docValueBytes == 10L && full.dictionaryBytes == 10L, full)
+    // the postings entry is the most recent, so the doc values go first
+    assert(store.lookup(Seq(("a", false))).isDefined)
+    store.insert(("b", false), entry(1L, 10L))
+    assert(store.docValues("lang").isEmpty && store.docValues("url").isEmpty)
+    assert(store.dictionary.exists(_.dfs == Map("a" -> 1L)))
+    // a bigger dictionary replaces the old one and evicts the least recent
+    // postings entry ("a") to fit
+    store.insert(Dictionary(Map("a" -> 1L, "b" -> 2L), 20L))
+    assert(store.lookup(Seq(("a", false))).isEmpty && store.lookup(Seq(("b", false))).isDefined)
+    val c = store.counters
+    assert(c.residentBytes == 30L && c.entries == 2 && c.postingBytes == 10L &&
+      c.docValueBytes == 0L && c.dictionaryBytes == 20L && c.evictions == 2, c)
+    assert(c.hits == 3 && c.misses == 3, c)
+    // doc values over the capacity never enter
+    store.insert("url", docValues(31L))
+    assert(store.docValues("url").isEmpty && store.counters.entries == 2)
+    // a store without capacity holds no kind
+    val none = new PostingStore(0L)
+    none.insert("lang", docValues(1L))
+    none.insert(Dictionary(Map.empty, 0L))
+    assert(none.counters.entries == 0)
   }
 
   test("4 threads of concurrent lookups and inserts keep the invariants") {

@@ -1,9 +1,5 @@
 package graft.query
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusSync
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, length}
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,13 +12,15 @@ import graft.index.{IndexBuilder, IndexParams}
   * The reader resolves its tables once, so a call pays only its own work:
   * on a fresh reader (an empty posting store), one job for a routed read,
   * which sizes the query and returns its rows together
-  * ([[IndexReader.readPostings]]); the serving-cache load and `_explain`
-  * size their terms with that same read. On a warm reader a routed read
-  * whose terms are all in the posting store runs no job. A
-  * schema-inference job, a separate metadata pass or a skipped store
-  * lookup creeping into a call fails here. Counted with adaptive
-  * execution off, as the benchmark runs, so each count is the plan's own
-  * job structure. */
+  * ([[IndexReader.readPostings]]), and one job for each doc-values column
+  * or dictionary load; the serving-cache load sizes its terms with that
+  * same read. On a warm reader a routed read whose terms are all in the
+  * posting store runs no job, facets count over resident doc values, and
+  * mlt, term vectors and `_explain` take their dfs from the resident
+  * dictionary. A schema-inference job, a separate metadata pass or a
+  * skipped store lookup creeping into a call fails here. Counted with
+  * adaptive execution off, as the benchmark runs, so each count is the
+  * plan's own job structure. */
 class ServedJobsSpec extends AnyFunSuite {
   import SyntheticCorpus.{Stopwords => sw, term => t}
 
@@ -46,32 +44,7 @@ class ServedJobsSpec extends AnyFunSuite {
     new IndexSearch(spark, r)
   }
 
-  /** Jobs started by `f` on this thread (job group `group`). */
-  private def jobs(group: String)(f: => Unit): Int = {
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try f finally {
-      sc.clearJobGroup()
-      ListenerBusSync.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get()
-  }
-
-  private def withoutAqe[T](f: => T): T = {
-    val conf = spark.conf
-    val aqe = conf.get("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try f finally conf.set("spark.sql.adaptive.enabled", aqe)
-  }
+  import SparkJobs.{count => jobs, withoutAqe}
 
   /** (name, call, jobs on a fresh reader, jobs on the second call). A
     * call gets two searches over separate readers, so multi_match's two
@@ -80,12 +53,13 @@ class ServedJobsSpec extends AnyFunSuite {
     ("bool", (s, _) => s.boolTopK(Seq(sw(1)), Seq(t(3)), Seq(t(60)), 10), 1, 0),
     ("dis_max", (s, _) => s.disMaxTopK(Seq(t(2), t(30), t(300)), 0.3, 10), 1, 0),
     ("phrase", (s, _) => s.reader.phraseTopK(Seq(sw(0), sw(1)), 10), 1, 0),
-    ("mlt", (s, _) => s.moreLikeThisTopK(7L, 8, 10), 3, 2),
-    ("facets", (s, _) => s.facets(Seq(t(4)), "lang"), 2, 2),
+    ("mlt", (s, _) => s.moreLikeThisTopK(7L, 8, 10), 3, 1),
+    ("facets", (s, _) => s.facets(Seq(t(4)), "lang"), 2, 0),
+    ("term_vectors", (s, _) => s.termVectors(7L), 2, 1),
     ("query_string", (s, _) => s.queryStringTopK(
       s"+${sw(2)} ${t(5)}^2.0 ${t(150)} -${t(400)}", 10), 1, 0),
     ("dist_topk", (s, _) => s.reader.topK(Seq(t(7), t(900)), 10), 1, 0),
-    ("phrase_prefix", (s, _) => s.phrasePrefixTopK(Seq(sw(0), "w0"), 10), 3, 2),
+    ("phrase_prefix", (s, _) => s.phrasePrefixTopK(Seq(sw(0), "w0"), 10), 3, 1),
     ("rescore", (s, _) => s.rescoreTopK(Seq(sw(0), t(3)), Seq(sw(0), sw(1)),
       1, 30, 10), 4, 2),
     ("top_hits", (s, _) => s.topHits(Seq(sw(0), t(3)), "lang", 3, 5), 6, 5),
@@ -97,8 +71,8 @@ class ServedJobsSpec extends AnyFunSuite {
   /** (name, call returning its result size, cold, warm): the frame
     * shapes, then the two calls that size terms without scoring them — the
     * cache load (the sizing read, then the resident terms' collect) and
-    * `_explain` (the sizing read, then the doc's tf rows; warm, the phrase
-    * shape's store entries give the dfs). */
+    * `_explain` (the dictionary load, then the doc's tf rows; warm, the
+    * resident dictionary gives the dfs). */
   private val calls: Seq[(String, (IndexSearch, IndexSearch) => Int, Int, Int)] =
     shapes.map { case (name, call, c, w) =>
       (name, (s: IndexSearch, o: IndexSearch) => call(s, o).collect().length, c, w)

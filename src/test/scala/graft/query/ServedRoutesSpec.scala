@@ -17,7 +17,10 @@ import graft.index.{IncrementalIndex, IndexParams}
   * all the hard parts: two generations whose boundary falls inside shards,
   * positions, and tombstones. Readers opened with a route bound of
   * `Long.MaxValue` take the driver route for every query, with `-1` the
-  * distributed one (and never store postings). */
+  * distributed one (and never store postings). Facets, term vectors and
+  * mlt's term selection finish on the driver from resident doc values and
+  * the resident dictionary, or in Spark when the reader holds neither; the
+  * rows are the same. */
 class ServedRoutesSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -222,6 +225,70 @@ class ServedRoutesSpec extends AnyFunSuite {
     val reopened = rows(q(new IndexSearch(spark, new IndexReader(spark, copy))))
     assert(reopened == before.filterNot(r => gone.contains(r._1)))
     assert(reopened == rows(q(new IndexSearch(spark, new IndexReader(spark, copy, -1L)))))
+  }
+
+  private def facetRows(df: DataFrame): Seq[(String, Long)] =
+    df.select(col("lang"), col("doc_count")).as[(String, Long)].collect().toSeq.sorted
+
+  /** The visible docs holding any of `terms`, decoded from the postings. */
+  private def matchSet(terms: Seq[String]): Set[Long] = {
+    val deleted = onDriver.deletedSorted.toSet
+    onDriver.segmentsFor(terms, positions = false).collect().flatMap(r =>
+      graft.index.PForDelta.decodeGaps(r.gaps, r.n, r.firstDocId)).toSet.diff(deleted)
+  }
+
+  test("facets, term vectors and mlt terms: resident on the driver reader, identical to the distributed reader") {
+    val (d, x) = (new IndexSearch(spark, onDriver), new IndexSearch(spark, distributed))
+    for (terms <- Seq(Seq("w00002", "w00300"), Seq("the"), Seq("w00300"))) {
+      val (a, b) = (d.facets(terms, "lang"), x.facets(terms, "lang"))
+      assert(isLocal(a), s"$terms: the driver reader counted facets in Spark")
+      assert(!isLocal(b), s"$terms: the distributed reader counted facets on the driver")
+      assert(a.schema == b.schema, s"$terms: facet schemas differ")
+      val (fa, fb) = (facetRows(a), facetRows(b))
+      assert(fa == fb, s"$terms: facets diverged\n driver=$fa\n distributed=$fb")
+      // no tombstoned doc is counted: the buckets sum to the visible match set
+      assert(fa.map(_._2).sum == matchSet(terms).size, s"$terms: $fa")
+    }
+    assert(facetRows(d.facets(Seq("w00300"), "lang")).isEmpty)
+    for (doc <- Seq(17L, 301L)) {
+      val (a, b) = (d.termVectors(doc), x.termVectors(doc))
+      assert(isLocal(a) && !isLocal(b))
+      val tv = a.as[(String, Long, Long)].collect().toSeq.sorted
+      assert(tv.nonEmpty && tv == b.as[(String, Long, Long)].collect().toSeq.sorted,
+        s"doc $doc: term vectors diverged")
+      val mlt = d.moreLikeThisTerms(doc, 8).as[(String, Long, Long)].collect().toSeq
+      assert(mlt.nonEmpty && mlt == x.moreLikeThisTerms(doc, 8)
+        .as[(String, Long, Long)].collect().toSeq, s"doc $doc: mlt terms diverged")
+    }
+    val c = onDriver.storeCounters
+    assert(c.docValueBytes > 0 && c.dictionaryBytes > 0 &&
+      c.residentBytes == c.postingBytes + c.docValueBytes + c.dictionaryBytes, c)
+    assert(distributed.storeCounters.entries == 0)
+  }
+
+  test("a reader whose bound holds the postings but not the doc values counts in Spark, without retrying the load") {
+    val terms = Seq("w00002", "w00300")
+    val bound = onDriver.readPostings(onDriver.segmentsFor(terms, positions = false), 0L)
+      .bytes.values.sum
+    // 8 bytes a docId at least: no split of the docs scan fits `bound`
+    assert(8 * onDriver.globals.n > bound)
+    val tight = new IndexSearch(spark, new IndexReader(spark, dir, bound))
+    val x = new IndexSearch(spark, distributed)
+    assert(isLocal(tight.boolTopK(Nil, terms, Nil, 10)), "the postings do not fit the bound")
+    // tables resolved outside the counted calls
+    for (r <- Seq(tight.reader, distributed)) { r.segmentsFor(Nil); r.docsTables }
+    SparkJobs.withoutAqe {
+      val plan = SparkJobs.count("routes-facets-dist")(x.facets(terms, "lang").collect())
+      var got = Seq.empty[(String, Long)]
+      val first = SparkJobs.count("routes-facets-first") {
+        got = facetRows(tight.facets(terms, "lang"))
+      }
+      val again = SparkJobs.count("routes-facets-again")(tight.facets(terms, "lang").collect())
+      assert(got == facetRows(x.facets(terms, "lang")))
+      // the load is one job on the first call, and none after its overflow
+      assert(first == plan + 1 && again == plan, s"plan $plan, first $first, again $again")
+    }
+    assert(tight.reader.storeCounters.docValueBytes == 0)
   }
 
   test("positions are only read for the phrase kernels") {
