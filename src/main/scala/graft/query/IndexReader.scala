@@ -1,7 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.index.{Globals, IncrementalIndex}
 
@@ -47,14 +48,17 @@ final case class SegmentRead(
   * The rows a driver-route read returns fill the reader's posting store
   * ([[PostingStore]], an LRU within `maxDriverBytes` in total). A routed
   * query whose terms are all resident skips the read: on the driver route
-  * it runs no job at all. The same store holds two more kinds under the
-  * same bound, each loaded in one job by the same bounded-collect rule:
-  * one docs column's doc values ([[docValues]], for facet counts on the
-  * driver) and the merged dictionary ([[dictionary]], the dfs of
-  * term vectors, more-like-this and `_explain`). A load that overflows is
-  * remembered for the reader's life, and those calls take their Spark
-  * plans. The store caches postings, doc values and dfs, never results,
-  * and never changes a route.
+  * it runs no job at all. The same store holds three more kinds under the
+  * same bound, each loaded in one job: one docs column's doc values
+  * ([[docValues]], for facet counts on the driver) and the merged
+  * dictionary ([[dictionary]], the dfs of term vectors, more-like-this and
+  * `_explain`) by the same bounded-collect rule, and, while the dictionary
+  * is resident, one doc's term vector ([[termVector]], the tf rows and
+  * length those three read), which the dictionary's bound bounds. A
+  * doc-values or dictionary load that overflows is remembered for the
+  * reader's life, and those calls take their Spark plans. The store
+  * caches postings, doc values, dfs and term vectors, never results, and
+  * never changes a route.
   * The kernels are shared, so both routes return identical rows. The
   * public constructor fixes the bound; the package-private one lets specs
   * and the plan dump pin a route. Reads prune to the query terms' hash
@@ -249,6 +253,32 @@ final class IndexReader private[graft] (spark: SparkSession,
       }
     }
 
+  /** One doc's (term, tf, dl) rows of every generation's tf artifact, the
+    * docId predicate pushed into Parquet: `dl` rides every row
+    * (denormalized at build time). The one read of a doc's slice. */
+  private[query] def docSlice(docId: Long): DataFrame =
+    tfTables.map(_.select("docId", "term", "tf", "dl")).reduce(_.unionByName(_))
+      .filter(col("docId") === docId).select("term", "tf", "dl")
+
+  /** The resident merged dictionary ([[dictionary]]) with the resident
+    * term vector of `docId`: on a miss, the doc's slice ([[docSlice]]) is
+    * collected in one job and stored, terms ascending. The doc's terms are
+    * dictionary terms at the same bytes each (generations are disjoint doc
+    * sets), so the slice is never larger than the resident dictionary plus
+    * 8: the dictionary's bound bounds this read, and it cannot overflow.
+    * None when the dictionary is not resident. A vector pays off only when
+    * its docId is asked again on the same reader. */
+  private[query] def termVector(docId: Long)
+      : Option[(PostingStore.Dictionary, PostingStore.TermVector)] =
+    dictionary.map(d => d -> store.termVector(docId).getOrElse {
+      val rows = docSlice(docId).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+      val tv = PostingStore.TermVector(rows.map(_._1), rows.map(_._2),
+        rows.headOption.fold(0L)(_._3), rows.iterator.map(IndexReader.tfRowBytes).sum + 8L)
+      store.insert(docId, tv)
+      tv
+    })
+
   /** The resident merged dictionary, `term → df` summed across
     * generations (the [[IndexSearch.termStats]] rule): on a miss, every
     * generation's termstats (term, df) is read in one bounded job
@@ -326,12 +356,28 @@ final class IndexReader private[graft] (spark: SparkSession,
   private[query] def topKFrame(terms: Seq[String], positions: Boolean, k: Int,
       bound: Long = maxDriverBytes)(
       kernel: Map[String, Long] => ShardKernel): DataFrame =
-    routedScores(terms, positions, bound)(kernel) match {
-      case Left(all) => IndexReader.head(all, k).toSeq.toDF("docId", "score")
-      case Right(cands) => cands.toDF("docId", "score")
-        .orderBy(desc("score"), asc("docId"))
-        .limit(k)
-    }
+    topKOf(routedScores(terms, positions, bound)(kernel), k)
+
+  /** A routed read's top-k frame ([[topKFrame]]) from its output. */
+  private[query] def topKOf(routed: Either[Array[Scored], Dataset[Scored]],
+      k: Int): DataFrame = routed match {
+    case Left(all) => scoredFrame(IndexReader.head(all, k))
+    case Right(cands) => cands.toDF("docId", "score")
+      .orderBy(desc("score"), asc("docId"))
+      .limit(k)
+  }
+
+  /** A routed read's untruncated frame ([[scoresFrame]]) from its output. */
+  private[query] def scoresOf(routed: Either[Array[Scored], Dataset[Scored]])
+      : DataFrame = routed match {
+    case Left(all) => scoredFrame(all)
+    case Right(cands) => cands.toDF("docId", "score")
+  }
+
+  /** `xs` as a local (docId, score) relation of `schema`. */
+  private[query] def scoredFrame(xs: Array[Scored],
+      schema: StructType = IndexReader.ScoredSchema): DataFrame =
+    IndexReader.localFrame(spark, schema, xs.map(s => Row(s.docId, s.score)))
 
   /** Block-Max WAND over one shard. Locals only: the kernel is shipped to
     * the executors on the distributed route and must not capture `this`. */
@@ -368,10 +414,15 @@ final class IndexReader private[graft] (spark: SparkSession,
     * pruned postings read and route as [[phraseTopK]]: a local frame on
     * the driver route, the shards' candidates on the distributed one;
     * output is match-set-sized, not corpus-sized. */
-  def phraseScores(phrase: Seq[String], slop: Int = 0): DataFrame = {
+  def phraseScores(phrase: Seq[String], slop: Int = 0): DataFrame =
+    scoresOf(phraseScored(phrase, slop))
+
+  /** [[phraseScores]]' routed read ([[routedScores]]). */
+  private[query] def phraseScored(phrase: Seq[String], slop: Int)
+      : Either[Array[Scored], Dataset[Scored]] = {
     val terms = phraseTerms(phrase, slop)
     val (n, avgdl, del) = (globals.n, globals.avgdl, deletedBc)
-    scoresFrame(terms, positions = true)(dfByTerm =>
+    routedScores(terms, positions = true, maxDriverBytes)(dfByTerm =>
       Phrase.shardScores(avgdl, phrase, IndexReader.phraseIdf(n, phrase,
         dfByTerm), del.value, slop))
   }
@@ -381,10 +432,7 @@ final class IndexReader private[graft] (spark: SparkSession,
     * one. */
   private[query] def scoresFrame(terms: Seq[String], positions: Boolean)(
       kernel: Map[String, Long] => ShardKernel): DataFrame =
-    routedScores(terms, positions, maxDriverBytes)(kernel) match {
-      case Left(all) => all.toSeq.toDF("docId", "score")
-      case Right(cands) => cands.toDF("docId", "score")
-    }
+    scoresOf(routedScores(terms, positions, maxDriverBytes)(kernel))
 
   /** The first generation built without positions, from the manifests
     * read once per reader; None when every generation has them. */
@@ -504,6 +552,18 @@ object IndexReader {
     * hazard territory. */
   val MaxResidentDeletes: Int = 1 << 22
 
+  /** (docId long, score double), neither nullable: the schema of every
+    * (docId, score) result, on either route. */
+  private[query] val ScoredSchema: StructType = StructType(Seq(
+    StructField("docId", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
+
+  /** `rows` as a local relation of `schema`: Rows against a fixed schema,
+    * so a driver-route result derives no encoder per call. */
+  private[query] def localFrame(spark: SparkSession, schema: StructType,
+      rows: Array[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
   /** What [[IndexReader.readPostings]] returns: the per-term GLOBAL df,
     * the per-term posting bytes, and the rows when every scan task kept
     * its share (else null). */
@@ -566,6 +626,9 @@ object IndexReader {
 
   /** A dictionary row's bytes: the term's UTF-8 bytes plus 8 for its df. */
   private def termBytes(row: (String, Long)): Long = utf8Bytes(row._1) + 8L
+
+  /** A term-vector row's bytes: the term's UTF-8 bytes plus 8 for its tf. */
+  private def tfRowBytes(row: (String, Long, Long)): Long = utf8Bytes(row._1) + 8L
 
   /** Run `kernel` over each shard's rows on the driver. */
   private[query] def onDriver(rows: Array[SegmentRead], kernel: ShardKernel)

@@ -1,9 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.analyze.Analyzer
 import graft.index.PForDelta
@@ -37,10 +37,12 @@ import graft.index.PForDelta
   *    reader, so no query pays a schema-inference job;
   *  - dictionaries (fuzzy expansion, suggesters) come from the index's
   *    termstats/ table — (term, df, total_tf), vocabulary-sized;
-  *  - more-like-this term selection reads the source document's row slice
-  *    of the tf/ artifact (predicate-pushed scan), not a corpus tokenize,
-  *    with dfs from the reader's resident dictionary when it fits the
-  *    store ([[IndexReader.dictionary]]);
+  *  - more-like-this term selection, term vectors and `_explain` read the
+  *    source document's term vector — resident in the reader's store
+  *    ([[IndexReader.termVector]]) or the doc's row slice of the tf/
+  *    artifact (predicate-pushed scan) — never a corpus tokenize, with dfs
+  *    from the reader's resident dictionary when it fits the store
+  *    ([[IndexReader.dictionary]]);
   *  - facet match sets are decoded docIds, counted on the driver over
   *    resident doc values ([[IndexReader.docValues]]) or joined to the
   *    docs/ metadata in Spark.
@@ -125,11 +127,16 @@ final class IndexSearch(spark: SparkSession,
     * term its groups name (with positions only when a group is a phrase),
     * the clause kernel per shard, routed by the query's posting bytes
     * ([[IndexReader.topKFrame]]). */
-  private def clauseTopK(q: Clauses, k: Int): DataFrame = {
+  private def clauseTopK(q: Clauses, k: Int): DataFrame =
+    reader.topKOf(clauseHeads(q, k), k)
+
+  /** [[clauseTopK]]'s routed read ([[IndexReader.routedScores]]): every
+    * shard's top-k of `q`, unmerged. */
+  private def clauseHeads(q: Clauses, k: Int): Either[Array[Scored], Dataset[Scored]] = {
     // locals only: the kernel ships to the executors on the distributed route
     val (n, avgdl, del) = (reader.globals.n, reader.globals.avgdl, reader.deletedBc)
     val (terms, positions) = clauseTerms(q)
-    reader.topKFrame(terms, positions, k)(dfByTerm =>
+    reader.routedScores(terms, positions, reader.maxDriverBytes)(dfByTerm =>
       IndexSearch.shardClauseTopK(n, avgdl, k, dfByTerm, q, del.value))
   }
 
@@ -232,21 +239,27 @@ final class IndexSearch(spark: SparkSession,
   /** More-like-this term selection from the INDEX: the source doc's
     * [[termVectors]] ranked (tf desc, df asc, term asc), first `m` —
     * identical to [[Search.moreLikeThisTerms]]. With the merged dictionary
-    * resident ([[IndexReader.dictionary]]) the doc's tf slice is the one
-    * job and the ranking runs on the driver (terms in Spark's UTF-8 binary
-    * order); otherwise the slice joins [[termStats]] in Spark. At serving
-    * scale, bucket the tf artifact by docId to make this lookup
-    * partition-pruned too. */
+    * resident the ranking runs on the driver (terms in Spark's UTF-8
+    * binary order) over the doc's resident term vector
+    * ([[IndexReader.termVector]]; a call that asks its doc again runs no
+    * Spark job); otherwise the doc's tf slice joins [[termStats]] in Spark.
+    * The store holds the vector and the dfs, never the ranking: it runs on
+    * every call. A vector's load scans every generation's tf artifact;
+    * bucketing it by docId would make that lookup partition-pruned too. */
   def moreLikeThisTerms(docId: Long, m: Int): DataFrame =
-    residentVectors(docId).fold(mltPlan(docId, m))(
-      IndexSearch.mltHead(_, m).toSeq.toDF("term", "tf", "df"))
+    residentVectors(docId).fold(mltPlan(docId, m))(rs =>
+      IndexReader.localFrame(spark, IndexSearch.TermVectorSchema,
+        IndexSearch.mltHead(rs, m).map(IndexSearch.termRow)))
 
   private def mltPlan(docId: Long, m: Int): DataFrame =
     termVectorsPlan(docId).orderBy(desc("tf"), col("df"), col("term")).limit(m)
 
-  /** More-like-this top-k served from the index; source doc excluded
-    * inside the shard kernel (before per-shard selection, exactly like the
-    * brute form's pre-rank filter). */
+  /** More-like-this top-k served from the index: [[moreLikeThisTerms]]'
+    * selection (on the driver from the resident term vector and
+    * dictionary, else its Spark plan), then the should-bool of those terms
+    * through the routed read — on a warm reader no Spark job. Source doc
+    * excluded inside the shard kernel (before per-shard selection, exactly
+    * like the brute form's pre-rank filter). */
   def moreLikeThisTopK(docId: Long, m: Int, k: Int): DataFrame = {
     val terms = residentVectors(docId)
       .fold(mltPlan(docId, m).select("term").as[String].collect().toSeq)(
@@ -300,8 +313,9 @@ final class IndexSearch(spark: SparkSession,
   def facets(queryTerms: Seq[String], facetCol: String): DataFrame =
     reader.docValues(facetCol, docsMeta.select(col("docId"), col(facetCol)))
       .flatMap(dv => matchedIds(queryTerms).map(ids =>
-        spark.createDataFrame(java.util.Arrays.asList(IndexSearch.facetCounts(dv, ids): _*),
-          StructType(Seq(dv.field, StructField("doc_count", LongType, nullable = false))))))
+        IndexReader.localFrame(spark,
+          StructType(Seq(dv.field, StructField("doc_count", LongType, nullable = false))),
+          IndexSearch.facetCounts(dv, ids))))
       .getOrElse(matchedRows(docsMeta, queryTerms)
         .groupBy(col(facetCol))
         .agg(count(lit(1)).as("doc_count")))
@@ -336,37 +350,43 @@ final class IndexSearch(spark: SparkSession,
   /** Score explanation (OpenSearch `_explain`): the per-term BM25
     * breakdown for one (doc, query) — (term, tf, df, idf, contribution)
     * with the exact [[Bm25]] arithmetic the scorers use, so the sum of
-    * `contribution` IS the doc's ranking score. Reads the doc's tf rows
-    * (docId predicate pushed into the Parquet scan) and the terms' merged
-    * df — from the resident dictionary ([[IndexReader.dictionary]]; a
-    * cold reader loads it in one job), else from the posting store when
-    * every term is resident, else from the one postings read at a zero
-    * row share ([[IndexReader.readPostings]]: no positions, no rows to
-    * the driver) — never the corpus. */
+    * `contribution` IS the doc's ranking score. With the merged dictionary
+    * resident ([[IndexReader.dictionary]]; a cold reader loads it in one
+    * job) the dfs come from it, and the doc's tf rows and length from its
+    * resident term vector ([[IndexReader.termVector]], filtered to the
+    * query terms on the driver) — a call that asks its doc again runs no
+    * Spark job. Otherwise the dfs come from the posting store when every
+    * term is resident, else from the one postings read at a zero row share
+    * ([[IndexReader.readPostings]]: no positions, no rows to the driver),
+    * and the tf rows from the doc's query-term slice of the tf artifact
+    * ([[IndexReader.docSlice]]) — never the corpus. */
   def explainScore(docId: Long, queryTerms: Seq[String]): DataFrame = {
     val terms = norm(queryTerms).distinct.sorted
-    val dfByTerm = reader.dictionary
-      .map(d => terms.map(t => t -> d.dfs.getOrElse(t, 0L)).toMap)
-      .orElse(reader.store.dfs(terms))
-      .getOrElse(reader.readPostings(
+    // the terms' dfs, the doc's (query term → tf) and its length (an
+    // absent doc has dl 0)
+    val (dfByTerm, docTf, dl) = reader.termVector(docId).fold {
+      val dfs = reader.store.dfs(terms).getOrElse(reader.readPostings(
         reader.segmentsFor(terms, positions = false), 0L).dfByTerm)
+      val docRows = reader.docSlice(docId).filter(col("term").isin(terms: _*))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      (dfs, docRows.map { case (t, tf, _) => t -> tf }.toMap,
+        docRows.headOption.map(_._3).getOrElse(0L))
+    } { case (d, tv) =>
+      val wanted = terms.toSet
+      (terms.map(t => t -> d.dfs.getOrElse(t, 0L)).toMap,
+        tv.rows.filter(r => wanted(r._1)).toMap, tv.dl)
+    }
     val (n, avgdl) = (reader.globals.n, reader.globals.avgdl)
-    // dl rides every tf row (denormalized at build time)
-    val docRows = IndexSearch.union(reader.tfTables, "docId", "term", "tf", "dl")
-      .filter(col("docId") === docId && col("term").isin(terms: _*))
-      .select("term", "tf", "dl").as[(String, Long, Long)].collect()
-    val docTf = docRows.map { case (t, tf, _) => t -> tf }.toMap
-    val dl = docRows.headOption.map(_._3).getOrElse(0L)
-    terms.flatMap { t =>
+    IndexReader.localFrame(spark, IndexSearch.ExplainSchema, terms.flatMap { t =>
       docTf.get(t).map { tf =>
         val df = dfByTerm.getOrElse(t, 0L)
         val idf = Bm25.idf(n, df)
-        (t, tf, df, BigDecimal(idf).setScale(6,
+        Row(t, tf, df, BigDecimal(idf).setScale(6,
           BigDecimal.RoundingMode.HALF_UP).toDouble,
           BigDecimal(Bm25.score(idf, tf.toDouble, dl.toDouble, avgdl))
             .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
       }
-    }.toDF("term", "tf", "df", "idf", "contribution")
+    }.toArray)
   }
 
   /** Index statistics (OpenSearch `_stats`): one row per visible
@@ -380,30 +400,31 @@ final class IndexSearch(spark: SparkSession,
     }.toDF("gen", "docs", "terms", "sum_dl")
 
   /** Term vectors (OpenSearch `_termvectors`): one row per term of one
-    * document — (term, tf, df), tf from the tf artifact (docId predicate
-    * pushed). With the merged dictionary resident
-    * ([[IndexReader.dictionary]]) the dfs come from it and the tf slice is
-    * the one job; otherwise the slice joins the [[termStats]] dictionary
-    * in Spark. */
+    * document — (term, tf, df). With the merged dictionary resident
+    * ([[IndexReader.dictionary]]) the dfs come from it and the (term, tf)
+    * rows from the doc's resident term vector ([[IndexReader.termVector]];
+    * each is loaded in one job on its first call), terms ascending, with
+    * no Spark job when the doc is asked again. Otherwise the doc's tf slice
+    * (docId predicate pushed) joins the [[termStats]] dictionary in Spark. */
   def termVectors(docId: Long): DataFrame =
-    residentVectors(docId).fold(termVectorsPlan(docId))(_.toSeq.toDF("term", "tf", "df"))
+    residentVectors(docId).fold(termVectorsPlan(docId))(rs =>
+      IndexReader.localFrame(spark, IndexSearch.TermVectorSchema,
+        rs.map(IndexSearch.termRow)))
 
+  /** The doc's tf slice ([[IndexReader.docSlice]]) joined to the
+    * [[termStats]] dictionary, in Spark. */
   private def termVectorsPlan(docId: Long): DataFrame =
-    docTerms(docId).join(termStats.select("term", "df"), "term")
+    reader.docSlice(docId)
+      .join(termStats.select("term", "df"), "term")
       .select("term", "tf", "df")
 
-  /** One doc's (term, tf) slice of the tf artifact. */
-  private def docTerms(docId: Long): DataFrame =
-    IndexSearch.union(reader.tfTables, "docId", "term", "tf")
-      .filter(col("docId") === docId)
-      .select("term", "tf")
-
-  /** The doc's (term, tf, df) rows on the driver, dfs from the resident
-    * dictionary; None when it is not resident. */
+  /** The doc's (term, tf, df) rows on the driver, terms ascending: tfs
+    * from its resident term vector, dfs from the resident dictionary (a
+    * term the dictionary lacks drops, as the plan's join drops it); None
+    * when the dictionary is not resident. */
   private def residentVectors(docId: Long): Option[Array[(String, Long, Long)]] =
-    reader.dictionary.map { d =>
-      docTerms(docId).as[(String, Long)].collect()
-        .flatMap { case (t, tf) => d.dfs.get(t).map((t, tf, _)) }
+    reader.termVector(docId).map { case (d, tv) =>
+      tv.rows.flatMap { case (t, tf) => d.dfs.get(t).map((t, tf, _)) }.toArray
     }
 
   /** Wildcard query (OpenSearch `wildcard`, `*` = any run): full-term
@@ -683,7 +704,7 @@ final class IndexSearch(spark: SparkSession,
       case (terms, kernel) => reader.scoresFrame(terms, positions = true)(kernel)
     }
 
-  private def noScores: DataFrame = Seq.empty[(Long, Double)].toDF("docId", "score")
+  private def noScores: DataFrame = reader.scoredFrame(Array.empty)
 
   /** match_phrase_prefix's positional read terms and untruncated shard
     * kernel; None when the prefix expands to no dictionary term. */
@@ -711,22 +732,40 @@ final class IndexSearch(spark: SparkSession,
 
   /** Query rescoring served from the index (OpenSearch `rescore`): the
     * primary window is [[boolTopK]]'s postings-scored rounded ranking,
-    * the secondary phrase scores come from positional postings and join
-    * ONLY the window (window-many rows). Semantics identical to
-    * [[Search.rescoreTopK]]. */
+    * the secondary phrase scores come from positional postings and meet
+    * ONLY the window (window-many rows), combined by
+    * [[Search.rescoreCombine]] on either route. When both routed reads
+    * take the driver route the window's rows and their phrase scores are a
+    * local relation, the combine's projection folds on the driver and the
+    * head is taken there — on a warm reader with no Spark job; otherwise
+    * the phrase scores left-join the window in Spark. Semantics identical
+    * to [[Search.rescoreTopK]]. */
   def rescoreTopK(queryTerms: Seq[String], phrase: Seq[String], slop: Int,
       windowSize: Int, k: Int, queryWeight: Double = 1.0,
       rescoreWeight: Double = 1.0, scoreMode: String = "total"): DataFrame = {
     require(k <= windowSize, "k must be <= windowSize (page is the window)")
-    val window = boolTopK(Nil, queryTerms, Nil, windowSize)
-    val ph = reader.phraseScores(phrase.map(Analyzer.lowerLikeCatalyst), slop)
-      .withColumnRenamed("score", "_ph")
-    window.join(ph, Seq("docId"), "left_outer")
-      .select(col("docId"),
-        Search.rescoreCombine(col("score"), col("_ph"), queryWeight,
-          rescoreWeight, scoreMode).as("score"))
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
+    // an unknown score_mode fails here, before any read
+    val combined = Search.rescoreCombine(col("score"), col("_ph"), queryWeight,
+      rescoreWeight, scoreMode).as("score")
+    val window = clauseHeads(boolClauses(Nil, queryTerms, Nil), windowSize)
+    val ph = reader.phraseScored(phrase.map(Analyzer.lowerLikeCatalyst), slop)
+    (window, ph) match {
+      case (Left(w), Left(p)) =>
+        val phBy = p.iterator.map(s => s.docId -> s.score).toMap
+        val rows = IndexReader.head(w, windowSize).map(s =>
+          Row(s.docId, s.score, phBy.get(s.docId).map(Double.box).orNull))
+        val scored = IndexReader.localFrame(spark, IndexSearch.RescoreWindowSchema, rows)
+          .select(col("docId"), combined).collect()
+          .map(r => Scored(r.getLong(0), r.getDouble(1)))
+        reader.scoredFrame(IndexReader.head(scored, k), IndexSearch.RescoreSchema)
+      case _ =>
+        reader.topKOf(window, windowSize)
+          .join(reader.scoresOf(ph).withColumnRenamed("score", "_ph"), Seq("docId"),
+            "left_outer")
+          .select(col("docId"), combined)
+          .orderBy(desc("score"), asc("docId"))
+          .limit(k)
+    }
   }
 
   /** function_score / field_value_factor served from the index: BM25 from
@@ -839,7 +878,7 @@ object IndexSearch {
     * in `dv` — null values are their own bucket, as `groupBy` makes
     * them — in first-seen order. */
   private[query] def facetCounts(dv: PostingStore.DocValues, ids: Array[Long])
-      : Seq[org.apache.spark.sql.Row] = {
+      : Array[Row] = {
     import scala.jdk.CollectionConverters._
     // a java map: null is a key like any other
     val counts = new java.util.LinkedHashMap[Any, Long]()
@@ -847,8 +886,34 @@ object IndexSearch {
       val i = java.util.Arrays.binarySearch(dv.docIds, id)
       if (i >= 0) counts.put(dv.values(i), counts.getOrDefault(dv.values(i), 0L) + 1L)
     }
-    counts.asScala.iterator.map { case (v, c) => org.apache.spark.sql.Row(v, c) }.toSeq
+    counts.asScala.iterator.map { case (v, c) => Row(v, c) }.toArray
   }
+
+  /** The driver route's (term, tf, df) schema: what the rows' product
+    * encoder gave it, a nullable term beside non-null counts. */
+  private[query] val TermVectorSchema: StructType = StructType(Seq(
+    StructField("term", StringType), StructField("tf", LongType, nullable = false),
+    StructField("df", LongType, nullable = false)))
+
+  private[query] def termRow(r: (String, Long, Long)): Row = Row(r._1, r._2, r._3)
+
+  /** `_explain`'s schema: a nullable term beside non-null numbers. */
+  private[query] val ExplainSchema: StructType = StructType(Seq(
+    StructField("term", StringType), StructField("tf", LongType, nullable = false),
+    StructField("df", LongType, nullable = false),
+    StructField("idf", DoubleType, nullable = false),
+    StructField("contribution", DoubleType, nullable = false)))
+
+  /** rescore's (docId, score) schema: the Spark combine's `round` leaves
+    * the score nullable. */
+  private[query] val RescoreSchema: StructType = StructType(Seq(
+    IndexReader.ScoredSchema("docId"), StructField("score", DoubleType)))
+
+  /** rescore's driver-route window: each row's (docId, score) beside its
+    * phrase score, null when the doc has none (as the left join leaves
+    * it). */
+  private val RescoreWindowSchema: StructType = StructType(IndexReader.ScoredSchema.fields :+
+    StructField("_ph", DoubleType))
 
   /** More-like-this's first `m` (term, tf, df) rows by (tf desc, df asc,
     * term asc), terms in Spark's UTF-8 binary order

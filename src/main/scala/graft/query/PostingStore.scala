@@ -2,7 +2,7 @@ package graft.query
 
 /** A reader's posting store: a thread-safe LRU of what the served shapes
   * read on the driver — the posting-list cache of Baeza-Yates et al.,
-  * "The Impact of Caching on Search Engines" (SIGIR 2007). It holds three
+  * "The Impact of Caching on Search Engines" (SIGIR 2007). It holds four
   * kinds of entry under one capacity and one recency order:
   *  - postings, keyed by (term, with positions): the term's merged df, its
   *    posting bytes and its segment rows; a term with no rows is a df-0
@@ -10,9 +10,12 @@ package graft.query
   *  - doc values, keyed by a docs column: `docId → value` over every
   *    generation ([[PostingStore.DocValues]]);
   *  - the merged dictionary: `term → df` summed across generations
-  *    ([[PostingStore.Dictionary]]).
-  * It caches postings, doc values and dfs, never results: a query served
-  * from the store still runs its kernel and its count.
+  *    ([[PostingStore.Dictionary]]);
+  *  - term vectors, keyed by docId: one doc's (term, tf) rows, terms
+  *    ascending, and its length ([[PostingStore.TermVector]]).
+  * It caches postings, doc values, dfs and term vectors, never results: a
+  * query served from the store still runs its kernel, its count or its
+  * ranking.
   *
   * Total entry bytes stay within `capacity`; inserting past it evicts the
   * least recently used entries of any kind, and an entry larger than
@@ -22,8 +25,8 @@ private[query] final class PostingStore(val capacity: Long) {
 
   // access order: iteration starts at the least recently used entry
   private val lru = new java.util.LinkedHashMap[Any, Resident](16, 0.75f, true)
-  // resident bytes per kind: postings, doc values, dictionary
-  private val held = new Array[Long](3)
+  // resident bytes per kind: postings, doc values, dictionary, term vectors
+  private val held = new Array[Long](4)
   private var hits = 0L
   private var misses = 0L
   private var evictions = 0L
@@ -55,6 +58,10 @@ private[query] final class PostingStore(val capacity: Long) {
   def dictionary: Option[Dictionary] =
     find(DictionaryKey).map(_.asInstanceOf[Dictionary])
 
+  /** The term vector of `docId` (a hit), else None (a miss). */
+  def termVector(docId: Long): Option[TermVector] =
+    find(TermVectorKey(docId)).map(_.asInstanceOf[TermVector])
+
   private def find(key: Any): Option[Resident] = synchronized {
     val r = lru.get(key)
     if (r == null) misses += 1 else hits += 1
@@ -64,6 +71,7 @@ private[query] final class PostingStore(val capacity: Long) {
   def insert(key: Key, e: Entry): Unit = put(key, e)
   def insert(column: String, dv: DocValues): Unit = put(DocValuesKey(column), dv)
   def insert(d: Dictionary): Unit = put(DictionaryKey, d)
+  def insert(docId: Long, tv: TermVector): Unit = put(TermVectorKey(docId), tv)
 
   /** Store `r` under `key` as the most recently used entry, evicting the
     * least recently used ones until the total fits `capacity`. */
@@ -85,7 +93,7 @@ private[query] final class PostingStore(val capacity: Long) {
 
   def counters: StoreCounters = synchronized {
     StoreCounters(hits, misses, evictions, held.sum, lru.size,
-      held(0), held(1), held(2))
+      held(0), held(1), held(2), held(3))
   }
 }
 
@@ -115,14 +123,27 @@ private[query] object PostingStore {
   final case class Dictionary(dfs: Map[String, Long], bytes: Long)
       extends Resident { def kind: Int = 2 }
 
+  /** One doc's term vector across generations: `tfs(i)` is the tf of
+    * `terms(i)`, terms ascending; `dl` is the doc's length (0 for a docId
+    * no generation holds). `bytes` counts each term's UTF-8 bytes plus 8
+    * for its tf, plus 8 for `dl`. */
+  final case class TermVector(terms: Array[String], tfs: Array[Long], dl: Long,
+      bytes: Long) extends Resident {
+    def kind: Int = 3
+    /** The (term, tf) rows, terms ascending. */
+    def rows: Iterator[(String, Long)] = terms.iterator.zip(tfs.iterator)
+  }
+
   private final case class DocValuesKey(column: String)
   private case object DictionaryKey
+  private final case class TermVectorKey(docId: Long)
 }
 
 /** A posting store's counters ([[IndexReader.storeCounters]]): lookups
   * that found every key (`hits`) or not (`misses`), entries evicted, the
   * bytes and entries resident now, and the resident bytes per kind
-  * (postings, doc values, dictionary), which sum to `residentBytes`. */
+  * (postings, doc values, dictionary, term vectors), which sum to
+  * `residentBytes`. */
 final case class StoreCounters(hits: Long, misses: Long, evictions: Long,
     residentBytes: Long, entries: Int, postingBytes: Long,
-    docValueBytes: Long, dictionaryBytes: Long)
+    docValueBytes: Long, dictionaryBytes: Long, termVectorBytes: Long)

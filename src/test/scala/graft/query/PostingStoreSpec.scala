@@ -9,7 +9,8 @@ import graft.util.SplitMix64
 /** The posting store's invariants, pure Scala (no Spark jobs): resident
   * bytes within capacity, least-recently-used eviction, distinct
   * (term, positions) keys, df-0 entries, one capacity and one LRU order
-  * across postings, doc values and the dictionary, and the same under
+  * across postings, doc values, the dictionary and term vectors, and the
+  * same under
   * concurrent lookups and inserts. A randomized run is checked against a small list
   * model of the LRU order. */
 class PostingStoreSpec extends AnyFunSuite {
@@ -133,6 +134,44 @@ class PostingStoreSpec extends AnyFunSuite {
     val none = new PostingStore(0L)
     none.insert("lang", docValues(1L))
     none.insert(Dictionary(Map.empty, 0L))
+    assert(none.counters.entries == 0)
+  }
+
+  test("term vectors share the capacity and the LRU order with the other three kinds") {
+    import PostingStore.{DocValues, Dictionary, TermVector}
+    val field = org.apache.spark.sql.types.StructField("lang",
+      org.apache.spark.sql.types.StringType)
+    def vector(bytes: Long) = TermVector(Array("a", "b"), Array(2L, 1L), 3L, bytes)
+    val store = new PostingStore(40L)
+    store.insert(("a", false), entry(1L, 10L))
+    store.insert("lang", DocValues(Array(1L), Array("en"), field, 10L))
+    store.insert(Dictionary(Map("a" -> 1L), 10L))
+    store.insert(7L, vector(10L))
+    val full = store.counters
+    assert(full.residentBytes == 40L && full.entries == 4 && full.postingBytes == 10L &&
+      full.docValueBytes == 10L && full.dictionaryBytes == 10L &&
+      full.termVectorBytes == 10L, full)
+    assert(store.termVector(7L).exists(tv => tv.rows.toSeq == Seq("a" -> 2L, "b" -> 1L) &&
+      tv.dl == 3L))
+    assert(store.termVector(8L).isEmpty)
+    // touch the postings and the dictionary: the doc values are now the
+    // least recently used, then the vector of doc 7
+    assert(store.lookup(Seq(("a", false))).isDefined && store.dictionary.isDefined)
+    store.insert(8L, vector(10L))
+    assert(store.docValues("lang").isEmpty && store.termVector(7L).isDefined)
+    // a 20-byte vector evicts the least recent two: the postings, then the
+    // dictionary (the vectors of docs 7 and 8 were read or written later)
+    store.insert(9L, vector(20L))
+    assert(store.lookup(Seq(("a", false))).isEmpty && store.dictionary.isEmpty)
+    val c = store.counters
+    assert(c.residentBytes == 40L && c.entries == 3 && c.termVectorBytes == 40L &&
+      c.postingBytes + c.docValueBytes + c.dictionaryBytes == 0L && c.evictions == 3, c)
+    // a vector over the capacity never enters; a store without capacity
+    // holds none
+    store.insert(10L, vector(41L))
+    assert(store.termVector(10L).isEmpty && store.counters.entries == 3)
+    val none = new PostingStore(0L)
+    none.insert(7L, vector(1L))
     assert(none.counters.entries == 0)
   }
 

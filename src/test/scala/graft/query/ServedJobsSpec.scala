@@ -13,12 +13,14 @@ import graft.index.{IndexBuilder, IndexParams}
   * on a fresh reader (an empty posting store), one job for a routed read,
   * which sizes the query and returns its rows together
   * ([[IndexReader.readPostings]]), and one job for each doc-values column
-  * or dictionary load; the serving-cache load sizes its terms with that
-  * same read. On a warm reader a routed read whose terms are all in the
-  * posting store runs no job, facets count over resident doc values, and
-  * mlt, term vectors and `_explain` take their dfs from the resident
-  * dictionary. A schema-inference job, a separate metadata pass or a
-  * skipped store lookup creeping into a call fails here. Counted with
+  * or dictionary load and for each doc's term-vector load; the
+  * serving-cache load sizes its terms with that same read. On a warm
+  * reader a routed read whose terms are all in the posting store runs no
+  * job, facets count over resident doc values, mlt, term vectors and
+  * `_explain` take the doc's rows from its resident term vector and their
+  * dfs from the resident dictionary, and rescore combines its two driver
+  * results on the driver. A schema-inference job, a separate metadata
+  * pass or a skipped store lookup creeping into a call fails here. Counted with
   * adaptive execution off, as the benchmark runs, so each count is the
   * plan's own job structure. */
 class ServedJobsSpec extends AnyFunSuite {
@@ -53,15 +55,15 @@ class ServedJobsSpec extends AnyFunSuite {
     ("bool", (s, _) => s.boolTopK(Seq(sw(1)), Seq(t(3)), Seq(t(60)), 10), 1, 0),
     ("dis_max", (s, _) => s.disMaxTopK(Seq(t(2), t(30), t(300)), 0.3, 10), 1, 0),
     ("phrase", (s, _) => s.reader.phraseTopK(Seq(sw(0), sw(1)), 10), 1, 0),
-    ("mlt", (s, _) => s.moreLikeThisTopK(7L, 8, 10), 3, 1),
+    ("mlt", (s, _) => s.moreLikeThisTopK(7L, 8, 10), 3, 0),
     ("facets", (s, _) => s.facets(Seq(t(4)), "lang"), 2, 0),
-    ("term_vectors", (s, _) => s.termVectors(7L), 2, 1),
+    ("term_vectors", (s, _) => s.termVectors(7L), 2, 0),
     ("query_string", (s, _) => s.queryStringTopK(
       s"+${sw(2)} ${t(5)}^2.0 ${t(150)} -${t(400)}", 10), 1, 0),
     ("dist_topk", (s, _) => s.reader.topK(Seq(t(7), t(900)), 10), 1, 0),
     ("phrase_prefix", (s, _) => s.phrasePrefixTopK(Seq(sw(0), "w0"), 10), 3, 1),
     ("rescore", (s, _) => s.rescoreTopK(Seq(sw(0), t(3)), Seq(sw(0), sw(1)),
-      1, 30, 10), 4, 2),
+      1, 30, 10), 2, 0),
     ("top_hits", (s, _) => s.topHits(Seq(sw(0), t(3)), "lang", 3, 5), 6, 5),
     ("function_score", (s, _) => s.fieldValueFactorTopK(Seq(sw(0), t(3)),
       s.docsMeta.select(col("docId"), length(col("url")).as("n")), "n",
@@ -71,14 +73,14 @@ class ServedJobsSpec extends AnyFunSuite {
   /** (name, call returning its result size, cold, warm): the frame
     * shapes, then the two calls that size terms without scoring them — the
     * cache load (the sizing read, then the resident terms' collect) and
-    * `_explain` (the dictionary load, then the doc's tf rows; warm, the
-    * resident dictionary gives the dfs). */
+    * `_explain` (the dictionary load, then the doc's term-vector load;
+    * warm, both are resident). */
   private val calls: Seq[(String, (IndexSearch, IndexSearch) => Int, Int, Int)] =
     shapes.map { case (name, call, c, w) =>
       (name, (s: IndexSearch, o: IndexSearch) => call(s, o).collect().length, c, w)
     } ++ Seq(
       ("load_cache", (s, _) => s.reader.loadCache(Seq(sw(0), t(3), t(60))).resident.size, 2, 2),
-      ("explain", (s, _) => s.explainScore(7L, Seq(sw(0), sw(1))).collect().length, 2, 1))
+      ("explain", (s, _) => s.explainScore(7L, Seq(sw(0), sw(1))).collect().length, 2, 0))
 
   test("each served shape runs a fixed number of jobs on a fresh reader") {
     withoutAqe {

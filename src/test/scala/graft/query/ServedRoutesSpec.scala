@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.corpus.SyntheticCorpus
-import graft.index.{IncrementalIndex, IndexParams}
+import graft.corpus.{Page, SyntheticCorpus}
+import graft.extract.HtmlText
+import graft.index.{IncrementalIndex, IndexBuilder, IndexParams}
 
 /** The served top-k runs one shard kernel per shard on either of two
   * routes ([[IndexReader.routedScores]]): on the driver over the collected
@@ -17,10 +18,12 @@ import graft.index.{IncrementalIndex, IndexParams}
   * all the hard parts: two generations whose boundary falls inside shards,
   * positions, and tombstones. Readers opened with a route bound of
   * `Long.MaxValue` take the driver route for every query, with `-1` the
-  * distributed one (and never store postings). Facets, term vectors and
-  * mlt's term selection finish on the driver from resident doc values and
-  * the resident dictionary, or in Spark when the reader holds neither; the
-  * rows are the same. */
+  * distributed one (and never store postings). Facets, term vectors,
+  * mlt's term selection and `_explain` finish on the driver from resident
+  * doc values, the resident dictionary and each doc's resident term
+  * vector, and rescore combines on the driver when both its reads take
+  * the driver route; otherwise they run their Spark plans. The rows are
+  * the same. */
 class ServedRoutesSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -262,8 +265,124 @@ class ServedRoutesSpec extends AnyFunSuite {
     }
     val c = onDriver.storeCounters
     assert(c.docValueBytes > 0 && c.dictionaryBytes > 0 &&
-      c.residentBytes == c.postingBytes + c.docValueBytes + c.dictionaryBytes, c)
+      c.residentBytes == c.postingBytes + c.docValueBytes + c.dictionaryBytes +
+        c.termVectorBytes, c)
     assert(distributed.storeCounters.entries == 0)
+  }
+
+  /** The calls that read one doc's term vector, and rescore: (name, call,
+    * whether its row order is its answer). Doc 999999 is in no generation. */
+  private val vectorCalls: Seq[(String, IndexSearch => DataFrame, Boolean)] =
+    Seq(17L, 301L, 999999L).flatMap { doc => Seq[(String, IndexSearch => DataFrame, Boolean)](
+      (s"termVectors($doc)", _.termVectors(doc), false),
+      (s"moreLikeThisTerms($doc)", _.moreLikeThisTerms(doc, 8), true),
+      (s"explainScore($doc)", _.explainScore(doc, Seq("the", "of", "w00002", "w00300")), true))
+    } ++ Seq[(String, IndexSearch => DataFrame, Boolean)](
+      ("moreLikeThisTopK", _.moreLikeThisTopK(17L, 8, 12), true),
+      ("rescoreTopK", _.rescoreTopK(Seq("the", "w00002"), Seq("the", "of"), 1, 30, 10), true),
+      ("rescoreTopK max", _.rescoreTopK(Seq("the", "w00005"), Seq("of", "the"), 2, 40, 15,
+        0.7, 1.3, "max"), true))
+
+  test("term vectors, mlt, _explain and rescore: on the driver from the store, identical to the distributed reader and to a reader too small for the dictionary") {
+    val d = new IndexSearch(spark, new IndexReader(spark, dir, Long.MaxValue))
+    val x = new IndexSearch(spark, distributed)
+    def canon(df: DataFrame, ordered: Boolean): Seq[String] = {
+      val rs = df.collect().toSeq.map(_.toString)
+      if (ordered) rs else rs.sorted
+    }
+    val onD = vectorCalls.map { case (name, q, ordered) =>
+      val (a, b) = (q(d), q(x))
+      assert(isLocal(a), s"$name: the driver reader ran a Spark plan")
+      if (!name.startsWith("explainScore"))
+        assert(!isLocal(b), s"$name: the distributed reader ran on the driver")
+      val (ra, rb) = (canon(a, ordered), canon(b, ordered))
+      assert(ra.nonEmpty || name.contains("999999"), s"$name: no rows")
+      assert(ra == rb, s"$name: readers diverged\n driver=$ra\n distributed=$rb")
+      ra
+    }
+    assert(vectorCalls.filter(_._1.contains("999999")).forall(c => canon(c._2(d), c._3).isEmpty))
+    val c = d.reader.storeCounters
+    assert(c.termVectorBytes > 0 && c.dictionaryBytes > 0 && c.residentBytes ==
+      c.postingBytes + c.docValueBytes + c.dictionaryBytes + c.termVectorBytes, c)
+    // a bound under the dictionary's bytes: the dictionary overflows, so no
+    // term vector loads and every call runs its Spark plan
+    val small = new IndexSearch(spark, new IndexReader(spark, dir, c.dictionaryBytes / 2))
+    for (((name, q, ordered), ra) <- vectorCalls.zip(onD)) {
+      val a = q(small)
+      if (name.startsWith("termVectors") || name.startsWith("moreLikeThisTerms"))
+        assert(!isLocal(a), s"$name: the small reader finished on the driver")
+      assert(canon(a, ordered) == ra, s"$name: the small reader diverged")
+    }
+    val sc = small.reader.storeCounters
+    assert(sc.dictionaryBytes == 0 && sc.termVectorBytes == 0, sc)
+  }
+
+  test("the driver route's frames carry the distributed route's schema") {
+    val (d, x) = (new IndexSearch(spark, onDriver), new IndexSearch(spark, distributed))
+    val topK = (d.boolTopK(Nil, Seq("the", "w00002"), Nil, 10),
+      x.boolTopK(Nil, Seq("the", "w00002"), Nil, 10))
+    val scores = (onDriver.phraseScores(Seq("of", "the"), 1),
+      distributed.phraseScores(Seq("of", "the"), 1))
+    for ((name, (a, b)) <- Seq("top-k" -> topK, "scores" -> scores)) {
+      assert(isLocal(a) && !isLocal(b), name)
+      assert(a.schema == b.schema, s"$name: ${a.schema} vs ${b.schema}")
+    }
+    // a prefix no term has: the empty (docId, score) frame
+    val none = d.prefixTopK("zzzz", 10)
+    assert(none.collect().isEmpty && none.schema == topK._2.schema, none.schema)
+    val rescore: IndexSearch => DataFrame =
+      _.rescoreTopK(Seq("the", "w00002"), Seq("the", "of"), 1, 30, 10)
+    assert(rescore(d).schema == rescore(x).schema)
+    // the (term, tf, df) and `_explain` frames keep the schemas their rows'
+    // product encoders gave them: a nullable term beside non-null numbers
+    assert(d.termVectors(17L).schema ==
+      Seq.empty[(String, Long, Long)].toDF("term", "tf", "df").schema)
+    assert(d.moreLikeThisTerms(17L, 8).schema == d.termVectors(17L).schema)
+    assert(d.explainScore(17L, Seq("the")).schema ==
+      Seq.empty[(String, Long, Long, Double, Double)]
+        .toDF("term", "tf", "df", "idf", "contribution").schema)
+  }
+
+  test("a reader that holds the dictionary loads a doc's term vector in one job, even one no scan task's share of the bound holds") {
+    // doc "long" holds the whole vocabulary; every other doc two of its terms
+    val vocab = (0 until 64).map(i => f"t$i%02d")
+    val texts = ("long" -> vocab.mkString(" ")) +:
+      (0 until 31).map(i => s"short$i" -> s"${vocab(i)} ${vocab(63 - i)}")
+    val pages = texts.map { case (name, text) =>
+      val html = s"<html><body><p>$text</p></body></html>"
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      Page(s"http://x/$name", new java.sql.Timestamp(0L), html, HtmlText.extract(html), "en")
+    }
+    val d = TestSpark.tmpDir("graft-idx-longdoc")
+    new IndexBuilder(spark, d, IndexParams(buckets = 4, shardSize = 16, blockSize = 8,
+      buildPartitions = 4)).build(pages.toDS(), "longdoc")
+    val x = new IndexSearch(spark, new IndexReader(spark, d, -1L))
+    val longDoc = x.reader.tfTables.map(_.select("docId")).reduce(_.unionByName(_))
+      .groupBy("docId").count().orderBy(desc("count")).first().getLong(0)
+    // the smallest doubling of room for the dictionary and the long doc's
+    // vector (its bytes, plus 8 for its length) that loads the dictionary
+    val dictBytes = new IndexReader(spark, d, Long.MaxValue).dictionary.get.bytes
+    val bound = Iterator.iterate(2 * dictBytes + 8)(_ * 2)
+      .find(b => new IndexReader(spark, d, b).dictionary.isDefined).get
+    val r = new IndexReader(spark, d, bound)
+    assert(r.dictionary.isDefined)
+    val s = new IndexSearch(spark, r)
+    // tables resolved outside the counted calls
+    r.segmentsFor(Nil); r.tfTables
+    SparkJobs.withoutAqe {
+      var got = Seq.empty[String]
+      val first = SparkJobs.count("routes-tv-first") {
+        got = s.termVectors(longDoc).collect().toSeq.map(_.toString).sorted
+      }
+      val again = SparkJobs.count("routes-tv-again")(s.termVectors(longDoc).collect())
+      assert(first == 1 && again == 0, s"first $first, again $again")
+      assert(got.size == vocab.size &&
+        got == x.termVectors(longDoc).collect().toSeq.map(_.toString).sorted)
+    }
+    val tvBytes = r.storeCounters.termVectorBytes
+    // a share of the bound per scan task would not have held the doc's slice
+    assert(tvBytes > bound / r.docSlice(longDoc).rdd.getNumPartitions,
+      s"vector $tvBytes, bound $bound")
   }
 
   test("a reader whose bound holds the postings but not the doc values counts in Spark, without retrying the load") {
