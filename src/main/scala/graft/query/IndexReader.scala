@@ -35,10 +35,9 @@ final case class SegmentRead(
   * ([[readPostings]]): one job over the bucket-pruned rows in which every
   * scan task returns the terms' per-generation dfs and posting bytes, and
   * its rows while they fit its share of a bound. The routed queries read
-  * at the route bound ([[routedScores]]); [[loadCache]] (and `_explain`
-  * when the dictionary is not resident) read at a zero bound, which sizes
-  * the terms and returns no rows. A
-  * routed query's total posting bytes pick its route:
+  * at the route bound ([[routedScores]]); [[loadCache]] reads at a zero
+  * bound, which sizes the terms and returns no rows. A routed query's
+  * total posting bytes pick its route:
   *  - at most `maxDriverBytes` (default [[IndexReader.DefaultMaxBytesPerTerm]],
   *    applied to the whole query): the same kernel runs per shard on the
   *    driver over the rows that job returned — one job, no shuffle;
@@ -48,20 +47,18 @@ final case class SegmentRead(
   * The rows a driver-route read returns fill the reader's posting store
   * ([[PostingStore]], an LRU within `maxDriverBytes` in total). A routed
   * query whose terms are all resident skips the read: on the driver route
-  * it runs no job at all. The same store holds three more kinds under the
-  * same bound, each loaded in one job: one docs column's doc values
-  * ([[docValues]], for facet counts on the driver) and the merged
-  * dictionary ([[dictionary]], the dfs of term vectors, more-like-this and
-  * `_explain`) by the same bounded-collect rule, and, while the dictionary
-  * is resident, one doc's term vector ([[termVector]], the tf rows and
-  * length those three read), which the dictionary's bound bounds. A
-  * doc-values or dictionary load that overflows is remembered for the
-  * reader's life, and those calls take their Spark plans. The store
-  * caches postings, doc values, dfs and term vectors, never results, and
-  * never changes a route.
+  * it runs no job at all. The same store holds two more kinds under the
+  * same bound: one docs column's doc values ([[docValues]], for facet
+  * counts on the driver; loaded in one job by the same bounded-collect
+  * rule, and an overflow is remembered for the reader's life, so facets
+  * then count in Spark), and one doc's term vector with the dfs of its
+  * terms ([[termVector]], what more-like-this, term vectors and
+  * `_explain` read on every reader; loaded in two jobs under a fixed
+  * per-doc bound). The store caches postings, doc values and term
+  * vectors, never results, and never changes a route.
   * The kernels are shared, so both routes return identical rows. The
   * public constructor fixes the bound; the package-private one lets specs
-  * and the plan dump pin a route. Reads prune to the query terms' hash
+  * pin a route. Reads prune to the query terms' hash
   * buckets (directory partition pruning) and push the term predicate into
   * Parquet.
   *
@@ -191,7 +188,7 @@ final class IndexReader private[graft] (spark: SparkSession,
   }
 
   /** This reader's posting store: the merged postings of terms read on
-    * the driver route, the doc values and the merged dictionary, within
+    * the driver route, the doc values and the term vectors, within
     * `maxDriverBytes` in total, so the store of a reader pinned to the
     * distributed route stays empty. The reader is a snapshot and the
     * kernels apply the tombstones, so entries never go stale. */
@@ -200,44 +197,35 @@ final class IndexReader private[graft] (spark: SparkSession,
   /** The posting store's hits, misses, evictions and resident bytes. */
   def storeCounters: StoreCounters = store.counters
 
-  /** What a doc-values or dictionary load overflowed: the reader is a
-    * snapshot, so a retry would overflow again and those calls take their
-    * Spark plans without one. */
+  /** The docs columns whose doc values overflowed their bound: the reader
+    * is a snapshot, so a retry would overflow again and facets on them
+    * count in Spark without one. */
   private val overflowed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** `find` when resident, else `load` (one job) when the reader stores
-    * anything and `what` never overflowed; None when neither applies or
-    * the load overflows, which is then remembered. */
-  private def resident[R](what: String, find: => Option[R])(load: => Option[R])
-      : Option[R] =
-    if (store.capacity <= 0 || overflowed.contains(what)) None
-    else find.orElse {
-      val r = load
-      if (r.isEmpty) overflowed.add(what)
-      r
-    }
-
-  /** `rdd`'s rows on the driver in one job under the [[readPostings]]
-    * rule: each task returns its rows only while their `bytes` fit
-    * `maxDriverBytes / <partitions>`; None when some task overflowed. */
-  private def boundedCollect[T: scala.reflect.ClassTag](rdd: org.apache.spark.rdd.RDD[T])(
-      bytes: T => Long): Option[Array[T]] = {
-    // locals only: the task closure must not capture the reader
-    val share = maxDriverBytes / math.max(1, rdd.getNumPartitions)
+  /** `rdd`'s rows on the driver in one job: each task returns its rows
+    * only while their running `bytes` fit `share`; None when some task
+    * overflowed. */
+  private def boundedCollect[T: scala.reflect.ClassTag](rdd: org.apache.spark.rdd.RDD[T],
+      share: Long)(bytes: T => Long): Option[Array[T]] = {
     val tasks = rdd.mapPartitions(rows =>
       Iterator(IndexReader.keepTask(rows, share)(bytes))).collect()
     if (tasks.contains(null)) None else Some(tasks.flatten)
   }
 
   /** The resident doc values of `column`: on a miss, `frame` (docId,
-    * column) over every generation is read in one bounded job
-    * ([[boundedCollect]]) and stored sorted by docId. None when the reader
-    * stores nothing or the column overflowed its bound. */
+    * column) over every generation is read in one job under the
+    * [[readPostings]] rule (each task keeps its rows only while they fit
+    * `maxDriverBytes / <partitions>`) and stored sorted by docId. None when
+    * the reader stores nothing or the column overflowed its bound, which
+    * is then remembered. */
   private[query] def docValues(column: String, frame: => DataFrame)
       : Option[PostingStore.DocValues] =
-    resident(s"docvalues:$column", store.docValues(column)) {
+    if (store.capacity <= 0 || overflowed.contains(column)) None
+    else store.docValues(column).orElse {
       val df = frame
-      boundedCollect(df.rdd.map(r => (r.getLong(0), r.get(1))))(
+      // locals only: the task closure must not capture the reader
+      val rows = df.rdd.map(r => (r.getLong(0), r.get(1)))
+      val loaded = boundedCollect(rows, maxDriverBytes / math.max(1, rows.getNumPartitions))(
         IndexReader.docValueBytes).map { rows =>
         val sorted = rows.sortBy(_._1)
         // one object per distinct value: a facet column repeats a few values
@@ -251,6 +239,8 @@ final class IndexReader private[graft] (spark: SparkSession,
         store.insert(column, dv)
         dv
       }
+      if (loaded.isEmpty) overflowed.add(column)
+      loaded
     }
 
   /** One doc's (term, tf, dl) rows of every generation's tf artifact, the
@@ -260,41 +250,43 @@ final class IndexReader private[graft] (spark: SparkSession,
     tfTables.map(_.select("docId", "term", "tf", "dl")).reduce(_.unionByName(_))
       .filter(col("docId") === docId).select("term", "tf", "dl")
 
-  /** The resident merged dictionary ([[dictionary]]) with the resident
-    * term vector of `docId`: on a miss, the doc's slice ([[docSlice]]) is
-    * collected in one job and stored, terms ascending. The doc's terms are
-    * dictionary terms at the same bytes each (generations are disjoint doc
-    * sets), so the slice is never larger than the resident dictionary plus
-    * 8: the dictionary's bound bounds this read, and it cannot overflow.
-    * None when the dictionary is not resident. A vector pays off only when
-    * its docId is asked again on the same reader. */
-  private[query] def termVector(docId: Long)
-      : Option[(PostingStore.Dictionary, PostingStore.TermVector)] =
-    dictionary.map(d => d -> store.termVector(docId).getOrElse {
-      val rows = docSlice(docId).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-      val tv = PostingStore.TermVector(rows.map(_._1), rows.map(_._2),
-        rows.headOption.fold(0L)(_._3), rows.iterator.map(IndexReader.tfRowBytes).sum + 8L)
+  /** One doc's term vector ([[PostingStore.TermVector]]): its (term, tf,
+    * df) rows, terms ascending, with each term's df summed across
+    * generations (the [[IndexSearch.termStats]] rule), and its length —
+    * what more-like-this, term vectors and `_explain` read, on every
+    * reader. On a store miss it is read in two jobs: the doc's slice
+    * ([[docSlice]]), then, unless the slice is empty, every generation's
+    * termstats rows of the slice's terms, summed per term on the driver
+    * (at most terms × generations rows; no vocabulary aggregation). A term
+    * the termstats lack drops. The vector is then stored; one larger than
+    * the store's capacity is returned but not stored.
+    *
+    * Bound rule: the slice is read in one job in which every scan task
+    * keeps its rows only while their bytes (the vector's byte rule) fit
+    * `bound`, and the whole vector must fit `bound` too; a doc over it
+    * fails loudly. The bound is not divided among the scan's partitions:
+    * the docId predicate leaves the rows in the few row groups that hold
+    * the doc, so a per-task share would make the outcome depend on file
+    * layout. */
+  private[query] def termVector(docId: Long,
+      bound: Long = IndexReader.DefaultMaxBytesPerTerm): PostingStore.TermVector =
+    store.termVector(docId).getOrElse {
+      val slice = boundedCollect(docSlice(docId).rdd
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))), bound)(
+          IndexReader.vectorRowBytes)
+        .filter(_.iterator.map(IndexReader.vectorRowBytes).sum + 8L <= bound)
+        .getOrElse(throw new IllegalStateException(s"the term vector of doc " +
+          s"$docId is over the $bound-byte bound on one doc's slice"))
+      val dfs =
+        if (slice.isEmpty) Map.empty[String, Long]
+        else termstatsTables.map(_.select("term", "df")).reduce(_.unionByName(_))
+          .filter(col("term").isin(slice.map(_._1): _*)).collect()
+          .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
+      val rows = slice.flatMap { case (t, tf, _) => dfs.get(t).map((t, tf, _)) }.sortBy(_._1)
+      val tv = PostingStore.TermVector(rows, slice.headOption.fold(0L)(_._3),
+        rows.iterator.map(IndexReader.vectorRowBytes).sum + 8L)
       store.insert(docId, tv)
       tv
-    })
-
-  /** The resident merged dictionary, `term → df` summed across
-    * generations (the [[IndexSearch.termStats]] rule): on a miss, every
-    * generation's termstats (term, df) is read in one bounded job
-    * ([[boundedCollect]]). None when the reader stores nothing or the
-    * dictionary overflowed its bound. */
-  private[query] def dictionary: Option[PostingStore.Dictionary] =
-    resident("dictionary", store.dictionary) {
-      val rows = termstatsTables.map(_.select("term", "df"))
-        .reduce(_.unionByName(_)).rdd.map(r => (r.getString(0), r.getLong(1)))
-      boundedCollect(rows)(IndexReader.termBytes).map { rs =>
-        val dfs = rs.groupMapReduce(_._1)(_._2)(_ + _)
-        val d = PostingStore.Dictionary(dfs,
-          dfs.iterator.map(IndexReader.termBytes).sum)
-        store.insert(d)
-        d
-      }
     }
 
   /** The route choice behind every routed query over `terms` (positions
@@ -409,7 +401,7 @@ final class IndexReader private[graft] (spark: SparkSession,
   }
 
   /** EVERY phrase-matching doc's score, untruncated — (docId, score),
-    * unordered. The composition primitive for rescoring (its scores join
+    * unordered. The composition primitive for rescoring (its scores meet
     * a window, so per-shard pre-truncation would drop contributors). Same
     * pruned postings read and route as [[phraseTopK]]: a local frame on
     * the driver route, the shards' candidates on the distributed one;
@@ -539,8 +531,9 @@ object IndexReader {
   /** One shard's top-k: (shard, its segment rows) → local candidates. */
   type ShardKernel = (Long, Iterator[SegmentRead]) => Iterator[Scored]
 
-  /** Default per-term driver budget for [[IndexReader.loadCache]], and the
-    * whole-query bound of the driver top-k route: 64 MiB. Generous for
+  /** Default per-term driver budget for [[IndexReader.loadCache]], the
+    * whole-query bound of the driver top-k route, and the fixed bound on
+    * one doc's term-vector read ([[IndexReader.termVector]]): 64 MiB. Generous for
     * every real query term (a 64 MiB PForDelta posting list is ~tens of
     * millions of docs) while guaranteeing a stopword at 10^12-doc scale
     * cannot take down the serving driver — nor can 50 dictionary
@@ -597,9 +590,8 @@ object IndexReader {
     (meta.toArray, if (kept == null) null else kept.result())
   }
 
-  /** One task of a doc-values or dictionary load: its rows while their
-    * running `bytes` stay within `share`, else null (it stops at the first
-    * row over). */
+  /** One task of a bounded collect: its rows while their running `bytes`
+    * stay within `share`, else null (it stops at the first row over). */
   private def keepTask[T: scala.reflect.ClassTag](rows: Iterator[T],
       share: Long)(bytes: T => Long): Array[T] = {
     val kept = Array.newBuilder[T]
@@ -624,11 +616,9 @@ object IndexReader {
     case _ => 8L
   })
 
-  /** A dictionary row's bytes: the term's UTF-8 bytes plus 8 for its df. */
-  private def termBytes(row: (String, Long)): Long = utf8Bytes(row._1) + 8L
-
-  /** A term-vector row's bytes: the term's UTF-8 bytes plus 8 for its tf. */
-  private def tfRowBytes(row: (String, Long, Long)): Long = utf8Bytes(row._1) + 8L
+  /** A term-vector row's bytes: the term's UTF-8 bytes plus 8 each for its
+    * tf and df (a slice row's (term, tf, dl) counts the same). */
+  private def vectorRowBytes(row: (String, Long, Long)): Long = utf8Bytes(row._1) + 16L
 
   /** Run `kernel` over each shard's rows on the driver. */
   private[query] def onDriver(rows: Array[SegmentRead], kernel: ShardKernel)

@@ -38,11 +38,11 @@ import graft.index.PForDelta
   *  - dictionaries (fuzzy expansion, suggesters) come from the index's
   *    termstats/ table — (term, df, total_tf), vocabulary-sized;
   *  - more-like-this term selection, term vectors and `_explain` read the
-  *    source document's term vector — resident in the reader's store
-  *    ([[IndexReader.termVector]]) or the doc's row slice of the tf/
-  *    artifact (predicate-pushed scan) — never a corpus tokenize, with dfs
-  *    from the reader's resident dictionary when it fits the store
-  *    ([[IndexReader.dictionary]]);
+  *    source document's term vector with the dfs of its terms
+  *    ([[IndexReader.termVector]]: the doc's row slice of the tf/ artifact,
+  *    a predicate-pushed scan under a fixed per-doc bound, and the
+  *    termstats rows of its terms) — never a corpus tokenize — and finish
+  *    on the driver on every reader;
   *  - facet match sets are decoded docIds, counted on the driver over
   *    resident doc values ([[IndexReader.docValues]]) or joined to the
   *    docs/ metadata in Spark.
@@ -238,32 +238,24 @@ final class IndexSearch(spark: SparkSession,
 
   /** More-like-this term selection from the INDEX: the source doc's
     * [[termVectors]] ranked (tf desc, df asc, term asc), first `m` —
-    * identical to [[Search.moreLikeThisTerms]]. With the merged dictionary
-    * resident the ranking runs on the driver (terms in Spark's UTF-8
-    * binary order) over the doc's resident term vector
-    * ([[IndexReader.termVector]]; a call that asks its doc again runs no
-    * Spark job); otherwise the doc's tf slice joins [[termStats]] in Spark.
-    * The store holds the vector and the dfs, never the ranking: it runs on
-    * every call. A vector's load scans every generation's tf artifact;
-    * bucketing it by docId would make that lookup partition-pruned too. */
+    * identical to [[Search.moreLikeThisTerms]]. The ranking runs on the
+    * driver (terms in Spark's UTF-8 binary order) over the doc's term
+    * vector ([[IndexReader.termVector]]; a call that asks its doc again
+    * runs no Spark job). The store holds the vector, never the ranking: it
+    * runs on every call. A vector's load scans every generation's tf
+    * artifact; bucketing it by docId would make that lookup
+    * partition-pruned too. */
   def moreLikeThisTerms(docId: Long, m: Int): DataFrame =
-    residentVectors(docId).fold(mltPlan(docId, m))(rs =>
-      IndexReader.localFrame(spark, IndexSearch.TermVectorSchema,
-        IndexSearch.mltHead(rs, m).map(IndexSearch.termRow)))
-
-  private def mltPlan(docId: Long, m: Int): DataFrame =
-    termVectorsPlan(docId).orderBy(desc("tf"), col("df"), col("term")).limit(m)
+    IndexReader.localFrame(spark, IndexSearch.TermVectorSchema,
+      IndexSearch.mltHead(reader.termVector(docId).rows, m).map(IndexSearch.termRow))
 
   /** More-like-this top-k served from the index: [[moreLikeThisTerms]]'
-    * selection (on the driver from the resident term vector and
-    * dictionary, else its Spark plan), then the should-bool of those terms
-    * through the routed read — on a warm reader no Spark job. Source doc
-    * excluded inside the shard kernel (before per-shard selection, exactly
-    * like the brute form's pre-rank filter). */
+    * selection, then the should-bool of those terms through the routed
+    * read — on a warm reader no Spark job. Source doc excluded inside the
+    * shard kernel (before per-shard selection, exactly like the brute
+    * form's pre-rank filter). */
   def moreLikeThisTopK(docId: Long, m: Int, k: Int): DataFrame = {
-    val terms = residentVectors(docId)
-      .fold(mltPlan(docId, m).select("term").as[String].collect().toSeq)(
-        IndexSearch.mltHead(_, m).map(_._1).toSeq).sorted
+    val terms = IndexSearch.mltHead(reader.termVector(docId).rows, m).map(_._1).toSeq.sorted
     if (terms.isEmpty) noScores
     else boolTopK(Nil, terms, Nil, k, excludeDocId = docId)
   }
@@ -350,36 +342,18 @@ final class IndexSearch(spark: SparkSession,
   /** Score explanation (OpenSearch `_explain`): the per-term BM25
     * breakdown for one (doc, query) — (term, tf, df, idf, contribution)
     * with the exact [[Bm25]] arithmetic the scorers use, so the sum of
-    * `contribution` IS the doc's ranking score. With the merged dictionary
-    * resident ([[IndexReader.dictionary]]; a cold reader loads it in one
-    * job) the dfs come from it, and the doc's tf rows and length from its
-    * resident term vector ([[IndexReader.termVector]], filtered to the
-    * query terms on the driver) — a call that asks its doc again runs no
-    * Spark job. Otherwise the dfs come from the posting store when every
-    * term is resident, else from the one postings read at a zero row share
-    * ([[IndexReader.readPostings]]: no positions, no rows to the driver),
-    * and the tf rows from the doc's query-term slice of the tf artifact
-    * ([[IndexReader.docSlice]]) — never the corpus. */
+    * `contribution` IS the doc's ranking score. The tf rows, dfs and the
+    * doc's length (0 for an absent doc) come from its term vector
+    * ([[IndexReader.termVector]]), filtered to the query terms on the
+    * driver — a call that asks its doc again runs no Spark job; never the
+    * corpus. */
   def explainScore(docId: Long, queryTerms: Seq[String]): DataFrame = {
     val terms = norm(queryTerms).distinct.sorted
-    // the terms' dfs, the doc's (query term → tf) and its length (an
-    // absent doc has dl 0)
-    val (dfByTerm, docTf, dl) = reader.termVector(docId).fold {
-      val dfs = reader.store.dfs(terms).getOrElse(reader.readPostings(
-        reader.segmentsFor(terms, positions = false), 0L).dfByTerm)
-      val docRows = reader.docSlice(docId).filter(col("term").isin(terms: _*))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      (dfs, docRows.map { case (t, tf, _) => t -> tf }.toMap,
-        docRows.headOption.map(_._3).getOrElse(0L))
-    } { case (d, tv) =>
-      val wanted = terms.toSet
-      (terms.map(t => t -> d.dfs.getOrElse(t, 0L)).toMap,
-        tv.rows.filter(r => wanted(r._1)).toMap, tv.dl)
-    }
-    val (n, avgdl) = (reader.globals.n, reader.globals.avgdl)
+    val tv = reader.termVector(docId)
+    val byTerm = tv.rows.map(r => r._1 -> r).toMap
+    val (n, avgdl, dl) = (reader.globals.n, reader.globals.avgdl, tv.dl)
     IndexReader.localFrame(spark, IndexSearch.ExplainSchema, terms.flatMap { t =>
-      docTf.get(t).map { tf =>
-        val df = dfByTerm.getOrElse(t, 0L)
+      byTerm.get(t).map { case (_, tf, df) =>
         val idf = Bm25.idf(n, df)
         Row(t, tf, df, BigDecimal(idf).setScale(6,
           BigDecimal.RoundingMode.HALF_UP).toDouble,
@@ -400,32 +374,12 @@ final class IndexSearch(spark: SparkSession,
     }.toDF("gen", "docs", "terms", "sum_dl")
 
   /** Term vectors (OpenSearch `_termvectors`): one row per term of one
-    * document — (term, tf, df). With the merged dictionary resident
-    * ([[IndexReader.dictionary]]) the dfs come from it and the (term, tf)
-    * rows from the doc's resident term vector ([[IndexReader.termVector]];
-    * each is loaded in one job on its first call), terms ascending, with
-    * no Spark job when the doc is asked again. Otherwise the doc's tf slice
-    * (docId predicate pushed) joins the [[termStats]] dictionary in Spark. */
+    * document — (term, tf, df), terms ascending — from the doc's term
+    * vector ([[IndexReader.termVector]]: two jobs on its first call, none
+    * when the doc is asked again). */
   def termVectors(docId: Long): DataFrame =
-    residentVectors(docId).fold(termVectorsPlan(docId))(rs =>
-      IndexReader.localFrame(spark, IndexSearch.TermVectorSchema,
-        rs.map(IndexSearch.termRow)))
-
-  /** The doc's tf slice ([[IndexReader.docSlice]]) joined to the
-    * [[termStats]] dictionary, in Spark. */
-  private def termVectorsPlan(docId: Long): DataFrame =
-    reader.docSlice(docId)
-      .join(termStats.select("term", "df"), "term")
-      .select("term", "tf", "df")
-
-  /** The doc's (term, tf, df) rows on the driver, terms ascending: tfs
-    * from its resident term vector, dfs from the resident dictionary (a
-    * term the dictionary lacks drops, as the plan's join drops it); None
-    * when the dictionary is not resident. */
-  private def residentVectors(docId: Long): Option[Array[(String, Long, Long)]] =
-    reader.termVector(docId).map { case (d, tv) =>
-      tv.rows.flatMap { case (t, tf) => d.dfs.get(t).map((t, tf, _)) }.toArray
-    }
+    IndexReader.localFrame(spark, IndexSearch.TermVectorSchema,
+      reader.termVector(docId).rows.map(IndexSearch.termRow))
 
   /** Wildcard query (OpenSearch `wildcard`, `*` = any run): full-term
     * glob against the termstats/ dictionary via LIKE (anchored both
@@ -732,14 +686,14 @@ final class IndexSearch(spark: SparkSession,
 
   /** Query rescoring served from the index (OpenSearch `rescore`): the
     * primary window is [[boolTopK]]'s postings-scored rounded ranking,
-    * the secondary phrase scores come from positional postings and meet
-    * ONLY the window (window-many rows), combined by
-    * [[Search.rescoreCombine]] on either route. When both routed reads
-    * take the driver route the window's rows and their phrase scores are a
-    * local relation, the combine's projection folds on the driver and the
-    * head is taken there — on a warm reader with no Spark job; otherwise
-    * the phrase scores left-join the window in Spark. Semantics identical
-    * to [[Search.rescoreTopK]]. */
+    * at most `windowSize` rows on the driver on either route (the routed
+    * head, or the distributed route's TakeOrdered collect); the secondary
+    * phrase scores come from positional postings, taken for the window's
+    * docIds only (on the distributed route filtered before the collect).
+    * The window's rows and their phrase scores are a local relation, the
+    * one [[Search.rescoreCombine]] projection folds them on the driver and
+    * the head is taken there — on a warm driver-route reader with no Spark
+    * job. Semantics identical to [[Search.rescoreTopK]]. */
   def rescoreTopK(queryTerms: Seq[String], phrase: Seq[String], slop: Int,
       windowSize: Int, k: Int, queryWeight: Double = 1.0,
       rescoreWeight: Double = 1.0, scoreMode: String = "total"): DataFrame = {
@@ -747,25 +701,21 @@ final class IndexSearch(spark: SparkSession,
     // an unknown score_mode fails here, before any read
     val combined = Search.rescoreCombine(col("score"), col("_ph"), queryWeight,
       rescoreWeight, scoreMode).as("score")
-    val window = clauseHeads(boolClauses(Nil, queryTerms, Nil), windowSize)
-    val ph = reader.phraseScored(phrase.map(Analyzer.lowerLikeCatalyst), slop)
-    (window, ph) match {
-      case (Left(w), Left(p)) =>
-        val phBy = p.iterator.map(s => s.docId -> s.score).toMap
-        val rows = IndexReader.head(w, windowSize).map(s =>
-          Row(s.docId, s.score, phBy.get(s.docId).map(Double.box).orNull))
-        val scored = IndexReader.localFrame(spark, IndexSearch.RescoreWindowSchema, rows)
-          .select(col("docId"), combined).collect()
-          .map(r => Scored(r.getLong(0), r.getDouble(1)))
-        reader.scoredFrame(IndexReader.head(scored, k), IndexSearch.RescoreSchema)
-      case _ =>
-        reader.topKOf(window, windowSize)
-          .join(reader.scoresOf(ph).withColumnRenamed("score", "_ph"), Seq("docId"),
-            "left_outer")
-          .select(col("docId"), combined)
-          .orderBy(desc("score"), asc("docId"))
-          .limit(k)
+    val window = clauseHeads(boolClauses(Nil, queryTerms, Nil), windowSize) match {
+      case Left(w) => IndexReader.head(w, windowSize)
+      case heads => reader.topKOf(heads, windowSize).collect()
+        .map(r => Scored(r.getLong(0), r.getDouble(1)))
     }
+    val phBy = (reader.phraseScored(phrase.map(Analyzer.lowerLikeCatalyst), slop) match {
+      case Left(all) => all
+      case Right(cands) => cands.where(col("docId").isin(window.map(_.docId): _*)).collect()
+    }).iterator.map(s => s.docId -> s.score).toMap
+    val rows = window.map(s =>
+      Row(s.docId, s.score, phBy.get(s.docId).map(Double.box).orNull))
+    val scored = IndexReader.localFrame(spark, IndexSearch.RescoreWindowSchema, rows)
+      .select(col("docId"), combined).collect()
+      .map(r => Scored(r.getLong(0), r.getDouble(1)))
+    reader.scoredFrame(IndexReader.head(scored, k), IndexSearch.RescoreSchema)
   }
 
   /** function_score / field_value_factor served from the index: BM25 from
@@ -889,8 +839,8 @@ object IndexSearch {
     counts.asScala.iterator.map { case (v, c) => Row(v, c) }.toArray
   }
 
-  /** The driver route's (term, tf, df) schema: what the rows' product
-    * encoder gave it, a nullable term beside non-null counts. */
+  /** The (term, tf, df) schema: what a product encoder gives these rows,
+    * a nullable term beside non-null counts. */
   private[query] val TermVectorSchema: StructType = StructType(Seq(
     StructField("term", StringType), StructField("tf", LongType, nullable = false),
     StructField("df", LongType, nullable = false)))
@@ -904,20 +854,19 @@ object IndexSearch {
     StructField("idf", DoubleType, nullable = false),
     StructField("contribution", DoubleType, nullable = false)))
 
-  /** rescore's (docId, score) schema: the Spark combine's `round` leaves
-    * the score nullable. */
+  /** rescore's (docId, score) schema: the combine's `round` leaves the
+    * score nullable. */
   private[query] val RescoreSchema: StructType = StructType(Seq(
     IndexReader.ScoredSchema("docId"), StructField("score", DoubleType)))
 
-  /** rescore's driver-route window: each row's (docId, score) beside its
-    * phrase score, null when the doc has none (as the left join leaves
-    * it). */
+  /** rescore's window: each row's (docId, score) beside its phrase score,
+    * null when the doc has none. */
   private val RescoreWindowSchema: StructType = StructType(IndexReader.ScoredSchema.fields :+
     StructField("_ph", DoubleType))
 
   /** More-like-this's first `m` (term, tf, df) rows by (tf desc, df asc,
     * term asc), terms in Spark's UTF-8 binary order
-    * (`UTF8String.compare`), as the plan's `orderBy` sorts them. */
+    * (`UTF8String.compare`), as Spark's `orderBy` sorts them. */
   private[query] def mltHead(rows: Array[(String, Long, Long)], m: Int)
       : Array[(String, Long, Long)] =
     rows.sortBy(r => (-r._2, r._3,

@@ -2,18 +2,17 @@ package graft.query
 
 /** A reader's posting store: a thread-safe LRU of what the served shapes
   * read on the driver — the posting-list cache of Baeza-Yates et al.,
-  * "The Impact of Caching on Search Engines" (SIGIR 2007). It holds four
+  * "The Impact of Caching on Search Engines" (SIGIR 2007). It holds three
   * kinds of entry under one capacity and one recency order:
   *  - postings, keyed by (term, with positions): the term's merged df, its
   *    posting bytes and its segment rows; a term with no rows is a df-0
   *    entry;
   *  - doc values, keyed by a docs column: `docId → value` over every
   *    generation ([[PostingStore.DocValues]]);
-  *  - the merged dictionary: `term → df` summed across generations
-  *    ([[PostingStore.Dictionary]]);
-  *  - term vectors, keyed by docId: one doc's (term, tf) rows, terms
-  *    ascending, and its length ([[PostingStore.TermVector]]).
-  * It caches postings, doc values, dfs and term vectors, never results: a
+  *  - term vectors, keyed by docId: one doc's (term, tf, df) rows, terms
+  *    ascending, dfs summed across generations, and its length
+  *    ([[PostingStore.TermVector]]).
+  * It caches postings, doc values and term vectors, never results: a
   * query served from the store still runs its kernel, its count or its
   * ranking.
   *
@@ -25,8 +24,8 @@ private[query] final class PostingStore(val capacity: Long) {
 
   // access order: iteration starts at the least recently used entry
   private val lru = new java.util.LinkedHashMap[Any, Resident](16, 0.75f, true)
-  // resident bytes per kind: postings, doc values, dictionary, term vectors
-  private val held = new Array[Long](4)
+  // resident bytes per kind: postings, doc values, term vectors
+  private val held = new Array[Long](3)
   private var hits = 0L
   private var misses = 0L
   private var evictions = 0L
@@ -40,23 +39,9 @@ private[query] final class PostingStore(val capacity: Long) {
     else { hits += 1; Some(es.map(_.asInstanceOf[Entry])) }
   }
 
-  /** Each term's merged df when every term has a postings entry under
-    * either key (a hit); None otherwise (a miss). */
-  def dfs(terms: Seq[String]): Option[Map[String, Long]] = synchronized {
-    val found = terms.flatMap(t =>
-      Option(lru.get((t, false))).orElse(Option(lru.get((t, true))))
-        .map(e => t -> e.asInstanceOf[Entry].df))
-    if (found.size == terms.size) { hits += 1; Some(found.toMap) }
-    else { misses += 1; None }
-  }
-
   /** The doc values of `column` (a hit), else None (a miss). */
   def docValues(column: String): Option[DocValues] =
     find(DocValuesKey(column)).map(_.asInstanceOf[DocValues])
-
-  /** The merged dictionary (a hit), else None (a miss). */
-  def dictionary: Option[Dictionary] =
-    find(DictionaryKey).map(_.asInstanceOf[Dictionary])
 
   /** The term vector of `docId` (a hit), else None (a miss). */
   def termVector(docId: Long): Option[TermVector] =
@@ -70,7 +55,6 @@ private[query] final class PostingStore(val capacity: Long) {
 
   def insert(key: Key, e: Entry): Unit = put(key, e)
   def insert(column: String, dv: DocValues): Unit = put(DocValuesKey(column), dv)
-  def insert(d: Dictionary): Unit = put(DictionaryKey, d)
   def insert(docId: Long, tv: TermVector): Unit = put(TermVectorKey(docId), tv)
 
   /** Store `r` under `key` as the most recently used entry, evicting the
@@ -93,7 +77,7 @@ private[query] final class PostingStore(val capacity: Long) {
 
   def counters: StoreCounters = synchronized {
     StoreCounters(hits, misses, evictions, held.sum, lru.size,
-      held(0), held(1), held(2), held(3))
+      held(0), held(1), held(2))
   }
 }
 
@@ -118,32 +102,21 @@ private[query] object PostingStore {
       field: org.apache.spark.sql.types.StructField, bytes: Long)
       extends Resident { def kind: Int = 1 }
 
-  /** The merged dictionary: each term's df summed across generations.
-    * `bytes` counts each term's UTF-8 bytes plus 8 for its df. */
-  final case class Dictionary(dfs: Map[String, Long], bytes: Long)
-      extends Resident { def kind: Int = 2 }
-
-  /** One doc's term vector across generations: `tfs(i)` is the tf of
-    * `terms(i)`, terms ascending; `dl` is the doc's length (0 for a docId
-    * no generation holds). `bytes` counts each term's UTF-8 bytes plus 8
-    * for its tf, plus 8 for `dl`. */
-  final case class TermVector(terms: Array[String], tfs: Array[Long], dl: Long,
-      bytes: Long) extends Resident {
-    def kind: Int = 3
-    /** The (term, tf) rows, terms ascending. */
-    def rows: Iterator[(String, Long)] = terms.iterator.zip(tfs.iterator)
-  }
+  /** One doc's term vector across generations: its (term, tf, df) rows,
+    * terms ascending, each df summed across generations; `dl` is the doc's
+    * length (0 for a docId no generation holds). `bytes` counts each
+    * term's UTF-8 bytes plus 8 each for its tf and df, plus 8 for `dl`. */
+  final case class TermVector(rows: Array[(String, Long, Long)], dl: Long,
+      bytes: Long) extends Resident { def kind: Int = 2 }
 
   private final case class DocValuesKey(column: String)
-  private case object DictionaryKey
   private final case class TermVectorKey(docId: Long)
 }
 
 /** A posting store's counters ([[IndexReader.storeCounters]]): lookups
   * that found every key (`hits`) or not (`misses`), entries evicted, the
   * bytes and entries resident now, and the resident bytes per kind
-  * (postings, doc values, dictionary, term vectors), which sum to
-  * `residentBytes`. */
+  * (postings, doc values, term vectors), which sum to `residentBytes`. */
 final case class StoreCounters(hits: Long, misses: Long, evictions: Long,
     residentBytes: Long, entries: Int, postingBytes: Long,
-    docValueBytes: Long, dictionaryBytes: Long, termVectorBytes: Long)
+    docValueBytes: Long, termVectorBytes: Long)

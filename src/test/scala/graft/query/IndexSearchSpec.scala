@@ -140,8 +140,8 @@ class IndexSearchSpec extends AnyFunSuite {
     // driver route collects, or the distributed route's shard fan-out
     val driverScan = search.reader.segmentsFor(Seq("the", "w00002", "w00004"),
       positions = false)
-    // the distributed reader stores no dictionary or doc values, so mlt and
-    // facets plan in Spark there; the driver reader answers them locally
+    // the distributed reader stores no doc values, so facets plan in Spark
+    // there; the driver reader counts them locally
     val distributed = new IndexSearch(spark, new IndexReader(spark, indexDir, -1L))
     val fanOut = distributed.boolTopK(Seq("the"), Seq("w00002"), Seq("w00004"), 10)
     for (boolPlan <- Seq(driverScan.queryExecution.executedPlan.toString,
@@ -151,12 +151,20 @@ class IndexSearchSpec extends AnyFunSuite {
       // bucket pruning reaches the postings scan as a partition filter
       assert(boolPlan.contains("PartitionFilters") && boolPlan.contains("bucket"),
         s"no bucket partition pruning in:\n$boolPlan")
+      // the query terms reach the Parquet scan (row-group pruning)
+      assert(boolPlan.contains("PushedFilters") &&
+        boolPlan.contains("In(term, [the,w00002,w00004])"),
+        s"no term pushdown in:\n$boolPlan")
     }
-    val mltPlan = distributed.moreLikeThisTerms(17L, 8)
-      .queryExecution.executedPlan.toString
-    assert(mltPlan.contains("/tf") && !mltPlan.contains("/docs"))
-    assert(mltPlan.contains("PushedFilters") && mltPlan.contains("docId"),
-      s"mlt docId predicate not pushed:\n$mltPlan")
+    // the distributed bool shuffles once: the shard fan-out's groupByKey
+    val fanOutPlan = fanOut.queryExecution.executedPlan.toString
+    assert("\\bExchange\\b".r.findAllIn(fanOutPlan).size == 1,
+      s"not exactly one Exchange in:\n$fanOutPlan")
+    // mlt, term vectors and _explain read one doc's slice of the tf artifact
+    val slicePlan = search.reader.docSlice(17L).queryExecution.executedPlan.toString
+    assert(slicePlan.contains("/tf") && !slicePlan.contains("/docs"))
+    assert(slicePlan.contains("PushedFilters") && slicePlan.contains("EqualTo(docId,17)"),
+      s"the slice's docId predicate is not pushed:\n$slicePlan")
     val facetPlan = distributed.facets(Seq("w00002"), "lang")
       .queryExecution.executedPlan.toString
     assert(facetPlan.contains("postings") && facetPlan.contains("/docs"))

@@ -9,8 +9,7 @@ import graft.util.SplitMix64
 /** The posting store's invariants, pure Scala (no Spark jobs): resident
   * bytes within capacity, least-recently-used eviction, distinct
   * (term, positions) keys, df-0 entries, one capacity and one LRU order
-  * across postings, doc values, the dictionary and term vectors, and the
-  * same under
+  * across postings, doc values and term vectors, and the same under
   * concurrent lookups and inserts. A randomized run is checked against a small list
   * model of the LRU order. */
 class PostingStoreSpec extends AnyFunSuite {
@@ -81,19 +80,12 @@ class PostingStoreSpec extends AnyFunSuite {
     assert(store.lookup(Seq(("t", false))).get.map(_.bytes) == Seq(10L))
     assert(store.lookup(Seq(("t", true))).get.map(_.bytes) == Seq(20L))
     assert(store.counters.residentBytes == 30L)
-    // either key gives the term's df
-    assert(store.dfs(Seq("t")).contains(Map("t" -> 5L)))
-    val only = new PostingStore(100L)
-    only.insert(("u", true), entry(3L, 1L))
-    assert(only.dfs(Seq("u")).contains(Map("u" -> 3L)))
-    assert(only.dfs(Seq("u", "v")).isEmpty)
   }
 
   test("a term with no postings is a df-0 entry; a store without capacity holds nothing") {
     val store = new PostingStore(10L)
     store.insert(("absent", false), entry(0L, 0L))
     assert(store.lookup(Seq(("absent", false))).get.map(_.df) == Seq(0L))
-    assert(store.dfs(Seq("absent")).contains(Map("absent" -> 0L)))
     for (capacity <- Seq(0L, -1L)) {
       val none = new PostingStore(capacity)
       none.insert(("absent", false), entry(0L, 0L))
@@ -102,77 +94,79 @@ class PostingStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("postings, doc values and the dictionary share one capacity and one LRU order") {
-    import PostingStore.{DocValues, Dictionary}
+  test("postings, doc values and term vectors share one capacity and one LRU order") {
+    import PostingStore.{DocValues, TermVector}
     val field = org.apache.spark.sql.types.StructField("lang",
       org.apache.spark.sql.types.StringType)
     def docValues(bytes: Long) = DocValues(Array(1L, 2L), Array("en", null), field, bytes)
+    def vector(bytes: Long) = TermVector(Array(("a", 2L, 5L), ("b", 1L, 9L)), 3L, bytes)
     val store = new PostingStore(30L)
     store.insert(("a", false), entry(1L, 10L))
     store.insert("lang", docValues(10L))
-    store.insert(Dictionary(Map("a" -> 1L), 10L))
+    store.insert(7L, vector(10L))
     val full = store.counters
     assert(full.residentBytes == 30L && full.entries == 3 && full.postingBytes == 10L &&
-      full.docValueBytes == 10L && full.dictionaryBytes == 10L, full)
-    // the postings entry is the most recent, so the doc values go first
+      full.docValueBytes == 10L && full.termVectorBytes == 10L, full)
+    assert(store.termVector(7L).exists(tv =>
+      tv.rows.toSeq == Seq(("a", 2L, 5L), ("b", 1L, 9L)) && tv.dl == 3L))
+    assert(store.termVector(8L).isEmpty)
+    // touch the postings: the doc values are now the least recently used,
+    // then the vector of doc 7
     assert(store.lookup(Seq(("a", false))).isDefined)
-    store.insert(("b", false), entry(1L, 10L))
+    store.insert(8L, vector(10L))
     assert(store.docValues("lang").isEmpty && store.docValues("url").isEmpty)
-    assert(store.dictionary.exists(_.dfs == Map("a" -> 1L)))
-    // a bigger dictionary replaces the old one and evicts the least recent
-    // postings entry ("a") to fit
-    store.insert(Dictionary(Map("a" -> 1L, "b" -> 2L), 20L))
-    assert(store.lookup(Seq(("a", false))).isEmpty && store.lookup(Seq(("b", false))).isDefined)
+    // a 20-byte vector evicts the least recent two: the vector of doc 7,
+    // then the postings (read after it, but before doc 8's vector entered)
+    store.insert(9L, vector(20L))
+    assert(store.termVector(7L).isEmpty && store.lookup(Seq(("a", false))).isEmpty &&
+      store.termVector(8L).isDefined)
     val c = store.counters
-    assert(c.residentBytes == 30L && c.entries == 2 && c.postingBytes == 10L &&
-      c.docValueBytes == 0L && c.dictionaryBytes == 20L && c.evictions == 2, c)
-    assert(c.hits == 3 && c.misses == 3, c)
-    // doc values over the capacity never enter
+    assert(c.residentBytes == 30L && c.entries == 2 && c.termVectorBytes == 30L &&
+      c.postingBytes + c.docValueBytes == 0L && c.evictions == 3, c)
+    // an entry of any kind over the capacity never enters, and evicts
+    // nothing
     store.insert("url", docValues(31L))
-    assert(store.docValues("url").isEmpty && store.counters.entries == 2)
+    store.insert(10L, vector(31L))
+    assert(store.docValues("url").isEmpty && store.termVector(10L).isEmpty &&
+      store.counters.entries == 2 && store.counters.evictions == 3)
     // a store without capacity holds no kind
     val none = new PostingStore(0L)
+    none.insert(("a", false), entry(1L, 1L))
     none.insert("lang", docValues(1L))
-    none.insert(Dictionary(Map.empty, 0L))
+    none.insert(7L, vector(1L))
     assert(none.counters.entries == 0)
   }
 
-  test("term vectors share the capacity and the LRU order with the other three kinds") {
-    import PostingStore.{DocValues, Dictionary, TermVector}
+  test("term vectors share the capacity and the LRU order with postings and doc values") {
+    import PostingStore.{DocValues, TermVector}
     val field = org.apache.spark.sql.types.StructField("lang",
       org.apache.spark.sql.types.StringType)
-    def vector(bytes: Long) = TermVector(Array("a", "b"), Array(2L, 1L), 3L, bytes)
-    val store = new PostingStore(40L)
+    def vector(bytes: Long) = TermVector(Array(("a", 2L, 5L), ("b", 1L, 9L)), 3L, bytes)
+    val store = new PostingStore(30L)
     store.insert(("a", false), entry(1L, 10L))
     store.insert("lang", DocValues(Array(1L), Array("en"), field, 10L))
-    store.insert(Dictionary(Map("a" -> 1L), 10L))
     store.insert(7L, vector(10L))
-    val full = store.counters
-    assert(full.residentBytes == 40L && full.entries == 4 && full.postingBytes == 10L &&
-      full.docValueBytes == 10L && full.dictionaryBytes == 10L &&
-      full.termVectorBytes == 10L, full)
-    assert(store.termVector(7L).exists(tv => tv.rows.toSeq == Seq("a" -> 2L, "b" -> 1L) &&
-      tv.dl == 3L))
-    assert(store.termVector(8L).isEmpty)
-    // touch the postings and the dictionary: the doc values are now the
-    // least recently used, then the vector of doc 7
-    assert(store.lookup(Seq(("a", false))).isDefined && store.dictionary.isDefined)
+    assert(store.termVector(7L).isDefined && store.termVector(8L).isEmpty)
+    // touch the postings: the doc values are the least recently used
+    assert(store.lookup(Seq(("a", false))).isDefined)
     store.insert(8L, vector(10L))
-    assert(store.docValues("lang").isEmpty && store.termVector(7L).isDefined)
-    // a 20-byte vector evicts the least recent two: the postings, then the
-    // dictionary (the vectors of docs 7 and 8 were read or written later)
+    assert(store.docValues("lang").isEmpty)
+    // reading doc 7's vector makes it the most recent, so a 20-byte vector
+    // evicts the postings and then doc 8's vector
+    assert(store.termVector(7L).isDefined)
     store.insert(9L, vector(20L))
-    assert(store.lookup(Seq(("a", false))).isEmpty && store.dictionary.isEmpty)
+    assert(store.lookup(Seq(("a", false))).isEmpty && store.termVector(8L).isEmpty &&
+      store.termVector(7L).isDefined && store.termVector(9L).isDefined)
     val c = store.counters
-    assert(c.residentBytes == 40L && c.entries == 3 && c.termVectorBytes == 40L &&
-      c.postingBytes + c.docValueBytes + c.dictionaryBytes == 0L && c.evictions == 3, c)
-    // a vector over the capacity never enters; a store without capacity
-    // holds none
-    store.insert(10L, vector(41L))
-    assert(store.termVector(10L).isEmpty && store.counters.entries == 3)
-    val none = new PostingStore(0L)
-    none.insert(7L, vector(1L))
-    assert(none.counters.entries == 0)
+    assert(c.residentBytes == 30L && c.entries == 2 && c.termVectorBytes == 30L &&
+      c.postingBytes + c.docValueBytes == 0L && c.evictions == 3, c)
+    // a doc's vector inserted again replaces the old one in place: its
+    // bytes count once and nothing is evicted
+    store.insert(7L, TermVector(Array(("c", 1L, 0L)), 1L, 10L))
+    assert(store.termVector(7L).exists(tv => tv.rows.toSeq == Seq(("c", 1L, 0L)) &&
+      tv.dl == 1L))
+    val r = store.counters
+    assert(r.residentBytes == 30L && r.entries == 2 && r.evictions == 3, r)
   }
 
   test("4 threads of concurrent lookups and inserts keep the invariants") {

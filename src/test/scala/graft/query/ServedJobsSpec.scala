@@ -12,17 +12,16 @@ import graft.index.{IndexBuilder, IndexParams}
   * The reader resolves its tables once, so a call pays only its own work:
   * on a fresh reader (an empty posting store), one job for a routed read,
   * which sizes the query and returns its rows together
-  * ([[IndexReader.readPostings]]), and one job for each doc-values column
-  * or dictionary load and for each doc's term-vector load; the
-  * serving-cache load sizes its terms with that same read. On a warm
-  * reader a routed read whose terms are all in the posting store runs no
-  * job, facets count over resident doc values, mlt, term vectors and
-  * `_explain` take the doc's rows from its resident term vector and their
-  * dfs from the resident dictionary, and rescore combines its two driver
-  * results on the driver. A schema-inference job, a separate metadata
-  * pass or a skipped store lookup creeping into a call fails here. Counted with
-  * adaptive execution off, as the benchmark runs, so each count is the
-  * plan's own job structure. */
+  * ([[IndexReader.readPostings]]), one job for each doc-values column
+  * load, and two for each doc's term-vector load (its slice, then its
+  * terms' dfs); the serving-cache load sizes its terms with that same
+  * read. On a warm reader a routed read whose terms are all in the posting
+  * store runs no job, facets count over resident doc values, mlt, term
+  * vectors and `_explain` read the doc's resident term vector, and rescore
+  * combines its two driver results on the driver. A schema-inference job,
+  * a separate metadata pass or a skipped store lookup creeping into a call
+  * fails here. Counted with adaptive execution off, as the benchmark runs,
+  * so each count is the plan's own job structure. */
 class ServedJobsSpec extends AnyFunSuite {
   import SyntheticCorpus.{Stopwords => sw, term => t}
 
@@ -73,8 +72,8 @@ class ServedJobsSpec extends AnyFunSuite {
   /** (name, call returning its result size, cold, warm): the frame
     * shapes, then the two calls that size terms without scoring them — the
     * cache load (the sizing read, then the resident terms' collect) and
-    * `_explain` (the dictionary load, then the doc's term-vector load;
-    * warm, both are resident). */
+    * `_explain` (the doc's term-vector load: its slice, then its terms'
+    * dfs; warm, the vector is resident). */
   private val calls: Seq[(String, (IndexSearch, IndexSearch) => Int, Int, Int)] =
     shapes.map { case (name, call, c, w) =>
       (name, (s: IndexSearch, o: IndexSearch) => call(s, o).collect().length, c, w)

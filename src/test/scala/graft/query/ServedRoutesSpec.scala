@@ -18,12 +18,11 @@ import graft.index.{IncrementalIndex, IndexBuilder, IndexParams}
   * all the hard parts: two generations whose boundary falls inside shards,
   * positions, and tombstones. Readers opened with a route bound of
   * `Long.MaxValue` take the driver route for every query, with `-1` the
-  * distributed one (and never store postings). Facets, term vectors,
-  * mlt's term selection and `_explain` finish on the driver from resident
-  * doc values, the resident dictionary and each doc's resident term
-  * vector, and rescore combines on the driver when both its reads take
-  * the driver route; otherwise they run their Spark plans. The rows are
-  * the same. */
+  * distributed one (and never store postings). Facets finish on the
+  * driver from resident doc values, otherwise in Spark; term vectors,
+  * mlt's term selection and `_explain` finish on the driver from each
+  * doc's term vector, and rescore combines on the driver, on every
+  * reader. The rows are the same. */
 class ServedRoutesSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -255,7 +254,7 @@ class ServedRoutesSpec extends AnyFunSuite {
     assert(facetRows(d.facets(Seq("w00300"), "lang")).isEmpty)
     for (doc <- Seq(17L, 301L)) {
       val (a, b) = (d.termVectors(doc), x.termVectors(doc))
-      assert(isLocal(a) && !isLocal(b))
+      assert(isLocal(a) && isLocal(b))
       val tv = a.as[(String, Long, Long)].collect().toSeq.sorted
       assert(tv.nonEmpty && tv == b.as[(String, Long, Long)].collect().toSeq.sorted,
         s"doc $doc: term vectors diverged")
@@ -264,9 +263,8 @@ class ServedRoutesSpec extends AnyFunSuite {
         .as[(String, Long, Long)].collect().toSeq, s"doc $doc: mlt terms diverged")
     }
     val c = onDriver.storeCounters
-    assert(c.docValueBytes > 0 && c.dictionaryBytes > 0 &&
-      c.residentBytes == c.postingBytes + c.docValueBytes + c.dictionaryBytes +
-        c.termVectorBytes, c)
+    assert(c.docValueBytes > 0 &&
+      c.residentBytes == c.postingBytes + c.docValueBytes + c.termVectorBytes, c)
     assert(distributed.storeCounters.entries == 0)
   }
 
@@ -293,8 +291,10 @@ class ServedRoutesSpec extends AnyFunSuite {
     val onD = vectorCalls.map { case (name, q, ordered) =>
       val (a, b) = (q(d), q(x))
       assert(isLocal(a), s"$name: the driver reader ran a Spark plan")
-      if (!name.startsWith("explainScore"))
+      // only mlt's bool read takes the distributed route there
+      if (name == "moreLikeThisTopK")
         assert(!isLocal(b), s"$name: the distributed reader ran on the driver")
+      else assert(isLocal(b), s"$name: the distributed reader ran a Spark plan")
       val (ra, rb) = (canon(a, ordered), canon(b, ordered))
       assert(ra.nonEmpty || name.contains("999999"), s"$name: no rows")
       assert(ra == rb, s"$name: readers diverged\n driver=$ra\n distributed=$rb")
@@ -302,19 +302,18 @@ class ServedRoutesSpec extends AnyFunSuite {
     }
     assert(vectorCalls.filter(_._1.contains("999999")).forall(c => canon(c._2(d), c._3).isEmpty))
     val c = d.reader.storeCounters
-    assert(c.termVectorBytes > 0 && c.dictionaryBytes > 0 && c.residentBytes ==
-      c.postingBytes + c.docValueBytes + c.dictionaryBytes + c.termVectorBytes, c)
-    // a bound under the dictionary's bytes: the dictionary overflows, so no
-    // term vector loads and every call runs its Spark plan
-    val small = new IndexSearch(spark, new IndexReader(spark, dir, c.dictionaryBytes / 2))
+    assert(c.termVectorBytes > 0 && c.residentBytes ==
+      c.postingBytes + c.docValueBytes + c.termVectorBytes, c)
+    // a 0-byte bound: the reader stores nothing, and still answers term
+    // vectors and mlt terms on the driver
+    val small = new IndexSearch(spark, new IndexReader(spark, dir, 0L))
     for (((name, q, ordered), ra) <- vectorCalls.zip(onD)) {
       val a = q(small)
       if (name.startsWith("termVectors") || name.startsWith("moreLikeThisTerms"))
-        assert(!isLocal(a), s"$name: the small reader finished on the driver")
+        assert(isLocal(a), s"$name: the small reader ran a Spark plan")
       assert(canon(a, ordered) == ra, s"$name: the small reader diverged")
     }
-    val sc = small.reader.storeCounters
-    assert(sc.dictionaryBytes == 0 && sc.termVectorBytes == 0, sc)
+    assert(small.reader.storeCounters.entries == 0, small.reader.storeCounters)
   }
 
   test("the driver route's frames carry the distributed route's schema") {
@@ -343,7 +342,7 @@ class ServedRoutesSpec extends AnyFunSuite {
         .toDF("term", "tf", "df", "idf", "contribution").schema)
   }
 
-  test("a reader that holds the dictionary loads a doc's term vector in one job, even one no scan task's share of the bound holds") {
+  test("a term vector larger than the store's capacity is returned with identical rows, not stored, and evicts nothing") {
     // doc "long" holds the whole vocabulary; every other doc two of its terms
     val vocab = (0 until 64).map(i => f"t$i%02d")
     val texts = ("long" -> vocab.mkString(" ")) +:
@@ -357,32 +356,47 @@ class ServedRoutesSpec extends AnyFunSuite {
     new IndexBuilder(spark, d, IndexParams(buckets = 4, shardSize = 16, blockSize = 8,
       buildPartitions = 4)).build(pages.toDS(), "longdoc")
     val x = new IndexSearch(spark, new IndexReader(spark, d, -1L))
-    val longDoc = x.reader.tfTables.map(_.select("docId")).reduce(_.unionByName(_))
-      .groupBy("docId").count().orderBy(desc("count")).first().getLong(0)
-    // the smallest doubling of room for the dictionary and the long doc's
-    // vector (its bytes, plus 8 for its length) that loads the dictionary
-    val dictBytes = new IndexReader(spark, d, Long.MaxValue).dictionary.get.bytes
-    val bound = Iterator.iterate(2 * dictBytes + 8)(_ * 2)
-      .find(b => new IndexReader(spark, d, b).dictionary.isDefined).get
-    val r = new IndexReader(spark, d, bound)
-    assert(r.dictionary.isDefined)
+    val byLength = x.reader.tfTables.map(_.select("docId")).reduce(_.unionByName(_))
+      .groupBy("docId").count()
+    val longDoc = byLength.orderBy(desc("count")).first().getLong(0)
+    val shortDoc = byLength.orderBy(asc("count")).first().getLong(0)
+    val tvBytes = x.reader.termVector(longDoc).bytes
+    // a capacity one byte short of the long doc's vector
+    val r = new IndexReader(spark, d, tvBytes - 1)
     val s = new IndexSearch(spark, r)
+    s.termVectors(shortDoc).collect()
+    s.boolTopK(Nil, Seq("t00", "t63"), Nil, 5).collect()
+    val before = r.storeCounters
+    assert(before.termVectorBytes > 0 && before.postingBytes > 0, before)
     // tables resolved outside the counted calls
-    r.segmentsFor(Nil); r.tfTables
+    r.segmentsFor(Nil); r.tfTables; r.termstatsTables
     SparkJobs.withoutAqe {
       var got = Seq.empty[String]
       val first = SparkJobs.count("routes-tv-first") {
         got = s.termVectors(longDoc).collect().toSeq.map(_.toString).sorted
       }
+      // not stored: the second call reads it again
       val again = SparkJobs.count("routes-tv-again")(s.termVectors(longDoc).collect())
-      assert(first == 1 && again == 0, s"first $first, again $again")
+      assert(first == 2 && again == 2, s"first $first, again $again")
       assert(got.size == vocab.size &&
         got == x.termVectors(longDoc).collect().toSeq.map(_.toString).sorted)
     }
-    val tvBytes = r.storeCounters.termVectorBytes
-    // a share of the bound per scan task would not have held the doc's slice
-    assert(tvBytes > bound / r.docSlice(longDoc).rdd.getNumPartitions,
-      s"vector $tvBytes, bound $bound")
+    val after = r.storeCounters
+    assert(after.copy(hits = before.hits, misses = before.misses) == before,
+      s"\n before=$before\n after=$after")
+  }
+
+  test("one doc's slice is read under a fixed bound; a doc over it fails loudly, naming the docId") {
+    val tv = new IndexReader(spark, dir, -1L).termVector(17L)
+    val err = intercept[IllegalStateException](
+      new IndexReader(spark, dir, -1L).termVector(17L, tv.bytes - 1))
+    assert(err.getMessage.contains("doc 17 ") &&
+      err.getMessage.contains(s"${tv.bytes - 1}-byte"), err.getMessage)
+    // the default bound: the rows of termVectors(17)
+    val atDefault = new IndexReader(spark, dir, -1L).termVector(17L)
+    assert(atDefault.bytes == tv.bytes && atDefault.rows.toSeq.map(_.toString) ==
+      new IndexSearch(spark, distributed).termVectors(17L).collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)).toString))
   }
 
   test("a reader whose bound holds the postings but not the doc values counts in Spark, without retrying the load") {
