@@ -62,12 +62,16 @@ final case class IndexParams(
 
 /** One compressed posting block for (term, shard): `n` postings whose
   * docIds/tfs/doclens are PForDelta-compressed (docIds delta-gap vs
-  * `firstDocId`). The Block-Max WAND skip bound is NOT stored: the block
-  * keeps its score-MONOTONE extrema (`maxTf`, `minDl`) and the reader
-  * computes `bound = Bm25.score(idf, maxTf, minDl, avgdl) >= max member
-  * score` with the CURRENT corpus stats — so blocks stay valid when later
-  * generations change N/avgdl/df (a build-time max score would go stale
-  * and silently break WAND's pruning invariant). `df` is the term's
+  * `firstDocId`; `firstDocId` is the first posting's docId). The Block-Max
+  * WAND skip bound is NOT stored: the block keeps its score-MONOTONE
+  * extrema (`maxTf`, `minDl`) and the reader computes the bound with the
+  * CURRENT corpus stats — so blocks stay valid when later generations
+  * change N/avgdl/df (a build-time max score would go stale and silently
+  * break WAND's pruning invariant). Routed and distributed reads use the
+  * corner `Bm25.score(idf, maxTf, minDl, avgdl) >= max member score`; the
+  * serving cache, whose stats are fixed for the reader's life, decodes
+  * the block once at load and uses its exact member max raised by a
+  * 1e-12 relative margin (`IndexReader.exactBlocks`). `df` is the term's
   * document frequency WITHIN THIS BUILD; the reader sums it across
   * generations for the merged idf.
   */

@@ -59,6 +59,14 @@ object PForDelta {
   /** Decode exactly `n` values from `bytes`. */
   def decode(bytes: Array[Byte], n: Int): Array[Long] = {
     val out = new Array[Long](n)
+    decodeInto(bytes, n, out)
+    out
+  }
+
+  /** Decode exactly `n` values from `bytes` into `out(0 until n)`
+    * (`out.length >= n`; the rest of `out` is left as it was) — the one
+    * decoder: a reused buffer makes a block decode allocation-free. */
+  def decodeInto(bytes: Array[Byte], n: Int, out: Array[Long]): Unit = {
     var off = 0
     var pos = 0
     while (off < n) {
@@ -66,7 +74,6 @@ object PForDelta {
       pos = decodeFrame(bytes, pos, out, off, k)
       off += k
     }
-    out
   }
 
   /** Delta-gap encode a strictly increasing docId sequence relative to
@@ -87,15 +94,21 @@ object PForDelta {
   }
 
   def decodeGaps(bytes: Array[Byte], n: Int, base: Long): Array[Long] = {
-    val gaps = decode(bytes, n)
+    val ids = new Array[Long](n)
+    decodeGapsInto(bytes, n, base, ids)
+    ids
+  }
+
+  /** [[decodeGaps]] into `out(0 until n)`, as [[decodeInto]]. */
+  def decodeGapsInto(bytes: Array[Byte], n: Int, base: Long, out: Array[Long]): Unit = {
+    decodeInto(bytes, n, out)
     var prev = base
     var i = 0
     while (i < n) {
-      prev += gaps(i)
-      gaps(i) = prev
+      prev += out(i)
+      out(i) = prev
       i += 1
     }
-    gaps
   }
 
   // ---- frame internals -----------------------------------------------
@@ -274,9 +287,11 @@ object PForDelta {
     var p = 0
     var first = true
     while (e < exc) {
-      val (delta, pos1) = readVb(bytes, pos)
-      val (high, pos2) = readVb(bytes, pos1)
-      pos = pos2
+      // writeVb writes the shortest form, so a value's length is vbLen
+      val delta = readVb(bytes, pos)
+      pos += vbLen(delta)
+      val high = readVb(bytes, pos)
+      pos += vbLen(high)
       p = if (first) delta.toInt else p + delta.toInt
       first = false
       out(off + p) |= high << width
@@ -294,7 +309,8 @@ object PForDelta {
     out.write(v.toInt)
   }
 
-  private def readVb(bytes: Array[Byte], pos0: Int): (Long, Int) = {
+  /** The VarByte value starting at `pos0` (it spans `vbLen(value)` bytes). */
+  private def readVb(bytes: Array[Byte], pos0: Int): Long = {
     var pos = pos0
     var v = 0L
     var shift = 0
@@ -305,6 +321,6 @@ object PForDelta {
       shift += 7
       pos += 1
     } while ((b & 0x80) != 0)
-    (v, pos)
+    v
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
-import graft.index.{Globals, IncrementalIndex}
+import graft.index.{Globals, IncrementalIndex, PForDelta}
 
 /** Segment row as read back from the posting store (bucket is the
   * directory-partition column; `gen` tags which generation wrote it —
@@ -62,11 +62,21 @@ final case class SegmentRead(
   * buckets (directory partition pruning) and push the term predicate into
   * Parquet.
   *
-  * Block-Max bounds are computed HERE, not at build time: each block
-  * stores (maxTf, minDl) and the bound is
-  * `Bm25.score(idf, maxTf, minDl, avgdl)` with the CURRENT merged stats —
-  * BM25 is increasing in tf and decreasing in dl, so this dominates every
-  * member score, and it stays correct as generations shift N/avgdl/df.
+  * Block-Max bounds are computed HERE, not at build time, with the
+  * CURRENT merged stats, so they stay correct as generations shift
+  * N/avgdl/df. Which bound a block gets depends on the path:
+  *  - routed and distributed reads: each block stores (maxTf, minDl) and
+  *    the bound is the corner `Bm25.score(idf, maxTf, minDl, avgdl)`
+  *    ([[IndexReader.boundedBlock]]) — BM25 is increasing in tf and
+  *    decreasing in dl, so it dominates every member score without
+  *    decoding the block;
+  *  - the serving cache ([[loadCache]]): the reader's stats are fixed for
+  *    its life, so each resident block's bound is computed once, at load,
+  *    as the exact max of its members' scores raised by the relative
+  *    margin [[IndexReader.BoundMargin]] ([[IndexReader.exactBlocks]]).
+  *    The margin keeps a sum of bounds taken in any order above the
+  *    ascending-term fold of the members' scores, which WAND's `ub <= θ`
+  *    skip needs.
   *
   * This replaces the reference's delegation of querying to OpenSearch
   * (/root/reference/data-prepper-plugins/opensearch/... sink +
@@ -400,16 +410,11 @@ final class IndexReader private[graft] (spark: SparkSession,
         IndexReader.phraseIdf(n, phrase, dfByTerm), del.value, slop)(shard, rows)))
   }
 
-  /** EVERY phrase-matching doc's score, untruncated — (docId, score),
-    * unordered. The composition primitive for rescoring (its scores meet
-    * a window, so per-shard pre-truncation would drop contributors). Same
-    * pruned postings read and route as [[phraseTopK]]: a local frame on
-    * the driver route, the shards' candidates on the distributed one;
-    * output is match-set-sized, not corpus-sized. */
-  def phraseScores(phrase: Seq[String], slop: Int = 0): DataFrame =
-    scoresOf(phraseScored(phrase, slop))
-
-  /** [[phraseScores]]' routed read ([[routedScores]]). */
+  /** EVERY phrase-matching doc's score, untruncated and unordered — the
+    * composition primitive for rescoring (its scores meet a window, so
+    * per-shard pre-truncation would drop contributors). Same pruned
+    * postings read and route ([[routedScores]]) as [[phraseTopK]]; output
+    * is match-set-sized, not corpus-sized. */
   private[query] def phraseScored(phrase: Seq[String], slop: Int)
       : Either[Array[Scored], Dataset[Scored]] = {
     val terms = phraseTerms(phrase, slop)
@@ -453,8 +458,11 @@ final class IndexReader private[graft] (spark: SparkSession,
     * disjoint docId ranges, concatenating a term's blocks across
     * (shard, firstDocId) order IS the external multi-way merge into the
     * term's global posting list (no re-sort — SURVEY.md §7.5). Bounds are
-    * precomputed here with the merged stats, once per cache load. Used for
-    * the p95 latency hot path (no job scheduling per query).
+    * computed here with the merged stats, once per cache load: each
+    * block's exact member max raised by [[IndexReader.BoundMargin]]
+    * ([[IndexReader.exactBlocks]]; the load decodes every resident block's
+    * tfs and dls once). Used for the p95 latency hot path (no job
+    * scheduling per query).
     *
     * SCALE BOUND: at 10^12 docs a stopword's posting list is terabytes —
     * collecting it to the driver is the one thing this serving path must
@@ -483,8 +491,8 @@ final class IndexReader private[graft] (spark: SparkSession,
         .map { case (t, rows) =>
           val df = sized.dfByTerm(t)
           val idf = Bm25.idf(globals.n, df)
-          t -> (df, rows.sortBy(r => (r.shard, r.firstDocId))
-            .map(r => IndexReader.boundedBlock(r, idf, globals.avgdl)))
+          t -> (df, IndexReader.exactBlocks(rows.sortBy(r => (r.shard, r.firstDocId)),
+            idf, globals.avgdl))
         }
     ServingCache(resident, over, maxBytesPerTerm)
   }
@@ -640,13 +648,45 @@ object IndexReader {
   @inline def isDeleted(del: Array[Long], id: Long): Boolean =
     del != null && java.util.Arrays.binarySearch(del, id) >= 0
 
-  /** Query-time Block-Max bound: BM25 is monotone ↑ in tf and ↓ in dl, so
-    * scoring the block's (maxTf, minDl) corner with the current stats
-    * dominates every member score. */
+  /** Query-time Block-Max bound of the routed and distributed reads: BM25
+    * is monotone ↑ in tf and ↓ in dl, so scoring the block's (maxTf, minDl)
+    * corner with the current stats dominates every member score. */
   def boundedBlock(r: SegmentRead, idf: Double, avgdl: Double): SegBlock =
     SegBlock(r.firstDocId, r.lastDocId, r.n,
       Bm25.score(idf, r.maxTf.toDouble, r.minDl.toDouble, avgdl),
       r.gaps, r.tfs, r.dls, r.pos)
+
+  /** Relative margin on the serving cache's exact block bounds. A sum of
+    * m non-negative doubles folded in any order is within about m·2^-53 of
+    * the real sum, so a bound raised by 1e-12 still dominates the
+    * ascending-term fold of the members' scores for any query under
+    * thousands of terms, while it stays within 1e-12 of the exact max. */
+  val BoundMargin: Double = 1.0 + 1e-12
+
+  /** Load-time Block-Max bounds of the serving cache ([[IndexReader.loadCache]]):
+    * each block of `rows` (in the order given) bounded by the largest
+    * `Bm25.score(idf, tf, dl, avgdl)` over its postings times
+    * [[BoundMargin]]. Decodes each block's tfs and dls once, into two
+    * buffers reused across the term's blocks; the blocks keep only their
+    * compressed payloads. */
+  private[query] def exactBlocks(rows: Array[SegmentRead], idf: Double,
+      avgdl: Double): Array[SegBlock] = {
+    val cap = rows.foldLeft(0)((m, r) => math.max(m, r.n))
+    val (tfs, dls) = (new Array[Long](cap), new Array[Long](cap))
+    rows.map { r =>
+      PForDelta.decodeInto(r.tfs, r.n, tfs)
+      PForDelta.decodeInto(r.dls, r.n, dls)
+      var max = 0.0
+      var j = 0
+      while (j < r.n) {
+        val s = Bm25.score(idf, tfs(j).toDouble, dls(j).toDouble, avgdl)
+        if (s > max) max = s
+        j += 1
+      }
+      SegBlock(r.firstDocId, r.lastDocId, r.n, max * BoundMargin,
+        r.gaps, r.tfs, r.dls, r.pos)
+    }
+  }
 
   /** One term's [[TermCursor]] over its rows within one shard: blocks in
     * docId order, Block-Max bounds from `idf` and the current avgdl. */

@@ -4,7 +4,12 @@ import graft.index.PForDelta
 
 /** One posting block as read from the segment store (term/shard implied by
   * the owning cursor). `pos` is the block's position payload, null when
-  * the read pruned it (the serving cache and every non-phrase kernel). */
+  * the read pruned it (the serving cache and every non-phrase kernel).
+  * `maxScore` bounds every member's BM25 score under the reader's stats:
+  * the serving cache stores the exact member max raised by
+  * [[IndexReader.BoundMargin]] ([[IndexReader.exactBlocks]]); routed and
+  * distributed reads store the `(maxTf, minDl)` corner
+  * ([[IndexReader.boundedBlock]]). */
 final case class SegBlock(
     firstDocId: Long, lastDocId: Long, n: Int, maxScore: Double,
     gaps: Array[Byte], tfs: Array[Byte], dls: Array[Byte],
@@ -39,11 +44,15 @@ private[query] final class TopKHeap(k: Int) {
 
 /** Forward-only cursor over one term's blocks within one shard — the one
   * block cursor every shard kernel reads postings through (WAND, the
-  * dense clause kernel, the phrase leapfrogs). Blocks are decoded lazily —
-  * Block-Max WAND can skip a whole block using only its
-  * (firstDocId, lastDocId, maxScore) metadata without touching the
-  * compressed payload — and a block's positions decode only on the first
-  * [[positions]] call for it, so only phrase-aligned documents pay them.
+  * dense clause kernel, the phrase leapfrogs). Payloads decode lazily and
+  * only as far as a read needs them: a cursor enters a block at its first
+  * posting from `firstDocId` alone, decodes the block's docIds only when
+  * it moves inside the block, its tfs and dls only on the first [[score]],
+  * [[dl]] or [[positions]] there, and its positions only on the first
+  * [[positions]] call, so only phrase-aligned documents pay them. Block-Max
+  * WAND skips a block on its (firstDocId, lastDocId, maxScore) metadata
+  * and never decodes it. Ids, tfs and dls decode into per-cursor buffers
+  * reused across blocks ([[PForDelta.decodeInto]]).
   */
 final class TermCursor(val term: String, val idf: Double,
     blocks: Array[SegBlock], avgdl: Double) {
@@ -58,34 +67,47 @@ final class TermCursor(val term: String, val idf: Double,
 
   private var bi = 0
   private var i = 0
-  private var ids: Array[Long] = null
-  private var tfs: Array[Long] = null
-  private var dls: Array[Long] = null
+  /** The current posting's docId; Long.MaxValue once exhausted. */
+  private var cur = if (blocks.isEmpty) Long.MaxValue else blocks(0).firstDocId
+  private val ids, tfs, dls = new Array[Long](blocks.foldLeft(0)((m, b) => math.max(m, b.n)))
+  private var idsBlock = -1 // the block `ids` holds
+  private var tfsBlock = -1 // the block `tfs` and `dls` hold
   private var posBlock = -1 // the block posOff/posAll were decoded from
   private var posOff: Array[Int] = null
   private var posAll: Array[Long] = null
 
-  decodeIfNeeded()
+  private def decodeIds(): Unit = if (idsBlock != bi) {
+    val b = blocks(bi)
+    PForDelta.decodeGapsInto(b.gaps, b.n, b.firstDocId, ids)
+    idsBlock = bi
+  }
 
-  private def decodeIfNeeded(): Unit = {
-    if (bi < blocks.length && ids == null) {
-      val b = blocks(bi)
-      ids = PForDelta.decodeGaps(b.gaps, b.n, b.firstDocId)
-      tfs = PForDelta.decode(b.tfs, b.n)
-      dls = PForDelta.decode(b.dls, b.n)
-      i = 0
-    }
+  private def decodeTfs(): Unit = if (tfsBlock != bi) {
+    val b = blocks(bi)
+    PForDelta.decodeInto(b.tfs, b.n, tfs)
+    PForDelta.decodeInto(b.dls, b.n, dls)
+    tfsBlock = bi
+  }
+
+  /** Enter block `to` (possibly past the end) at its first posting. */
+  private def enterBlock(to: Int): Unit = {
+    bi = to
+    i = 0
+    cur = if (bi < blocks.length) blocks(bi).firstDocId else Long.MaxValue
   }
 
   def exhausted: Boolean = bi >= blocks.length
-  def curDoc: Long = if (exhausted) Long.MaxValue else { decodeIfNeeded(); ids(i) }
+  def curDoc: Long = cur
   def blockUB: Double = if (exhausted) 0.0 else blocks(bi).maxScore
   def blockLast: Long = if (exhausted) Long.MaxValue else blocks(bi).lastDocId
 
-  def score: Double = Bm25.score(idf, tfs(i).toDouble, dls(i).toDouble, avgdl)
+  def score: Double = {
+    decodeTfs()
+    Bm25.score(idf, tfs(i).toDouble, dls(i).toDouble, avgdl)
+  }
 
   /** Length of the current posting's document. */
-  def dl: Long = dls(i)
+  def dl: Long = { decodeTfs(); dls(i) }
 
   /** Absolute ascending positions of the current posting, as
     * (array, from, until) into the block's decoded payload. */
@@ -94,6 +116,7 @@ final class TermCursor(val term: String, val idf: Double,
       val b = blocks(bi)
       require(b.pos != null,
         "no positional payload in segment — index built with positions=false")
+      decodeTfs()
       posOff = new Array[Int](b.n + 1)
       var t = 0
       var j = 0
@@ -113,18 +136,20 @@ final class TermCursor(val term: String, val idf: Double,
 
   def advance(): Unit = {
     i += 1
-    if (i >= blocks(bi).n) { bi += 1; ids = null; tfs = null; dls = null; decodeIfNeeded() }
+    if (i >= blocks(bi).n) enterBlock(bi + 1)
+    else { decodeIds(); cur = ids(i) }
   }
 
   /** Advance to the first posting with docId >= target; skips whole blocks
-    * via lastDocId metadata (never decodes skipped blocks). */
+    * via lastDocId metadata (never decodes skipped blocks), and enters a
+    * block whose firstDocId reaches the target without decoding it. */
   def advanceTo(target: Long): Unit = {
-    if (exhausted || curDoc >= target) return
-    while (bi < blocks.length && blocks(bi).lastDocId < target) {
-      bi += 1; ids = null; tfs = null; dls = null
-    }
-    if (bi >= blocks.length) return
-    decodeIfNeeded()
+    if (cur >= target) return
+    var to = bi
+    while (to < blocks.length && blocks(to).lastDocId < target) to += 1
+    if (to != bi) enterBlock(to)
+    if (cur >= target) return
+    decodeIds()
     // binary search within the block
     var lo = i
     var hi = blocks(bi).n - 1
@@ -133,6 +158,24 @@ final class TermCursor(val term: String, val idf: Double,
       if (ids(mid) < target) lo = mid + 1 else hi = mid
     }
     i = lo
+    cur = ids(i)
+  }
+
+  /** Offer the current block's postings from the current one on to `heap`
+    * in docId order, each scored `0.0 + score` (the one-term WAND fold)
+    * unless tombstoned, then enter the next block. */
+  private[query] def scoreBlock(heap: TopKHeap, deleted: Array[Long]): Unit = {
+    val n = blocks(bi).n
+    decodeIds()
+    decodeTfs()
+    var j = i
+    while (j < n) {
+      val d = ids(j)
+      if (!IndexReader.isDeleted(deleted, d))
+        heap.offer(d, 0.0 + Bm25.score(idf, tfs(j).toDouble, dls(j).toDouble, avgdl))
+      j += 1
+    }
+    enterBlock(bi + 1)
   }
 }
 
@@ -158,6 +201,7 @@ object Wand {
     val cursors = cursors0.filter(!_.exhausted).sortBy(_.term)
     if (cursors.isEmpty || k <= 0) return Array.empty
     val topk = new TopKHeap(k)
+    if (cursors.length == 1) return oneTerm(cursors(0), topk, deleted)
     val m = cursors.length
     val order = cursors.indices.toArray // indices sorted by curDoc
 
@@ -247,6 +291,18 @@ object Wand {
           i += 1
         }
       }
+    }
+    topk.result()
+  }
+
+  /** One-term WAND as a block loop: a block whose bound is ≤ θ is skipped
+    * undecoded; any other block's postings are scored in docId order into
+    * `topk` — the multi-term loop's fold, tie rule and tombstone check. */
+  private def oneTerm(c: TermCursor, topk: TopKHeap,
+      deleted: Array[Long]): Array[Scored] = {
+    while (!c.exhausted) {
+      if (c.blockUB <= topk.threshold) c.advanceTo(c.blockLast + 1)
+      else c.scoreBlock(topk, deleted)
     }
     topk.result()
   }

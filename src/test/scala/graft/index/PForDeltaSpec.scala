@@ -84,6 +84,36 @@ class PForDeltaSpec extends AnyFunSuite {
     })
   }
 
+  test("decodeInto a dirty, larger buffer ≡ decode, at every width, with patches") {
+    // frames forced to each width: most values take exactly `w` bits, a
+    // few outliers (below width 63) take more and become patches
+    val rng = new graft.util.SplitMix64(7)
+    val widths = scala.collection.mutable.Set.empty[Int]
+    for (w <- 0 to 63; rep <- 0 until 4) {
+      val n = 1 + rng.nextInt(300)
+      val low = if (w == 0) 0L else 1L << (w - 1)
+      val xs = Array.fill(n)(if (w == 0) 0L else low | (rng.nextLong() & (low - 1)))
+      if (w < 63) (0 until 1 + rng.nextInt(3)).foreach { _ =>
+        xs(rng.nextInt(n)) = (1L << (w + 1 + rng.nextInt(63 - w))) - 1
+      }
+      val enc = PForDelta.encode(xs)
+      widths += enc(0) & 0xff
+      val dirty = Array.fill(n + 1 + rng.nextInt(200))(rng.nextLong())
+      val tail = dirty.drop(n)
+      PForDelta.decodeInto(enc, n, dirty)
+      assert(dirty.take(n).sameElements(PForDelta.decode(enc, n)), s"w=$w n=$n")
+      assert(dirty.take(n).sameElements(xs), s"w=$w n=$n")
+      assert(dirty.drop(n).sameElements(tail), s"w=$w: wrote past n")
+      // the gap form over the same buffer
+      val ids = xs.map(_ & 0xffffL).scanLeft(1000L)(_ + 1 + _).tail
+      val gaps = PForDelta.encodeGaps(ids, 1000L)
+      val again = Array.fill(n + 7)(rng.nextLong())
+      PForDelta.decodeGapsInto(gaps, n, 1000L, again)
+      assert(again.take(n).sameElements(PForDelta.decodeGaps(gaps, n, 1000L)), s"w=$w")
+    }
+    assert(widths == (0 to 63).toSet, s"widths not covered: ${(0 to 63).toSet -- widths}")
+  }
+
   test("negative values rejected") {
     intercept[IllegalArgumentException](PForDelta.encode(Array(-1L)))
     intercept[IllegalArgumentException](PForDelta.encodeGaps(Array(5L, 5L), 0L))

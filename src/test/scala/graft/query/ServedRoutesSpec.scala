@@ -91,7 +91,7 @@ class ServedRoutesSpec extends AnyFunSuite {
 
   /** The untruncated scores, which come back unordered. */
   private val untruncated: Seq[(String, IndexSearch => DataFrame)] = Seq(
-    ("phraseScores", _.reader.phraseScores(Seq("of", "the"), 1)),
+    ("phraseScored", s => s.reader.scoresOf(s.reader.phraseScored(Seq("of", "the"), 1))),
     ("phrasePrefixScores", _.phrasePrefixScores(Seq("the", "w0"), 1, 8)))
 
   test("every top-k entry point returns identical rows on both routes") {
@@ -320,8 +320,8 @@ class ServedRoutesSpec extends AnyFunSuite {
     val (d, x) = (new IndexSearch(spark, onDriver), new IndexSearch(spark, distributed))
     val topK = (d.boolTopK(Nil, Seq("the", "w00002"), Nil, 10),
       x.boolTopK(Nil, Seq("the", "w00002"), Nil, 10))
-    val scores = (onDriver.phraseScores(Seq("of", "the"), 1),
-      distributed.phraseScores(Seq("of", "the"), 1))
+    val scores = (onDriver.scoresOf(onDriver.phraseScored(Seq("of", "the"), 1)),
+      distributed.scoresOf(distributed.phraseScored(Seq("of", "the"), 1)))
     for ((name, (a, b)) <- Seq("top-k" -> topK, "scores" -> scores)) {
       assert(isLocal(a) && !isLocal(b), name)
       assert(a.schema == b.schema, s"$name: ${a.schema} vs ${b.schema}")

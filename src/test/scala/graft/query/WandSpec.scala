@@ -141,6 +141,115 @@ class WandSpec extends AnyFunSuite {
     val top = Wand.topK(Array(c), 10)
     assert(top.map(_.docId).toSeq == (0L until 10L))
     assert(top.map(_.score).distinct.length == 1)
+    // one cursor runs the one-term block loop: the serving cache's bounds
+    // and a k past the list keep the same order
+    val all = Wand.topK(Array(cacheCursor("t", postings, idf, avgdl, 7)), 60)
+    assert(all.map(_.docId).toSeq == (0L until 50L))
+    assert(all.map(_.score).toSeq == Seq.fill(50)(top.head.score))
+  }
+
+  /** A term's segment rows as the build writes them, `blockSize` postings
+    * a block (one shard, one generation, no positions). */
+  private def segRows(term: String, postings: Seq[(Long, Long, Long)],
+      blockSize: Int): Array[SegmentRead] =
+    postings.grouped(blockSize).zipWithIndex.map { case (blk, bi) =>
+      val ids = blk.map(_._1).toArray
+      SegmentRead(term, postings.size.toLong, 0L, bi, ids.head, ids.last, ids.length,
+        blk.map(_._2).max, blk.map(_._3).min, PForDelta.encodeGaps(ids, ids.head),
+        PForDelta.encode(blk.map(_._2).toArray), PForDelta.encode(blk.map(_._3).toArray),
+        null, 0, 0)
+    }.toArray
+
+  /** A cursor over the serving cache's blocks: bounds built the way
+    * `IndexReader.loadCache` builds them. */
+  private def cacheCursor(term: String, postings: Seq[(Long, Long, Long)],
+      idf: Double, avgdl: Double, blockSize: Int): TermCursor =
+    new TermCursor(term, idf, IndexReader.exactBlocks(segRows(term, postings, blockSize),
+      idf, avgdl), avgdl)
+
+  /** The naive answer: each doc's scores folded from 0.0 in ascending term
+    * order over every term holding it, tombstones never emitted. */
+  private def naiveTopK(postings: Map[String, Seq[(Long, Long, Long)]],
+      idf: Map[String, Double], avgdl: Double, k: Int,
+      deleted: Set[Long]): Seq[Scored] = {
+    val terms = postings.keys.toSeq.sorted
+    val docs = postings.values.flatten.map(_._1).toSeq.distinct.filterNot(deleted)
+    docs.map { d =>
+      Scored(d, terms.foldLeft(0.0) { (s, t) =>
+        postings(t).find(_._1 == d).fold(s) { case (_, tf, dl) =>
+          s + Bm25.score(idf(t), tf.toDouble, dl.toDouble, avgdl)
+        }
+      })
+    }.sortBy(x => (-x.score, x.docId)).take(k)
+  }
+
+  test("serving-cache bounds dominate every member score") {
+    (1L to 200L).foreach { seed =>
+      val rng = new SplitMix64(seed * 31337)
+      val nDocs = 20 + rng.nextInt(300)
+      val ps = (0 until nDocs).filter(_ => rng.nextDouble() < 0.5)
+        .map(d => (d.toLong, 1L + rng.nextInt(40), 1L + rng.nextInt(400)))
+      if (ps.nonEmpty) {
+        val (idf, avgdl) = (0.01 + rng.nextDouble() * 8, 1.0 + rng.nextDouble() * 300)
+        val blockSize = 1 + rng.nextInt(130)
+        val blocks = IndexReader.exactBlocks(segRows("t", ps, blockSize), idf, avgdl)
+        assert(blocks.length == ps.grouped(blockSize).size)
+        blocks.zip(ps.grouped(blockSize).toSeq).foreach { case (b, blk) =>
+          val scores = blk.map(p => Bm25.score(idf, p._2.toDouble, p._3.toDouble, avgdl))
+          assert(scores.forall(_ < b.maxScore), s"seed=$seed: a member above its bound")
+          assert(b.maxScore <= scores.max * (1 + 2e-12), s"seed=$seed: bound not tight")
+          assert((b.firstDocId, b.lastDocId, b.n) == (blk.head._1, blk.last._1, blk.size))
+        }
+      }
+    }
+  }
+
+  test("WAND over serving-cache bounds ≡ naive scorer bit for bit, " +
+      "1–5 terms, tombstones, k past the list") {
+    (1L to 300L).foreach { seed =>
+      val rng = new SplitMix64(seed * 7727)
+      val nDocs = 20 + rng.nextInt(250)
+      val dl = Array.tabulate(nDocs)(_ => 1L + rng.nextInt(300))
+      val avgdl = dl.sum.toDouble / nDocs
+      val qLen = 1 + rng.nextInt(5)
+      val postings = (0 until qLen).map(i => f"t$i%02d").map { t =>
+        val density = 0.02 + rng.nextDouble() * 0.7
+        t -> (0 until nDocs).filter(_ => rng.nextDouble() < density)
+          .map(d => (d.toLong, 1L + rng.nextInt(12), dl(d)))
+      }.toMap.filter(_._2.nonEmpty)
+      val idf = postings.map { case (t, ps) => t -> Bm25.idf(nDocs.toLong, ps.size.toLong) }
+      val deleted = (0 until nDocs).filter(_ => rng.nextDouble() < 0.2).map(_.toLong).toArray
+      val k = if (rng.nextInt(4) == 0) nDocs + 1 + rng.nextInt(10) else 1 + rng.nextInt(20)
+      val blockSize = 1 + rng.nextInt(16)
+      val cursors = postings.map { case (t, ps) =>
+        cacheCursor(t, ps, idf(t), avgdl, blockSize) }.toArray
+      val wand = Wand.topK(cursors, k, if (deleted.isEmpty) null else deleted).toSeq
+      val naive = naiveTopK(postings, idf, avgdl, k, deleted.toSet)
+      assert(wand.map(_.docId) == naive.map(_.docId), s"seed=$seed: ranks differ")
+      assert(wand.map(_.score) == naive.map(_.score), s"seed=$seed: scores differ")
+    }
+  }
+
+  test("blocks bounded below θ are never decoded") {
+    // every term's first block is strong; its later blocks are weak, and
+    // their payloads throw if decoded (the multi-term case keeps docIds,
+    // which aligning cursors may read)
+    val avgdl = 100.0
+    def postings(shift: Long) =
+      (0L until 8L).map(d => (d, 9L, 20L)) ++ (8L until 80L).map(d => (d + shift, 1L, 900L))
+    def poisoned(term: String, ps: Seq[(Long, Long, Long)], idf: Double,
+        keepIds: Boolean): TermCursor = {
+      val blocks = IndexReader.exactBlocks(segRows(term, ps, 8), idf, avgdl)
+      new TermCursor(term, idf, blocks.head +: blocks.tail.map(b =>
+        b.copy(gaps = if (keepIds) b.gaps else Array.emptyByteArray,
+          tfs = Array.emptyByteArray, dls = Array.emptyByteArray)), avgdl)
+    }
+    val idf = Bm25.idf(1000L, 80L)
+    val one = Wand.topK(Array(poisoned("a", postings(0), idf, keepIds = false)), 5)
+    assert(one.toSeq == naiveTopK(Map("a" -> postings(0)), Map("a" -> idf), avgdl, 5, Set.empty))
+    val two = Map("a" -> postings(0), "b" -> postings(3))
+    val wand = Wand.topK(two.map { case (t, ps) => poisoned(t, ps, idf, keepIds = true) }.toArray, 5)
+    assert(wand.toSeq == naiveTopK(two, Map("a" -> idf, "b" -> idf), avgdl, 5, Set.empty))
   }
 
   private implicit class RngOps(rng: SplitMix64) {
